@@ -64,10 +64,15 @@ def parse_envelope(df: DataFrame, value_col: str = "value") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _keeps_op(drop_ops: Iterable[str] = ("d",)) -> Column:
+    """The forward rule's op test: the envelope parsed and its op is not
+    in ``drop_ops``."""
+    return F.col("op").isNotNull() & ~F.col("op").isin(list(drop_ops))
+
+
 def filter_deletes(df: DataFrame, drop_ops: Iterable[str] = ("d",)) -> DataFrame:
     """Keep rows whose op parsed and is not in ``drop_ops``."""
-    ops = list(drop_ops)
-    return df.filter(F.col("op").isNotNull() & ~F.col("op").isin(ops))
+    return df.filter(_keeps_op(drop_ops))
 
 
 # ---------------------------------------------------------------------------
@@ -81,6 +86,23 @@ def _rule_cond(rule: dict, topic: str, db: str, table: str) -> Column:
         & (F.col(db) == F.lit(rule["db"]))
         & F.col(table).rlike(rule["table_pattern"])
     )
+
+
+def _route_expr(rules: list[dict], topic_col: str, db_col: str, table_col: str) -> Column:
+    """The first-match target topic of ``rules`` as one ordered CASE."""
+    expr: Column = F.lit(None).cast("string")
+    # NULL priority sorts as int-max ("lowest precedence"), matching the
+    # join path's min_by coalesce and DuckDB's ASC NULLS LAST.
+    # target_topic is the deterministic tie-break for EQUAL priorities —
+    # the same tuple the join path orders min_by on, so crossing
+    # ROUTE_COMPILE_MAX_RULES can never change a routing winner.
+    def _pri(r: dict) -> tuple[int, str]:
+        p = r["priority"] if r["priority"] is not None else 2_147_483_647
+        return (p, r["target_topic"])
+
+    for rule in sorted(rules, key=_pri, reverse=True):
+        expr = F.when(_rule_cond(rule, topic_col, db_col, table_col), F.lit(rule["target_topic"])).otherwise(expr)
+    return expr
 
 
 def route_when_chain(
@@ -98,19 +120,27 @@ def route_when_chain(
     analog of the reference's startup regex pre-compilation,
     transform.rs:26-38). No join, no shuffle, streams unchanged.
     """
-    expr: Column = F.lit(None).cast("string")
-    # NULL priority sorts as int-max ("lowest precedence"), matching the
-    # join path's min_by coalesce and DuckDB's ASC NULLS LAST.
-    # target_topic is the deterministic tie-break for EQUAL priorities —
-    # the same tuple the join path orders min_by on, so crossing
-    # ROUTE_COMPILE_MAX_RULES can never change a routing winner.
-    def _pri(r: dict) -> tuple[int, str]:
-        p = r["priority"] if r["priority"] is not None else 2_147_483_647
-        return (p, r["target_topic"])
+    return df.withColumn("target_topic", _route_expr(rules, topic_col, db_col, table_col))
 
-    for rule in sorted(rules, key=_pri, reverse=True):
-        expr = F.when(_rule_cond(rule, topic_col, db_col, table_col), F.lit(rule["target_topic"])).otherwise(expr)
-    return df.withColumn("target_topic", expr)
+
+def route_forwarded(df: DataFrame, rules: list[dict]) -> DataFrame:
+    """The forward rule as one column over a parsed frame: ``target_topic``
+    is the first-match route of a message that parsed and is not a
+    delete, and NULL for every message the reference drops (malformed,
+    delete, unrouted; kafka.rs:53-74). Every row is kept, so the inbound
+    counter still sees all of them; ``drop_unrouted`` then yields exactly
+    the forwarded messages."""
+    return df.withColumn(
+        "target_topic",
+        F.when(_keeps_op(), _route_expr(rules, "topic", "db", "table_name")),
+    )
+
+
+def forwarded(df: DataFrame, rules: list[dict]) -> DataFrame:
+    """The reference's per-message path on raw messages: parse, drop
+    deletes, route, drop unrouted — the forwarded messages with their
+    ``target_topic``."""
+    return drop_unrouted(route_forwarded(parse_envelope(df), rules))
 
 
 # Rules-probe memo: logical-plan fingerprint (semanticHash — Spark's
@@ -306,6 +336,17 @@ def outbound_counts(df: DataFrame) -> DataFrame:
     return df.groupBy("target_topic", "op").agg(F.count(F.lit(1)).alias("cnt"))
 
 
+def label_counts(df: DataFrame) -> DataFrame:
+    """O9 and O10 in one aggregate over a ``route_forwarded`` frame:
+    COUNT(*) BY (topic, db, table_name, op, target_topic). Routing is a
+    function of (topic, db, table_name, op), so the extra key adds no
+    rows: the result is the inbound counter's label grain, and its rows
+    with a non-NULL ``target_topic`` sum to the outbound counter."""
+    return df.groupBy("topic", "db", "table_name", "op", "target_topic").agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+
+
 # ---------------------------------------------------------------------------
 # Full pipeline (flagship): the reference's entire data path as one plan.
 # ---------------------------------------------------------------------------
@@ -318,8 +359,7 @@ def cdc_pipeline(df: DataFrame, rules: list[dict]) -> DataFrame:
     ``project_outgoing`` on the routed stream is what a Kafka sink
     would consume.
     """
-    routed = drop_unrouted(route_when_chain(filter_deletes(parse_envelope(df)), rules))
-    return outbound_counts(routed)
+    return outbound_counts(forwarded(df, rules))
 
 
 # ---------------------------------------------------------------------------

@@ -469,8 +469,8 @@ def farthest_point_seeds(
     core-count task wave made embedding_neardup_fps scheduling-bound
     at 32 cores. ``n_rows`` lets a caller that already counted the
     input (the adaptive-k consumers all do) skip the gate's count job;
-    above the cap, or on non-finite inputs, the distributed per-round
-    walk below runs verbatim."""
+    above the cap, or on NULL or non-finite inputs, the distributed
+    per-round walk below runs verbatim."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -492,14 +492,16 @@ def farthest_point_seeds(
         return vecs.sparkSession.createDataFrame([], schema)
     seeds: list[tuple[int, int, list[float]]] | None = None
     if n_rows <= FPS_DRIVER_ROWS_CAP:
-        rows = sorted(
-            (r[0], [float(x) for x in r[1]])
-            for r in vecs.select("vec_id", "v").collect()
-        )
-        seeds = _fps_driver_seeds(rows, k)
+        rows = vecs.select("vec_id", "v").collect()
+        if all(i is not None and v is not None and None not in v for i, v in rows):
+            seeds = _fps_driver_seeds(
+                sorted((i, [float(x) for x in v]) for i, v in rows), k
+            )
     if seeds is None:
-        # distributed fallback: over the driver cap, or non-finite
-        # coordinates (Spark's NaN total order vs numpy propagation)
+        # distributed fallback: over the driver cap, NULL ids/vectors/
+        # coordinates (Spark orders NULL distances last; numpy has no
+        # NULL), or non-finite coordinates (Spark's NaN total order vs
+        # numpy propagation)
         first = vecs.orderBy("vec_id").limit(1).select("vec_id", "v").first()
         if first is None:
             return vecs.sparkSession.createDataFrame([], schema)

@@ -7,11 +7,11 @@ string, GET /metrics renders the two counter families
   flink_cdc_event_count{topic,db,table,op}            (inbound, O9)
   flink_kafka_filter_transform_count{topic,op}        (outbound, O10)
 
-as Prometheus/OpenMetrics text. Counters are fed by a
-StreamingQueryListener consuming ``observe()`` metrics or by direct
-``inc_*`` calls — stdlib-only (http.server), no engine dependency; the
-registry is a plain dict behind a lock exactly like the reference's
-Arc<Mutex<Registry>> (src/main.rs:23).
+as Prometheus/OpenMetrics text. Counters are fed by direct ``inc_*``
+calls from the service loop's foreachBatch body
+(streaming.pipeline.metered_cdc_sink) — stdlib-only (http.server), no
+engine dependency; the registry is a plain dict behind a lock exactly
+like the reference's Arc<Mutex<Registry>> (src/main.rs:23).
 """
 
 from __future__ import annotations
@@ -107,26 +107,3 @@ def serve(
     threading.Thread(target=server.serve_forever, daemon=True).start()
     return server
 
-
-def listener_feeding(registry: CounterRegistry):
-    """A StreamingQueryListener that feeds the registry from the
-    ``observe()`` metrics attached by pipeline.observed (O9 counts)."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class FeedingListener(StreamingQueryListener):
-        def onQueryStarted(self, event) -> None:  # noqa: N802
-            pass
-
-        def onQueryProgress(self, event) -> None:  # noqa: N802
-            om = event.progress.observedMetrics or {}
-            row = om.get("cdc_in")
-            if row is not None:
-                registry.inc_cdc_event("all", "all", "all", "all", int(row["n_messages"]))
-
-        def onQueryIdle(self, event) -> None:  # noqa: N802
-            pass
-
-        def onQueryTerminated(self, event) -> None:  # noqa: N802
-            pass
-
-    return FeedingListener()

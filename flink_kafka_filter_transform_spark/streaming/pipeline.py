@@ -73,10 +73,7 @@ def transformed_stream(stream: DataFrame, rules: list[dict]) -> DataFrame:
     """The reference's full per-message path on a streaming DataFrame:
     parse -> filter deletes -> route (when-chain: stateless, no
     shuffle, so the stream stays append-mode) -> outgoing projection."""
-    routed = cdc.drop_unrouted(
-        cdc.route_when_chain(cdc.filter_deletes(cdc.parse_envelope(stream)), rules)
-    )
-    return cdc.project_outgoing(routed)
+    return cdc.project_outgoing(cdc.forwarded(stream, rules))
 
 
 def inbound_counter_stream(stream: DataFrame) -> DataFrame:
@@ -87,10 +84,7 @@ def inbound_counter_stream(stream: DataFrame) -> DataFrame:
 
 def outbound_counter_stream(stream: DataFrame, rules: list[dict]) -> DataFrame:
     """O10: flink_kafka_filter_transform_count family (mq/mod.rs:35-39)."""
-    routed = cdc.drop_unrouted(
-        cdc.route_when_chain(cdc.filter_deletes(cdc.parse_envelope(stream)), rules)
-    )
-    return cdc.outbound_counts(routed)
+    return cdc.outbound_counts(cdc.forwarded(stream, rules))
 
 
 def windowed_counts(
@@ -148,33 +142,43 @@ def metered_cdc_sink(
     with metrics.serve for the scrapeable /version + /metrics
     endpoints.
 
-    Per batch the counter feed is two grouped aggregations whose row
-    counts are LABEL cardinality (topics x tables x ops — config-sized,
-    never message-sized), so pulling them to the driver-hosted registry
-    costs O(label set) per micro-batch regardless of scale — the same
-    place the reference's in-process registry lives. The routed output
-    appends to ``out_dir`` under dynamic partition overwrite by batch
-    id (effectively-once); the counters themselves are at-least-once
-    under replay (a re-delivered batch re-increments), matching
-    Prometheus counter semantics — scrape-side rate() absorbs it, and
-    the reference's counters behave identically on redelivery."""
+    The per-message work — parse and the forward rule
+    (``cdc.route_forwarded``: ``target_topic`` set only on forwarded
+    messages) — is built ONCE on the streaming DataFrame, so Spark
+    plans it at ``start()`` and only re-plans it incrementally per
+    micro-batch. Each batch then runs two actions over that plan:
+
+    1. one label-grain aggregate (``cdc.label_counts``) collected to
+       the driver: every row feeds the inbound family, the rows with a
+       target topic feed the outbound family. Its row count is LABEL
+       cardinality (topics x tables x ops — config-sized, never
+       message-sized), the same place the reference's in-process
+       registry lives;
+    2. the routed write: the forwarded rows append to ``out_dir`` under
+       dynamic partition overwrite by batch id (effectively-once).
+
+    The counters are at-least-once under replay (a re-delivered batch
+    re-increments), matching Prometheus counter semantics — scrape-side
+    rate() absorbs it, and the reference's counters behave identically
+    on redelivery."""
+    labelled = cdc.route_forwarded(cdc.parse_envelope(raw_stream), rules)
 
     def feed(batch_df: DataFrame, batch_id: int) -> None:
         _batch_aqe(batch_df.sparkSession)
-        parsed = cdc.parse_envelope(batch_df)
         lbl = lambda v: "" if v is None else str(v)  # noqa: E731
-        for r in cdc.inbound_counts(parsed).collect():
+        outbound: dict[tuple[str, str], int] = {}
+        for r in cdc.label_counts(batch_df).collect():
+            op = lbl(r["op"])
             registry.inc_cdc_event(
-                lbl(r["topic"]), lbl(r["db"]), lbl(r["table_name"]), lbl(r["op"]),
-                r["cnt"],
+                lbl(r["topic"]), lbl(r["db"]), lbl(r["table_name"]), op, r["cnt"]
             )
-        routed = cdc.drop_unrouted(
-            cdc.route_when_chain(cdc.filter_deletes(parsed), rules)
-        )
-        for r in cdc.outbound_counts(routed).collect():
-            registry.inc_transform(lbl(r["target_topic"]), lbl(r["op"]), r["cnt"])
+            if r["target_topic"] is not None:
+                key = (r["target_topic"], op)
+                outbound[key] = outbound.get(key, 0) + r["cnt"]
+        for (topic, op), n in outbound.items():
+            registry.inc_transform(topic, op, n)
         (
-            cdc.project_outgoing(routed)
+            cdc.project_outgoing(cdc.drop_unrouted(batch_df))
             .withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -182,7 +186,7 @@ def metered_cdc_sink(
             .parquet(out_dir)
         )
 
-    return raw_stream.writeStream.foreachBatch(feed).option(
+    return labelled.writeStream.foreachBatch(feed).option(
         "checkpointLocation", checkpoint_dir
     )
 

@@ -1073,6 +1073,31 @@ def test_knn_ivf_pq_rerank_is_exact_over_the_shortlist(spark, sf_dir):
         assert all(a["exact_d2"] <= b["exact_d2"] for a, b in zip(rs, rs[1:]))
 
 
+def test_fps_driver_seeds_equal_distributed_walk(spark, monkeypatch):
+    """The farthest-point driver fast path must pick the same seeds as
+    the distributed per-round walk (forced with FPS_DRIVER_ROWS_CAP = 0),
+    ties included; a NULL vector or NULL coordinate must not crash the
+    fast path but fall back to that walk."""
+    from flink_kafka_filter_transform_spark.operators import kmeans
+
+    # a 4x4 grid: equal distances everywhere, so every round's argmax
+    # is decided by the vec_id tie-break
+    finite = [(i, [float(i % 4), float(i // 4), 0.5]) for i in range(16)]
+    with_nulls = finite + [(16, None), (17, [1.0, None, 0.0])]
+
+    def seeds(rows, k):
+        vecs = spark.createDataFrame(rows, "vec_id BIGINT, v ARRAY<DOUBLE>")
+        out = kmeans.farthest_point_seeds(vecs, k).orderBy("cid").collect()
+        return [(r["cid"], r["vec_id"], r["centroid"]) for r in out]
+
+    driver = kmeans._fps_driver_seeds(sorted(finite), 6)
+    fast_nulls = seeds(with_nulls, 6)
+    monkeypatch.setattr(kmeans, "FPS_DRIVER_ROWS_CAP", 0)
+    assert driver == seeds(finite, 6)
+    assert fast_nulls == seeds(with_nulls, 6)
+    assert [vid for _, vid, _ in fast_nulls] == [vid for _, vid, _ in driver]
+
+
 def test_kcore_peels_chains_keeps_cliques(spark):
     """The semantic distinction the operator exists for: a triangle
     (clique) survives 2-core peeling wholesale; a chain hanging off

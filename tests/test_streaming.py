@@ -1307,7 +1307,9 @@ def test_metered_service_end_to_end_monotone(spark, sf_dir, tmp_path):
     sink) as ONE streaming query feeding the Prometheus registry with
     FULL label sets, scraped over HTTP. Both family names appear,
     counts grow monotonically across drains, and the final totals AND
-    per-label counts equal the batch operators' exactly."""
+    per-label counts equal the batch operators' exactly. Each
+    micro-batch launches exactly 3 Spark jobs: the label-grain counter
+    aggregate (shuffle map + result) and the routed write."""
     import urllib.request
 
     from flink_kafka_filter_transform_spark.streaming import metrics as mx
@@ -1348,6 +1350,11 @@ def test_metered_service_end_to_end_monotone(spark, sf_dir, tmp_path):
             .start()
         )
         assert q.awaitTermination(300)
+        # foreachBatch jobs run in the query's job group (its run id)
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert batches
+        assert len(jobs) == 3 * len(batches)
 
     try:
         drain(full.filter(SF.col("msg_id") % 2 == 0).repartition(2))
