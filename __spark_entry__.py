@@ -1,9 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` is the smoke check: the reference's full CDC data path
+over sf0.001. ``queries()`` maps each query name to a function
+``(spark, sf_dir) -> DataFrame``, and ``oracle_sql()`` maps the same
+names to a DuckDB twin. A verifier runs every query at sf=0.01 and
+compares it with its oracle (row count, schema and an order-insensitive
+value hash). The contract is the names, the functions and the oracles;
+``queries()`` lists them in registration order.
 
 Engine code lives in ``flink_kafka_filter_transform_spark``; this file
 only wires queries to oracles.
@@ -112,724 +115,12 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_cdc_counts_outbound(spark, "/root/testdata/sf0.001")
 
 
-# Driver-facing ordering: the driver gates only the FIRST 50 queries()
-# entries each round, so HEAD_ORDER — not registration order — IS the
-# rotation decision. Rotation policy (enforced by
-# tools/rotation_check.py via tests/test_rotation.py): the head holds
-# queries that are (a) new this round, (b) changed this round —
-# including changes arriving transitively through a shared helper or
-# oracle builder; where the head cannot seat every member of a changed
-# family, a comment must NAME the gated representative covering the
-# change, or (c) carrying the oldest driver verdict. Queries green in
-# the most recent CORRECTNESS_r{N}.json and untouched since yield
-# their slots; no tail query's latest green verdict may age past
-# MAX_VERDICT_AGE rounds (v2 = 3, adopted r7 — the sustainability
-# derivation and smoothing rule live at tools/rotation_check.py; the
-# v1 promise of 2 rounds obligated ~49 of 50 slots per round at 147
-# registered queries, making un-deferred debuts impossible, VERDICT
-# r6 item 2).
-#
-# r6 call-graph-drift addendum (r6 ADVICE item 4): two r6 changes
-# rotated no direct head slot and are covered by named gates instead —
-# the supplier-broadcast unpinning in q8/q15/q20/q21 is enforced by
-# tests/test_plans.py::test_no_unreduced_big_table_broadcast_hints
-# (identical values, plan-level change), and the kmeans_fit
-# capped-hybrid refactor's consumers were represented in the r6 head
-# by embedding_neardup_fps (the only seeding="farthest" caller) and
-# kmeans_clusters/knn_ivf_kmeans carried r6-green verdicts over the
-# same refactored chain.
-#
-# r7-closing addendum (clause (b) seats for the r8 head, named now so
-# the drift is checked, not assumed): two late-r7 plan-level changes
-# landed after this head was frozen — (1) lsh_index_sink maintains
-# its bucket caps as sum-merged bcounts_v* state (was a window over
-# the accumulated index), covered this round by the
-# test_lsh_index_sink_* battery + the new accumulated-cap test, and
-# (2) connected_components persists its edge relation and converges
-# on a label-sum fixpoint (was a changed-count join). Both are
-# VALUES-IDENTICAL (CI parity re-hashes every consumer per pytest
-# run), but per clause (b) their query faces take r8 head seats:
-# lsh_stream_state (already an r8 debut obligation), plus
-# neardup_clusters, dedup_survivors, dedup_survivors_quality (the CC
-# consumers; their r6-green verdicts predate the loop change).
-HEAD_ORDER: list[str] = [
-    # === r14 head ===
-    # --- OBLIGATED: NEXT_HEAD_PLAN as pre-authored at the r13 close
-    # (VERDICT r13 item 2 — materialized VERBATIM; all 29 names were
-    # verified complete against the r9-stale set in the r13 verdict
-    # session, so this is seating, not debugging). First the
-    # ivo_stream_state clause-(b) re-gate (the r13 streaming-hardening
-    # pass touched _ivo_overlap_batch; values pytest-pinned identical),
-    # then the 28-name r9-cohort remainder whose verdicts hit the A=4
-    # age limit this round ---
-    "ivo_stream_state",
-    "orders_top10",
-    "salted_event_counts",
-    "event_value_percentiles",
-    "revenue_rollup",
-    "pii_redact",
-    "repetition_ratios",
-    "neardup_kcore",
-    "q12_shipping_delay",
-    "q15_top_supplier",
-    "q21_waiting_orders",
-    "minhash_lsh_pairs",
-    "simhash_pairs",
-    "gram_novelty_profile",
-    "source_overlap_matrix",
-    "events_hopping_window",
-    "bucketed_join_revenue",
-    "partitioned_daily_revenue",
-    "bloom_stream_state",
-    "containment_pairs",
-    "image_phash_pairs",
-    "bigram_surprisal",
-    "doc_hash_embedding",
-    "doc_text_knn",
-    "vocab_growth_curve",
-    "audio_fingerprint_pairs",
-    "audio_silence_segments",
-    "video_frame_match_pairs",
-    "video_scene_cuts",
-    # --- NEW in r14 (debut in the head per the rotation policy):
-    # HTML main-content extraction (VERDICT r13 item 3 / "what's
-    # missing" #2 — the last first-class LLM-pipeline family gap):
-    # per-doc boilerplate-removal report + the cumulative quality
-    # funnel over the EXTRACTED text ---
-    "html_boilerplate_extract",
-    "html_extract_quality_funnel",
-    # --- clause-(b) re-gates + adjudication seats (changed or
-    # disputed THIS round): cc_stream_state — the r13 debut whose
-    # 44.5 s driver reading sat 2.4x above its fresh-JVM plateau
-    # (VERDICT r13 "what's wrong" #1; adjudicated at this HEAD per
-    # item 1) AND the face's batch body changed this round (the
-    # small-label-graph fast path + the sharded labels_v publication,
-    # VERDICT items 1/6) — the driver re-times and re-verifies it
-    # here; q19_discounted_revenue — the 1.52x sub-1 s driver mover
-    # (item 5), re-timed alongside its recorded plateau ---
-    "cc_stream_state",
-    "q19_discounted_revenue",
-    # --- SMOOTHING pulls from the r12 cohort (due r17; buys the r17
-    # window from 41 to 37 obligated): the three remaining batch CC
-    # consumers — seated together with the cc face so the whole
-    # connected-components consumer family carries fresh verdicts in
-    # one round (the r6 named-representative precedent, applied
-    # eagerly) ---
-    "neardup_clusters",
-    "dedup_survivors",
-    "dedup_survivors_quality",
-    # --- SMOOTHING pulls from the r13 cohort (due r18 — VERDICT r13
-    # item 4: the zero-slack window; together with the cc_stream_state
-    # seat above these buy r18 from 50/0 to 47/3): the heaviest r13
-    # seat plus the CC-consuming leakage report ---
-    "split_leakage_report",
-    "semdedup_text_prune",
-    # --- SMOOTHING pulls from the 40-strong r10 cohort (due r15 in
-    # one wave otherwise; these 12 leave r15 at 28 obligated / 22
-    # free). char_entropy_profile is simultaneously the second sub-1 s
-    # driver mover (VERDICT item 5), re-timed here alongside its new
-    # plateau; the rest are the cohort's heaviest members so driver
-    # timings refresh where scatter matters most ---
-    "char_entropy_profile",
-    "substring_dedup_stats",
-    "substring_dedup_rewrite",
-    "embedding_neardup",
-    "knn_brute",
-    "knn_lsh",
-    "knn_lsh_recall",
-    "gopher_quality_rules",
-    "q1_pricing_summary",
-    "knn_ivf_probe_sweep",
-    "normalized_exact_dedup",
-    "scalar_function_showcase",
-]
-
-# === r13 head (HISTORY — the r13 driver gated these 50 green,
-# CORRECTNESS_r13.json; kept for the provenance comments the rotation
-# policy requires) ===
-_R13_HEAD_HISTORY: list[str] = [
-    # === r13 head ===
-    # --- OBLIGATED: NEXT_HEAD_PLAN as pre-authored at the r12 close
-    # (VERDICT r12 item 1 — materialized VERBATIM, all 19 judge-gated
-    # green at sf0.01 in the r12 verdict session, so this is seating,
-    # not debugging). First the 3 clause-(b) sibling-face re-gates for
-    # the late-r12 _accumulated_over_cap/_read_index_before
-    # single-sourcing — and simultaneously the r13 clause-(b) gates
-    # for THIS round's streaming-helper hardening (ADVICE r12:
-    # try/finally unpersist in the index-batch bodies, LongType
-    # _batch_id partition schema, explicit-schema counts reads in
-    # _accumulated_over_cap; values identical, full battery + CI
-    # parity green) ---
-    "phash_stream_state",
-    "afp_stream_state",
-    "vfp_stream_state",
-    # --- the 16 r8-cohort names deferred by the r12 smoothing ---
-    "winnowing_pairs",
-    "neardup_triangles",
-    "event_path_report",
-    "text_stats",
-    "lang_id",
-    "token_counts",
-    "doc_fingerprint",
-    "normalize_text",
-    "quality_classifier_score",
-    "adaptive_length_filter",
-    "token_frequency_score",
-    "trigram_gini_diversity",
-    "array_function_showcase",
-    "revenue_cube",
-    "revenue_grouping_sets",
-    "jpeg_decode",
-    # --- r12-cohort pulls (each buys a slot back from the r17
-    # worst-case 50/0 window — VERDICT r12 item 3 — and each is ALSO
-    # individually motivated): lsh/edit_stream_state are clause-(b)
-    # re-gates for the same streaming-helper hardening the three
-    # sibling faces above gate (the five faces plus the r13-debuting
-    # cc_stream_state — seated below — are the complete consumer set
-    # of _read_index_before/_accumulated_over_cap);
-    # pq_train_report/knn_pq_adc/knn_pq_recall/semdedup_prune/
-    # embedding_neardup_refined are the kmeans.lloyd-freeze consumers
-    # VERDICT r12 item 6 asks to re-gate preferentially;
-    # split_leakage_report is the 3.13x unreceipted driver mover
-    # (item 2) — re-gated the same round its isolated plateau is
-    # recorded.
-    # (clause-(b) note for the late-r13 review fix: graph.
-    # connected_components now releases its persisted edge relation
-    # in a finally — values identical, resource hygiene only. The
-    # changed helper is gated in THIS head by split_leakage_report
-    # (below) and cc_stream_state (the debut, whose every micro-batch
-    # drives the changed loop); the remaining CC consumers
-    # (neardup_clusters, dedup_survivors, dedup_survivors_quality,
-    # neardup_kcore — r12/r14-plan cohorts) are re-hashed by CI
-    # parity on every pytest run, per the r6 precedent.) ---
-    "lsh_stream_state",
-    "edit_stream_state",
-    "pq_train_report",
-    "knn_pq_adc",
-    "knn_pq_recall",
-    "semdedup_prune",
-    "embedding_neardup_refined",
-    "split_leakage_report",
-    # --- r11-cohort pull: the remaining kmeans-family consumer whose
-    # cohort round is nearest (semdedup chain over corpus-derived
-    # vectors; balances the r16 window at >= 6 free) ---
-    "semdedup_text_prune",
-    # --- r10-cohort pulls (lloyd consumers per item 6; balance the
-    # r15 window from 4 to 10 free) ---
-    "embedding_neardup_fps",
-    "kmeans_cluster_sizes",
-    "knn_ivf",
-    "knn_ivf_recall",
-    # --- SMOOTHING pulls from the 45-strong r9 cohort (due r14 in
-    # one wave otherwise — VERDICT r12 item 1 asks for >= 10 pulled
-    # forward; these 17 are the knn/quantization family, i.e. the
-    # remaining lloyd-trained consumers (18 were drafted; doc_text_knn
-    # was displaced into NEXT_HEAD_PLAN by the cc_stream_state debut
-    # below, leaving 45 - 17 = 28 r9 names owed at r14), including
-    # knn_ivf_pq_residual
-    # (the second unreceipted driver mover, re-gated the round its
-    # plateau lands). The r14 plan (NEXT_HEAD_PLAN below) owes the
-    # cohort remainder. ---
-    "knn_ivf_kmeans",
-    "knn_ivf_pq",
-    "knn_ivf_pq_recall",
-    "knn_ivf_pq_residual",
-    "knn_ivf_pq_rerank",
-    "knn_ivf_pq_rerank_recall",
-    "knn_sq8",
-    "knn_sq8_recall",
-    "knn_ivf_filtered",
-    "knn_ivf_filtered_recall",
-    "knn_mrl",
-    "knn_mrl_recall",
-    "knn_jl",
-    "knn_jl_recall",
-    "jl_projection_distortion",
-    "embedding_quantize",
-    "embedding_normalized_norms",
-    # --- NEW in r13 (debut in the head per the rotation policy):
-    # cc_stream_state = incremental connected-components maintenance
-    # over the streamed near-dup pair log (VERDICT r12 item 4, the
-    # last first-class streaming gap); displaces doc_text_knn from
-    # the r9 smoothing fill into NEXT_HEAD_PLAN (due r14 with its
-    # cohort) ---
-    "cc_stream_state",
-]
-
-# === r12 head (HISTORY — the r12 driver gated these 50 green,
-# CORRECTNESS_r12.json; kept for the provenance comments the rotation
-# policy requires) ===
-_R12_HEAD_HISTORY: list[str] = [
-    # === r12 head ===
-    # --- the 10 r7-cohort rotation obligations (the r11 smoothing
-    # remainder; all 10 were judge-gated green at sf0.01 in the r11
-    # verdict session, so this is seating, not debugging) ---
-    "daily_funnel",
-    "daily_reconciliation",
-    "value_outliers_by_type",
-    "q17_small_quantity",
-    "q20_potential_promotion",
-    "q22_idle_rich_customers",
-    "events_pivot",
-    "events_unpivot",
-    "users_purchase_except_error",
-    "users_purchase_intersect_error",
-    # --- NEW in r12 (debut in the head per the rotation policy):
-    # supplier_customer_linkage = TWO-relation record linkage
-    # (VERDICT r11 item 5) — supplier name-ids probed into the
-    # customer master's variant-block index, naive cross-join oracle;
-    # edit_stream_state = the edit-distance linkage face (VERDICT r11
-    # item 6) — accumulated variant-block index, pair-in-later-batch,
-    # drained log equals name_edit_neighbors ---
-    "supplier_customer_linkage",
-    "edit_stream_state",
-    # --- clause-(b) re-gates (changed THIS round, r12):
-    # name_edit_neighbors: its blocking moved into the shared
-    # linkage.variant_exploded / VARIANT_PAIR_EXPANSION single-source
-    # helpers the two debuts reuse (values identical, CI-parity
-    # green, but the r11 verdict's code moved);
-    # interval_overlap_pairs + ivo_stream_state: epoch-day derivation
-    # in lineitem_transit_intervals moved DIV -> floor (values
-    # identical on the 1992+ fixture; both consumers of the changed
-    # helper re-gate);
-    # bpe_encode_report: the r12 lineage fix (eager per-step
-    # localCheckpoint — VERDICT r11 item 2; also its r8 verdict is
-    # the oldest in the registry, so this seat is simultaneously the
-    # cohort pull);
-    # bpe_merges: the SAME lineage fix applied to the training loop
-    # late-r12 (per-step corpus + 1-row top checkpoints; values
-    # identical, CI-parity green) — its seat displaces
-    # winnowing_pairs from the r8 fill into NEXT_HEAD_PLAN;
-    # kmeans_clusters + knn_ivf_pq_residual_recall: NAMED
-    # REPRESENTATIVES (the r6 precedent) for the late-r12
-    # kmeans.lloyd per-round codebook freeze, which transitively
-    # changes every Lloyd-trained consumer — the head cannot seat the
-    # whole family, so these two cover the base kmeans_fit chain and
-    # the deepest composition (coarse + residual + per-cell PQ +
-    # rerank), while pq_train_report / knn_pq_adc / knn_pq_recall /
-    # semdedup_prune / ivf_stream_cell_counts of the same family are
-    # ALREADY seated below and CI parity re-hashes every remaining
-    # consumer per pytest run (values identical by construction: the
-    # checkpoint materializes the same trajectory). They displace
-    # neardup_triangles / event_path_report into NEXT_HEAD_PLAN ---
-    "name_edit_neighbors",
-    "interval_overlap_pairs",
-    "ivo_stream_state",
-    "bpe_encode_report",
-    "bpe_merges",
-    "kmeans_clusters",
-    "knn_ivf_pq_residual_recall",
-    # --- SMOOTHING pulls: the r8-verdict cohort (48 strong) hits the
-    # A=4 age limit at r13 in one wave; seat 32 of it now (31 pulls +
-    # the bpe_encode_report re-gate above) so r13 owes only the 16
-    # deferred names — which NEXT_HEAD_PLAN (below) pre-authors as
-    # the r13 head's obligated seats, keeping the rotation guard
-    # green ACROSS the round boundary for the first time (VERDICT
-    # r11 item 1). The deferred are the cheap map-only/showcase
-    # members plus winnowing_pairs / neardup_triangles /
-    # event_path_report (displaced late-r12 by the bpe_merges re-gate
-    # and the two kmeans.lloyd representatives; full list =
-    # NEXT_HEAD_PLAN below). ---
-    "ngram_jaccard_pairs",
-    "neardup_clusters",
-    "dedup_survivors",
-    "embedding_neardup_refined",
-    "minhash_band_sweep",
-    "dedup_survivors_quality",
-    "q8_market_share",
-    "q16_supplier_part_variety",
-    "q19_discounted_revenue",
-    "q2_min_cost_supplier",
-    "q11_important_parts",
-    "segment_dedup_stats",
-    "semdedup_prune",
-    "temperature_mixture_report",
-    "supply_chain_pagerank",
-    "dsir_proxy_weights",
-    "knn_filtered",
-    "embedding_label_outliers",
-    "pq_train_report",
-    "knn_pq_adc",
-    "knn_pq_recall",
-    "hll_stream_state",
-    "cms_stream_state",
-    "ivf_stream_cell_counts",
-    "lsh_stream_state",
-    "bm25_top_docs",
-    "unigram_surprisal",
-    "dedup_stream_state",
-    "winnowing_overlap",
-    "audio_frame_features",
-    "split_leakage_report",
-]
-
-# The round this HEAD_ORDER was authored for. At a round boundary —
-# CORRECTNESS_r{HEAD_ROUND} written, next session not yet started —
-# the rotation guard evaluates NEXT_HEAD_PLAN (the seats the NEXT
-# round's head is already committed to) instead of demanding that the
-# consumed head also cover the next round's stale set, which is
-# arithmetically impossible while a >40-name cohort is still
-# unwinding (48 r8 names + 10 r7 names = 58 seats > 50 at the r12
-# boundary). See tools/rotation_check.py for the boundary protocol.
-HEAD_ROUND = 14
-
-# Pre-authored obligated seats for the r{HEAD_ROUND+1} = r15 head
-# (the boundary protocol, third use — VERDICT r13 item 2 asked the
-# close to pre-author r15 exactly as r13's close pre-authored r14).
-# These are the r10-cohort remainder after the r14 head's 12 r10
-# smoothing pulls: their verdicts hit the A=4 age limit at r15, so
-# the r15 session MUST materialize these names into its HEAD_ORDER
-# (the rotation guard fails the r15 HEAD otherwise) and fill the
-# remaining ~22 slots with debuts/re-gates plus r11-cohort smoothing
-# pulls (44 r11 names come due r16 — pull >= 10 forward) and ideally
-# 2-3 more r13-cohort pulls (47 r13 names still come due r18).
-NEXT_HEAD_PLAN: list[str] = [
-    # the r10-cohort remainder (verdicts hit the A=4 limit at r15):
-    "bigram_lift_top",
-    "bigram_top_pairs",
-    "bloom_contamination",
-    "doc_chunks",
-    "events_group_reservoir",
-    "events_props_extract",
-    "events_props_map_explode",
-    "events_retention_cohorts",
-    "frame_sample",
-    "media_resize",
-    "mixture_sample_summary",
-    "multimodal_features",
-    "order_priority_stats",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q18_large_volume_orders",
-    "q3_shipping_priority",
-    "q4_order_priority_semi",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q9_product_nation_profit",
-    "sentence_split_rows",
-    "source_quality_matrix",
-    "top_customers_per_segment",
-    "training_mixture_report",
-    "weighted_avg_by_type",
-    "window_function_showcase",
-]
-
-# === r11 head (HISTORY — the r11 driver gated these 50 green,
-# CORRECTNESS_r11.json; kept for the provenance comments the rotation
-# policy requires) ===
-_R11_HEAD_HISTORY: list[str] = [
-    # === r11 head ===
-    # --- SEATING: the 5 late-r10 registrations that carried the
-    # one-round ALLOWED_PENDING_DEBUTS deferral (granted r10, due
-    # NOW; entries deleted from tools/rotation_check.py with this
-    # head per the contract). All five were judge-gated green at
-    # sf0.01 in the r10 verdict, so this is seating, not debugging.
-    "dedup_cascade_report",
-    "orders_profile",
-    "interval_overlap_pairs",
-    "name_edit_neighbors",
-    "zordered_box_scan",
-    # --- SMOOTHING pulls: the r7-verdict cohort (49 strong) hits
-    # the A=4 age limit at r12 in one wave — the r10 lesson is that
-    # 50-slot waves leave no debut room, so the r11 head absorbs 45
-    # of them now (the 4 left for r12 — q17_small_quantity,
-    # q20_potential_promotion, q22_idle_rich_customers,
-    # daily_reconciliation — keep r12's obligation small; r11 debuts
-    # and re-gates displace more of this fill as they land, each
-    # displacement named below). ---
-    "cdc_parse",
-    "cdc_filter_deletes",
-    "cdc_route",
-    "cdc_route_join",
-    "cdc_counts_inbound",
-    "cdc_counts_outbound",
-    "cdc_outgoing",
-    "cdc_materialize",
-    "cdc_scd2_history",
-    "scd2_stream_state",
-    "exact_dedup",
-    "crossdoc_ngram_overlap",
-    "token_pack_report",
-    "source_vocab_divergence",
-    "bpe_merges",
-    "jpeg_color_decode",
-    "png_decode",
-    "media_decode",
-    "events_daily",
-    "events_daily_gapfilled",
-    "events_last_purchase",
-    "events_sessionized",
-    "events_sessionized_native",
-    "purchases_with_recent_clicks",
-    "events_stratified_sample",
-    # --- NEW in r11 (debut in the head per the rotation policy):
-    # ivo_stream_state = streaming interval-overlap twin (VERDICT r10
-    # item 7); displaces daily_funnel from the r7 fill (due r12). ---
-    # (clause-(b) note for the late-r11 dedup refactor: the shared
-    # overlap helpers in rangejoin.py are gated by BOTH
-    # interval_overlap_pairs and ivo_stream_state in this head; the
-    # shared SORTED_PAIR_EXPANSION in multimodal.py — pure code
-    # motion out of video_frame_match_pairs — is gated by its head
-    # representative vfp_stream_state, whose drained log must equal
-    # the batch operator through that very expression; CI parity
-    # re-hashes video_frame_match_pairs itself every pytest run.)
-    "ivo_stream_state",
-    "quality_filter_funnel",
-    "tfidf_top_terms",
-    "contamination_check",
-    "hll_distinct_users",
-    "hll_distinct_orders",
-    "hll_rollup_users",
-    "cms_token_counts",
-    "histogram_quantiles",
-    "histogram_quantiles_by_type",
-    "documents_split_summary",
-    "customers_without_orders",
-    "orders_above_customer_avg",
-    "user_value_moving_avg",
-    "q14_promo_revenue",
-    # --- NEW in r11 (debut in the head per the rotation policy):
-    # vfp_stream_state = video frame-fingerprint index face (VERDICT
-    # r10 item 5); displaces value_outliers_by_type from the r7 fill
-    # (due r12). ---
-    "vfp_stream_state",
-    # --- NEW in r11 (debut in the head per the rotation policy):
-    # semdedup_text_prune = SemDeDup composed onto corpus-derived
-    # hashing-trick vectors (VERDICT r10 item 6); displaces
-    # events_pivot from the r7 fill (due r12). ---
-    "semdedup_text_prune",
-    # --- RE-GATES (values changed this round): the URL fixture moved
-    # to corpus-cardinality derivation (doc_id DIV 4 canonical groups,
-    # doc_id DIV 20 hosts — VERDICT r10 item 4), changing every URL
-    # row and the blocklist rule patterns; dedup_cascade_report (whose
-    # stage 1 is the URL dedup) is already seated above. These three
-    # displace events_unpivot / users_purchase_except_error /
-    # users_purchase_intersect_error from the r7 fill (due r12). ---
-    "url_canonical_dedup",
-    "host_profile",
-    "url_blocklist_report",
-]
-
-# === r10 head (HISTORY — the r10 driver gated these 50 green,
-# CORRECTNESS_r10.json; kept for the provenance comments the rotation
-# policy requires) ===
-_R10_HEAD_HISTORY: list[str] = [
-    # === r10 head ===
-    # --- the 39 r6-verdict rotation obligations (the largest cohort
-    # of the series; tools/rotation_check forecast them at r9 close —
-    # at A=4 their verdicts hit the age limit at r11, so they gate
-    # NOW; smoothing can't help a cohort this size, which is exactly
-    # why the registration-capacity ladder caps growth) ---
-    "bloom_contamination",
-    "bigram_lift_top",
-    "source_quality_matrix",
-    "embedding_neardup_fps",
-    "kmeans_clusters",
-    "kmeans_cluster_sizes",
-    "q6_forecast_revenue",
-    "knn_brute",
-    "knn_lsh",
-    "embedding_neardup",
-    "knn_ivf",
-    "knn_lsh_recall",
-    "knn_ivf_recall",
-    "knn_ivf_probe_sweep",
-    "q7_volume_shipping",
-    "q9_product_nation_profit",
-    "q10_returned_items",
-    "q18_large_volume_orders",
-    "q13_customer_distribution",
-    "events_group_reservoir",
-    "bigram_top_pairs",
-    "training_mixture_report",
-    "media_resize",
-    "doc_chunks",
-    "mixture_sample_summary",
-    "scalar_function_showcase",
-    "weighted_avg_by_type",
-    "sentence_split_rows",
-    "multimodal_features",
-    "frame_sample",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "top_customers_per_segment",
-    "events_props_extract",
-    "events_props_map_explode",
-    "order_priority_stats",
-    "window_function_showcase",
-    "q4_order_priority_semi",
-    # --- NEW in r10 (debut in the head per the rotation policy): ---
-    # substring_dedup_rewrite = duplicate-span REMOVAL (Lee et al.
-    # 2021's cleaned-corpus output; the substring family's capstone —
-    # VERDICT r9 item 3) ---
-    "substring_dedup_rewrite",
-    # url_canonical_dedup + host_profile = URL/host canonicalization
-    # family (the crawl pipeline's first pass; the one LLM-data family
-    # with zero coverage — VERDICT r9 item 4; URL fixture derived
-    # in-query from doc_id, the cdc_fixture discipline) ---
-    "url_canonical_dedup",
-    "host_profile",
-    # afp_stream_state = audio-fingerprint index face; closes the
-    # multimodal streaming pair (VERDICT r9 item 6) ---
-    "afp_stream_state",
-    # --- clause (b) re-gates: changed THIS round (r10). Values
-    # identical or semantics deliberately corrected, plans/code
-    # changed:
-    # events_retention_cohorts: epoch day moved to integer DIV (r9
-    # ADVICE item 1);
-    # gopher_quality_rules: rule 3 split into per-symbol ratios (r9
-    # ADVICE item 2 — engine AND oracle changed in lockstep);
-    # substring_dedup_stats: skew_safe gained the AUTO hot-gram probe
-    # (VERDICT r9 item 5; default plan unchanged below the flip
-    # threshold, pinned by test_plans);
-    # phash_stream_state: its batch body moved into the shared
-    # _fingerprint_index_batch engine the new afp face reuses (pure
-    # code motion, pytest-pinned) ---
-    "events_retention_cohorts",
-    "gopher_quality_rules",
-    "substring_dedup_stats",
-    "phash_stream_state",
-    # normalized_exact_dedup = CCNet normalize-then-hash dedup key
-    # (the reformatted-copy class exact_dedup misses); unfiltered
-    # group relation so the driver hash pins the whole normalization
-    # chain ---
-    "normalized_exact_dedup",
-    # url_blocklist_report = first-match URL blocklist over canonical
-    # urls (C4's URL-filter pass; the CDC router's ordered-rule
-    # semantics at crawl grain) ---
-    "url_blocklist_report",
-    # char_entropy_profile = zeroth-order char-entropy bound (the
-    # compressibility quality signal, integer whole-bits) ---
-    "char_entropy_profile",
-    # (no smoothing pulls this round: the seven debuts + four
-    # re-gates + 39 obligations fill all 50 slots. The r7 cohort's
-    # full 49 stay due r12; the r11 head — 0 obligated slots, 50
-    # free — MUST seat ~49 of them per the smoothing rule, see the
-    # r10 check-in note in tools/rotation_check.py.) ---
-]
-
-# === r8 head (HISTORY — the r8 driver gated these 50; kept for the
-# provenance comments the rotation policy requires) ===
-_R8_HEAD_HISTORY: list[str] = [
-    # === r8 head ===
-    # --- the 3 r7 ALLOWED_PENDING_DEBUTS deferrals (allowance expires
-    # this round; entries deleted from tools/rotation_check.py with
-    # this head): first driver verdicts for the LSH maintenance
-    # sink's pair-log face and the two r7 retrieval/LM-quality
-    # operators ---
-    "lsh_stream_state",
-    "bm25_top_docs",
-    "unigram_surprisal",
-    # --- clause-(b) seats NAMED by the r7-closing addendum (kept
-    # above in HISTORY): the shared _drain_through_sink/_face_scratch/
-    # pointer-publication path changed in r7 (memoized codebook,
-    # atomic _LATEST publish) and connected_components changed its
-    # loop (persisted edges + label-sum fixpoint). Values identical,
-    # CI-parity green, but the faces re-gate per clause (b) ---
-    "ivf_stream_cell_counts",
-    "hll_stream_state",
-    "cms_stream_state",
-    "neardup_clusters",
-    "dedup_survivors",
-    "dedup_survivors_quality",
-    # --- changed PLAN this round (r8): ngram_jaccard_pairs gains a
-    # lossless length-bound candidate prune before the exact char-
-    # 4-gram intersection (VERDICT r7 item 3; values identical, the
-    # Jaccard bound J <= min(|A|,|B|)/max(|A|,|B|) drops pairs that
-    # cannot reach the threshold) ---
-    "ngram_jaccard_pairs",
-    # --- SMOOTHING RULE fill (first exercise; rotation_check.py:48):
-    # the r5-verdict cohort is 48 strong and due by r9 in one wave —
-    # gate 40 of it now so r9 owes <= ~8 and keeps real debut room.
-    # The names left for r9 (cheap, map-only or tiny-join):
-    # orders_top10, embedding_normalized_norms, embedding_quantize,
-    # jl_projection_distortion, knn_jl, knn_jl_recall,
-    # salted_event_counts, event_value_percentiles, revenue_rollup,
-    # q12_shipping_delay, q15_top_supplier, q21_waiting_orders (the
-    # last five displaced by the r8 debuts below — r9 owes 14 slots,
-    # ~36 still free) ---
-    "token_frequency_score",
-    "embedding_neardup_refined",
-    "minhash_band_sweep",
-    "bpe_encode_report",
-    "quality_classifier_score",
-    "adaptive_length_filter",
-    "event_path_report",
-    "neardup_triangles",
-    "q8_market_share",
-    "q16_supplier_part_variety",
-    "q19_discounted_revenue",
-    "q2_min_cost_supplier",
-    "q11_important_parts",
-    "segment_dedup_stats",
-    "semdedup_prune",
-    "temperature_mixture_report",
-    "supply_chain_pagerank",
-    "dsir_proxy_weights",
-    "knn_filtered",
-    "trigram_gini_diversity",
-    "embedding_label_outliers",
-    "pq_train_report",
-    "knn_pq_adc",
-    "knn_pq_recall",
-    "jpeg_decode",
-    "revenue_cube",
-    "revenue_grouping_sets",
-    "array_function_showcase",
-    "lang_id",
-    "token_counts",
-    "normalize_text",
-    "doc_fingerprint",
-    "text_stats",
-    # --- NEW in r8 (debut in the head per the rotation policy):
-    # substring_dedup_stats = stride-1 char-window exact-substring
-    # dedup profile (the suffix-array-style complement to
-    # segment_dedup_stats); dedup_stream_state = the first-seen
-    # dedup ledger's driver face (the one stateful op without one,
-    # VERDICT r7 item 6); winnowing_overlap = MOSS winnowing
-    # fingerprint overlap (the density-sparse span-evidence index);
-    # audio_frame_features = frame-level PCM feature extraction over
-    # the real WAV decode path. The four debuts displace pii_redact /
-    # repetition_ratios / event_value_percentiles / revenue_rollup
-    # from the smoothing fill (r9 owes 11 slots, still 39 free) ---
-    "substring_dedup_stats",
-    "dedup_stream_state",
-    "winnowing_overlap",
-    "audio_frame_features",
-    # containment_pairs = prefix-filtered set-containment join
-    # (PPJoin-style): the ASYMMETRIC near-dup class (small doc quoted
-    # inside a large one) that Jaccard-calibrated LSH blocking misses
-    # by construction; displaces q12_shipping_delay from the fill ---
-    "containment_pairs",
-    # split_leakage_report = near-dup leakage across the naive
-    # train/val/test split + the cluster-aware repair (eval-integrity:
-    # an eval doc with a train near-dup measures memorization);
-    # displaces q15_top_supplier from the fill ---
-    "split_leakage_report",
-    # winnowing_pairs = MOSS's ranked-pair output over the winnowing
-    # fingerprint index (char-level span evidence at pair grain, the
-    # counterpart to minhash's token-set pairs); displaces
-    # q21_waiting_orders from the fill ---
-    "winnowing_pairs",
-]
-
-
 def queries() -> dict[str, QueryFn]:
-    """Dict ORDER is part of the driver contract: the driver gates only
-    the FIRST 50 entries. The returned order is HEAD_ORDER (above, with
-    per-group provenance comments) followed by every other registered
-    query in registry order — so rotating the head each round is an
-    edit to ONE list, and tools/rotation_check.py fails CI if the
-    chosen head would let any tail query's latest green driver verdict
-    age past 2 rounds.
+    """Every registered query by name, in registration order.
 
-    The registry literal below keeps its r5 grouping comments as
-    HISTORY (they described r5's head when registration order was the
-    contract); the driver-facing order no longer depends on them."""
-    reg = {
-        # === (r5 history) HEAD: the r2-verdict tail, rotating first (VERDICT r4 #1) ===
+    The contract is the names, the functions and their ``oracle_sql()``
+    twins; the order carries no meaning beyond registration."""
+    return {
         "orders_top10": lambda s, d: relational.orders_top10(load_table(s, "orders", d)),
         "embedding_normalized_norms": lambda s, d: vectorprep.embedding_normalized_norms(
             _emb(s, d)
@@ -861,41 +152,16 @@ def queries() -> dict[str, QueryFn]:
         "text_stats": lambda s, d: text.text_stats(_docs(s, d)),
         "pii_redact": lambda s, d: text.pii_redact(_docs(s, d)),
         "repetition_ratios": lambda s, d: text.repetition_ratios(_docs(s, d)),
-        # === (r5 history) HEAD: changed in round 5 ===
         # integer-exact rework (sum of counts / (total*n), one division)
         "token_frequency_score": lambda s, d: text.token_frequency_score(_docs(s, d)),
         # codebook cardinality now data-adaptive: ceil(N/256) on both engines
         "embedding_neardup_refined": lambda s, d: dedup.embedding_neardup_refined(
             _emb(s, d)
         ),
-        # (embedding_neardup_fps and exact_dedup moved to tail-top when
-        # the fifth r5 batch landed: fps shares _refined's entire call
-        # graph — same function, seeding param only — and exact_dedup's
-        # r5 change was plan-level (rebalance opt-out) with identical
-        # values and an r4-green driver verdict; both age 1 at r5)
-        # === (r5 history) HEAD: r3-verdict queries whose CALL GRAPH changed in r5
-        # (lsh_candidates grew the n_bands knob -> minhash family;
-        # kmeans_fit refactor -> kmeans family). One gated
-        # REPRESENTATIVE per changed helper (minhash_lsh_pairs sits
-        # directly on lsh_candidates; knn_ivf_kmeans on kmeans_fit);
-        # the family members sharing those call graphs verbatim
-        # (neardup_clusters, dedup_survivors, kmeans_clusters,
-        # kmeans_cluster_sizes) were displaced to the tail by the
-        # second r5 batch of NEW queries — they are CI-differential-
-        # verified this round and age exactly 2 at r5, so
-        # rotation_check holds and r6 MUST gate them. ===
-        # (minhash_lsh_pairs itself was displaced to the tail when the
-        # third r5 batch landed: minhash_band_sweep exercises the
-        # changed lsh_candidates helper across the WHOLE n_bands range
-        # including the default, and dedup_survivors_quality below runs
-        # the full minhash->CC path transitively under a value hash)
-        # (knn_ivf_kmeans was likewise displaced by the fourth r5
-        # batch: the gated PQ trio trains per-subspace codebooks
-        # through the same refactored kmeans_fit under value hashes)
+        # lsh_candidates across the whole n_bands range, default included
         "minhash_band_sweep": lambda s, d: dedup.minhash_band_sweep(_docs(s, d)),
-        # === (r5 history) HEAD: new in round 5, second batch (must debut in the
-        # head): the BPE ENCODE pass, the Bloom membership sketch, the
-        # hashed linear quality classifier, collocation lift ===
+        # the BPE encode pass, the Bloom membership sketch, the hashed
+        # linear quality classifier, collocation lift
         "bpe_encode_report": lambda s, d: text.bpe_encode_report(_docs(s, d)),
         "bloom_contamination": lambda s, d: sketch.bloom_contamination(_docs(s, d)),
         "quality_classifier_score": lambda s, d: text.quality_classifier_score(
@@ -915,7 +181,6 @@ def queries() -> dict[str, QueryFn]:
         # k-core of the near-dup graph (late r9): iterative peeling —
         # where transitive-closure clustering is structurally safe ===
         "neardup_kcore": lambda s, d: graph.neardup_kcore(_docs(s, d)),
-        # === (r5 history) HEAD: new in round 5 (must debut in the head) ===
         "q8_market_share": lambda s, d: relational.q8_market_share(
             load_table(s, "lineitem", d),
             load_table(s, "orders", d),
@@ -982,24 +247,9 @@ def queries() -> dict[str, QueryFn]:
         "knn_pq_recall": lambda s, d: kmeans.knn_pq_recall(_emb(s, d)),
         "jpeg_decode": lambda s, d: multimodal.jpeg_decode(_docs(s, d)),
         "jpeg_color_decode": lambda s, d: multimodal.jpeg_color_decode(_docs(s, d)),
-        # === (r5 history) TAIL (51+): r4-green and unchanged since; plus the r3-
-        # verdict queries displaced by the new r5 head entries
-        # (events_group_reservoir, bigram_top_pairs,
-        # training_mixture_report, media_resize, doc_chunks,
-        # mixture_sample_summary, q6/q7/q9/q10/q13/q18, knn_brute,
-        # knn_lsh) — all with call graphs UNTOUCHED since their r3
-        # verdict and age exactly 2 rounds at r5, so rotation_check
-        # passes; r6 MUST rotate them (tools/rotation_check.py flags)
-        # ===
-        # displaced r3-call-graph family members (see head comment):
-        # same helpers as their gated representatives, CI-verified,
-        # age 2 at r5 -> r6 must gate them
-        # (r5 history: carried a one-round ALLOWED_PENDING_DEBUTS
-        # deferral; debuts in the r6 head via HEAD_ORDER)
         "source_quality_matrix": lambda s, d: text.source_quality_matrix(
             _docs(s, d)
         ),
-        # (r5 history: deferred debut, same rationale; r6 head)
         "knn_ivf_pq": lambda s, d: kmeans.knn_ivf_pq(_emb(s, d)),
         "knn_ivf_pq_recall": lambda s, d: kmeans.knn_ivf_pq_recall(_emb(s, d)),
         # residual-encoded IVF-PQ (late r9): the FAISS IVFPQ design —
@@ -1059,12 +309,8 @@ def queries() -> dict[str, QueryFn]:
         ),
         "knn_brute": lambda s, d: similarity.knn_brute(_emb(s, d)),
         "knn_lsh": lambda s, d: similarity.knn_lsh(_emb(s, d)),
-        # r3-green, call graphs untouched in r5 (similarity.py /
-        # simhash path had no r5 edits); age 2 rounds here -> r6 MUST
-        # rotate them (rotation_check enforces)
         "simhash_pairs": lambda s, d: dedup.simhash_pairs(_docs(s, d)),
-        # mh0-blocked via _mh/_hash_pairs — NOT touched by the r5
-        # lsh_candidates n_bands change, so it ages in the tail
+        # mh0-blocked via _mh/_hash_pairs, not lsh_candidates
         "ngram_jaccard_pairs": lambda s, d: dedup.ngram_jaccard_pairs(_docs(s, d)),
         # LABELED ANTI-PATTERN BASELINE (quadratic at scale; SCALING.md):
         # kept only as the measured comparator for the _refined variant
@@ -1228,7 +474,6 @@ def queries() -> dict[str, QueryFn]:
         "purchases_with_recent_clicks": lambda s, d: rangejoin.purchases_with_recent_clicks(
             load_table(s, "events", d)
         ),
-        # === (r5 history) TAIL: r3-verdict remainder (now rotated via HEAD_ORDER) ===
         "scalar_function_showcase": lambda s, d: relational.scalar_function_showcase(
             load_table(s, "orders", d)
         ),
@@ -1277,18 +522,11 @@ def queries() -> dict[str, QueryFn]:
         "q4_order_priority_semi": lambda s, d: relational.q4_order_priority_semi(
             load_table(s, "orders", d), load_table(s, "lineitem", d)
         ),
-        # === new in r6: streaming maintenance sink state readers —
+        # === streaming maintenance sink state readers —
         # real file-stream drain through the foreachBatch sinks, final
         # published state returned (streaming.pipeline docstrings) ===
         "hll_stream_state": streaming_pipeline.hll_stream_state,
-        # scd2_stream_state carries a one-round ALLOWED_PENDING_DEBUTS
-        # deferral (tools/rotation_check.py): the r6 head's 50 slots are
-        # all obligated (41 r3-tail re-verifications + 3
-        # expiring-deferral debuts + 3 changed-semantics re-gates + 3
-        # new sink-face debuts);
-        # its state equals batch cdc.scd2_history (r5-green oracle) and
-        # CI parity verifies it differentially meanwhile. r7 MUST gate
-        # it.
+        # its state equals batch cdc.scd2_history
         "scd2_stream_state": streaming_pipeline.scd2_stream_state,
         "cms_stream_state": streaming_pipeline.cms_stream_state,
         # Bloom membership face (late r9): OR-merge registers — the
@@ -1297,24 +535,14 @@ def queries() -> dict[str, QueryFn]:
         # forever ===
         "bloom_stream_state": streaming_pipeline.bloom_stream_state,
         "ivf_stream_cell_counts": streaming_pipeline.ivf_stream_cell_counts,
-        # === new in r7: the LSH index sink's accumulated pair log —
-        # the last maintenance sink without a driver face (VERDICT r6
-        # item 8). Defers its debut to the r8 head
-        # (tools/rotation_check.py ALLOWED_PENDING_DEBUTS: the r7 head
-        # is fully obligated by the v1 age promise); its log equals
-        # batch minhash_lsh_pairs (r6-green oracle) and CI parity
-        # verifies it differentially meanwhile ===
+        # the LSH index sink's accumulated pair log; it equals batch
+        # minhash_lsh_pairs
         "lsh_stream_state": streaming_pipeline.lsh_stream_state,
-        # === new in r7: retrieval + LM-quality operators (both defer
-        # their debut to the r8 head alongside lsh_stream_state — the
-        # r7 head is fully obligated; the v2 age promise leaves r8
-        # ~45 free slots, so deferrals stay the exception) ===
+        # retrieval + LM-quality operators
         "bm25_top_docs": lambda s, d: text.bm25_top_docs(_docs(s, d)),
         "unigram_surprisal": lambda s, d: text.unigram_surprisal(_docs(s, d)),
-        # === new in r8: exact-substring span-dedup profile + the
-        # first-seen dedup ledger's streaming face (both debut in the
-        # r8 head — no deferral needed, the v2 age promise leaves
-        # free slots) ===
+        # exact-substring span-dedup profile + the first-seen dedup
+        # ledger's streaming face
         "substring_dedup_stats": lambda s, d: dedup.substring_dedup_stats(
             _docs(s, d)
         ),
@@ -1328,17 +556,16 @@ def queries() -> dict[str, QueryFn]:
         "split_leakage_report": lambda s, d: sampling.split_leakage_report(
             _docs(s, d)
         ),
-        # === new in r9: image perceptual-hash near-dup — the bridge
+        # image perceptual-hash near-dup — the bridge
         # between the multimodal decode stack (real PPM decode, luma,
         # resize_nearest) and the dedup blocking stack (the simhash
-        # chunk machinery, factored into dedup.hamming_chunk_pairs);
-        # debuts in the r9 head ===
+        # chunk machinery, factored into dedup.hamming_chunk_pairs)
         "image_phash_pairs": lambda s, d: multimodal.image_phash_pairs(
             _docs(s, d)
         ),
         # bigram-with-backoff surprisal: the context-aware CCNet-style
         # LM filter (unigram_surprisal's sibling), same integer-bit
-        # discipline; debuts in the r9 head ===
+        # discipline
         "bigram_surprisal": lambda s, d: text.bigram_surprisal(_docs(s, d)),
         # hashing-trick doc vectors + text-corpus cosine search (late
         # r9): the text -> similarity bridge, integer-exact to the one
@@ -1363,39 +590,37 @@ def queries() -> dict[str, QueryFn]:
         # audio near-dup: energy-contour fingerprint over the real WAV
         # decode, paired via the same factored chunk blocking — with
         # image_phash_pairs this completes the multimodal near-dup
-        # pair; debuts in the r9 head ===
+        # pair
         "audio_fingerprint_pairs": lambda s, d: multimodal.audio_fingerprint_pairs(
             _docs(s, d)
         ),
         # VAD-style silence/activity segmentation over the real
-        # decode: gaps-and-islands run fold, one map-only Arrow stage;
-        # debuts in the late-r9 head ===
+        # decode: gaps-and-islands run fold, one map-only Arrow stage
         "audio_silence_segments": lambda s, d: multimodal.audio_silence_segments(
             _docs(s, d)
         ),
         # video near-dup: per-frame dHash over the real PPM container
         # demux + decode, videos paired by a capped frame-hash equi-
         # join at >= VID_MIN_MATCH shared frames — the video member of
-        # the multimodal near-dup triad; debuts in the r9 head ===
+        # the multimodal near-dup triad
         "video_frame_match_pairs": lambda s, d: multimodal.video_frame_match_pairs(
             _docs(s, d)
         ),
         # video scene segmentation: demux + per-frame dHash + adjacent-
         # frame Hamming + run-length fold in ONE map-only Arrow stage —
-        # the keyframe-sampling readout; debuts in the r9 head ===
+        # the keyframe-sampling readout
         "video_scene_cuts": lambda s, d: multimodal.video_scene_cuts(_docs(s, d)),
         # streaming face: documents drained through phash_index_sink —
         # the incremental image-fingerprint chunk index; the drained
         # pair log equals the one-shot image_phash_pairs, so it shares
-        # that oracle; debuts in the r9 head ===
+        # that oracle
         "phash_stream_state": streaming_pipeline.phash_stream_state,
-        # === new in r10: the duplicate-span REMOVAL capstone (Lee et
+        # the duplicate-span REMOVAL capstone (Lee et
         # al. 2021's cleaned-corpus output over the substring family's
         # shared-window relation), the URL/host canonicalization
         # family (the crawl pipeline's first pass — VERDICT r9 item
         # 4), and the audio fingerprint streaming face closing the
-        # multimodal streaming pair (item 6); all debut in the r10
-        # head ===
+        # multimodal streaming pair (item 6)
         "substring_dedup_rewrite": lambda s, d: dedup.substring_dedup_rewrite(
             _docs(s, d)
         ),
@@ -1412,35 +637,27 @@ def queries() -> dict[str, QueryFn]:
         "vfp_stream_state": streaming_pipeline.vfp_stream_state,
         # normalization-robust exact dedup (CCNet's normalize-then-
         # hash key): unfiltered group relation so the driver hash
-        # verifies the whole normalization chain; debuts in the r10
-        # head ===
+        # verifies the whole normalization chain
         "normalized_exact_dedup": lambda s, d: dedup.normalized_exact_dedup(
             _docs(s, d)
         ),
         # first-match URL blocklist over canonical urls (C4's URL
-        # filter pass; routing semantics, gopher-report shape);
-        # debuts in the r10 head ===
+        # filter pass; routing semantics, gopher-report shape)
         "url_blocklist_report": lambda s, d: web.url_blocklist_report(
             _docs(s, d)
         ),
         # zeroth-order char-entropy bound — the integer-exact
-        # compressibility quality signal; debuts in the r10 head ===
+        # compressibility quality signal
         "char_entropy_profile": lambda s, d: text.char_entropy_profile(
             _docs(s, d)
         ),
         # the dedup CASCADE funnel (url -> normalized-exact -> minhash
-        # pair rule, production order); registered when the r10 head
-        # was already full (39 obligations + 7 debuts + 4 re-gates) —
-        # carries the ONE-ROUND deferral (tools/rotation_check.py
-        # ALLOWED_PENDING_DEBUTS, granted r10), MUST debut in the r11
-        # head ===
+        # pair rule, production order)
         "dedup_cascade_report": lambda s, d: dedup.dedup_cascade_report(
             _docs(s, d)
         ),
         # ANALYZE-style per-column profiling of the orders table
-        # (generic relational.table_profile); registered past the
-        # saturated r10 head — one-round deferral (granted r10), MUST
-        # debut in the r11 head ===
+        # (generic relational.table_profile)
         "orders_profile": lambda s, d: relational.table_profile(
             load_table(s, "orders", d)
         ),
@@ -1448,8 +665,7 @@ def queries() -> dict[str, QueryFn]:
         # after asof and the point-in-window range join): per-supplier
         # transit-interval overlap profile, bucketed-equi rewrite +
         # bucket-ownership exactly-once vs the NAIVE inequality-join
-        # oracle; registered past the saturated r10 head — one-round
-        # deferral (granted r10), MUST debut in the r11 head ===
+        # oracle
         "interval_overlap_pairs": lambda s, d: rangejoin.interval_overlap_pairs(
             load_table(s, "lineitem", d)
         ),
@@ -1460,17 +676,14 @@ def queries() -> dict[str, QueryFn]:
         # record linkage / entity resolution: symmetric-delete
         # (SymSpell) deletion-neighborhood blocking + built-in
         # levenshtein verify, exact recall for distance <= 1, vs the
-        # naive quadratic oracle; one-round deferral (granted r10),
-        # MUST debut in the r11 head ===
+        # naive quadratic oracle
         "name_edit_neighbors": lambda s, d: linkage.name_edit_neighbors(
             load_table(s, "customer", d)
         ),
         # Z-ordered layout 2-D box scan — completes the storage trio
         # (buckets / date partitions / Morton clustering); values
         # layout-invariant vs the plain filtered rollup oracle, the
-        # I/O effect measured from real parquet footers in test_plans;
-        # one-round deferral (granted r10), MUST debut in the r11
-        # head ===
+        # I/O effect measured from real parquet footers in test_plans
         "zordered_box_scan": relational.zordered_box_scan,
         # === NEW r12 (VERDICT r11 item 5): TWO-relation record
         # linkage — the supplier master's 9-digit name ids probed
@@ -1499,20 +712,13 @@ def queries() -> dict[str, QueryFn]:
         # link density over the closed-form synthesized-HTML fixture),
         # plus the cumulative curation funnel over the EXTRACTED text
         # (extraction upstream of the quality gates, the real crawl
-        # pipeline order); both debut in the r14 head ===
+        # pipeline order) ===
         "html_boilerplate_extract": lambda s, d: web.html_boilerplate_extract(
             _docs(s, d)
         ),
         "html_extract_quality_funnel": lambda s, d: (
             web.html_extract_quality_funnel(_docs(s, d))
         ),
-    }
-    head = set(HEAD_ORDER)
-    assert len(HEAD_ORDER) == len(head) <= 50, "head must be <= 50 unique names"
-    missing = head - set(reg)
-    assert not missing, f"HEAD_ORDER names not registered: {sorted(missing)}"
-    return {n: reg[n] for n in HEAD_ORDER} | {
-        n: fn for n, fn in reg.items() if n not in head
     }
 
 

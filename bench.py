@@ -454,28 +454,6 @@ def main() -> None:
         "sf": sf,
         "reps": REPS,
     }
-    # rotation capacity forecast rides with the bench receipts (r11,
-    # VERDICT r10 item 8): obligated/free head slots for the round
-    # after the upcoming one, so a judge reads the capacity math from
-    # the artifact instead of running tools/rotation_check.py.
-    try:
-        from tools.rotation_check import forecast_next_round, forecast_window
-
-        nxt, free, obligated = forecast_next_round()
-        full["rotation"] = {
-            "next_round": nxt,
-            "obligated_head_slots": len(obligated),
-            "free_head_slots": free,
-            # full forward A-window, no-smoothing worst case (r12,
-            # VERDICT r11 item 4 — also a CI invariant in
-            # tests/test_rotation.py)
-            "forward_window": [
-                {"round": r, "obligated": ob, "free": fr}
-                for r, ob, fr in forecast_window()
-            ],
-        }
-    except Exception as ex:  # the bench must never die on the forecast
-        full["rotation"] = {"error": str(ex)[:200]}
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_full.json"
     )

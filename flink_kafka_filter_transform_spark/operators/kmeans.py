@@ -783,10 +783,11 @@ def _pq_codebooks(
     sample-sized, never the corpus; the full-corpus ENCODE pass stays
     map-only against the broadcast codebooks.
 
-    ``full`` (r15): a caller that ALREADY checkpointed the re-spread
-    full-vector relation (knn_ivf_pq's coarse trainer input) passes it
-    as (vec_id, fv) and this helper slices that one materialization
-    instead of checkpointing a second copy of the same rows."""
+    ``full`` (r15): a caller that ALREADY checkpointed the vectors to
+    slice (knn_ivf_pq's re-spread coarse trainer input,
+    knn_ivf_pq_residual's residuals) passes them as (vec_id, fv) and
+    this helper slices that one materialization instead of
+    checkpointing a second copy of the same rows."""
     if full is None:
         full = (
             emb.select(
@@ -1013,40 +1014,7 @@ def knn_ivf_pq_recall(
     approx = knn_ivf_pq(
         emb, topk=topk, m=m, k=k, iters=iters, n_cells=n_cells, nprobe=nprobe
     )
-    full = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = full.filter(F.col("vec_id") < params.KNN_NUM_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("_d2").asc(), F.col("vec_id").asc())
-    exact = (
-        full.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _sq_dist("v", "qv").alias("_d2"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= topk)
-        .select("q_id", "vec_id")
-    )
-    hits = (
-        approx.select("q_id", "vec_id")
-        .join(exact, ["q_id", "vec_id"])
-        .groupBy("q_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    return (
-        exact.select("q_id")
-        .distinct()
-        .join(hits, "q_id", "left")
-        .select(
-            "q_id",
-            F.coalesce(F.col("_n"), F.lit(0)).cast("bigint").alias("n_hits"),
-            (
-                F.coalesce(F.col("_n"), F.lit(0)).cast("double")
-                / F.lit(float(topk))
-            ).alias("recall_at_k"),
-        )
-    )
+    return _recall_vs_exact(emb, approx, topk)
 
 
 def knn_pq_recall(
@@ -1062,40 +1030,7 @@ def knn_pq_recall(
     are kept (left join, coalesce 0)."""
     topk = params.KNN_K if topk is None else topk
     approx = knn_pq_adc(emb, topk=topk, m=m, k=k, iters=iters)
-    full = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = full.filter(F.col("vec_id") < params.KNN_NUM_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("_d2").asc(), F.col("vec_id").asc())
-    exact = (
-        full.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", _sq_dist("v", "qv").alias("_d2"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= topk)
-        .select("q_id", "vec_id")
-    )
-    hits = (
-        approx.select("q_id", "vec_id")
-        .join(exact, ["q_id", "vec_id"])
-        .groupBy("q_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    return (
-        exact.select("q_id")
-        .distinct()
-        .join(hits, "q_id", "left")
-        .select(
-            "q_id",
-            F.coalesce(F.col("_n"), F.lit(0)).cast("bigint").alias("n_hits"),
-            (
-                F.coalesce(F.col("_n"), F.lit(0)).cast("double")
-                / F.lit(float(topk))
-            ).alias("recall_at_k"),
-        )
-    )
+    return _recall_vs_exact(emb, approx, topk)
 
 
 def knn_ivf_pq_residual(
@@ -1127,10 +1062,6 @@ def knn_ivf_pq_residual(
     residual subtraction is map-side (coarse is k rows); trainers
     localCheckpoint sample-sized relations; the candidate relation is
     the only wide one, aggregated by exact DECIMAL m-way sums.
-    Training duplicates _pq_codebooks' small Lloyd loop rather than
-    refactoring it into a shared helper: the raw-PQ family carries
-    fresh driver verdicts and a shared-helper change would re-gate
-    all of it for zero plan delta (the rotation clause-(b) rule).
 
     Exactness note (shared by the whole kmeans family, verified
     empirically here): Lloyd centroids differ between engines at the
@@ -1176,21 +1107,11 @@ def knn_ivf_pq_residual(
         )
         .localCheckpoint(eager=True)
     )
-    sub_len = (F.size("rv") / F.lit(m)).cast("int")
-    slices = []
-    for j in range(m):
-        # pure map over the checkpointed residuals — no per-slice
-        # checkpoint (the _pq_codebooks r14 rationale)
-        svecs = resid.select(
-            "vec_id", F.slice("rv", j * sub_len + 1, sub_len).alias("v")
-        )
-        cents = svecs.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cid"), F.col("v").alias("centroid")
-        )
-        slices.append((svecs, cents))
-    # per-round freeze inside lloyd() covers the sub-codebooks too; the
-    # m independent residual chains overlap on the scheduler (r15 §2.6)
-    subs = _parallel_lloyd(slices, iters, k)
+    # the residual sub-codebooks train exactly like raw PQ's, sliced
+    # from the checkpointed residuals instead of the raw vectors
+    subs = _pq_codebooks(
+        emb, m, k, iters, full=resid.select("vec_id", F.col("rv").alias("fv"))
+    )
 
     q = vecs.filter(F.col("vec_id") < params.KNN_NUM_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
@@ -1284,14 +1205,9 @@ def knn_ivf_pq_residual_recall(
 
 
 def _recall_vs_exact(emb: DataFrame, approx: DataFrame, topk: int) -> DataFrame:
-    """Shared recall@k scaffold (exact L2 top-k, hits join, coalesced
-    per-query rollup) — extracted with knn_ivf_pq_residual_recall so
-    the scaffold isn't copied a THIRD time. knn_ivf_pq_recall and
-    knn_pq_recall keep their inline (character-identical) copies: both
-    carry fresh driver verdicts and rerouting them through a shared
-    helper is exactly the clause-(b) transitively-changed-call-graph
-    case the rotation policy makes expensive for zero plan delta —
-    fold them in whenever either next changes for its own reasons."""
+    """Shared recall@k scaffold for the PQ/IVF-PQ family: exact L2
+    top-k, hits join, coalesced per-query rollup. Queries with zero
+    overlap are kept (left join, coalesce 0)."""
     from flink_kafka_filter_transform_spark.operators import params
 
     full = emb.select(

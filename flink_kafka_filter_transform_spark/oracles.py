@@ -5,7 +5,8 @@ Each builder returns ANSI-ish SQL that DuckDB runs over the driver's
 pre-registered parquet views, reproducing the Spark query's semantics
 (and, for floating point, its exact fold order — see functions.vectors).
 The driver compares row count + schema + order-insensitive value hash
-at sf0.01 (CORRECTNESS_r{N}.json).
+at sf0.01; tests/test_oracle_parity.py runs the same comparison over
+every query (at sf0.001 by default).
 """
 
 from __future__ import annotations

@@ -628,6 +628,26 @@ def _accumulated_over_cap(
     )
 
 
+def _refuse_legacy_index(
+    spark: SparkSession, state_dir: str, legacy: str, current: str
+) -> None:
+    """Fail loudly on a state root whose index still lives under the
+    pre-rename ``legacy`` directory. The sink reads only ``current``;
+    without this check it would start from an empty index and never
+    propose cross-batch pairs against the stored entities, while the
+    sum-merged bucket counts still count them. There is no migration:
+    rebuild the state by replaying the stream into a fresh state dir
+    and checkpoint."""
+    if _hadoop_path_exists(
+        spark, f"{state_dir}/{legacy}"
+    ) and not _hadoop_path_exists(spark, f"{state_dir}/{current}"):
+        raise RuntimeError(
+            f"{state_dir}/{legacy} holds an index in a retired layout; this "
+            f"sink reads {state_dir}/{current}. Replay the stream into a "
+            "fresh state dir and checkpoint to rebuild it."
+        )
+
+
 def _read_index_before(
     spark: SparkSession, path: str, row_rel: DataFrame, batch_id: int
 ) -> DataFrame:
@@ -1306,6 +1326,7 @@ def _fingerprint_index_batch(
     and the chunk/cap/probe/verify/publish protocol is identical —
     see phash_index_sink's docstring for the full replay discipline."""
     spark = _batch_aqe(batch_df.sparkSession)
+    _refuse_legacy_index(spark, state_dir, "chunks", "hashes")
     mask = (1 << chunk_bits) - 1
     chunk_structs = [
         F.struct(
@@ -1832,6 +1853,7 @@ def _edit_index_batch(
     )
 
     spark = _batch_aqe(batch_df.sparkSession)
+    _refuse_legacy_index(spark, state_dir, "variants", "names")
     # the variant relation feeds three consumers (block counts, the
     # within-batch blocks, the index probe) plus the state append;
     # persisted so the explode runs once per batch

@@ -51,3 +51,12 @@ def test_every_query_has_an_oracle_or_is_declared():
 def test_no_orphan_oracles():
     orphans = set(ORACLES) - set(QUERIES)
     assert not orphans, f"oracle_sql() entries with no matching query: {orphans}"
+
+
+def test_docs_cover_every_query_and_refs_resolve():
+    """SURVEY/README <-> code consistency: every registered query is
+    documented; every module.function doc reference resolves."""
+    from tools.coverage_check import dangling_doc_refs, undocumented_queries
+
+    assert undocumented_queries() == []
+    assert dangling_doc_refs() == []

@@ -3,6 +3,7 @@ oracle, run under Structured Streaming from a file source (availableNow
 trigger), must produce identical results."""
 
 import os
+import re
 import time
 
 import pytest
@@ -1913,6 +1914,40 @@ def test_index_sinks_survive_empty_first_batch(spark, sf_dir, tmp_path_factory):
         for r in dedup.minhash_lsh_pairs(docs).select("doc_a", "doc_b").collect()
     }
     assert face2 == batch2 and len(batch2) > 0
+
+
+@pytest.mark.parametrize(
+    "batch_fn, table, cols, legacy",
+    [
+        pytest.param(
+            sp._phash_index_batch,
+            "documents", ["doc_id"], "chunks", id="phash_index_sink",
+        ),
+        pytest.param(
+            sp._afp_index_batch,
+            "documents", ["doc_id"], "chunks", id="afp_index_sink",
+        ),
+        pytest.param(
+            lambda b, i, st, out: sp._edit_index_batch(
+                b, i, "c_custkey", "c_name", st, out
+            ),
+            "customer", ["c_custkey", "c_name"], "variants", id="edit_index_sink",
+        ),
+    ],
+)
+def test_index_sinks_refuse_legacy_state_layout(
+    spark, sf_dir, tmp_path, batch_fn, table, cols, legacy
+):
+    """A state root written before the index moved from chunks/variants
+    to hashes/names must fail the batch, not silently start from an
+    empty index (the pre-rename docs would never pair again)."""
+    from flink_kafka_filter_transform_spark.sources.parquet import load_table
+
+    state, out = tmp_path / "state", str(tmp_path / "out")
+    (state / legacy).mkdir(parents=True)
+    rows = load_table(spark, table, sf_dir).select(*cols)
+    with pytest.raises(RuntimeError, match=re.escape(f"{state}/{legacy}")):
+        batch_fn(rows, 1, str(state), out)
 
 
 def test_cc_labels_sink_matches_batch_clusters(spark, sf_dir, tmp_path_factory):

@@ -10,7 +10,7 @@ tool makes doc rot a CI failure instead of a judgment-day surprise:
    operator/streaming module must resolve to a real attribute — a
    doc row pointing at a renamed or deleted function fails here.
 
-tests/test_rotation.py runs both checks in CI.
+tests/test_contract.py runs both checks in CI.
 """
 
 from __future__ import annotations
