@@ -24,10 +24,18 @@ and returned unstarted; tests drive the file-stream twin.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from flink_kafka_filter_transform_spark.operators import cdc
 
@@ -154,8 +162,8 @@ def metered_cdc_sink(
        cardinality (topics x tables x ops — config-sized, never
        message-sized), the same place the reference's in-process
        registry lives;
-    2. the routed write: the forwarded rows append to ``out_dir`` under
-       dynamic partition overwrite by batch id (effectively-once).
+    2. the routed write: the forwarded rows land in ``out_dir`` through
+       ``_write_batch_partition`` (effectively-once).
 
     The counters are at-least-once under replay (a re-delivered batch
     re-increments), matching Prometheus counter semantics — scrape-side
@@ -177,18 +185,11 @@ def metered_cdc_sink(
                 outbound[key] = outbound.get(key, 0) + r["cnt"]
         for (topic, op), n in outbound.items():
             registry.inc_transform(topic, op, n)
-        (
-            cdc.project_outgoing(cdc.drop_unrouted(batch_df))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
+        _write_batch_partition(
+            cdc.project_outgoing(cdc.drop_unrouted(batch_df)), out_dir, batch_id
         )
 
-    return labelled.writeStream.foreachBatch(feed).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return _sink(labelled, feed, checkpoint_dir)
 
 
 def observed(stream: DataFrame, name: str = "cdc_in") -> DataFrame:
@@ -361,16 +362,11 @@ def scd2_incremental_sink(
     the table size. Changes are deduped on (key, msg_id) before the
     recompute, so at-least-once redelivery (a retried batch re-appends)
     cannot corrupt history — the same idempotence a Delta/Iceberg MERGE
-    target provides; versioned parquet dirs stand in for that table
-    format here, and readers always see a complete published version
-    (``scd2_current``), never a half-written one.
+    target provides; versioned parquet dirs (``_merge_version``) stand
+    in for that table format here, and readers always see a complete
+    published version (``scd2_current``), never a half-written one.
     """
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _scd2_merge_batch(batch_df, batch_id, state_dir)
-
-    return parsed_stream.writeStream.foreachBatch(merge_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return _sink(parsed_stream, _scd2_merge_batch, checkpoint_dir, state_dir)
 
 
 def _batch_aqe(spark: SparkSession) -> SparkSession:
@@ -402,38 +398,142 @@ def _batch_aqe(spark: SparkSession) -> SparkSession:
 
 def _scd2_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
     """One scd2_incremental_sink micro-batch, module-level so replay
-    tests can re-drive a batch id directly. ``prev`` comes from
-    ``_latest_state_version(..., before=batch_id)`` — STRICTLY
-    pre-batch — so a replayed batch never reads the version it is
-    about to overwrite (the read-the-write-target wedge, r5 ADVICE)
-    and recomputes scd2_v{batch_id} to identical content (the
-    changelog is deduped on (key, msg_id), so the re-appended changes
-    collapse)."""
-    from flink_kafka_filter_transform_spark.operators import cdc as cdc_ops
-
+    tests can re-drive a batch id directly. A replay re-appends its
+    changes, which collapse on the (key, msg_id) dedup, so
+    _merge_version recomputes scd2_v{batch_id} to identical content."""
     changes_dir = f"{state_dir}/changes"
     spark = _batch_aqe(batch_df.sparkSession)
     batch = batch_df.filter(F.col("op").isNotNull()).select(*SCD2_CHANGE_COLS)
     batch.write.mode("append").parquet(changes_dir)
-    affected = batch.select("db", "table_name", "key").dropDuplicates()
     key = ["db", "table_name", "key"]
+    affected = batch.select(*key).dropDuplicates()
     changes = (
         spark.read.parquet(changes_dir)
         .join(F.broadcast(affected), key, "left_semi")
-        .dropDuplicates(["db", "table_name", "key", "msg_id"])
+        .dropDuplicates([*key, "msg_id"])
     )
-    recomputed = cdc_ops.scd2_history(changes)
-    v = _latest_state_version(spark, state_dir, "scd2", before=batch_id)
-    prev = spark.read.parquet(f"{state_dir}/scd2_v{v}") if v is not None else None
-    merged = (
-        recomputed
-        if prev is None
-        else prev.join(F.broadcast(affected), key, "left_anti").unionByName(
-            recomputed
-        )
+    _merge_version(
+        spark,
+        state_dir,
+        "scd2",
+        batch_id,
+        cdc.scd2_history(changes),
+        lambda prev, recomputed: prev.join(
+            F.broadcast(affected), key, "left_anti"
+        ).unionByName(recomputed),
     )
-    merged.write.mode("overwrite").parquet(f"{state_dir}/scd2_v{batch_id}")
     _write_latest_pointer(spark, state_dir, batch_id)
+
+
+# ---------------------------------------------------------------------------
+# The versioned-state protocol every foreachBatch sink shares
+# ---------------------------------------------------------------------------
+#
+# Structured Streaming recovers by replaying a failed micro-batch under
+# the same batch id, so a sink body must be idempotent per batch id. The
+# helpers below are that discipline, written once: a body reads prev
+# state strictly before its batch and overwrites {prefix}_v{batch_id}
+# (_merge_version), writes _batch_id partitions under dynamic overwrite
+# (_write_batch_partition), reads them back with explicit schemas
+# (_read_batches) and publishes _LATEST last (_write_latest_pointer).
+# Readers resolve a version through _current. All bookkeeping goes
+# through the Hadoop FileSystem API (_hadoop_fs).
+
+
+def _sink(stream: DataFrame, body, checkpoint_dir: str, *args) -> DataStreamWriter:
+    """The stream's writer running ``body(batch_df, batch_id, *args)``
+    once per micro-batch, checkpointed in ``checkpoint_dir`` — the
+    checkpoint replays a failed batch with the same id and input."""
+    return stream.writeStream.foreachBatch(
+        lambda batch_df, batch_id: body(batch_df, batch_id, *args)
+    ).option("checkpointLocation", checkpoint_dir)
+
+
+def _write_batch_partition(
+    df: DataFrame, path: str, batch_id: int, *extra_partition_cols: str
+) -> None:
+    """Write ``df`` as the ``_batch_id={batch_id}`` partition of the
+    dataset at ``path`` (partitioned by ``extra_partition_cols`` first).
+    Dynamic overwrite replaces only the partitions present in ``df``,
+    so a replayed batch rewrites its own rows instead of appending a
+    second copy. A replay that computes NO rows would leave the first
+    attempt's partition standing; that is sound only because the
+    checkpoint replays a batch with identical input, which the replay
+    tests pin."""
+    (
+        df.withColumn("_batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*extra_partition_cols, "_batch_id")
+        .parquet(path)
+    )
+
+
+def _read_batches(
+    spark: SparkSession, path: str, schema: StructType, keep=None
+) -> DataFrame:
+    """The rows of the ``_batch_id``-partitioned dataset at ``path``
+    whose batch id satisfies the ``keep`` predicate (every row when
+    None), without the partition column; empty before any batch wrote
+    the path.
+
+    The read declares ``schema`` plus ``_batch_id`` instead of
+    inferring them: a batch that produced ZERO rows leaves no part file
+    to infer from, and inference would then fail the next batch (r12
+    review). ``_batch_id`` is LongType because foreachBatch ids are
+    64-bit and the value is parsed from the partition directory name
+    against the declared type, whatever width F.lit() gave the
+    writer."""
+    if not _hadoop_path_exists(spark, path):
+        return spark.createDataFrame([], schema)
+    df = spark.read.schema(
+        StructType(list(schema.fields) + [StructField("_batch_id", LongType())])
+    ).parquet(path)
+    if keep is not None:
+        df = df.filter(keep)
+    return df.drop("_batch_id")
+
+
+def _merge_version(
+    spark: SparkSession,
+    state_dir: str,
+    prefix: str,
+    batch_id: int,
+    delta: DataFrame,
+    merge,
+    schema: StructType | None = None,
+) -> str:
+    """Overwrite ``{prefix}_v{batch_id}`` with ``merge(prev, delta)``
+    (``delta`` alone before the first version) and return its path.
+    ``prev`` is the newest published version STRICTLY below
+    ``batch_id`` (see _latest_state_version), so a replayed batch
+    recomputes its version from the same inputs. ``schema``, when
+    given, is declared on the prev read so an all-empty version needs
+    no schema-bearing part file."""
+    v = _latest_state_version(spark, state_dir, prefix, before=batch_id)
+    if v is not None:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        delta = merge(reader.parquet(f"{state_dir}/{prefix}_v{v}"), delta)
+    path = f"{state_dir}/{prefix}_v{batch_id}"
+    delta.write.mode("overwrite").parquet(path)
+    return path
+
+
+def _fold(keys: list[str], **folds):
+    """A ``merge`` for monoid state: union prev with the batch's delta
+    and re-fold each column per key (``cell=F.sum``, ``_r=F.max``,
+    ``bits=F.bit_or``)."""
+    return lambda prev, delta: prev.unionByName(delta).groupBy(*keys).agg(
+        *[fold(c).alias(c) for c, fold in folds.items()]
+    )
+
+
+def _current(spark: SparkSession, state_dir: str, prefix: str) -> DataFrame | None:
+    """The published ``{prefix}`` version _LATEST names, or None before
+    the first batch publishes (readers never see a half-written
+    version)."""
+    v = _read_latest_pointer(spark, state_dir, prefix=prefix)
+    return None if v is None else spark.read.parquet(f"{state_dir}/{prefix}_v{v}")
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -451,32 +551,70 @@ def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def _write_latest_pointer(spark: SparkSession, state_dir: str, batch_id: int) -> None:
-    """Publish the reader-facing _LATEST pointer without ever exposing
-    a partial file: the id is fully written to a temp path first, then
-    moved over _LATEST (delete + rename — both single-file metadata
-    ops on HDFS/local; object stores emulate rename with copy+delete
-    but the copy is still of a COMPLETE source object). The r6
-    truncate-in-place fs.create(path, true) let a concurrent
-    _read_latest_pointer observe an empty/half-written pointer and
-    crash on int('') (r6 ADVICE). The one remaining window — pointer
-    briefly ABSENT between the delete and the rename — is handled on
-    the read side, which falls back to listing published versions."""
-    tmp = f"{state_dir}/._LATEST.tmp.{batch_id}"
+def _state_versions(
+    spark: SparkSession, state_dir: str, prefix: str
+) -> dict[int, bool]:
+    """Every ``{prefix}_v{N}`` entry directly under ``state_dir`` as
+    ``N -> published``; a version is published once its parquet write
+    completed (``_SUCCESS`` marker). Empty when state_dir does not
+    exist."""
+    dirpath, fs = _hadoop_fs(spark, state_dir)
+    if not fs.exists(dirpath):
+        return {}
+    versions = {}
+    for status in fs.listStatus(dirpath):
+        m = re.fullmatch(rf"{re.escape(prefix)}_v(\d+)", status.getPath().getName())
+        if m is not None:
+            success = spark._jvm.org.apache.hadoop.fs.Path(status.getPath(), "_SUCCESS")
+            versions[int(m.group(1))] = bool(fs.exists(success))
+    return versions
+
+
+def _publish_file(
+    spark: SparkSession, state_dir: str, name: str, batch_id: int, body: str
+) -> None:
+    """Publish ``{state_dir}/{name}`` holding ``body`` without ever
+    exposing a partial file: the body is fully written to a hidden temp
+    path first, then moved over the target (delete + rename — both
+    single-file metadata ops on HDFS/local; object stores emulate
+    rename with copy+delete but the copy is still of a COMPLETE source
+    object). The r6 truncate-in-place fs.create(path, true) let a
+    concurrent reader observe an empty/half-written pointer and crash
+    on int('') (r6 ADVICE). The one remaining window — target briefly
+    ABSENT between the delete and the rename — is handled on the read
+    side."""
+    tmp = f"{state_dir}/.{name}.tmp.{batch_id}"
     jtmp, fs = _hadoop_fs(spark, tmp)
     out = fs.create(jtmp, True)
     try:
-        out.write(str(batch_id).encode("ascii"))
+        out.write(body.encode("ascii"))
     finally:
         out.close()
-    jdst = spark._jvm.org.apache.hadoop.fs.Path(f"{state_dir}/_LATEST")
+    jdst = spark._jvm.org.apache.hadoop.fs.Path(f"{state_dir}/{name}")
     if fs.exists(jdst):
         fs.delete(jdst, False)
     if not fs.rename(jtmp, jdst):
         raise IOError(
-            f"failed to publish {state_dir}/_LATEST (rename returned false); "
-            f"partial pointer left at {tmp}"
+            f"failed to publish {state_dir}/{name} (rename returned false); "
+            f"partial file left at {tmp}"
         )
+
+
+def _read_text(spark: SparkSession, path: str) -> str:
+    jpath, fs = _hadoop_fs(spark, path)
+    stream = fs.open(jpath)
+    try:
+        return bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
+
+
+def _write_latest_pointer(spark: SparkSession, state_dir: str, batch_id: int) -> None:
+    """Publish the reader-facing _LATEST pointer (the bare batch id)
+    through _publish_file. Every sink body calls it last, after all of
+    the batch's state is written, so a reader never resolves a partial
+    batch."""
+    _publish_file(spark, state_dir, "_LATEST", batch_id, str(batch_id))
 
 
 def _read_latest_pointer(
@@ -495,28 +633,15 @@ def _read_latest_pointer(
     exception ever escapes to a reader because of publish timing."""
     from py4j.protocol import Py4JJavaError
 
-    jpath, fs = _hadoop_fs(spark, f"{state_dir}/_LATEST")
-    line = None
-    if fs.exists(jpath):
-        # narrow catch (not bare): the pointer can vanish between the
-        # exists probe and the open (the delete→rename publish window),
-        # and a pointer corrupted out-of-band trips the checksummed
-        # local FS on read — both are exactly the "unreadable pointer"
-        # case the digit-check fallback below handles. Any other IO
-        # failure also lands in the fallback, which resolves the same
-        # answer from the version listing instead of crashing a reader.
-        try:
-            stream = fs.open(jpath)
-            try:
-                reader = spark._jvm.java.io.BufferedReader(
-                    spark._jvm.java.io.InputStreamReader(stream, "UTF-8")
-                )
-                line = reader.readLine()
-            finally:
-                stream.close()
-        except Py4JJavaError:
-            line = None
-    text = "" if line is None else line.strip()
+    # narrow catch (not bare): the pointer can be absent or vanish
+    # mid-read (the delete→rename publish window), and a pointer
+    # corrupted out-of-band trips the checksummed local FS on read —
+    # all of them the "unreadable pointer" case the fallback below
+    # resolves from the version listing instead of crashing a reader.
+    try:
+        text = _read_text(spark, f"{state_dir}/_LATEST").strip()
+    except Py4JJavaError:
+        text = ""
     if text.isdigit():
         return int(text)
     if prefix is not None:
@@ -553,30 +678,13 @@ def _latest_state_version(
     re-reads the whole source, so carrying the old state forward (as
     the pre-r6 _LATEST-based prev did) would double-count every
     previously ingested row. On checkpoint loss, re-drain into a fresh
-    state_dir.
-
-    Listing goes through the Hadoop FileSystem API (_hadoop_fs), so
-    state_dir may be any cluster-addressable URI."""
-    import re as _re
-
-    dirpath, fs = _hadoop_fs(spark, state_dir)
-    if not fs.exists(dirpath):
-        return None
-    best: int | None = None
-    for status in fs.listStatus(dirpath):
-        name = status.getPath().getName()
-        m = _re.fullmatch(rf"{_re.escape(prefix)}_v(\d+)", name)
-        if m is None:
-            continue
-        success = spark._jvm.org.apache.hadoop.fs.Path(status.getPath(), "_SUCCESS")
-        if not fs.exists(success):
-            continue
-        v = int(m.group(1))
-        if before is not None and v >= before:
-            continue
-        if best is None or v > best:
-            best = v
-    return best
+    state_dir."""
+    published = [
+        v
+        for v, ok in _state_versions(spark, state_dir, prefix).items()
+        if ok and (before is None or v < before)
+    ]
+    return max(published, default=None)
 
 
 def _accumulated_over_cap(
@@ -588,41 +696,24 @@ def _accumulated_over_cap(
     cap: int,
     key_cols: list[str],
 ):
-    """The versioned LIFETIME-count replay protocol, single-sourced
-    (r12 review — it had grown four hand-copies: bcounts/ccounts/
-    fcounts/vcounts, and the r11 ``before=batch_id`` replay fix had to
-    touch every one): sum-merge this batch's per-key counts ``bn``
-    (columns ``key_cols`` + ``_n``) into ``{prefix}_v{batch_id}``
-    using the strictly-pre-batch prev (recompute-on-replay,
-    _latest_state_version), publish it, and return the BROADCAST
-    over-cap key relation both pairing sides anti-join. Over-cap keys
-    are bounded by total_rows / cap — a cap-th of the key space at
-    worst — which is why the broadcast is safe at any scale.
+    """The LIFETIME per-key counts shared by the index faces
+    (bcounts/ccounts/fcounts/vcounts): sum-merge this batch's counts
+    ``bn`` (columns ``key_cols`` + ``_n``) into ``{prefix}_v{batch_id}``
+    and return the BROADCAST over-cap key relation both pairing sides
+    anti-join. Over-cap keys are bounded by total_rows / cap — a
+    cap-th of the key space at worst — which is why the broadcast is
+    safe at any scale.
 
     Both counts reads carry an EXPLICIT schema (``bn``'s own key
-    fields + ``_n``), the same discipline _read_index_before applies
-    to the partitioned index reads (r12 ADVICE): an all-empty counts
-    version must not depend on Spark writing a schema-bearing empty
-    part file. A fresh StructType is built — StructType.add mutates,
-    and df.schema is cached on the DataFrame."""
-    from pyspark.sql.types import StructType
-
+    fields + ``_n``), so an all-empty counts version does not depend on
+    Spark writing a schema-bearing empty part file (r12 ADVICE)."""
     counts_schema = StructType([bn.schema[c] for c in key_cols] + [bn.schema["_n"]])
-    v = _latest_state_version(spark, state_dir, prefix, before=batch_id)
-    prev = (
-        spark.read.schema(counts_schema).parquet(f"{state_dir}/{prefix}_v{v}")
-        if v is not None
-        else None
+    path = _merge_version(
+        spark, state_dir, prefix, batch_id, bn, _fold(key_cols, _n=F.sum), counts_schema
     )
-    totals = (
-        bn
-        if prev is None
-        else prev.unionByName(bn).groupBy(*key_cols).agg(F.sum("_n").alias("_n"))
-    )
-    totals.write.mode("overwrite").parquet(f"{state_dir}/{prefix}_v{batch_id}")
     return F.broadcast(
         spark.read.schema(counts_schema)
-        .parquet(f"{state_dir}/{prefix}_v{batch_id}")
+        .parquet(path)
         .filter(F.col("_n") > cap)
         .select(*key_cols)
     )
@@ -648,45 +739,10 @@ def _refuse_legacy_index(
         )
 
 
-def _read_index_before(
-    spark: SparkSession, path: str, row_rel: DataFrame, batch_id: int
-) -> DataFrame:
-    """Read a ``_batch_id``-partitioned index strictly before this
-    batch with an EXPLICIT schema (``row_rel``'s — the exact relation
-    the sink appends — plus the partition column): a first batch that
-    produced ZERO rows writes only ``_SUCCESS`` under dynamic
-    overwrite, so the path exists but schema inference would fail and
-    brick the stream on the NEXT batch (r12 review — the vfp pair-log
-    explicit-schema rule applied to every index read). A FRESH
-    StructType is built (StructType.add mutates and df.schema is
-    cached on the DataFrame, so add() would corrupt row_rel's own
-    schema object).
-
-    The partition column is declared LongType (r12 ADVICE):
-    foreachBatch batch ids are 64-bit, and the value is parsed from
-    the partition DIRECTORY NAME against this declared type, so the
-    read stays correct past 2^31 batches regardless of the width
-    F.lit() happened to give the writer's in-memory column."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        list(row_rel.schema.fields) + [StructField("_batch_id", LongType())]
-    )
-    return (
-        spark.read.schema(schema)
-        .parquet(path)
-        .filter(F.col("_batch_id") < batch_id)
-        .drop("_batch_id")
-    )
-
-
 def scd2_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """The latest published SCD2 table version, or None before the
     first batch commits."""
-    version = _read_latest_pointer(spark, state_dir, prefix="scd2")
-    if version is None:
-        return None
-    return spark.read.parquet(f"{state_dir}/scd2_v{version}")
+    return _current(spark, state_dir, "scd2")
 
 
 def foreach_batch_parquet_sink(
@@ -694,23 +750,14 @@ def foreach_batch_parquet_sink(
 ) -> DataStreamWriter:
     """foreachBatch escape hatch: sinks Spark lacks natively get the
     micro-batch as a plain DataFrame plus a batch id for idempotence.
-    Here each batch appends to a parquet dir partitioned by batch id —
-    re-delivered batches overwrite their own partition, giving
+    Here each batch lands through _write_batch_partition, giving
     effectively-once output on top of at-least-once delivery."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         _batch_aqe(batch_df.sparkSession)
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch_partition(batch_df, out_dir, batch_id)
 
-    return df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return _sink(df, write_batch, checkpoint_dir)
 
 
 def contamination_guard_sink(
@@ -734,8 +781,8 @@ def contamination_guard_sink(
     (tests/test_streaming.py proves the equivalence across
     micro-batches). Per-batch work is a broadcast probe + one doc-keyed
     aggregate; no cross-batch state is needed because a document never
-    straddles micro-batches. Output is partitioned by batch id for
-    effectively-once semantics on top of at-least-once delivery."""
+    straddles micro-batches. Output lands through
+    _write_batch_partition (effectively-once)."""
     from flink_kafka_filter_transform_spark.operators.dedup import (
         contamination_profile,
     )
@@ -760,17 +807,9 @@ def contamination_guard_sink(
                 ),
             )
         )
-        (
-            clean.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch_partition(clean, out_dir, batch_id)
 
-    return stream_docs.writeStream.foreachBatch(guard).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return _sink(stream_docs, guard, checkpoint_dir)
 
 
 def hll_merge_sink(
@@ -781,61 +820,40 @@ def hll_merge_sink(
     foreachBatch merge — the streaming face of sketch MERGEABILITY.
 
     Per batch: build the batch's registers (<= m rows per group however
-    large the batch), union with the current state, max(_r) per
-    (group, register), publish a new version (versioned parquet +
-    _LATEST pointer, same effectively-once publication discipline as
-    scd2_incremental_sink). State size is bounded at m rows per group
+    large the batch) and max-merge them into ``regs_v{batch_id}``
+    (_merge_version). State size is bounded at m rows per group
     FOREVER — the property that lets a 100 TB ingest stream keep
     running distinct-user counts without ever storing a key set.
 
-    Replay semantics — doubly safe: prev is loaded strictly pre-batch
-    (``_latest_state_version(..., before=batch_id)``), so a replayed
-    batch recomputes regs_v{batch_id} from the same inputs rather than
-    reading its own write target; and max is idempotent as well as
-    associative/commutative, so even a true duplicate DELIVERY that
-    re-merges the same registers is a NO-OP — the estimate cannot
-    drift under replay (contrast streaming.state's first-seen ledger,
-    where only the min-winner column carries that guarantee).
-    tests/test_streaming.py proves batch-vs-streaming equivalence and
-    replay idempotence."""
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _hll_merge_batch(batch_df, batch_id, key, group, state_dir)
-
-    return stream.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    Replay semantics — doubly safe: _merge_version recomputes a
+    replayed batch id from the strictly-pre-batch prev, and max is
+    idempotent as well as associative/commutative, so even a true
+    duplicate DELIVERY that re-merges the same registers is a NO-OP —
+    the estimate cannot drift under replay (contrast streaming.state's
+    first-seen ledger, where only the min-winner column carries that
+    guarantee). tests/test_streaming.py proves batch-vs-streaming
+    equivalence and replay idempotence."""
+    return _sink(stream, _hll_merge_batch, checkpoint_dir, key, group, state_dir)
 
 
 def _hll_merge_batch(
     batch_df: DataFrame, batch_id: int, key: str, group: str, state_dir: str
 ) -> None:
-    """One hll_merge_sink micro-batch (module-level for replay tests);
-    see _latest_state_version for the strictly-pre-batch prev rule."""
+    """One hll_merge_sink micro-batch (module-level for replay tests)."""
     from flink_kafka_filter_transform_spark.operators.sketch import hll_registers
 
     spark = _batch_aqe(batch_df.sparkSession)
     regs = hll_registers(batch_df, key, [group])
-    v = _latest_state_version(spark, state_dir, "regs", before=batch_id)
-    prev = spark.read.parquet(f"{state_dir}/regs_v{v}") if v is not None else None
-    merged = (
-        regs
-        if prev is None
-        else prev.unionByName(regs)
-        .groupBy(group, "_idx")
-        .agg(F.max("_r").alias("_r"))
+    _merge_version(
+        spark, state_dir, "regs", batch_id, regs, _fold([group, "_idx"], _r=F.max)
     )
-    merged.write.mode("overwrite").parquet(f"{state_dir}/regs_v{batch_id}")
     _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def hll_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Latest published HLL register state, or None before the first
     batch (readers never see a half-written version)."""
-    v = _read_latest_pointer(spark, state_dir, prefix="regs")
-    if v is None:
-        return None
-    return spark.read.parquet(f"{state_dir}/regs_v{v}")
+    return _current(spark, state_dir, "regs")
 
 
 def cms_merge_sink(
@@ -847,58 +865,39 @@ def cms_merge_sink(
     bit_or registers merge exactly like the HLL max).
 
     Per batch: build the batch's CMS grid (operators.sketch.cms_grid,
-    the IDENTICAL structure the batch estimator uses), SUM-merge it
-    into state, publish a new version. State stays <= DEPTH*WIDTH rows
-    forever.
+    the IDENTICAL structure the batch estimator uses) and SUM-merge it
+    into ``grid_v{batch_id}`` (_merge_version). State stays
+    <= DEPTH*WIDTH rows forever.
 
     Replay semantics — deliberately contrasted with the HLL sink: sum
     is associative and commutative but NOT idempotent, so replay
     safety cannot come from the merge operator itself. It comes from
-    the state protocol: prev is loaded STRICTLY pre-batch
-    (``_latest_state_version(..., before=batch_id)``), so a replayed
-    batch id recomputes grid_v{batch_id} = grid_v{<batch_id} + batch —
-    identical content, never reading its own write target (r5 ADVICE:
-    the _LATEST-based prev both double-counted and wedged the restart
-    on Spark's read/overwrite conflict check). What remains
+    _merge_version's strictly-pre-batch prev: a replayed batch id
+    recomputes grid_v{batch_id} = grid_v{<batch_id} + batch (r5
+    ADVICE: the _LATEST-based prev both double-counted and wedged the
+    restart on Spark's read/overwrite conflict check). What remains
     non-idempotent is a true duplicate DELIVERY (same rows under a NEW
     batch id), where the CMS failure mode is benign for its contract:
     estimates are upper bounds and only inflate — the documented
     asymmetry between max-merge and sum-merge sketches."""
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _cms_merge_batch(batch_df, batch_id, state_dir)
-
-    return stream_docs.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return _sink(stream_docs, _cms_merge_batch, checkpoint_dir, state_dir)
 
 
 def _cms_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
-    """One cms_merge_sink micro-batch (module-level for replay tests);
-    see _latest_state_version for the strictly-pre-batch prev rule."""
+    """One cms_merge_sink micro-batch (module-level for replay tests)."""
     from flink_kafka_filter_transform_spark.operators.sketch import cms_grid
 
     spark = _batch_aqe(batch_df.sparkSession)
     grid = cms_grid(batch_df)
-    v = _latest_state_version(spark, state_dir, "grid", before=batch_id)
-    prev = spark.read.parquet(f"{state_dir}/grid_v{v}") if v is not None else None
-    merged = (
-        grid
-        if prev is None
-        else prev.unionByName(grid)
-        .groupBy("row", "bucket")
-        .agg(F.sum("cell").alias("cell"))
+    _merge_version(
+        spark, state_dir, "grid", batch_id, grid, _fold(["row", "bucket"], cell=F.sum)
     )
-    merged.write.mode("overwrite").parquet(f"{state_dir}/grid_v{batch_id}")
     _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def cms_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Latest published CMS grid, or None before the first batch."""
-    v = _read_latest_pointer(spark, state_dir, prefix="grid")
-    if v is None:
-        return None
-    return spark.read.parquet(f"{state_dir}/grid_v{v}")
+    return _current(spark, state_dir, "grid")
 
 
 def bloom_merge_sink(
@@ -916,28 +915,20 @@ def bloom_merge_sink(
 
     Per batch: distinct (h1, h2) content-hash pairs -> the batch's
     register relation (operators.sketch.bloom_build, the IDENTICAL
-    structure the batch probe uses) -> bit_or-merge into state ->
-    versioned publication (same discipline as hll/cms).
+    structure the batch probe uses) -> bit_or-merge into
+    ``bloom_v{batch_id}`` (_merge_version).
 
     Replay semantics — the strongest of the three: bit_or, like HLL's
     max and unlike CMS's sum, is associative, commutative, AND
-    idempotent, so both a replayed batch id (prev loaded strictly
-    pre-batch via ``_latest_state_version(..., before=batch_id)``)
-    and a true duplicate DELIVERY are no-ops. A Bloom filter cannot
-    drift under at-least-once; it can only converge."""
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _bloom_merge_batch(batch_df, batch_id, state_dir)
-
-    return stream_docs.writeStream.foreachBatch(merge).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    idempotent, so both a replayed batch id and a true duplicate
+    DELIVERY are no-ops. A Bloom filter cannot drift under
+    at-least-once; it can only converge."""
+    return _sink(stream_docs, _bloom_merge_batch, checkpoint_dir, state_dir)
 
 
 def _bloom_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
     """One bloom_merge_sink micro-batch (module-level for replay
-    tests); see _latest_state_version for the strictly-pre-batch prev
-    rule."""
+    tests)."""
     from flink_kafka_filter_transform_spark.functions.hashing import (
         portable_hash64,
         portable_hash64_second,
@@ -950,26 +941,16 @@ def _bloom_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> No
         portable_hash64_second("text").alias("_h2"),
     ).distinct()
     regs = bloom_build(keys)
-    v = _latest_state_version(spark, state_dir, "bloom", before=batch_id)
-    prev = spark.read.parquet(f"{state_dir}/bloom_v{v}") if v is not None else None
-    merged = (
-        regs
-        if prev is None
-        else prev.unionByName(regs)
-        .groupBy("reg")
-        .agg(F.expr("bit_or(bits)").alias("bits"))
+    _merge_version(
+        spark, state_dir, "bloom", batch_id, regs, _fold(["reg"], bits=F.bit_or)
     )
-    merged.write.mode("overwrite").parquet(f"{state_dir}/bloom_v{batch_id}")
     _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def bloom_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Latest published Bloom registers, or None before the first
     batch."""
-    v = _read_latest_pointer(spark, state_dir, prefix="bloom")
-    if v is None:
-        return None
-    return spark.read.parquet(f"{state_dir}/bloom_v{v}")
+    return _current(spark, state_dir, "bloom")
 
 
 def ivf_assign_sink(
@@ -986,8 +967,8 @@ def ivf_assign_sink(
     IVF where re-training is an offline event) and appended to the
     cell-partitioned posting-list store that knn_ivf-style searches
     scan per probed cell. Per-cell occupancy counts are sum-merged as
-    versioned state (same publication discipline as cms_merge_sink):
-    the signal that tells the operator a cell has outgrown its target
+    versioned state (``cells_v{batch_id}``, _merge_version): the
+    signal that tells the operator a cell has outgrown its target
     size and the codebook needs offline re-training — the maintenance
     loop behind `embedding_neardup_refined`'s adaptive-cardinality
     lesson, run incrementally.
@@ -997,11 +978,8 @@ def ivf_assign_sink(
     cell-partitioned append; the only aggregation is cell-cardinality
     counters. tests/test_streaming.py proves assignment equivalence
     with the batch operator and count-state correctness."""
-    def assign(batch_df: DataFrame, batch_id: int) -> None:
-        _ivf_assign_batch(batch_df, batch_id, centroids, out_dir, state_dir)
-
-    return stream_vecs.writeStream.foreachBatch(assign).option(
-        "checkpointLocation", checkpoint_dir
+    return _sink(
+        stream_vecs, _ivf_assign_batch, checkpoint_dir, centroids, out_dir, state_dir
     )
 
 
@@ -1013,42 +991,23 @@ def _ivf_assign_batch(
     state_dir: str,
 ) -> None:
     """One ivf_assign_sink micro-batch (module-level for replay
-    tests). The posting-list append is replay-safe via dynamic
-    partition overwrite on (cid, _batch_id); the sum-merged cell
-    counters are replay-safe via the strictly-pre-batch prev rule
-    (_latest_state_version) — same protocol as _cms_merge_batch."""
+    tests): the posting lists land under (cid, _batch_id) partitions,
+    the cell counters sum-merge into ``cells_v{batch_id}``."""
     from flink_kafka_filter_transform_spark.operators.kmeans import _assign
 
     spark = _batch_aqe(batch_df.sparkSession)
     a = _assign(batch_df.select("vec_id", F.col("embedding").alias("v")), centroids)
-    (
-        batch_df.join(a, "vec_id")
-        .withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid", "_batch_id")
-        .parquet(out_dir)
-    )
+    _write_batch_partition(batch_df.join(a, "vec_id"), out_dir, batch_id, "cid")
     counts = a.groupBy("cid").agg(F.count(F.lit(1)).alias("n_vectors"))
-    v = _latest_state_version(spark, state_dir, "cells", before=batch_id)
-    prev = spark.read.parquet(f"{state_dir}/cells_v{v}") if v is not None else None
-    merged = (
-        counts
-        if prev is None
-        else prev.unionByName(counts)
-        .groupBy("cid")
-        .agg(F.sum("n_vectors").alias("n_vectors"))
+    _merge_version(
+        spark, state_dir, "cells", batch_id, counts, _fold(["cid"], n_vectors=F.sum)
     )
-    merged.write.mode("overwrite").parquet(f"{state_dir}/cells_v{batch_id}")
     _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def ivf_cell_counts(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Latest published per-cell occupancy, or None before batch 0."""
-    v = _read_latest_pointer(spark, state_dir, prefix="cells")
-    if v is None:
-        return None
-    return spark.read.parquet(f"{state_dir}/cells_v{v}")
+    return _current(spark, state_dir, "cells")
 
 
 def lsh_index_sink(
@@ -1077,16 +1036,13 @@ def lsh_index_sink(
     itself; exact batch parity near degenerate buckets requires a
     batch re-run, the same answer every incremental index gives.
 
-    Replay discipline (r5 ADVICE): the index state is published the
-    same way as the pair log — parquet partitioned by ``_batch_id``
-    with DYNAMIC partition overwrite — so an at-least-once replay
-    overwrites its own band/signature partitions instead of
+    Replay discipline (r5 ADVICE): the signature index, like the pair
+    log, lands through _write_batch_partition and is read back strictly
+    before the batch, so a replay overwrites its own rows instead of
     re-appending them (duplicate sigs rows would fan out the
-    verification join and re-emit pairs; duplicate band rows would
-    inflate accumulated bucket sizes toward LSH_BUCKET_CAP, silently
-    dropping future pairs). The prev index read filters
-    ``_batch_id < batch_id``, so a replayed batch never sees its own
-    earlier partial write.
+    verification join and re-emit pairs, and inflate accumulated
+    bucket sizes toward LSH_BUCKET_CAP, silently dropping future
+    pairs).
 
     Scale shape per batch: signature construction is the same map-only
     pass as batch; the index probe is an equi-join on (band_idx,
@@ -1099,20 +1055,13 @@ def lsh_index_sink(
     one per-batch cost that previously grew with total stream history.
     ``prune_state_versions(spark, state_dir, "bcounts")`` prunes the
     count versions exactly like the other sinks' state."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _lsh_index_batch(batch_df, batch_id, state_dir, out_dir)
-
-    return stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return _sink(stream_docs, _lsh_index_batch, checkpoint_dir, state_dir, out_dir)
 
 
 def _lsh_index_batch(
     batch_df: DataFrame, batch_id: int, state_dir: str, out_dir: str
 ) -> None:
-    """One lsh_index_sink micro-batch (module-level for replay tests);
-    see the sink docstring for the partition-overwrite replay rule."""
+    """One lsh_index_sink micro-batch (module-level for replay tests)."""
     from flink_kafka_filter_transform_spark.operators import params
     from flink_kafka_filter_transform_spark.operators.dedup import (
         band_relation,
@@ -1131,8 +1080,7 @@ def _lsh_index_batch(
         bands = band_relation(sig)
         within = lsh_candidates(sig)
         # Accumulated bucket sizes are MAINTAINED as sum-merged versioned
-        # state (bcounts_v{batch_id}, the cells_v protocol: strictly-
-        # pre-batch prev, recompute-on-replay), not recomputed: the r6
+        # state (bcounts_v{batch_id}), not recomputed: the r6
         # implementation re-windowed the ENTIRE accumulated index every
         # batch — a shuffle+sort of all index rows whose cost grows with
         # the stream, O(index) per batch where the merge is O(distinct
@@ -1152,7 +1100,9 @@ def _lsh_index_batch(
         # a driver-local isdir would be False forever and silently disable
         # the cross-batch index.
         if _hadoop_path_exists(spark, f"{state_dir}/sigs"):
-            idx_sigs = _read_index_before(spark, f"{state_dir}/sigs", sig, batch_id)
+            idx_sigs = _read_batches(
+                spark, f"{state_dir}/sigs", sig.schema, F.col("_batch_id") < batch_id
+            )
             # r15 (guide §6/§2 — VERDICT r14 item 5): the accumulated
             # band index is a DETERMINISTIC PROJECTION of the signature
             # index (band_relation is a pure map over the mh columns),
@@ -1205,30 +1155,15 @@ def _lsh_index_batch(
             .select("doc_a", "doc_b", jac.alias("jaccard"))
             .filter(F.col("jaccard") >= params.JACCARD_THRESHOLD)
         )
-        verified.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch_id"
-        ).parquet(out_dir)
+        _write_batch_partition(verified, out_dir, batch_id)
         # ONE state write: the band index is derived from sigs on read
         # (see above, r15) — its per-batch write is gone
-        (
-            sig.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(f"{state_dir}/sigs")
-        )
+        _write_batch_partition(sig, f"{state_dir}/sigs", batch_id)
     finally:
         # Everything downstream of sig has been written to parquet; the
         # block-manager copy must not outlive the batch (bench r5 lesson:
         # leaked blocks tax every later query in a shared JVM).
         sig.unpersist()
-    # Same reader-facing publication protocol as the other sinks: the
-    # pointer lands only after every state relation of the batch
-    # (bcounts + sigs partitions) is fully written. Readers
-    # that race the publish fall back to the published-version listing
-    # (_read_latest_pointer prefix fallback), never a partial batch.
     _write_latest_pointer(spark, state_dir, batch_id)
 
 
@@ -1259,13 +1194,12 @@ def phash_index_sink(
     PROVIDED no chunk bucket crosses PHASH_BUCKET_CAP mid-stream (the
     lsh_index_sink one-sided cap-boundary caveat, verbatim).
 
-    Replay discipline: pair log, chunk index, and the sum-merged
-    accumulated bucket counts (``ccounts_v{batch_id}``, the bcounts
-    protocol: strictly-pre-batch prev, recompute-on-replay) all
-    publish as ``_batch_id`` dynamic-overwrite partitions / versioned
-    relations, so an at-least-once replay overwrites its own writes
-    instead of re-appending (duplicate chunk rows would inflate
-    accumulated buckets toward the cap and re-propose pairs).
+    Replay discipline: pair log and hash index land through
+    _write_batch_partition, the accumulated bucket counts
+    (``ccounts_v{batch_id}``) through _merge_version, so an
+    at-least-once replay overwrites its own writes instead of
+    re-appending (duplicate chunk rows would inflate accumulated
+    buckets toward the cap and re-propose pairs).
 
     Scale shape per batch: decode+hash is the map-only Arrow stage;
     the index probe is an equi-join on (ci, ck) — at 100 TB the index
@@ -1273,20 +1207,14 @@ def phash_index_sink(
     matching partitions; only 16-byte (doc_id, hash) rows ever
     shuffle; cap decisions cost O(distinct chunk keys) with map-side
     combine."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _phash_index_batch(batch_df, batch_id, state_dir, out_dir)
-
-    return stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return _sink(stream_docs, _phash_index_batch, checkpoint_dir, state_dir, out_dir)
 
 
 def _phash_index_batch(
     batch_df: DataFrame, batch_id: int, state_dir: str, out_dir: str
 ) -> None:
     """One phash_index_sink micro-batch (module-level for replay
-    tests); see the sink docstring for the publication protocol."""
+    tests)."""
     from flink_kafka_filter_transform_spark.operators import params
     from flink_kafka_filter_transform_spark.operators.multimodal import image_phash
 
@@ -1323,8 +1251,7 @@ def _fingerprint_index_batch(
     dedup.hamming_chunk_pairs for their blocking; this is the same
     factoring on the streaming side (r10): ``hash_stage`` is the
     map-only Arrow decode+hash stage, ``hash_col`` its output column,
-    and the chunk/cap/probe/verify/publish protocol is identical —
-    see phash_index_sink's docstring for the full replay discipline."""
+    and the chunk/cap/probe/verify/publish protocol is identical."""
     spark = _batch_aqe(batch_df.sparkSession)
     _refuse_legacy_index(spark, state_dir, "chunks", "hashes")
     mask = (1 << chunk_bits) - 1
@@ -1381,11 +1308,11 @@ def _fingerprint_index_batch(
             # expensive DECODE result, which is the thing worth keeping
             # — and the n_chunks bucket rows are re-derived on read
             # instead of written every micro-batch.
-            idx_hashes = _read_index_before(
+            idx_hashes = _read_batches(
                 spark,
                 f"{state_dir}/hashes",
-                chunks.select("doc_id", hash_col),
-                batch_id,
+                chunks.select("doc_id", hash_col).schema,
+                F.col("_batch_id") < batch_id,
             )
             idx = idx_hashes.select(
                 "doc_id", hash_col, F.explode(F.array(*chunk_structs)).alias("c")
@@ -1418,22 +1345,14 @@ def _fingerprint_index_batch(
         verified = cand.select(
             "doc_a", "doc_b", hamming.alias("hamming")
         ).filter(F.col("hamming") <= max_hamming)
-        verified.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch_id"
-        ).parquet(out_dir)
+        _write_batch_partition(verified, out_dir, batch_id)
         # one (doc_id, hash) row per input row: the ci==0 slice of the
         # PERSISTED chunk relation (exactly one chunk row per
         # fingerprint, no shuffle, no decode re-run)
-        (
-            chunks.filter(F.col("ci") == 0)
-            .select("doc_id", hash_col)
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(f"{state_dir}/hashes")
+        _write_batch_partition(
+            chunks.filter(F.col("ci") == 0).select("doc_id", hash_col),
+            f"{state_dir}/hashes",
+            batch_id,
         )
     finally:
         # released even on a failed write: a leaked block taxes
@@ -1455,15 +1374,8 @@ def afp_index_sink(
     verbatim (the same shared engine the batch operators reach through
     dedup.hamming_chunk_pairs), so every property proven for the phash
     face — pair-in-later-batch emission, accumulated-cap discipline,
-    _batch_id dynamic-overwrite replay idempotence — carries over
-    unchanged."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _afp_index_batch(batch_df, batch_id, state_dir, out_dir)
-
-    return stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    replay idempotence — carries over unchanged."""
+    return _sink(stream_docs, _afp_index_batch, checkpoint_dir, state_dir, out_dir)
 
 
 def _afp_index_batch(
@@ -1509,8 +1421,7 @@ def vfp_index_sink(
     (the IDENTICAL video_frame_hashes Arrow stage), DISTINCT (doc,
     fh); (2) accumulated per-fh distinct-doc counts maintained as
     sum-merged ``fcounts_v{batch_id}`` (disjoint batches make the
-    distinct-doc count a plain sum — the bcounts/ccounts protocol:
-    strictly-pre-batch prev, recompute-on-replay); buckets whose
+    distinct-doc count a plain sum); buckets whose
     ACCUMULATED occupancy exceeds VID_FRAME_CAP are dropped from
     both sides before any pairing (boilerplate frames: intro cards /
     black frames); (3) per-fh match rows = within-batch bucket-
@@ -1528,29 +1439,19 @@ def vfp_index_sink(
     mid-stream cannot retract already-emitted pairs; unreachable at
     driver scale and CI-differentially checked every run).
 
-    Replay discipline: pair log and frame index publish as
-    ``_batch_id`` dynamic-overwrite partitions, fcounts as versioned
-    relations — an at-least-once replay overwrites its own writes.
-
     Scale shape per batch: demux/decode is the map-only Arrow stage
     (frame pixels never shuffle; 16-byte (doc_id, fh) rows do); the
     index probe is an fh equi-join that a real deployment prunes by
     fh-hash partitioning; cap decisions are map-side-combined counts;
     the pair aggregate is bounded by capped-bucket expansion."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _vfp_index_batch(batch_df, batch_id, state_dir, out_dir)
-
-    return stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return _sink(stream_docs, _vfp_index_batch, checkpoint_dir, state_dir, out_dir)
 
 
 def _vfp_index_batch(
     batch_df: DataFrame, batch_id: int, state_dir: str, out_dir: str
 ) -> None:
     """One vfp_index_sink micro-batch (module-level for replay
-    tests); see the sink docstring for the protocol."""
+    tests)."""
     from flink_kafka_filter_transform_spark.operators import params
     from flink_kafka_filter_transform_spark.operators.multimodal import (
         SORTED_PAIR_EXPANSION,
@@ -1576,7 +1477,9 @@ def _vfp_index_batch(
             .select("p.doc_a", "p.doc_b")
         )
         if _hadoop_path_exists(spark, f"{state_dir}/frames"):
-            idx = _read_index_before(spark, f"{state_dir}/frames", fr, batch_id)
+            idx = _read_batches(
+                spark, f"{state_dir}/frames", fr.schema, F.col("_batch_id") < batch_id
+            )
             old = idx.join(over_cap, ["fh"], "left_anti")
             # index docs and batch docs are disjoint under exactly-once
             # delivery, so least/greatest orients each cross pair
@@ -1591,8 +1494,8 @@ def _vfp_index_batch(
             # design: cross-batch whole-doc redelivery is OUTSIDE the
             # delivery contract here, exactly as for the sibling faces —
             # the checkpoint replays a failed batch with the SAME batch_id
-            # and input, which the _batch_id < batch_id filter plus
-            # dynamic overwrite make fully idempotent; a doc re-arriving
+            # and input, which the strictly-pre-batch index read plus
+            # the partition overwrite make fully idempotent; a doc re-arriving
             # under a NEW batch_id would double-count shared-frame rows
             # for pairs with genuinely-new docs and re-emit its old pairs
             # under the new partition, and no per-batch guard can repair
@@ -1619,25 +1522,8 @@ def _vfp_index_batch(
             .agg(F.count(F.lit(1)).alias("n_matched"))
             .filter(F.col("n_matched") >= params.VID_MIN_MATCH)
         )
-        # Dynamic overwrite only rewrites partitions PRESENT in the new
-        # data: a replay that computes an EMPTY pair set would leave the
-        # original partition standing (silent stale pairs, not an error).
-        # That is sound ONLY because the checkpoint contract replays a
-        # batch with identical input — same pairs, same partition — which
-        # the replay tests pin (r11 ADVICE: assumption recorded here, at
-        # the one site whose failure mode would be silent).
-        pairs.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch_id"
-        ).parquet(out_dir)
-        (
-            fr.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(f"{state_dir}/frames")
-        )
+        _write_batch_partition(pairs, out_dir, batch_id)
+        _write_batch_partition(fr, f"{state_dir}/frames", batch_id)
     finally:
         # released even on a failed write: a leaked block taxes
         # every later query in a shared JVM (bench r5 lesson /
@@ -1672,10 +1558,9 @@ def ivo_overlap_sink(
     Maintained state is SUPPLIER-cardinality, not pair-cardinality:
     the per-supplier (n_pairs, sum_overlap_days, max_overlap_days)
     rollup is a commutative monoid (sum / sum / max), maintained as
-    sum-merged ``osum_v{batch_id}`` versions under the bcounts
-    protocol (strictly-pre-batch prev, recompute-on-replay), plus the
-    exploded interval index under ``_batch_id`` dynamic-overwrite
-    partitions. After the drain the published rollup equals the
+    ``osum_v{batch_id}`` versions (_merge_version), plus the exploded
+    interval index under ``_batch_id`` partitions
+    (_write_batch_partition). After the drain the published rollup equals the
     one-shot batch operator — the same naive-inequality DuckDB oracle
     checks the bucketing, the ownership rule, AND the micro-batch
     split in one differential gate.
@@ -1687,18 +1572,12 @@ def ivo_overlap_sink(
     (supplier, fortnight) cells; a real deployment prunes the index
     read by bucket-range partitioning since a batch only probes the
     buckets its own intervals touch."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _ivo_overlap_batch(batch_df, batch_id, state_dir)
-
-    return stream_lineitem.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    return _sink(stream_lineitem, _ivo_overlap_batch, checkpoint_dir, state_dir)
 
 
 def _ivo_overlap_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
     """One ivo_overlap_sink micro-batch (module-level for replay
-    tests); see the sink docstring for the protocol."""
+    tests)."""
     from flink_kafka_filter_transform_spark.operators.rangejoin import (
         lineitem_transit_intervals,
         overlap_bucketed,
@@ -1714,6 +1593,7 @@ def _ivo_overlap_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> No
     # depends on it)
     ex = overlap_bucketed(lineitem_transit_intervals(batch_df)).persist()
     try:
+        iv = ex.select("l_suppkey", "iid", "start_day", "end_day", "_bucket")
         left = overlap_side(ex, "a")
         right = overlap_side(ex, "b")
         within = (
@@ -1726,9 +1606,9 @@ def _ivo_overlap_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> No
             # the SAME overlap_side projection the batch operator uses —
             # no hand-rolled copy to drift (r11 review)
             idx = overlap_side(
-                spark.read.parquet(f"{state_dir}/iv")
-                .filter(F.col("_batch_id") < batch_id)
-                .drop("_batch_id"),
+                _read_batches(
+                    spark, f"{state_dir}/iv", iv.schema, F.col("_batch_id") < batch_id
+                ),
                 "a",
             )
             # a_iid != b_iid mirrors the batch op's strict a_iid < b_iid:
@@ -1750,28 +1630,14 @@ def _ivo_overlap_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> No
             F.sum("overlap_days").alias("sum_overlap_days"),
             F.max("overlap_days").alias("max_overlap_days"),
         )
-        v = _latest_state_version(spark, state_dir, "osum", before=batch_id)
-        totals = delta
-        if v is not None:
-            prev = spark.read.parquet(f"{state_dir}/osum_v{v}")
-            totals = (
-                prev.unionByName(delta)
-                .groupBy("suppkey")
-                .agg(
-                    F.sum("n_pairs").alias("n_pairs"),
-                    F.sum("sum_overlap_days").alias("sum_overlap_days"),
-                    F.max("max_overlap_days").alias("max_overlap_days"),
-                )
-            )
-        totals.write.mode("overwrite").parquet(f"{state_dir}/osum_v{batch_id}")
-        (
-            ex.select("l_suppkey", "iid", "start_day", "end_day", "_bucket")
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(f"{state_dir}/iv")
+        monoid = _fold(
+            ["suppkey"],
+            n_pairs=F.sum,
+            sum_overlap_days=F.sum,
+            max_overlap_days=F.max,
         )
+        _merge_version(spark, state_dir, "osum", batch_id, delta, monoid)
+        _write_batch_partition(iv, f"{state_dir}/iv", batch_id)
     finally:
         # released even on a failed write: a leaked block taxes
         # every later query in a shared JVM (bench r5 lesson /
@@ -1797,8 +1663,7 @@ def edit_index_sink(
     delete variant rows (the SHARED linkage.variant_exploded — recall
     depends on both faces deriving variants identically); (2) the
     LIFETIME per-variant entity count is sum-merged as
-    ``vcounts_v{batch_id}`` (bcounts protocol: strictly-pre-batch
-    prev, recompute-on-replay) and variants over EDIT_BLOCK_CAP drop
+    ``vcounts_v{batch_id}`` and variants over EDIT_BLOCK_CAP drop
     from BOTH sides before any pairing — the cap binds on the
     accumulated block exactly as the batch operator's cap binds on
     the whole-corpus block (one-sided cap-boundary caveat if a block
@@ -1808,8 +1673,8 @@ def edit_index_sink(
     variant probes — each pair emits in exactly the batch its LATER
     member arrives in; (4) verification is the built-in levenshtein
     on the names already in hand — no separate verify state;
-    (5) verified pairs land under ``_batch_id`` dynamic-overwrite
-    partitions, the batch's variant rows append to the index.
+    (5) verified pairs land in the pair log, the batch's (key, name)
+    rows in the name index.
 
     Cross-probe pairs orient by least/greatest over (k, nm) structs —
     the SAME lexicographic ordering array_sort gives the within-batch
@@ -1827,12 +1692,14 @@ def edit_index_sink(
     store is partitioned by variant hash so the probe prunes to
     matching partitions; only (key, name, variant) rows ever shuffle,
     never anything quadratic (blocks are capped)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _edit_index_batch(batch_df, batch_id, key_col, name_col, state_dir, out_dir)
-
-    return stream_rows.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _sink(
+        stream_rows,
+        _edit_index_batch,
+        checkpoint_dir,
+        key_col,
+        name_col,
+        state_dir,
+        out_dir,
     )
 
 
@@ -1845,7 +1712,7 @@ def _edit_index_batch(
     out_dir: str,
 ) -> None:
     """One edit_index_sink micro-batch (module-level for replay
-    tests); see the sink docstring for the protocol."""
+    tests)."""
     from flink_kafka_filter_transform_spark.operators.linkage import (
         EDIT_BLOCK_CAP,
         VARIANT_PAIR_EXPANSION,
@@ -1878,8 +1745,11 @@ def _edit_index_batch(
             # narrow row per entity and the ~L+1 variant rows — each
             # carrying the name AND a variant string — are re-derived on
             # read instead of written every micro-batch.
-            idx_names = _read_index_before(
-                spark, f"{state_dir}/names", ex.select("k", "nm"), batch_id
+            idx_names = _read_batches(
+                spark,
+                f"{state_dir}/names",
+                ex.select("k", "nm").schema,
+                F.col("_batch_id") < batch_id,
             )
             idx = variant_exploded(idx_names, "k", "nm")
             old = idx.join(over_cap, ["variant"], "left_anti")
@@ -1912,27 +1782,14 @@ def _edit_index_batch(
                 F.col("distance").cast("int").alias("distance"),
             )
         )
-        # same empty-replay dynamic-overwrite assumption as the vfp pair
-        # log — sound under the checkpoint contract's identical-input rule
-        verified.withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch_id"
-        ).parquet(out_dir)
+        _write_batch_partition(verified, out_dir, batch_id)
         # the name state is one (k, nm) row per entity — batch_df
         # projected directly (NOT distinct over ex: the explode never
         # drops or adds entities, and nm-null rows are filtered exactly
         # as variant_exploded filters them)
-        (
-            batch_df.select(
-                F.col(key_col).alias("k"), F.col(name_col).alias("nm")
-            )
-            .filter(F.col("nm").isNotNull())
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(f"{state_dir}/names")
+        names = batch_df.select(F.col(key_col).alias("k"), F.col(name_col).alias("nm"))
+        _write_batch_partition(
+            names.filter(F.col("nm").isNotNull()), f"{state_dir}/names", batch_id
         )
     finally:
         # released even on a failed write: a leaked block taxes
@@ -1993,12 +1850,11 @@ def cc_labels_sink(
     tests/test_streaming.py proves it, and the cc_stream_state face
     puts it under the driver's RECURSIVE-CTE oracle.
 
-    Replay discipline: the prev label table is resolved strictly
-    pre-batch (_latest_state_version before=batch_id), so a replayed
-    batch recomputes ``labels_v{batch_id}`` from the same inputs —
-    idempotent — and _lsh_index_batch's own dynamic partition
-    overwrite re-emits the identical pair partition. Reads carry
-    explicit schemas (the empty-first-batch rule).
+    Replay discipline: the prev label table is assembled from the
+    newest manifest strictly below the batch id, so a replayed batch
+    recomputes ``labels_v{batch_id}`` from the same inputs, and
+    _lsh_index_batch re-emits the identical pair partition. Reads
+    carry explicit schemas (the empty-first-batch rule).
 
     Scale shape per batch: the LSH probe is the index sink's own cost;
     the label-edge graph is bounded by the batch's PAIR count (not
@@ -2027,18 +1883,12 @@ def cc_labels_sink(
     OWN pruning pass (r13 ADVICE: it is the face's dominant state
     volume): run prune_state_versions(spark, f"{state_dir}/lsh",
     prefix="bcounts") for the bucket-count versions, and prune the
-    ``bands``/``sigs`` index ``_batch_id`` partitions below the
+    ``sigs`` index ``_batch_id`` partitions below the
     checkpoint watermark with the same offline cadence (they are
     append-only partitions, not versions, so the version pruner does
     not see them)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _cc_labels_batch(
-            batch_df, batch_id, state_dir, out_dir, shard_span=shard_span
-        )
-
-    return stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return _sink(
+        stream_docs, _cc_labels_batch, checkpoint_dir, state_dir, out_dir, shard_span
     )
 
 
@@ -2048,9 +1898,7 @@ def _shard_expr(col: str, span: int):
     return F.expr(f"CAST(floor({col} / {span}) AS BIGINT)")
 
 
-def _cc_label_schema(id_field) -> "StructType":
-    from pyspark.sql.types import StructField, StructType
-
+def _cc_label_schema(id_field) -> StructType:
     return StructType(
         [
             StructField("doc_id", id_field.dataType),
@@ -2061,54 +1909,24 @@ def _cc_label_schema(id_field) -> "StructType":
 
 def _cc_manifest_versions(spark: SparkSession, state_dir: str) -> list[int]:
     """All published ``lmanifest_v{N}`` FILE versions, ascending. The
-    manifest is a single driver-written file (the _LATEST pointer
-    pattern — it is bookkeeping, not data): publication is the atomic
-    tmp→rename, so existence == published; a crashed partial write
-    leaves only a ``._lmanifest.tmp.*`` residue the regex never
+    manifest is a single driver-written file published by
+    _publish_file, so existence == published; a crashed partial write
+    leaves only a hidden temp file the version listing never
     matches."""
-    import re as _re
-
-    dirpath, fs = _hadoop_fs(spark, state_dir)
-    if not fs.exists(dirpath):
-        return []
-    out = []
-    for status in fs.listStatus(dirpath):
-        m = _re.fullmatch(r"lmanifest_v(\d+)", status.getPath().getName())
-        if m is not None:
-            out.append(int(m.group(1)))
-    return sorted(out)
+    return sorted(_state_versions(spark, state_dir, "lmanifest"))
 
 
 def _cc_write_manifest(
     spark: SparkSession, state_dir: str, batch_id: int, manifest: dict[int, int]
 ) -> None:
     """Publish ``lmanifest_v{batch_id}`` (lines of ``shard version``)
-    via the FS API — tmp write + rename, the _write_latest_pointer
-    discipline. Driver-side on purpose: the map is corpus/shard_span
-    rows of bookkeeping the batch already holds in memory, and a
-    Spark write here costs a whole scheduled job per micro-batch
-    (measured ~1 s even via repartition(1), ~5-6 s via the
+    through _publish_file. Driver-side on purpose: the map is
+    corpus/shard_span rows of bookkeeping the batch already holds in
+    memory, and a Spark write here costs a whole scheduled job per
+    micro-batch (measured ~1 s even via repartition(1), ~5-6 s via the
     locality-stalled coalesce(1)) for a file of a few KB."""
-    tmp = f"{state_dir}/._lmanifest.tmp.{batch_id}"
-    jtmp, fs = _hadoop_fs(spark, tmp)
-    out = fs.create(jtmp, True)
-    try:
-        body = "".join(
-            f"{s} {v}\n" for s, v in sorted(manifest.items())
-        )
-        out.write(body.encode("ascii"))
-    finally:
-        out.close()
-    jdst = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{state_dir}/lmanifest_v{batch_id}"
-    )
-    if fs.exists(jdst):
-        fs.delete(jdst, False)
-    if not fs.rename(jtmp, jdst):
-        raise IOError(
-            f"failed to publish {state_dir}/lmanifest_v{batch_id} "
-            f"(rename returned false); partial manifest left at {tmp}"
-        )
+    body = "".join(f"{s} {v}\n" for s, v in sorted(manifest.items()))
+    _publish_file(spark, state_dir, f"lmanifest_v{batch_id}", batch_id, body)
 
 
 def _cc_read_manifest(
@@ -2123,24 +1941,9 @@ def _cc_read_manifest(
         versions = [v for v in versions if v < before]
     if not versions:
         return None
-    path = f"{state_dir}/lmanifest_v{versions[-1]}"
-    jpath, fs = _hadoop_fs(spark, path)
-    stream = fs.open(jpath)
-    try:
-        reader = spark._jvm.java.io.BufferedReader(
-            spark._jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        manifest: dict[int, int] = {}
-        line = reader.readLine()
-        while line is not None:
-            line = line.strip()
-            if line:
-                s, v = line.split(" ")
-                manifest[int(s)] = int(v)
-            line = reader.readLine()
-    finally:
-        stream.close()
-    return manifest
+    text = _read_text(spark, f"{state_dir}/lmanifest_v{versions[-1]}")
+    rows = (line.split() for line in text.splitlines() if line.strip())
+    return {int(shard): int(version) for shard, version in rows}
 
 
 def _cc_assembled_labels(
@@ -2156,8 +1959,6 @@ def _cc_assembled_labels(
     plain union — shards are disjoint across the selected versions by
     the manifest's construction. None for an empty manifest (labels
     published but the corpus so far is empty)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
     if not manifest:
         return None
     by_version: dict[int, list[int]] = {}
@@ -2197,8 +1998,6 @@ def _cc_labels_batch(
     spans to exercise multi-shard publication; the default keeps a
     driver-scale corpus in one shard, where the protocol degenerates
     to the r13 full rewrite)."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     from flink_kafka_filter_transform_spark.operators.graph import (
         components_unionfind_small,
         connected_components,
@@ -2209,8 +2008,7 @@ def _cc_labels_batch(
     id_field = batch_df.schema["doc_id"]
     # this batch's verified pairs — the partition _lsh_index_batch just
     # wrote (replay overwrites it, so the read always sees exactly this
-    # batch's recomputed pairs). Explicit schema: an all-empty batch
-    # writes only _SUCCESS under dynamic overwrite.
+    # batch's recomputed pairs)
     pair_schema = StructType(
         [
             StructField("doc_a", id_field.dataType),
@@ -2238,7 +2036,9 @@ def _cc_labels_batch(
     # the distributed fixpoint.
     base = (fresh if prev is None else prev.unionByName(fresh)).persist()
     try:
-        pairs_now = _this_batch_pairs(spark, out_dir, pair_schema, batch_id)
+        pairs_now = _read_batches(
+            spark, out_dir, pair_schema, F.col("_batch_id") == batch_id
+        ).select("doc_a", "doc_b")
         a_lab = base.select(F.col("doc_id").alias("doc_a"), F.col("label").alias("la"))
         b_lab = base.select(F.col("doc_id").alias("doc_b"), F.col("label").alias("lb"))
         ledges = (
@@ -2357,37 +2157,6 @@ def _cc_labels_batch(
     _write_latest_pointer(spark, state_dir, batch_id)
 
 
-def _this_batch_pairs(
-    spark: SparkSession, out_dir: str, pair_schema, batch_id: int
-) -> DataFrame:
-    """EXACTLY this batch's rows of a ``_batch_id``-partitioned pair
-    log, with the explicit-schema discipline of _read_index_before
-    (same LongType partition column, same fresh-StructType rule).
-    Two guard layers, both load-bearing (r13 review): an all-empty
-    first batch DOES create out_dir with a _SUCCESS marker (the r12
-    empty-first-batch finding — which is exactly why the read carries
-    an explicit schema: inference over marker-only output would
-    brick), while the exists-guard covers the path genuinely not
-    existing yet — _cc_labels_batch reads the log its own
-    _lsh_index_batch call just wrote, so in-protocol the dir exists,
-    but a direct _cc_labels_batch caller (the replay tests) must not
-    crash before any write has happened."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    if not _hadoop_path_exists(spark, out_dir):
-        return spark.createDataFrame([], pair_schema).select("doc_a", "doc_b")
-    schema = StructType(
-        list(pair_schema.fields) + [StructField("_batch_id", LongType())]
-    )
-    return (
-        spark.read.schema(schema)
-        .parquet(out_dir)
-        .filter(F.col("_batch_id") == batch_id)
-        .drop("_batch_id")
-        .select("doc_a", "doc_b")
-    )
-
-
 def cc_labels_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """The latest published component-label table (doc_id, label),
     assembled across the shard manifest's versions with shard-pruned
@@ -2419,26 +2188,10 @@ def prune_cc_label_state(
     between micro-batches, like every pruner. The nested
     ``{state_dir}/lsh`` sub-state still prunes separately (see the
     cc_labels_sink docstring)."""
-    import re as _re
-
     keep_last = max(2, keep_last)
-    dirpath, fs = _hadoop_fs(spark, state_dir)
-    if not fs.exists(dirpath):
-        return []
     latest = _read_latest_pointer(spark, state_dir)
     manifests = _cc_manifest_versions(spark, state_dir)
-    labels: list[int] = []
-    for status in fs.listStatus(dirpath):
-        name = status.getPath().getName()
-        m = _re.fullmatch(r"labels_v(\d+)", name)
-        if m is None:
-            continue
-        success = spark._jvm.org.apache.hadoop.fs.Path(
-            status.getPath(), "_SUCCESS"
-        )
-        if not fs.exists(success):
-            continue
-        labels.append(int(m.group(1)))
+    labels = [v for v, ok in _state_versions(spark, state_dir, "labels").items() if ok]
     # never touch an in-flight publication above the pointer
     if latest is not None:
         manifests = [v for v in manifests if v <= latest]
@@ -2757,7 +2510,9 @@ def lsh_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch,
         lambda stream, ckpt: lsh_index_sink(stream, state, out, ckpt),
     )
-    return spark.read.parquet(out).select("doc_a", "doc_b", "jaccard")
+    return _read_batches(
+        spark, out, StructType.fromDDL("doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE")
+    )
 
 
 
@@ -2782,7 +2537,9 @@ def phash_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch,
         lambda stream, ckpt: phash_index_sink(stream, state, out, ckpt),
     )
-    return spark.read.parquet(out).select("doc_a", "doc_b", "hamming")
+    return _read_batches(
+        spark, out, StructType.fromDDL("doc_a BIGINT, doc_b BIGINT, hamming INT")
+    )
 
 
 def afp_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2807,7 +2564,9 @@ def afp_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch,
         lambda stream, ckpt: afp_index_sink(stream, state, out, ckpt),
     )
-    return spark.read.parquet(out).select("doc_a", "doc_b", "hamming")
+    return _read_batches(
+        spark, out, StructType.fromDDL("doc_a BIGINT, doc_b BIGINT, hamming INT")
+    )
 
 
 def vfp_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2833,13 +2592,9 @@ def vfp_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch,
         lambda stream, ckpt: vfp_index_sink(stream, state, out, ckpt),
     )
-    # explicit schema: a corpus where NO pair reaches VID_MIN_MATCH
-    # writes only _SUCCESS markers per partition and schema inference
-    # would fail on the empty log (r11 review); the declared schema
-    # returns the correct empty relation instead
-    return spark.read.schema(
-        "doc_a BIGINT, doc_b BIGINT, n_matched BIGINT, _batch_id INT"
-    ).parquet(out).select("doc_a", "doc_b", "n_matched")
+    return _read_batches(
+        spark, out, StructType.fromDDL("doc_a BIGINT, doc_b BIGINT, n_matched BIGINT")
+    )
 
 
 def ivo_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2866,8 +2621,7 @@ def ivo_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch,
         lambda stream, ckpt: ivo_overlap_sink(stream, state, ckpt),
     )
-    v = _read_latest_pointer(spark, state, prefix="osum")
-    return spark.read.parquet(f"{state}/osum_v{v}").select(
+    return _current(spark, state, "osum").select(
         F.col("suppkey").alias("l_suppkey"),
         "n_pairs",
         "sum_overlap_days",
@@ -2880,7 +2634,7 @@ def edit_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     edit_index_sink — symmetric-delete variant explode per
     micro-batch, within-batch sorted-block pairs UNION batch-vs-index
     variant probes, built-in levenshtein verify, lifetime
-    EDIT_BLOCK_CAP under the bcounts protocol — returning the
+    EDIT_BLOCK_CAP (_accumulated_over_cap) — returning the
     accumulated pair log (a_c_custkey, b_c_custkey, distance). Each
     pair is emitted in exactly the batch its LATER member arrives in,
     so after the drain the log equals the one-shot batch operator
@@ -2901,11 +2655,11 @@ def edit_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, "c_custkey", "c_name", state, out, ckpt
         ),
     )
-    # explicit schema: a corpus with no d<=1 pair writes only _SUCCESS
-    # markers and inference would fail on the empty log (the vfp rule)
-    return spark.read.schema(
-        "a_c_custkey BIGINT, b_c_custkey BIGINT, distance INT, _batch_id INT"
-    ).parquet(out).select("a_c_custkey", "b_c_custkey", "distance")
+    return _read_batches(
+        spark,
+        out,
+        StructType.fromDDL("a_c_custkey BIGINT, b_c_custkey BIGINT, distance INT"),
+    )
 
 
 def cc_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2940,8 +2694,6 @@ def cc_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r13 ADVICE: cc_labels_current is None before any batch
         # commits — an empty documents table must yield an empty
         # cluster table, not an AttributeError on the None
-        from pyspark.sql.types import BooleanType, LongType, StructField
-
         id_type = docs.schema["doc_id"].dataType
         return spark.createDataFrame(
             [],
@@ -2963,6 +2715,13 @@ def cc_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# State-store width of the first-seen ledger face. Structured Streaming
+# pins it at the first batch for the life of the checkpoint, so it is
+# fixed rather than the session's core-count default (at 2x32 each batch
+# paid 64 near-empty state-store commits: ~2.1 s vs ~0.8 s at 16).
+_DEDUP_STATE_PARTITIONS = 16
+
+
 def dedup_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered query: the documents table drained through the
     first-seen dedup ledger (streaming.state.streaming_first_seen —
@@ -2974,9 +2733,9 @@ def dedup_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes. The first-seen ledger was the one stateful operator
     without a driver face (VERDICT r7 item 6).
 
-    Face mechanics: each micro-batch's update rows land under a
-    _batch_id partition (dynamic overwrite — the effectively-once
-    publication the metered sink uses), and the final ledger row per
+    Face mechanics: each micro-batch's update rows land through
+    _write_batch_partition (the effectively-once publication the
+    metered sink uses), and the final ledger row per
     key is the one from its LAST touching batch (max_by batch id —
     first_doc_id only ever decreases and n_suppressed only grows, so
     the latest revision is the total). State scales as one ledger row
@@ -3000,35 +2759,12 @@ def dedup_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             # BYTES at any scale instead of writing one tiny file per
             # state partition per batch (guide §6 small-files rule)
             _batch_aqe(bdf.sparkSession)
-            (
-                bdf.hint("rebalance")
-                .withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(ledger)
-            )
+            _write_batch_partition(bdf.hint("rebalance"), ledger, batch_id)
 
-        return (
-            state_mod.streaming_first_seen(stream)
-            .writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-        )
+        return _sink(
+            state_mod.streaming_first_seen(stream), write_batch, ckpt
+        ).outputMode("update")
 
-    # State-store partition count for the stateful operator (r14, guide
-    # §2.2): Structured Streaming pins the stateful shuffle width to
-    # spark.sql.shuffle.partitions AT FIRST BATCH (it can never change
-    # for the life of the checkpoint), so it must be sized to the
-    # stream's expected STATE VOLUME — a per-deployment decision — not
-    # inherited from the session's transient 2×core default. At 2×32
-    # the ledger's thousands of keys spread over 64 near-empty state
-    # partitions: every micro-batch paid 64 state-store opens/commits
-    # and 64 Arrow round-trips to the Python state worker for ~20 keys
-    # each (measured: ~2.1 s per 1250-row batch; ~0.8 s at 16).
-    # SPARK_GRAFT_STATE_PARTITIONS overrides for production key
-    # cardinalities; the default stays fixed across driver core counts,
-    # which keeps the bench series comparable at every CPU setting.
     # SCOPE (r14 ADVICE, documented here at the one site that mutates
     # it): this override is session-global for the duration of the
     # drain — any query PLANNED concurrently on the shared session
@@ -3039,11 +2775,8 @@ def dedup_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spark.newSession() instead (not done here: a second session
     # would re-pay session-state init per face for a race that cannot
     # occur under the serial contract).
-    import os as _os
-
-    state_partitions = _os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "16")
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions)
+    spark.conf.set("spark.sql.shuffle.partitions", str(_DEDUP_STATE_PARTITIONS))
     try:
         _drain_through_sink(docs, scratch, sink)
     finally:
@@ -3096,22 +2829,11 @@ def prune_state_versions(
     latest = _read_latest_pointer(spark, state_dir, prefix=prefix)
     if latest is None:
         return []
-    import re as _re
-
-    dirpath, fs = _hadoop_fs(spark, state_dir)
-    published: list[int] = []
-    residue: list[int] = []
-    for status in fs.listStatus(dirpath):
-        m = _re.fullmatch(rf"{_re.escape(prefix)}_v(\d+)", status.getPath().getName())
-        if m is None or int(m.group(1)) > latest:
-            continue
-        success = spark._jvm.org.apache.hadoop.fs.Path(status.getPath(), "_SUCCESS")
-        (published if fs.exists(success) else residue).append(int(m.group(1)))
-    published.sort()
-    doomed = sorted(
-        residue + (published[:-keep_last] if len(published) > keep_last else [])
-    )
+    versions = _state_versions(spark, state_dir, prefix)
+    published = sorted(v for v, ok in versions.items() if ok and v <= latest)
+    residue = [v for v, ok in versions.items() if not ok and v <= latest]
+    doomed = sorted(residue + published[:-keep_last])
     for v in doomed:
-        vpath = spark._jvm.org.apache.hadoop.fs.Path(f"{state_dir}/{prefix}_v{v}")
+        vpath, fs = _hadoop_fs(spark, f"{state_dir}/{prefix}_v{v}")
         fs.delete(vpath, True)
     return doomed

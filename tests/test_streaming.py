@@ -2044,6 +2044,25 @@ def test_cc_stream_state_empty_documents_table(spark, sf_dir, tmp_path_factory):
     ]
 
 
+def test_lsh_stream_state_without_any_pair(spark, tmp_path):
+    """A corpus with no near-duplicate pair leaves a pair log of empty
+    batch partitions; the face must still return the empty
+    (doc_a, doc_b, jaccard) relation instead of failing schema
+    inference."""
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [
+            (1, "alpha beta gamma delta epsilon"),
+            (2, "zeta eta theta iota kappa"),
+            (3, "lambda mu nu xi omicron"),
+        ],
+        "doc_id BIGINT, text STRING",
+    ).write.parquet(f"{sf}/documents.parquet")
+    got = sp.lsh_stream_state(spark, sf)
+    assert got.columns == ["doc_a", "doc_b", "jaccard"]
+    assert got.count() == 0
+
+
 def test_cc_labels_sink_replay_same_batch_id_idempotent(
     spark, sf_dir, tmp_path_factory
 ):
@@ -2295,3 +2314,171 @@ def test_cc_labels_sink_sharded_drain_matches_batch(
         (r.doc_id, r.cluster_id) for r in neardup_clusters(docs).collect()
     }
     assert got == want and len(want) > 0
+
+
+class _InjectedCrash(Exception):
+    """Raised by the fault injector in place of a durable write."""
+
+
+def _crash_face(spark, sf_dir, face):
+    """(run(batch_df, batch_id, state, out), batch 0, batch 1) for one
+    per-batch sink body, over the same inputs its replay test uses."""
+    from flink_kafka_filter_transform_spark.operators.kmeans import kmeans_fit
+    from flink_kafka_filter_transform_spark.sources.parquet import load_table
+
+    def halves(df, col):
+        return df.filter(SF.col(col) % 2 == 0), df.filter(SF.col(col) % 2 == 1)
+
+    if face == "scd2":
+        parsed = cdc.parse_envelope(cdc_events_df(spark, sf_dir)).select(
+            *sp.SCD2_CHANGE_COLS
+        )
+        return (lambda b, i, st, out: sp._scd2_merge_batch(b, i, st)), *halves(
+            parsed, "msg_id"
+        )
+    if face == "hll":
+        events = load_table(spark, "events", sf_dir).select(
+            "event_type", SF.col("user_id").cast("string").alias("user_id")
+        )
+        return (
+            lambda b, i, st, out: sp._hll_merge_batch(b, i, "user_id", "event_type", st)
+        ), events.limit(200), events
+    if face == "ivf":
+        emb = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
+        _, cents = kmeans_fit(
+            emb.select("vec_id", SF.col("embedding").alias("v")), k=4, iters=2
+        )
+        # materialized: the codebook's own lineage must not run inside
+        # the counted batch
+        cents = spark.createDataFrame(cents.collect(), cents.schema)
+        return (
+            lambda b, i, st, out: sp._ivf_assign_batch(b, i, cents, out, st)
+        ), *halves(emb, "vec_id")
+    if face == "ivo":
+        li = load_table(spark, "lineitem", sf_dir).select(
+            "l_orderkey", "l_linenumber", "l_suppkey", "l_shipdate"
+        )
+        return (lambda b, i, st, out: sp._ivo_overlap_batch(b, i, st)), *halves(
+            li, "l_orderkey"
+        )
+    if face == "edit":
+        cust = load_table(spark, "customer", sf_dir).select("c_custkey", "c_name")
+        return (
+            lambda b, i, st, out: sp._edit_index_batch(
+                b, i, "c_custkey", "c_name", st, out
+            )
+        ), *halves(cust, "c_custkey")
+    docs = load_table(spark, "documents", sf_dir)
+    if face in ("cms", "bloom"):
+        fn = {"cms": sp._cms_merge_batch, "bloom": sp._bloom_merge_batch}[face]
+        return (lambda b, i, st, out: fn(b, i, st)), *halves(
+            docs.select("doc_id", "text"), "doc_id"
+        )
+    fn = {
+        "lsh": sp._lsh_index_batch,
+        "phash": sp._phash_index_batch,
+        "afp": sp._afp_index_batch,
+        "vfp": sp._vfp_index_batch,
+        "cc": sp._cc_labels_batch,
+    }[face]
+    cols = ["doc_id", "text"] if face in ("lsh", "cc") else ["doc_id"]
+    return fn, *halves(docs.select(*cols), "doc_id")
+
+
+def _durable_snapshot(root, as_set=()):
+    """Everything a batch leaves under ``root``: each parquet dataset (a
+    directory holding ``_SUCCESS``, part files or ``key=value``
+    partitions) as its sorted rows, every other visible file as its
+    bytes. Datasets named in ``as_set`` are compared as row sets
+    (append-only logs deduped on read)."""
+    import pyarrow.parquet as pq
+
+    snap = {}
+    for dirpath, dirnames, filenames in os.walk(root):
+        rel = os.path.relpath(dirpath, root)
+        if (
+            "_SUCCESS" in filenames
+            or any(f.endswith(".parquet") for f in filenames)
+            or any("=" in d for d in dirnames)
+        ):
+            dirnames.clear()
+            data = any(
+                f.endswith(".parquet") for _, _, fs in os.walk(dirpath) for f in fs
+            )
+            rows = sorted(map(repr, pq.read_table(dirpath).to_pylist())) if data else []
+            snap[rel] = sorted(set(rows)) if rel in as_set else rows
+            continue
+        for f in filenames:
+            if not f.startswith("."):
+                with open(os.path.join(dirpath, f), "rb") as fh:
+                    snap[os.path.join(rel, f)] = fh.read()
+    return snap
+
+
+@pytest.mark.parametrize(
+    "face",
+    ["scd2", "hll", "cms", "bloom", "ivf", "lsh", "phash", "afp", "vfp", "ivo", "edit", "cc"],
+)
+def test_batch_survives_crash_before_any_durable_write(
+    spark, sf_dir, tmp_path, monkeypatch, face
+):
+    """Structured Streaming's recovery contract (replayable source +
+    idempotent sink) at every crash point: batch 1 is killed before its
+    k-th durable write — a parquet write, the _LATEST publish or the
+    label-manifest publish — for every k, then re-driven under the same
+    batch id. Published state, pair log and index must equal a run that
+    never crashed. The scd2 changelog is append-only and deduped on
+    read by (key, msg_id), so it is compared as a row set."""
+    import shutil
+
+    from pyspark.sql import DataFrameWriter
+
+    run, b0, b1 = _crash_face(spark, sf_dir, face)
+    as_set = {"state/changes"}
+    base = str(tmp_path / "base")
+    run(b0, 0, f"{base}/state", f"{base}/out")
+
+    def inject(m, crash_at):
+        """Count durable writes; raise instead of the crash_at-th."""
+        seen = []
+
+        def hit():
+            seen.append(1)
+            if len(seen) == crash_at:
+                raise _InjectedCrash(f"crash before durable write {crash_at}")
+
+        orig_parquet = DataFrameWriter.parquet
+
+        def parquet(writer, *a, **kw):
+            hit()
+            return orig_parquet(writer, *a, **kw)
+
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        for name in ("_write_latest_pointer", "_cc_write_manifest"):
+            orig = getattr(sp, name)
+
+            def publish(*a, _orig=orig, **kw):
+                hit()
+                return _orig(*a, **kw)
+
+            m.setattr(sp, name, publish)
+        return seen
+
+    ref = str(tmp_path / "ref")
+    shutil.copytree(base, ref)
+    with monkeypatch.context() as m:
+        seen = inject(m, crash_at=None)
+        run(b1, 1, f"{ref}/state", f"{ref}/out")
+        writes = len(seen)
+    want = _durable_snapshot(ref, as_set)
+    assert writes >= 2 and want
+
+    for k in range(1, writes + 1):
+        root = str(tmp_path / f"crash{k}")
+        shutil.copytree(base, root)
+        with monkeypatch.context() as m:
+            inject(m, crash_at=k)
+            with pytest.raises(_InjectedCrash):
+                run(b1, 1, f"{root}/state", f"{root}/out")
+        run(b1, 1, f"{root}/state", f"{root}/out")  # replay
+        assert _durable_snapshot(root, as_set) == want, f"crash before write {k}"
