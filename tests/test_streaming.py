@@ -5,6 +5,7 @@ trigger), must produce identical results."""
 import os
 import re
 import time
+from collections import Counter
 
 import pytest
 
@@ -15,6 +16,16 @@ from flink_kafka_filter_transform_spark.operators import cdc
 from flink_kafka_filter_transform_spark.sources.cdc_fixture import RULES, cdc_events_df
 from flink_kafka_filter_transform_spark.streaming import pipeline as sp
 from flink_kafka_filter_transform_spark.streaming.state import running_counters
+
+
+def _jobs_per_batch(spark, q) -> float:
+    """Spark jobs a terminated query launched per micro-batch with
+    input: foreachBatch jobs run in the query's job group (its run
+    id)."""
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert batches
+    return len(jobs) / len(batches)
 
 
 @pytest.fixture(params=["file", "kafka"])
@@ -309,14 +320,14 @@ def test_scd2_incremental_converges_with_late_data(
 
     cols = ("db", "table_name", "key", "op", "msg_id",
             "valid_from_us", "valid_to_us", "is_current")
-    got = {
+    got = Counter(
         tuple(r[c] for c in cols)
         for r in sp.scd2_current(spark, state_dir).collect()
-    }
-    want = {
+    )
+    want = Counter(
         tuple(r[c] for c in cols)
         for r in cdc.scd2_history(cdc.parse_envelope(src)).collect()
-    }
+    )
     assert got == want and len(want) > 0
 
 
@@ -1144,7 +1155,12 @@ def test_scd2_merge_replay_same_batch_id_idempotent(spark, sf_dir, tmp_path_fact
     """Re-driving the SAME scd2 batch id must leave the published table
     identical: the re-appended changelog rows collapse on the
     (key, msg_id) dedup and prev comes strictly pre-batch, so the
-    recompute reproduces scd2_v{batch_id} without reading it."""
+    recompute reproduces scd2_v{batch_id} without reading it. A LATER
+    batch id re-delivering rows of an earlier batch (at-least-once
+    redelivery) must not change the history either. Histories compare
+    as multisets: the fixture's msg_id is unique, so the batch oracle
+    has no duplicate rows, and a duplicated interval row is exactly
+    what a misplaced dedup would publish."""
     from flink_kafka_filter_transform_spark.operators import cdc
     from flink_kafka_filter_transform_spark.sources.cdc_fixture import cdc_events_df
 
@@ -1154,13 +1170,54 @@ def test_scd2_merge_replay_same_batch_id_idempotent(spark, sf_dir, tmp_path_fact
     b0 = parsed.filter(SF.col("msg_id") % 2 == 0)
     b1 = parsed.filter(SF.col("msg_id") % 2 == 1)
     state = str(tmp_path_factory.mktemp("scd2_replay_state"))
+    cols = ["db", "table_name", "key", "op", "msg_id", "valid_from_us", "valid_to_us"]
+
+    def history(df):
+        return Counter(tuple(r) for r in df.select(cols).collect())
+
     sp._scd2_merge_batch(b0, 0, state)
     sp._scd2_merge_batch(b1, 1, state)
-    cols = ["db", "table_name", "key", "op", "msg_id", "valid_from_us", "valid_to_us"]
-    before = {tuple(r) for r in sp.scd2_current(spark, state).select(cols).collect()}
+    before = history(sp.scd2_current(spark, state))
+    assert before == history(cdc.scd2_history(parsed)) and len(before) > 0
     sp._scd2_merge_batch(b1, 1, state)  # replay
-    after = {tuple(r) for r in sp.scd2_current(spark, state).select(cols).collect()}
-    assert before == after and len(after) > 0
+    assert history(sp.scd2_current(spark, state)) == before
+    sp._scd2_merge_batch(b0.filter(SF.col("msg_id") % 3 == 0), 2, state)  # redelivery
+    assert sp._read_latest_pointer(spark, state) == 2
+    assert history(sp.scd2_current(spark, state)) == before
+
+
+def test_scd2_sink_plans_four_jobs_per_batch(spark, sf_dir, tmp_path):
+    """Each scd2_incremental_sink micro-batch launches exactly 4 Spark
+    jobs: the changelog append, one broadcast of the batch's keys
+    (reused by the semi- and the anti-join), one shuffle shared by the
+    (key, msg_id) dedup and scd2_history's window, and the version
+    write. Both state reads declare their schemas, so no job infers
+    one. The published history still equals the batch oracle as a
+    multiset."""
+    from flink_kafka_filter_transform_spark.operators import cdc
+    from flink_kafka_filter_transform_spark.sources.cdc_fixture import cdc_events_df
+
+    full = cdc_events_df(spark, sf_dir)
+    src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
+    full.repartition(3).write.parquet(src)
+    stream = (
+        spark.readStream.schema(full.schema).option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    q = (
+        sp.scd2_incremental_sink(cdc.parse_envelope(stream), state, ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300)
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
+    assert _jobs_per_batch(spark, q) == 4
+
+    cols = ["db", "table_name", "key", "op", "msg_id", "valid_from_us", "valid_to_us"]
+    got = Counter(tuple(r) for r in sp.scd2_current(spark, state).select(cols).collect())
+    want = Counter(
+        tuple(r) for r in cdc.scd2_history(cdc.parse_envelope(full)).select(cols).collect()
+    )
+    assert got == want and len(want) > 0
 
 
 def test_prune_state_versions_keeps_replay_recovery_path(
@@ -1351,11 +1408,7 @@ def test_metered_service_end_to_end_monotone(spark, sf_dir, tmp_path):
             .start()
         )
         assert q.awaitTermination(300)
-        # foreachBatch jobs run in the query's job group (its run id)
-        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
-        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        assert batches
-        assert len(jobs) == 3 * len(batches)
+        assert _jobs_per_batch(spark, q) == 3
 
     try:
         drain(full.filter(SF.col("msg_id") % 2 == 0).repartition(2))
