@@ -11,6 +11,14 @@ JSON (kept under the driver's 2000-char stdout-tail budget):
 The full cold/warm breakdown is written to BENCH_full.json (committed
 per round) and also printed as two earlier stdout lines; r4's single
 giant line lost its cold section to the tail capture — see VERDICT r4.
+BENCH_full.json also carries, per query under "census", the Spark work
+of its last rep (jobs, completed/skipped stages, tasks, task ms,
+shuffle bytes, spill), read from the status store outside the timed
+region.
+
+This module is also the one measurement harness the studies in tools/
+import: session(), warm_up(), run(), reclaim(), job_mark()/census(),
+measure() and close().
 
 Each query executes end-to-end into a noop sink (full pipeline runs,
 nothing collected to the driver, no disk write measured). A warmup
@@ -27,9 +35,9 @@ METHODOLOGY (frozen in r4 — do not change mid-series again):
 Cross-round comparisons should use warm-vs-warm or cold-vs-cold, never
 mixed (the r2->r3 "17% faster" conflated the two; VERDICT r3).
 - r6 addendum (hygiene, not a redefinition): an UNTIMED reclaim
-  (py GC + clearCache + JVM GC) runs between every rep so localCheck-
-  point residue from iterative trainers can't make warm read slower
-  than cold in the shared JVM (VERDICT r5 item 2).
+  (py GC + clearCache + unpersist + face scratch) runs between every
+  rep so localCheckpoint residue from iterative trainers can't make
+  warm read slower than cold in the shared JVM (VERDICT r5 item 2).
 
 "cdc_route_join_distinct" is a bench-only forced run of the
 _route_distinct_keys_join fallback (normally dispatch picks the
@@ -39,6 +47,7 @@ path keeps a timing trend line.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
@@ -319,20 +328,27 @@ FACE_QUERIES = {
 }
 
 
-def main() -> None:
-    # The driver parses bench stdout's TAIL; the JVM's unified logging
-    # prints warnings (e.g. GCLocker retry under memory pressure) to
-    # STDOUT asynchronously, and one landing after the final JSON line
-    # corrupts the driver artifact the same way r4's oversized line
-    # did. JVM options must ride the gateway LAUNCH (builder configs
-    # arrive after the driver JVM is already up in local mode), so
-    # disable unified-logging output via PYSPARK_SUBMIT_ARGS before the
-    # first session is built.
-    # Local mode runs ALL executor threads inside the driver JVM; the
-    # spark-submit default of 1g for 32 cores was at the GC edge (the
-    # r4 run's GCLocker warnings) and tipped into
-    # notEnoughMemoryToBuildAndBroadcastTable when the r5 queries
-    # landed. Size the heap for the machine (local[32], 128 GiB box).
+# The final stdout line must fit the driver's ~2000-char stdout-tail
+# capture with room to spare (r4's single giant line lost its cold
+# section to that window).
+TAIL_BUDGET = 1900
+
+
+def session(app_name: str = "bench", cpus: int = CPUS):
+    """The measurement session: local[cpus], 2*cpus shuffle partitions.
+
+    The driver parses bench stdout's TAIL; the JVM's unified logging
+    prints warnings (e.g. GCLocker retry under memory pressure) to
+    STDOUT asynchronously, and one landing after the final JSON line
+    corrupts the driver artifact the same way r4's oversized line did.
+    JVM options must ride the gateway LAUNCH (builder configs arrive
+    after the driver JVM is already up in local mode), so unified
+    logging is disabled via PYSPARK_SUBMIT_ARGS before the first
+    session is built. Local mode runs ALL executor threads inside the
+    driver JVM; the spark-submit default of 1g for 32 cores was at the
+    GC edge (the r4 run's GCLocker warnings) and tipped into
+    notEnoughMemoryToBuildAndBroadcastTable when the r5 queries
+    landed, so the heap is sized once here for every study."""
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
         "--driver-memory 24g "
         "--conf spark.driver.extraJavaOptions=-Xlog:disable pyspark-shell"
@@ -340,133 +356,192 @@ def main() -> None:
     from flink_kafka_filter_transform_spark import get_session
 
     spark = get_session(
-        app_name="bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=2 * CPUS,
+        app_name=app_name, master=f"local[{cpus}]", shuffle_partitions=2 * cpus
     )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
+
+def queries() -> dict:
+    """The registry plus the bench-only SPECIAL queries."""
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-    qs.update(SPECIAL)
-    # a renamed/removed query must not kill the whole bench run — skip
-    # it loudly (stderr) and keep the series going
-    missing = [n for n in HEADLINE if n not in qs]
-    for n in missing:
-        print(f"bench: skipping unknown query {n!r}", file=sys.stderr)
+    return {**entrymod.queries(), **SPECIAL}
 
-    def run(name: str) -> float:
-        t0 = time.time()
-        qs[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
-        return time.time() - t0
 
-    def reclaim() -> None:
-        """Release block-manager residue BETWEEN timed runs (untimed).
+def run(spark, query, sf_dir: str = SF_DIR) -> float:
+    """Wall seconds of one run of ``query`` (a registered name, or a
+    ``(spark, sf_dir) -> DataFrame`` callable) into the noop sink: the
+    full pipeline executes, nothing is collected to the driver and no
+    disk write is measured. Building the DataFrame is timed too (the
+    eager trainers do their driver-paced work there)."""
+    build = queries()[query] if isinstance(query, str) else query
+    t0 = time.time()
+    build(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    return time.time() - t0
 
-        The iterative trainers localCheckpoint inside their loops;
-        checkpointed RDD blocks are only freed once the Python frame is
-        GC'd AND the JVM ContextCleaner processes the dead reference.
-        In the shared bench JVM, back-to-back reps therefore
-        accumulated blocks and warm ran SLOWER than cold on
-        pagerank/semdedup/PQ (VERDICT r5 item 2: pagerank 6.42 cold /
-        7.21 warm). r6 methodology addendum: reclaim between every rep
-        so each timed run sees the same clean block manager; the
-        cold/warm DEFINITIONS are unchanged.
 
-        Mechanism choice (A/B'd in r6): unpersist every block the JVM
-        still tracks (getPersistentRDDs covers cache() AND
-        localCheckpoint blocks) rather than forcing System.gc() — the
-        full-GC variant also unloads generated codegen classes and
-        taxed warm runs ~10-30% across the suite (crossdoc 1.7 -> 2.4 s
-        warm), while unpersist is surgical and measured
-        indistinguishable from no-reclaim on residue-free queries."""
-        import gc
-
-        gc.collect()  # drop py4j refs so dead frames release their RDDs
-        spark.catalog.clearCache()
-        # non-blocking removal, explicitly: JavaRDD.unpersist() defaults
-        # to blocking=true, and a 5-rep A/B on supply_chain_pagerank
-        # showed the blocking variant destabilizes the FOLLOWING timed
-        # runs (5.7-9.4 s oscillation vs a 4.0-4.1 s steady state with
-        # async removal)
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(False)
-        # r7: the streaming sink faces stage source/checkpoint/state
-        # under per-run scratch dirs; reclaim them once the timed run
-        # has fully consumed the returned state (the noop write did)
-        from flink_kafka_filter_transform_spark.streaming.pipeline import (
-            cleanup_face_scratch,
-        )
-
-        cleanup_face_scratch(spark)
-
-    run("cdc_counts_outbound")  # warmup: JVM + codegen + parquet footer cache
-    # warm the Arrow collect path too (route_broadcast_join's rule-table
-    # probe is the only collecting query; its first-use init is a
-    # session cost, not a per-query cost)
+def warm_up(spark, sf_dir: str = SF_DIR) -> None:
+    """Absorb session-level one-time costs before any timed run: JVM,
+    codegen, the parquet footer cache and the CDC fixture build; then
+    the Arrow collect path (route_broadcast_join's rule-table probe is
+    the only collecting query; its first-use init is a session cost,
+    not a per-query cost)."""
+    run(spark, "cdc_counts_outbound", sf_dir)
     spark.range(1).limit(1).toArrow()
 
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    for name in HEADLINE:
-        if name in missing:
-            continue
-        reps = REPS + (LOOP_EXTRA_REPS if name in LOOP_QUERIES else 0)
-        times = []
-        for _ in range(reps):
-            times.append(run(name))
-            reclaim()
-        cold[name] = round(times[0], 3)
-        if name in LOOP_QUERIES:
-            warm_runs = sorted(times[1:])
-            warm[name] = round(warm_runs[len(warm_runs) // 2], 3)  # median
-        else:
-            warm[name] = round(min(times[1:]), 3)
-        # headline min stays min over the FIRST 2 reps for every query
-        # (continuity with the frozen REPS=2 series; extra loop-query
-        # reps feed only the warm median)
-        timings[name] = round(min(times[:REPS]), 3)
 
-    faces = {n: t for n, t in timings.items() if n in FACE_QUERIES}
-    timings = {n: t for n, t in timings.items() if n not in FACE_QUERIES}
-    m = re.search(r"sf([0-9.]+)", SF_DIR)
-    sf = float(m.group(1)) if m else None
-    total = round(sum(timings.values()), 3)
-    # The driver records only the LAST ~2000 chars of stdout, and r4's
-    # single giant JSON line (queries+cold+warm) overflowed it — the
-    # artifact lost the cold section mid-stream (BENCH_r04 parsed:
-    # null). So: full detail goes to a committed sidecar file, and the
-    # FINAL stdout line is the driver-contract JSON kept under the tail
-    # budget (asserted, so a future query-set growth fails here loudly
-    # instead of silently truncating in the driver artifact).
-    full = {
-        "metric": "total_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "faces": faces,
-        "faces_sec": round(sum(faces.values()), 3),
-        "total_with_faces_sec": round(total + sum(faces.values()), 3),
-        "methodology": METHODOLOGY,
-        "cold": cold,
-        "warm": warm,
-        "sf": sf,
-        "reps": REPS,
-    }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_full.json"
+def reclaim(spark) -> None:
+    """Release block-manager residue and face scratch BETWEEN timed
+    runs (untimed).
+
+    The iterative trainers localCheckpoint inside their loops;
+    checkpointed RDD blocks are only freed once the Python frame is
+    GC'd AND the JVM ContextCleaner processes the dead reference. In
+    the shared bench JVM, back-to-back reps therefore accumulated
+    blocks and warm ran SLOWER than cold on pagerank/semdedup/PQ
+    (VERDICT r5 item 2: pagerank 6.42 cold / 7.21 warm). r6
+    methodology addendum: reclaim between every rep so each timed run
+    sees the same clean block manager; the cold/warm DEFINITIONS are
+    unchanged.
+
+    Mechanism choice (A/B'd in r6): unpersist every block the JVM
+    still tracks (getPersistentRDDs covers cache() AND localCheckpoint
+    blocks) rather than forcing System.gc() — the full-GC variant also
+    unloads generated codegen classes and taxed warm runs ~10-30%
+    across the suite (crossdoc 1.7 -> 2.4 s warm), while unpersist is
+    surgical and measured indistinguishable from no-reclaim on
+    residue-free queries."""
+    from flink_kafka_filter_transform_spark.streaming.pipeline import (
+        cleanup_face_scratch,
     )
-    with open(detail_path, "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-    print(json.dumps({"cold_sec": round(sum(cold.values()), 3), "cold": cold}))
-    print(json.dumps({"warm_sec": round(sum(warm.values()), 3), "warm": warm}))
-    # Keep the FINAL line under the driver's ~2000-char stdout-tail
-    # budget: if the full per-query dict would overflow, keep the
-    # slowest queries (the trend lines that matter) and say how many
-    # were omitted — the complete set is in BENCH_full.json and the
-    # cold/warm lines above.
-    kept = dict(sorted(timings.items(), key=lambda kv: -kv[1]))
+
+    gc.collect()  # drop py4j refs so dead frames release their RDDs
+    spark.catalog.clearCache()
+    # non-blocking removal, explicitly: JavaRDD.unpersist() defaults
+    # to blocking=true, and a 5-rep A/B on supply_chain_pagerank
+    # showed the blocking variant destabilizes the FOLLOWING timed
+    # runs (5.7-9.4 s oscillation vs a 4.0-4.1 s steady state with
+    # async removal)
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist(False)
+    # r7: the streaming sink faces stage source/checkpoint/state under
+    # per-run scratch dirs; reclaim them once the timed run has fully
+    # consumed the returned state (the noop write did)
+    cleanup_face_scratch(spark)
+
+
+def close(spark) -> None:
+    """End of a measurement session: reclaim (face scratch of a run
+    that was never reclaimed, e.g. a plan dump's face drains), drop the
+    session-lived layout twins (bucketed/partitioned external tables;
+    deliberately NOT face scratch — see _layout_scratch), then stop."""
+    from flink_kafka_filter_transform_spark.operators.relational import (
+        cleanup_layout_scratch,
+    )
+
+    reclaim(spark)
+    cleanup_layout_scratch(spark)
+    spark.stop()
+
+
+def _status_store(spark):
+    """The AppStatusStore the Spark UI reads, once every event posted
+    so far has reached it (the listener bus is asynchronous)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore()
+
+
+def _stage(store, sid: int):
+    """The last attempt of stage ``sid``, or None once the store has
+    evicted it. The store keeps spark.ui.retainedStages (1000) stages
+    and evicts skipped ones first, so a missing id is a skipped stage
+    of the run being counted; a completed one goes only when a single
+    run completes ~900 stages."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return store.lastStageAttempt(sid)
+    except Py4JJavaError as e:
+        if "NoSuchElementException" not in str(e.java_exception):
+            raise
+        return None
+
+
+def job_mark(spark) -> int:
+    """Id of the newest job so far (-1 before any): take it before a
+    run, hand it to census() after."""
+    jobs = _status_store(spark).jobsList(spark.sparkContext._jvm.java.util.ArrayList())
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def census(spark, mark: int) -> dict[str, int]:
+    """Spark work of every job started after ``job_mark() == mark``:
+    jobs, completed and skipped stages, and over the completed stages
+    tasks, executor run time, shuffle read/write bytes and disk spill.
+    A skipped stage reused an earlier shuffle's output and did no
+    work. Deterministic for a deterministic plan, so it is the
+    evidence a wall-time delta inside the rep spread cannot be."""
+    out = dict.fromkeys(
+        ("jobs", "stages", "skipped_stages", "tasks", "task_ms",
+         "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes"), 0
+    )
+    store = _status_store(spark)
+    jobs = store.jobsList(spark.sparkContext._jvm.java.util.ArrayList()).iterator()
+    stages = set()
+    while jobs.hasNext():  # newest first
+        job = jobs.next()
+        if job.jobId() <= mark:
+            break
+        out["jobs"] += 1
+        ids = job.stageIds().iterator()
+        while ids.hasNext():
+            stages.add(ids.next())
+    for sid in stages:
+        st = _stage(store, sid)
+        if st is None or str(st.status()) == "SKIPPED":
+            out["skipped_stages"] += 1
+            continue
+        out["stages"] += 1
+        out["tasks"] += st.numCompleteTasks()
+        out["task_ms"] += st.executorRunTime()
+        out["shuffle_read_bytes"] += st.shuffleReadBytes()
+        out["shuffle_write_bytes"] += st.shuffleWriteBytes()
+        out["spill_bytes"] += st.diskBytesSpilled()
+    return out
+
+
+def measure(spark, query, reps: int, sf_dir: str = SF_DIR):
+    """``reps`` timed runs of ``query`` (as for run()), each followed by
+    reclaim(): the walls (s, rounded to ms) and the census of the last
+    run."""
+    walls = []
+    for _ in range(reps - 1):
+        walls.append(round(run(spark, query, sf_dir), 3))
+        reclaim(spark)
+    mark = job_mark(spark)
+    walls.append(round(run(spark, query, sf_dir), 3))
+    stats = census(spark, mark)
+    reclaim(spark)
+    return walls, stats
+
+
+def summarize(timings: dict, cold: dict, warm: dict, sf) -> tuple[dict, str]:
+    """BENCH_full.json's content and the final stdout line, from the
+    per-query headline (min), cold and warm seconds; faces included.
+
+    Faces are split out of the headline "value". The final line is
+    the driver-contract JSON kept under TAIL_BUDGET: if the full
+    per-query dict would overflow, it keeps the slowest queries (the
+    trend lines that matter) and says how many were omitted; the
+    complete set is in BENCH_full.json, which names the omissions
+    (r10: cross-round audits stay mechanical)."""
+    query_sec = {n: t for n, t in timings.items() if n not in FACE_QUERIES}
+    faces = {n: t for n, t in timings.items() if n in FACE_QUERIES}
+    total = round(sum(query_sec.values()), 3)
+    faces_sec = round(sum(faces.values()), 3)
+    kept = dict(sorted(query_sec.items(), key=lambda kv: -kv[1]))
     while True:
         payload = {
             "metric": "total_sec",
@@ -477,47 +552,78 @@ def main() -> None:
             # "value" is the query total only (cross-round comparisons
             # vs <= r7 totals must add faces_sec back)
             "faces": faces,
-            "faces_sec": round(sum(faces.values()), 3),
+            "faces_sec": faces_sec,
             # the r7-comparable combined number, emitted explicitly so
             # round-over-round tooling can't mis-compare across the
             # methodology boundary (r8 ADVICE item 3)
             "total_with_faces_sec": round(total + sum(faces.values()), 3),
             "methodology": METHODOLOGY,
-            # per-methodology-section totals IN the final line, so the
-            # driver artifact's parsed JSON carries non-null cold AND
-            # warm even if the tail window clips the full per-query
-            # cold/warm lines above (VERDICT r4 item 2); the complete
-            # breakdown is the committed BENCH_full.json
+            # per-section totals IN the final line, so the driver
+            # artifact carries non-null cold AND warm even if the tail
+            # window clips the cold/warm lines printed before it
+            # (VERDICT r4 item 2)
             "cold_sec": round(sum(t for n, t in cold.items() if n not in FACE_QUERIES), 3),
             "warm_sec": round(sum(t for n, t in warm.items() if n not in FACE_QUERIES), 3),
             "sf": sf,
             "reps": REPS,
             "detail": "BENCH_full.json",
         }
-        omitted = len(timings) - len(kept)
+        omitted = len(query_sec) - len(kept)
         if omitted:
             payload["queries_omitted"] = omitted
         final_line = json.dumps(payload)
-        if len(final_line) < 1900 or not kept:
+        if len(final_line) < TAIL_BUDGET or not kept:
             break
         kept.pop(next(reversed(kept)))  # drop the fastest remaining
-    assert len(final_line) < 1900
-    # r10 (VERDICT r9 item 7 / What's-wrong 4): name the tail-budget
-    # omissions explicitly in the committed sidecar so cross-round
-    # audits are mechanical — the stdout line carries only the count.
-    full["queries_omitted_names"] = sorted(set(timings) - set(kept))
-    with open(detail_path, "w") as f:
-        json.dump(full, f, indent=1, sort_keys=True)
-    print(final_line)
-    # end-of-run reclaim of the session-lived layout twins
-    # (bucketed/partitioned external tables; their scratch is
-    # deliberately NOT face scratch — see _layout_scratch)
-    from flink_kafka_filter_transform_spark.operators.relational import (
-        cleanup_layout_scratch,
-    )
+    assert len(final_line) < TAIL_BUDGET
+    full = {
+        **{k: payload[k] for k in ("metric", "value", "unit", "faces", "faces_sec",
+                                   "total_with_faces_sec", "methodology", "sf", "reps")},
+        "queries": query_sec,
+        "cold": cold,
+        "warm": warm,
+        "queries_omitted_names": sorted(set(query_sec) - set(kept)),
+    }
+    return full, final_line
 
-    cleanup_layout_scratch(spark)
-    spark.stop()
+
+def main() -> None:
+    spark = session()
+    # a renamed/removed query must not kill the whole bench run — skip
+    # it loudly (stderr) and keep the series going
+    missing = [n for n in HEADLINE if n not in queries()]
+    for n in missing:
+        print(f"bench: skipping unknown query {n!r}", file=sys.stderr)
+    warm_up(spark)
+
+    timings: dict[str, float] = {}
+    cold: dict[str, float] = {}
+    warm: dict[str, float] = {}
+    stats: dict[str, dict] = {}
+    for name in HEADLINE:
+        if name in missing:
+            continue
+        reps = REPS + (LOOP_EXTRA_REPS if name in LOOP_QUERIES else 0)
+        times, stats[name] = measure(spark, name, reps)
+        cold[name] = times[0]
+        if name in LOOP_QUERIES:
+            warm[name] = sorted(times[1:])[len(times[1:]) // 2]  # median
+        else:
+            warm[name] = min(times[1:])
+        # headline min stays min over the FIRST 2 reps for every query
+        # (continuity with the frozen REPS=2 series; extra loop-query
+        # reps feed only the warm median)
+        timings[name] = min(times[:REPS])
+
+    m = re.search(r"sf([0-9.]+)", SF_DIR)
+    full, final_line = summarize(timings, cold, warm, float(m.group(1)) if m else None)
+    full["census"] = stats  # the last rep's, per query
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_full.json"), "w") as f:
+        json.dump(full, f, indent=1, sort_keys=True)
+    print(json.dumps({"cold_sec": round(sum(cold.values()), 3), "cold": cold}))
+    print(json.dumps({"warm_sec": round(sum(warm.values()), 3), "warm": warm}))
+    print(final_line)
+    close(spark)
 
 
 if __name__ == "__main__":

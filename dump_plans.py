@@ -15,6 +15,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import bench  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 # (query, why this plan matters at scale)
@@ -140,14 +142,10 @@ SHOWCASE = [
 
 
 def main() -> None:
-    from flink_kafka_filter_transform_spark import get_session
     from flink_kafka_filter_transform_spark.plans import explain as px
 
-    import __spark_entry__ as entrymod
-
-    spark = get_session(app_name="dump_plans", master="local[4]")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
+    spark = bench.session("dump_plans", cpus=4)
+    qs = bench.queries()
 
     out = [
         "# PLANS — headline physical plans\n",
@@ -171,7 +169,7 @@ def main() -> None:
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(SHOWCASE)} plans)")
-    spark.stop()
+    bench.close(spark)
 
 
 if __name__ == "__main__":

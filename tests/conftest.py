@@ -5,6 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from flink_kafka_filter_transform_spark import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -14,7 +15,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = get_session(app_name="tests", master="local[4]", shuffle_partitions=8)
     yield s
-    s.stop()
+    bench.close(s)  # also removes the face and layout scratch the tests made
 
 
 @pytest.fixture(scope="session")

@@ -39,6 +39,9 @@ cross-base pair, so true cross pairs == N exactly. The study asserts
 cross_edit_linkage finds exactly N at every sf and reports its walls
 alongside the self-join arm's.
 
+Walls are noop-sink runs through bench.measure (reclaim between reps);
+the pair counts the asserts check are taken untimed.
+
 Writes BENCH_linkage_scale.json. Usage: python tools/bench_linkage_scale.py
 """
 
@@ -47,10 +50,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+
+import bench  # noqa: E402
 
 SF_DIRS = {
     "sf0.1": "/root/testdata/sf0.1",
@@ -61,14 +65,8 @@ REPS = 2
 
 
 def main() -> None:
-    os.environ.setdefault(
-        "PYSPARK_SUBMIT_ARGS",
-        "--driver-memory 32g "
-        "--conf spark.driver.extraJavaOptions=-Xlog:disable pyspark-shell",
-    )
     from pyspark.sql import functions as F
 
-    from flink_kafka_filter_transform_spark import get_session
     from flink_kafka_filter_transform_spark.functions.hashing import portable_hash64
     from flink_kafka_filter_transform_spark.operators.linkage import (
         cross_edit_linkage,
@@ -76,95 +74,62 @@ def main() -> None:
     )
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_session(
-        app_name="bench-linkage-scale",
-        master=f"local[{cpus}]",
-        shuffle_partitions=2 * cpus,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.session("bench-linkage-scale")
 
-    def derived_names(sf_dir: str):
-        cust = load_table(spark, "customer", sf_dir).select("c_custkey")
-        base_id = F.expr("c_custkey DIV 2")
-        h = portable_hash64(base_id.cast("string"))
+    def relations(sf_dir: str):
+        """(derived names, master of bare base strings)"""
+        cust = load_table(spark, "customer", sf_dir).select(
+            "c_custkey", F.expr("c_custkey DIV 2").alias("base_id")
+        )
+        h = portable_hash64(F.col("base_id").cast("string"))
         base = F.lower(F.lpad(F.hex(h), 16, "0"))
-        pos = (base_id % 16).cast("int")
+        pos = (F.col("base_id") % 16).cast("int")
         typo = F.concat(
             F.expr("substring(base, 1, pos)"),
             F.lit("z"),
             F.expr("substring(base, pos + 2, 16)"),
         )
-        return (
-            cust.select(
-                F.col("c_custkey").alias("custkey"),
-                base.alias("base"),
-                pos.alias("pos"),
-                (F.col("c_custkey") % 2).alias("v"),
-            )
-            .select(
-                "custkey",
-                F.when(F.col("v") == 1, typo).otherwise(F.col("base")).alias("nm"),
-            )
+        names = cust.select(
+            F.col("c_custkey").alias("custkey"),
+            base.alias("base"),
+            pos.alias("pos"),
+            (F.col("c_custkey") % 2).alias("v"),
+        ).select(
+            "custkey",
+            F.when(F.col("v") == 1, typo).otherwise(F.col("base")).alias("nm"),
         )
+        return names, cust.select("base_id", base.alias("mname")).distinct()
 
     results: dict[str, dict] = {}
     for sf, sf_dir in SF_DIRS.items():
         if not os.path.isdir(sf_dir):
             print(f"{sf}: missing {sf_dir}, skipping", file=sys.stderr)
             continue
-        names = derived_names(sf_dir)
+        names, master = relations(sf_dir)
         n_rows = names.count()
         max_key = names.agg(F.max("custkey")).collect()[0][0]
         # custkey is contiguous from 0, so base b is complete iff both
         # 2b and 2b+1 lie in [0, max_key]: exactly (max_key+1) DIV 2
         expected = (max_key + 1) // 2
-        walls = []
-        found = None
-        for _ in range(REPS):
-            t0 = time.time()
-            found = edit_distance_pairs(names, "custkey", "nm").count()
-            walls.append(round(time.time() - t0, 3))
-        assert found == expected, (sf, found, expected)
-        # cross-relation arm: master = one bare base string per
-        # base_id; every probe row pairs with exactly its own base's
-        # master row (d=0 for v=0, d=1 for the designed typo), so
-        # true cross pairs == n_rows by construction
-        cust = load_table(spark, "customer", sf_dir).select("c_custkey")
-        base_id = F.expr("c_custkey DIV 2")
-        h = portable_hash64(base_id.cast("string"))
-        master = (
-            cust.select(
-                base_id.alias("base_id"),
-                F.lower(F.lpad(F.hex(h), 16, "0")).alias("mname"),
-            )
-            .distinct()
-        )
-        cross_walls = []
-        cross_found = None
-        for _ in range(REPS):
-            t0 = time.time()
-            cross_found = cross_edit_linkage(
+        arms = {
+            "": lambda s, d: edit_distance_pairs(names, "custkey", "nm"),
+            # cross-relation arm: every probe row pairs with exactly its
+            # own base's master row (d=0 for v=0, d=1 for the designed
+            # typo), so true cross pairs == n_rows by construction
+            "cross_": lambda s, d: cross_edit_linkage(
                 names, master, "custkey", "nm", "base_id", "mname"
-            ).count()
-            cross_walls.append(round(time.time() - t0, 3))
-        assert cross_found == n_rows, (sf, cross_found, n_rows)
-        results[sf] = {
-            "rows": n_rows,
-            "true_pairs": expected,
-            "pairs_found": found,
-            "walls": walls,
-            "wall_min": min(walls),
-            "cross_true_pairs": n_rows,
-            "cross_pairs_found": cross_found,
-            "cross_walls": cross_walls,
-            "cross_wall_min": min(cross_walls),
+            ),
         }
-        print(
-            f"{sf}: rows={n_rows} pairs={found} walls={walls} "
-            f"cross={cross_found} cross_walls={cross_walls}",
-            file=sys.stderr,
-        )
+        row = {"rows": n_rows, "true_pairs": expected, "cross_true_pairs": n_rows}
+        for arm, build in arms.items():
+            walls, _ = bench.measure(spark, build, REPS, sf_dir)
+            row[f"{arm}pairs_found"] = build(spark, sf_dir).count()  # untimed check
+            row[f"{arm}walls"] = walls
+            row[f"{arm}wall_min"] = min(walls)
+        assert row["pairs_found"] == expected, (sf, row["pairs_found"], expected)
+        assert row["cross_pairs_found"] == n_rows, (sf, row["cross_pairs_found"], n_rows)
+        results[sf] = row
+        print(f"{sf}: {row}", file=sys.stderr)
 
     out = {
         "construction": "hash-hex base names, one designed substitution per odd key",
@@ -183,6 +148,7 @@ def main() -> None:
         json.dump(out, f, indent=1, sort_keys=True)
     print(json.dumps({"sf3_vs_sf1": out.get("sf3_vs_sf1"), "results": {
         k: v["wall_min"] for k, v in results.items()}}))
+    bench.close(spark)
 
 
 if __name__ == "__main__":

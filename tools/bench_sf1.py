@@ -29,6 +29,8 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+import bench  # noqa: E402
+
 SF1_DIR = os.path.join(ROOT, "testdata_local", "sf1")
 SUPERLINEAR_X = 15.0
 
@@ -54,67 +56,27 @@ def main() -> None:
     args = ap.parse_args()
 
     ref = _load_ref(args.ref)
-
-    from flink_kafka_filter_transform_spark import get_session
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # local mode: the driver JVM IS the executor. Spark's 1g default
-    # fits sf0.1 but OOMs broadcast builds at sf1 — size the heap for
-    # the data like a real cluster would size its executors.
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-    spark = get_session(
-        app_name="bench-sf1",
-        master=f"local[{cpus}]",
-        shuffle_partitions=2 * cpus,
-        extra_conf={"spark.driver.memory": mem},
-    )
-
-    import __spark_entry__ as entrymod
-    from bench import HEADLINE, SPECIAL
-
-    qs = entrymod.queries()
-    qs.update(SPECIAL)
+    spark = bench.session("bench-sf1")
 
     def run(name: str) -> float:
-        t0 = time.time()
-        qs[name](spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-        elapsed = time.time() - t0
-        # same untimed block-manager reclaim as bench.py (r6): without
-        # it the 80-query shared JVM accumulates localCheckpoint blocks
-        # and later queries absorb earlier queries' residue
-        import gc
+        return bench.measure(spark, name, 1, args.sf_dir)[0][0]
 
-        gc.collect()
-        spark.catalog.clearCache()
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(False)
-        # r7: reclaim the streaming faces' scratch dirs too (at sf1
-        # each face stages a full copy of its source table)
-        from flink_kafka_filter_transform_spark.streaming.pipeline import (
-            cleanup_face_scratch,
-        )
-
-        cleanup_face_scratch(spark)
-        return elapsed
-
-    # Warmup mirrors bench.py: absorbs JVM/codegen startup AND builds
-    # the CDC fixture parquet cache (a one-time materialization that
-    # must not be billed to the first timed cdc query).
+    # also builds the CDC fixture parquet cache, a one-time
+    # materialization that must not be billed to the first cdc query
     t0 = time.time()
-    run("cdc_counts_outbound")
-    spark.range(1).limit(1).toArrow()
+    bench.warm_up(spark, args.sf_dir)
     print(f"warmup+fixture-build: {time.time() - t0:.1f}s", flush=True)
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name in HEADLINE:
+    for name in bench.HEADLINE:
         try:
             t = run(name)
         except Exception as e:  # record and keep going: one blown query
             errors[name] = str(e).split("\n")[0][:300]  # must not hide the rest
             print(f"{name}: ERROR {errors[name][:120]}", flush=True)
             continue
-        timings[name] = round(t, 3)
+        timings[name] = t
         r = ref.get(name)
         ratio = f" ({t / r:.1f}x sf0.1)" if r else ""
         print(f"{name}: {t:.2f}s{ratio}", flush=True)
@@ -132,7 +94,7 @@ def main() -> None:
     for n in suspects:
         t2 = run(n)
         if t2 < timings[n]:
-            timings[n] = round(t2, 3)
+            timings[n] = t2
             ratios[n] = round(t2 / ref[n], 2)
             print(f"{n}: retry {t2:.2f}s ({ratios[n]}x) — first run was noise",
                   flush=True)
@@ -142,7 +104,7 @@ def main() -> None:
     )
     out = {
         "sf": 1,
-        "cpus": cpus,
+        "cpus": bench.CPUS,
         "queries": timings,
         "total_sec": round(sum(timings.values()), 3),
         "ratio_vs_sf01": ratios,
@@ -154,15 +116,7 @@ def main() -> None:
     with open(os.path.join(ROOT, "BENCH_sf1.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps({"total_sec": out["total_sec"], "outliers": outliers}))
-    # end-of-run reclaim of the session-lived layout twins
-    # (bucketed/partitioned external tables; their scratch is
-    # deliberately NOT face scratch — see _layout_scratch)
-    from flink_kafka_filter_transform_spark.operators.relational import (
-        cleanup_layout_scratch,
-    )
-
-    cleanup_layout_scratch(spark)
-    spark.stop()
+    bench.close(spark)
 
 
 if __name__ == "__main__":

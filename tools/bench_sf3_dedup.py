@@ -23,10 +23,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+
+import bench  # noqa: E402
 
 SF1_DIR = os.path.join(ROOT, "testdata_local", "sf1")
 SF3_DIR = os.path.join(ROOT, "testdata_local", "sf3")
@@ -179,46 +180,14 @@ def main() -> None:
         only = sys.argv[2].split(",")
         unknown = [n for n in only if n not in FAMILY]
         assert not unknown, f"not in FAMILY: {unknown}"
-    os.environ.setdefault(
-        "PYSPARK_SUBMIT_ARGS",
-        "--driver-memory 32g "
-        "--conf spark.driver.extraJavaOptions=-Xlog:disable pyspark-shell",
-    )
-    from flink_kafka_filter_transform_spark import get_session
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_session(
-        app_name="bench-sf3-dedup", master=f"local[{cpus}]",
-        shuffle_partitions=2 * cpus,
-    )
-
-    import gc
-
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-
-    def reclaim() -> None:  # same hygiene as bench.py
-        gc.collect()
-        spark.catalog.clearCache()
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(False)
-
-    def run(name: str, sf_dir: str) -> float:
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        return time.time() - t0
-
-    run("exact_dedup", SF1_DIR)  # warmup
+    spark = bench.session("bench-sf3-dedup")
+    bench.warm_up(spark, SF1_DIR)
     results: dict[str, dict[str, float]] = {}
     for name in only if only is not None else FAMILY:
         per_sf: dict[str, float] = {}
         for key, d in (("sf1", SF1_DIR), ("sf3", SF3_DIR)):
-            ts = []
-            for _ in range(REPS):
-                ts.append(run(name, d))
-                reclaim()
-            per_sf[key] = round(min(ts), 3)
+            walls, _ = bench.measure(spark, name, REPS, d)
+            per_sf[key] = min(walls)
             print(f"{name} {key}: {per_sf[key]:.2f}s", flush=True)
         per_sf["ratio"] = round(per_sf["sf3"] / per_sf["sf1"], 2)
         results[name] = per_sf
@@ -230,7 +199,7 @@ def main() -> None:
     else:
         out = {
             "data_factor": 3,
-            "cpus": cpus,
+            "cpus": bench.CPUS,
             "reps": REPS,
             "superlinear_threshold_x": SUPERLINEAR_X,
             "results": results,
@@ -250,15 +219,7 @@ def main() -> None:
         json.dump(out, f, indent=1)
     print(json.dumps({"ratios": {n: r["ratio"] for n, r in results.items()},
                       "outliers": out["outliers"]}))
-    # end-of-run reclaim of the session-lived layout twins
-    # (bucketed/partitioned external tables; their scratch is
-    # deliberately NOT face scratch — see _layout_scratch)
-    from flink_kafka_filter_transform_spark.operators.relational import (
-        cleanup_layout_scratch,
-    )
-
-    cleanup_layout_scratch(spark)
-    spark.stop()
+    bench.close(spark)
 
 
 if __name__ == "__main__":

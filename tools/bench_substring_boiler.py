@@ -1,11 +1,14 @@
 #!/usr/bin/env python
 """Substring hot-key study (VERDICT r8 item 3): same-session A/B of
-the r8 gh-WINDOW shared-mark plan vs the r9 groupBy(gh)+join plan, on
-the default corpus AND the boilerplate-heavy corpus
+substring_dedup_stats' two strategies — skew_safe=False, the r8
+gh-WINDOW shared-mark plan, vs skew_safe=True, the r9 groupBy(gh)+join
+plan — on the default corpus AND the boilerplate-heavy corpus
 (tools/gen_testdata.py --vocab boiler: 30% of docs share one ~160-char
 header verbatim, so ~129 window hashes are each shared by 0.3*N docs —
-the corpus-hot-gh scenario the r8 window plan serializes into single
-window partitions).
+the corpus-hot-gh scenario the window plan serializes into single
+window partitions). Both strategies are named explicitly: AUTO picks
+the window plan on every corpus here (no single gram gets near
+HOT_GRAM_POSITIONS), so an AUTO arm would time the same plan twice.
 
 Alternating reps in ONE session control the ambient noise a fresh-JVM
 series is exposed to. Writes BENCH_substring_boiler.json:
@@ -15,14 +18,14 @@ series is exposed to. Writes BENCH_substring_boiler.json:
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+
+import bench  # noqa: E402
 
 CORPORA = {
     "sf1_default": os.path.join(ROOT, "testdata_local", "sf1"),
@@ -31,120 +34,35 @@ CORPORA = {
     "sf3_boiler": os.path.join(ROOT, "testdata_local", "sf3_boiler"),
 }
 REPS = 3
-
-
-def window_plan(spark, sf_dir: str, k: int = 32):
-    """The r8 shared-mark plan, reconstructed verbatim for the A/B:
-    min/max over Window.partitionBy(gh) — one corpus pass, but a
-    corpus-hot gh lands its whole position set in ONE window
-    partition (no partial aggregation, not splittable by AQE)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from flink_kafka_filter_transform_spark.functions.hashing import portable_hash64
-    from flink_kafka_filter_transform_spark.sources.parquet import load_table
-
-    docs = load_table(spark, "documents", sf_dir)
-    c = F.col("text")
-    win = F.transform(
-        F.sequence(F.lit(1), F.length(c) - (k - 1)),
-        lambda i: F.substring(c, i, k),
-    )
-    pg = (
-        docs.filter(F.length(c) >= k)
-        .select("doc_id", F.posexplode(win).alias("pos0", "gram"))
-        .select(
-            "doc_id",
-            (F.col("pos0") + 1).alias("pos"),
-            portable_hash64("gram").alias("gh"),
-        )
-    )
-    wgh = Window.partitionBy("gh")
-    shared = (
-        pg.withColumn("_mn", F.min("doc_id").over(wgh))
-        .withColumn("_mx", F.max("doc_id").over(wgh))
-        .filter(F.col("_mn") != F.col("_mx"))
-        .select("doc_id", "pos")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    runs = (
-        shared.withColumn("grp", F.col("pos") - F.row_number().over(w))
-        .groupBy("doc_id", "grp")
-        .agg(F.count(F.lit(1)).alias("run_len"))
-    )
-    perdoc = runs.groupBy("doc_id").agg(
-        F.max("run_len").alias("max_run"),
-        F.sum("run_len").alias("n_shared_windows"),
-    )
-    tot = docs.filter(F.length(c) >= k).select(
-        "doc_id", (F.length(c) - (k - 1)).cast("bigint").alias("n_windows")
-    )
-    return (
-        tot.join(perdoc, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_windows",
-            F.coalesce("n_shared_windows", F.lit(0)).cast("bigint").alias(
-                "n_shared_windows"
-            ),
-            F.coalesce(F.col("max_run") + F.lit(k - 1), F.lit(0))
-            .cast("bigint")
-            .alias("max_shared_substr_chars"),
-        )
-    )
+# JSON series key -> skew_safe (keys kept from the r9 study)
+PLANS = {"agg_join_r9": True, "gh_window_r8": False}
 
 
 def main() -> None:
-    os.environ.setdefault(
-        "PYSPARK_SUBMIT_ARGS",
-        "--driver-memory 32g "
-        "--conf spark.driver.extraJavaOptions=-Xlog:disable pyspark-shell",
-    )
-    from flink_kafka_filter_transform_spark import get_session
     from flink_kafka_filter_transform_spark.operators import dedup
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_session(
-        app_name="bench-substring-boiler",
-        master=f"local[{cpus}]",
-        shuffle_partitions=2 * cpus,
-    )
+    def plan(skew_safe: bool):
+        return lambda spark, d: dedup.substring_dedup_stats(
+            load_table(spark, "documents", d), skew_safe=skew_safe
+        )
 
-    def reclaim() -> None:
-        gc.collect()
-        spark.catalog.clearCache()
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(False)
-
-    def run(df) -> float:
-        t0 = time.time()
-        df.write.mode("overwrite").format("noop").save()
-        return time.time() - t0
-
+    spark = bench.session("bench-substring-boiler")
     out: dict[str, dict[str, list[float]]] = {}
     for corpus, d in CORPORA.items():
-        agg_plan = lambda: dedup.substring_dedup_stats(
-            load_table(spark, "documents", d)
-        )
-        win_plan = lambda: window_plan(spark, d)
-        # warm both plans once (codegen), then alternate timed reps
-        run(agg_plan())
-        reclaim()
-        run(win_plan())
-        reclaim()
-        series: dict[str, list[float]] = {"agg_join_r9": [], "gh_window_r8": []}
-        for _ in range(REPS):
-            series["agg_join_r9"].append(round(run(agg_plan()), 3))
-            reclaim()
-            series["gh_window_r8"].append(round(run(win_plan()), 3))
-            reclaim()
+        series: dict[str, list[float]] = {key: [] for key in PLANS}
+        for rep in range(REPS + 1):  # rep 0 warms both plans (codegen)
+            for key, skew_safe in PLANS.items():
+                wall = bench.run(spark, plan(skew_safe), d)
+                bench.reclaim(spark)
+                if rep:
+                    series[key].append(round(wall, 3))
         out[corpus] = series
         print(corpus, series, flush=True)
     with open(os.path.join(ROOT, "BENCH_substring_boiler.json"), "w") as f:
-        json.dump({"cpus": cpus, "reps": REPS, "series": out}, f, indent=1)
+        json.dump({"cpus": bench.CPUS, "reps": REPS, "series": out}, f, indent=1)
     print(json.dumps({"done": list(out)}))
-    spark.stop()
+    bench.close(spark)
 
 
 if __name__ == "__main__":

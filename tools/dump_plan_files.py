@@ -4,38 +4,31 @@
 Usage: python tools/dump_plan_files.py <round> <suffix> q1 q2 ...
 e.g.   python tools/dump_plan_files.py r15 before embedding_neardup_fps
 
-Runs at sf0.01 (plan SHAPE is scale-independent; eager trainer queries
-execute their bounded driver-paced phases while building the frame,
-which is exactly what the declared query does)."""
+Runs at sf0.01 on local[4], like dump_plans.py (plan SHAPE is
+scale-independent; eager trainer queries execute their bounded
+driver-paced phases while building the frame, which is exactly what
+the declared query does)."""
 
 from __future__ import annotations
 
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import bench  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 
 def main() -> None:
     rnd, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
-    os.environ.setdefault(
-        "PYSPARK_SUBMIT_ARGS",
-        "--driver-memory 8g --conf spark.driver.extraJavaOptions=-Xlog:disable pyspark-shell",
-    )
-    from flink_kafka_filter_transform_spark import get_session
-
-    spark = get_session(app_name="dump-plan-files")
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    outdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
-    )
+    spark = bench.session("dump-plan-files", cpus=4)
+    outdir = os.path.join(ROOT, "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
-        df = qs[name](spark, SF_DIR)
+        df = bench.queries()[name](spark, SF_DIR)
         text = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
@@ -50,7 +43,7 @@ def main() -> None:
             f"SMJ={n_smj}, BHJ={n_bhj} -> {path}",
             flush=True,
         )
-    spark.stop()
+    bench.close(spark)
 
 
 if __name__ == "__main__":
