@@ -89,7 +89,7 @@ SHOWCASE = [
     # the caveat stated in each section's why-line. hll/cms/ivf/scd2/
     # lsh faces predate the convention and remain covered by their
     # sink gates; the newer faces get sections below.
-    ("dedup_stream_state", "first-seen dedup ledger FACE: dumped plan = the post-drain published-state read (max-revision row per hash over _batch_id partitions); the incremental maintenance plan is the applyInPandasWithState sink, gated in tests/test_streaming.py"),
+    ("dedup_stream_state", "first-seen dedup ledger FACE: dumped plan = the post-drain published-state read (last revision per hash — min first_doc_id, max n_suppressed — over the declared-schema _batch_id partitions); the incremental maintenance plan is the applyInPandasWithState sink, gated in tests/test_streaming.py"),
     ("gram_novelty_profile", "first-occurrence novelty: the exploded relation shuffles EXACTLY ONCE (gh-keyed min agg); novel counts roll up the agg's own vocabulary-sized output, never joining the corpus back; only a doc-keyed join of two per-doc relations"),
     ("audio_silence_segments", "VAD segmentation: decode + framing + energy + threshold + run-length fold in ONE map-only Arrow stage, zero exchanges; ~10 fixed-width rows per clip"),
     ("source_overlap_matrix", "source-pair containment: one gh-keyed collect_set agg (state bounded by the source dimension), map-side pair expansion, <= |sources|^2 cell rows; only the diagonal broadcast"),
@@ -136,7 +136,7 @@ SHOWCASE = [
     ("vfp_stream_state", "video-index FACE (r11): dumped plan = the post-drain pair-log read; the per-batch demux/cap/probe/COUNT maintenance plan (the triad's count path — exact fh matching, >= VID_MIN_MATCH) is gated in tests/test_streaming.py"),
     ("ivo_stream_state", "interval-overlap FACE (r11): dumped plan = the final supplier-cardinality osum state read; the per-batch bucketed/ownership probe + sum-merged monoid rollup (pinned shuffle_hash) is gated in tests/test_streaming.py"),
     ("edit_stream_state", "edit-linkage FACE (r12): dumped plan = the post-drain pair-log read (_batch_id partitions); the per-batch variant explode/cap/probe/levenshtein maintenance plan is gated in tests/test_streaming.py"),
-    ("cc_stream_state", "cluster-maintenance FACE (r13; r14 rework): dumped plan = the post-drain manifest-assembled shard-pruned label read + one count aggregate + the size join (exactly how batch neardup_clusters derives its output from the component relation); the per-batch label-edge lift / bounded union-find (distributed CC past the cap) / broadcast-remap / affected-shard publication plan is gated in tests/test_streaming.py"),
+    ("cc_stream_state", "cluster-maintenance FACE (r13; r14 rework): dumped plan = the post-drain read of the published label version + one count aggregate + the size join (exactly how batch neardup_clusters derives its output from the component relation); the per-batch label-edge lift / bounded union-find (distributed CC past the cap) / broadcast-remap / label-version publication plan is gated in tests/test_streaming.py"),
     ("bloom_stream_state", "Bloom membership FACE: dumped plan = the final <= 64-register state read; the OR-merge maintenance plan (replay- and duplicate-delivery-idempotent by algebra) is gated in tests/test_streaming.py"),
 ]
 

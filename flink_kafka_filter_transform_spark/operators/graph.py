@@ -225,9 +225,7 @@ SMALL_GRAPH_EDGE_CAP = 200_000
 
 
 def components_unionfind_small(
-    edges: DataFrame,
-    edge_cap: int = SMALL_GRAPH_EDGE_CAP,
-    n_edges: int | None = None,
+    edges: DataFrame, edge_cap: int = SMALL_GRAPH_EDGE_CAP
 ) -> list[tuple] | None:
     """Min-label connected components of a SMALL (src, dst) edge set,
     computed driver-side: returns [(node, component)] for every edge
@@ -239,13 +237,10 @@ def components_unionfind_small(
     probe would run CollectLimitExec's SEQUENTIAL partition stepping
     (measured ~1 s/batch of scheduler latency on the cc face); the
     callers persist the edge relation, so the count materializes the
-    cache the fallback path needs anyway. A caller that already knows
-    the edge count (the cc face folds it into its one probe job)
-    passes ``n_edges`` and the count job is skipped; an empty edge
-    set short-circuits to [] with no job at all. Union-by-min with
-    path compression."""
-    if n_edges is None:
-        n_edges = edges.count()
+    cache the fallback path needs anyway. An empty edge set returns
+    [] after the count, with no collect. Union-by-min with path
+    compression."""
+    n_edges = edges.count()
     if n_edges > edge_cap:
         return None
     if n_edges == 0:

@@ -84,12 +84,6 @@ def transformed_stream(stream: DataFrame, rules: list[dict]) -> DataFrame:
     return cdc.project_outgoing(cdc.forwarded(stream, rules))
 
 
-def inbound_counter_stream(stream: DataFrame) -> DataFrame:
-    """O9 as a streaming aggregation (update mode): the
-    flink_cdc_event_count family (mq/mod.rs:47-53)."""
-    return cdc.inbound_counts(cdc.parse_envelope(stream))
-
-
 def outbound_counter_stream(stream: DataFrame, rules: list[dict]) -> DataFrame:
     """O10: flink_kafka_filter_transform_count family (mq/mod.rs:35-39)."""
     return cdc.outbound_counts(cdc.forwarded(stream, rules))
@@ -454,10 +448,11 @@ def _scd2_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> Non
 # Structured Streaming recovers by replaying a failed micro-batch under
 # the same batch id, so a sink body must be idempotent per batch id. The
 # helpers below are that discipline, written once: a body reads prev
-# state strictly before its batch and overwrites {prefix}_v{batch_id}
-# (_merge_version), writes _batch_id partitions under dynamic overwrite
-# (_write_batch_partition), reads them back with explicit schemas
-# (_read_batches) and publishes _LATEST last (_write_latest_pointer).
+# state strictly before its batch (_prev_version) and overwrites
+# {prefix}_v{batch_id} (_merge_version), writes _batch_id partitions
+# under dynamic overwrite (_write_batch_partition), reads them back
+# with explicit schemas (_read_batches) and publishes _LATEST last
+# (_write_latest_pointer).
 # Readers resolve a version through _current. All bookkeeping goes
 # through the Hadoop FileSystem API (_hadoop_fs).
 
@@ -516,26 +511,44 @@ def _read_batches(
     return df.drop("_batch_id")
 
 
+def _prev_version(
+    spark: SparkSession,
+    state_dir: str,
+    prefix: str,
+    batch_id: int,
+    schema: StructType | None = None,
+) -> DataFrame | None:
+    """The newest published ``{prefix}`` version STRICTLY below
+    ``batch_id`` (see _latest_state_version), or None before the first
+    one, so a replayed batch recomputes its version from the same
+    inputs. ``schema``, when given, is declared on the read so an
+    all-empty version needs no schema-bearing part file."""
+    v = _latest_state_version(spark, state_dir, prefix, before=batch_id)
+    if v is None:
+        return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(f"{state_dir}/{prefix}_v{v}")
+
+
 def _merge_version(
     spark: SparkSession,
     state_dir: str,
     prefix: str,
     batch_id: int,
     delta: DataFrame,
-    merge,
+    merge=None,
     schema: StructType | None = None,
 ) -> str:
     """Overwrite ``{prefix}_v{batch_id}`` with ``merge(prev, delta)``
-    (``delta`` alone before the first version) and return its path.
-    ``prev`` is the newest published version STRICTLY below
-    ``batch_id`` (see _latest_state_version), so a replayed batch
-    recomputes its version from the same inputs. ``schema``, when
-    given, is declared on the prev read so an all-empty version needs
-    no schema-bearing part file."""
-    v = _latest_state_version(spark, state_dir, prefix, before=batch_id)
-    if v is not None:
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        delta = merge(reader.parquet(f"{state_dir}/{prefix}_v{v}"), delta)
+    (``delta`` alone before the first version) and return its path;
+    ``prev`` and ``schema`` are _prev_version's. A body that needs prev
+    before it can build its version (the cc face) reads _prev_version
+    itself and passes no ``merge``: ``delta`` is then the whole new
+    version."""
+    if merge is not None:
+        prev = _prev_version(spark, state_dir, prefix, batch_id, schema)
+        if prev is not None:
+            delta = merge(prev, delta)
     path = f"{state_dir}/{prefix}_v{batch_id}"
     delta.write.mode("overwrite").parquet(path)
     return path
@@ -1821,25 +1834,8 @@ def _edit_index_batch(
     _write_latest_pointer(spark, state_dir, batch_id)
 
 
-# One labels_v shard covers this many consecutive LABEL ids (floor
-# division, so a shard is a contiguous label range). Labels are min
-# doc_ids, and doc ids arrive roughly monotonically in a real ingest,
-# so fresh singletons concentrate in the tail shard(s) while merges
-# touch only the shards the remap names — the property that makes the
-# per-batch label-table rewrite O(affected), not O(corpus). The
-# default keeps driver-scale corpora (<= ~1M docs) in ONE shard —
-# the pre-r14 full-rewrite behavior, zero extra overhead — while any
-# larger deploy picks up sharding automatically; tests pass small
-# spans explicitly to exercise multi-shard publication.
-CC_LABEL_SHARD_SPAN = 1 << 20
-
-
 def cc_labels_sink(
-    stream_docs: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    shard_span: int = CC_LABEL_SHARD_SPAN,
+    stream_docs: DataFrame, state_dir: str, out_dir: str, checkpoint_dir: str
 ) -> DataStreamWriter:
     """Incremental near-dup CLUSTER maintenance — connected-component
     labels kept current as pairs stream in (r13, VERDICT r12 item 4:
@@ -1857,11 +1853,11 @@ def cc_labels_sink(
     current component label) — the affected-subgraph contraction: a
     new pair either lands inside one component (la == lb, dropped) or
     merges components, and merging needs only the LABEL graph, never
-    the full pair history; (4) graph.connected_components runs on
-    that label graph ONLY (nodes <= 2x batch pairs — the SCD2 face's
-    affected-key recompute pattern), yielding old-label -> new-label;
-    (5) the remap broadcasts into one relabel pass over the label
-    table, and ``labels_v{batch_id}`` publishes.
+    the full pair history; (4) the label graph ONLY (nodes <= 2x batch
+    pairs — the SCD2 face's affected-key recompute pattern) resolves
+    to old-label -> new-label; (5) the remap broadcasts into one
+    relabel pass over the label table, and ``labels_v{batch_id}``
+    publishes through _merge_version.
 
     Correctness invariant: every component's label is the MIN doc_id
     of the component. It holds inductively — new docs start as their
@@ -1872,11 +1868,11 @@ def cc_labels_sink(
     tests/test_streaming.py proves it, and the cc_stream_state face
     puts it under the driver's RECURSIVE-CTE oracle.
 
-    Replay discipline: the prev label table is assembled from the
-    newest manifest strictly below the batch id, so a replayed batch
-    recomputes ``labels_v{batch_id}`` from the same inputs, and
-    _lsh_index_batch re-emits the identical pair partition. Reads
-    carry explicit schemas (the empty-first-batch rule).
+    Replay discipline: prev labels are the newest published version
+    strictly below the batch id (_prev_version, declared schema — the
+    empty-first-batch rule), so a replayed batch recomputes
+    ``labels_v{batch_id}`` from the same inputs, and _lsh_index_batch
+    re-emits the identical pair partition.
 
     Scale shape per batch: the LSH probe is the index sink's own cost;
     the label-edge graph is bounded by the batch's PAIR count (not
@@ -1886,165 +1882,66 @@ def cc_labels_sink(
     union-find (graph.components_unionfind_small — r14, deleting the
     distributed fixpoint's per-round tiny-job cadence that made the
     face suite-noise-sensitive at sf0.1); past the cap the generic
-    distributed loop takes over unchanged. The label table publishes
-    SHARDED BY LABEL RANGE (r14, the rewrite the r13 docstring only
-    promised): ``labels_v{batch_id}/_shard=K`` holds only the shards
-    the batch AFFECTED — shards of fresh labels plus shards named by
-    the remap on either side (a relabel moves a row from its old
-    label's shard to its new label's shard, both named) — and
-    ``lmanifest_v{batch_id}`` maps every shard to the version holding
-    its current rows, so per-batch label-table WRITE cost is
-    O(affected)/batch, not O(corpus)/batch: the difference between a
-    100 TB deploy rewriting 100 TB per batch and rewriting megabytes.
-    Readers (cc_labels_current) assemble shard-pruned reads across
-    the manifest's versions. Old versions prune via
-    prune_cc_label_state (NOT the generic prune_state_versions,
-    prefix="labels" — a sharded version dir stays live while ANY
-    manifest-referenced shard points at it) — AND the nested
-    LSH sub-state this sink drives under ``{state_dir}/lsh`` needs its
-    OWN pruning pass (r13 ADVICE: it is the face's dominant state
-    volume): run prune_state_versions(spark, f"{state_dir}/lsh",
-    prefix="bcounts") for the bucket-count versions, and prune the
-    ``sigs`` index ``_batch_id`` partitions below the
-    checkpoint watermark with the same offline cadence (they are
-    append-only partitions, not versions, so the version pruner does
-    not see them)."""
-    return _sink(
-        stream_docs, _cc_labels_batch, checkpoint_dir, state_dir, out_dir, shard_span
-    )
+    distributed loop takes over unchanged. Each batch rewrites the
+    whole label table (one row per doc drained so far).
+
+    Old versions prune offline like every face's:
+    prune_state_versions(spark, state_dir, "labels") for the label
+    table, and prune_state_versions(spark, f"{state_dir}/lsh",
+    "bcounts") for the nested LSH sub-state (r13 ADVICE: it is the
+    face's dominant state volume). The ``sigs`` index ``_batch_id``
+    partitions under ``{state_dir}/lsh`` are append-only partitions,
+    not versions, so the version pruner does not see them: prune
+    those below the checkpoint watermark with the same offline
+    cadence."""
+    return _sink(stream_docs, _cc_labels_batch, checkpoint_dir, state_dir, out_dir)
 
 
-def _shard_expr(col: str, span: int):
-    """Label-range shard id: floor(label / span) — the dual-dialect
-    integer-division spelling (exact for |label| < 2^52)."""
-    return F.expr(f"CAST(floor({col} / {span}) AS BIGINT)")
-
-
-def _cc_label_schema(id_field) -> StructType:
-    return StructType(
-        [
-            StructField("doc_id", id_field.dataType),
-            StructField("label", id_field.dataType),
-        ]
-    )
-
-
-def _cc_manifest_versions(spark: SparkSession, state_dir: str) -> list[int]:
-    """All published ``lmanifest_v{N}`` FILE versions, ascending. The
-    manifest is a single driver-written file published by
-    _publish_file, so existence == published; a crashed partial write
-    leaves only a hidden temp file the version listing never
-    matches."""
-    return sorted(_state_versions(spark, state_dir, "lmanifest"))
-
-
-def _cc_write_manifest(
-    spark: SparkSession, state_dir: str, batch_id: int, manifest: dict[int, int]
-) -> None:
-    """Publish ``lmanifest_v{batch_id}`` (lines of ``shard version``)
-    through _publish_file. Driver-side on purpose: the map is
-    corpus/shard_span rows of bookkeeping the batch already holds in
-    memory, and a Spark write here costs a whole scheduled job per
-    micro-batch (measured ~1 s even via repartition(1), ~5-6 s via the
-    locality-stalled coalesce(1)) for a file of a few KB."""
-    body = "".join(f"{s} {v}\n" for s, v in sorted(manifest.items()))
-    _publish_file(spark, state_dir, f"lmanifest_v{batch_id}", batch_id, body)
-
-
-def _cc_read_manifest(
-    spark: SparkSession, state_dir: str, before: int | None = None
-) -> dict[int, int] | None:
-    """shard -> version map from the newest published
-    ``lmanifest_v*`` file (strictly below ``before`` when given), or
-    None before the first publication. Manifest cardinality is
-    corpus/shard_span — bounded driver rows by design."""
-    versions = _cc_manifest_versions(spark, state_dir)
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
-        return None
-    text = _read_text(spark, f"{state_dir}/lmanifest_v{versions[-1]}")
-    rows = (line.split() for line in text.splitlines() if line.strip())
-    return {int(shard): int(version) for shard, version in rows}
-
-
-def _cc_assembled_labels(
-    spark: SparkSession,
-    state_dir: str,
-    manifest: dict[int, int],
-    label_schema=None,
-) -> DataFrame | None:
-    """The complete (doc_id, label) table a manifest describes:
-    per distinct version ONE shard-pruned read of
-    ``labels_v{version}`` (``_shard`` is a partition column, so the
-    isin filter prunes directories before any file is opened), then a
-    plain union — shards are disjoint across the selected versions by
-    the manifest's construction. None for an empty manifest (labels
-    published but the corpus so far is empty)."""
-    if not manifest:
-        return None
-    by_version: dict[int, list[int]] = {}
-    for shard, version in manifest.items():
-        by_version.setdefault(version, []).append(shard)
-    parts = []
-    for version, shards in sorted(by_version.items()):
-        reader = spark.read
-        if label_schema is not None:
-            reader = reader.schema(
-                StructType(
-                    list(label_schema.fields)
-                    + [StructField("_shard", LongType())]
-                )
-            )
-        parts.append(
-            reader.parquet(f"{state_dir}/labels_v{version}")
-            .filter(F.col("_shard").isin(shards))
-            .select("doc_id", "label")
+def _refuse_label_manifest(spark: SparkSession, state_dir: str) -> None:
+    """Fail loudly on a state root written by the retired label-range
+    sharded protocol: ``lmanifest_v*`` files mapping shards to the
+    ``labels_v*`` versions that each hold only the shards their batch
+    rewrote. Read as whole tables, those versions would silently drop
+    every shard the newest one did not rewrite. There is no migration:
+    rebuild the state by replaying the stream into a fresh state dir
+    and checkpoint."""
+    manifests = _state_versions(spark, state_dir, "lmanifest")
+    if manifests:
+        raise RuntimeError(
+            f"{state_dir}/lmanifest_v{max(manifests)} belongs to the retired "
+            "sharded label layout, which this sink cannot read. Replay the "
+            "stream into a fresh state dir and checkpoint to rebuild it."
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def _cc_labels_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_dir: str,
-    out_dir: str,
-    shard_span: int = CC_LABEL_SHARD_SPAN,
+    batch_df: DataFrame, batch_id: int, state_dir: str, out_dir: str
 ) -> None:
     """One cc_labels_sink micro-batch (module-level for replay tests);
-    see the sink docstring for the protocol. ``shard_span`` is the
-    label-range width of one ``labels_v`` shard (tests pass small
-    spans to exercise multi-shard publication; the default keeps a
-    driver-scale corpus in one shard, where the protocol degenerates
-    to the r13 full rewrite)."""
+    see the sink docstring for the protocol."""
     from flink_kafka_filter_transform_spark.operators.graph import (
         components_unionfind_small,
         connected_components,
     )
 
     spark = _batch_aqe(batch_df.sparkSession)
+    _refuse_label_manifest(spark, state_dir)
     _lsh_index_batch(batch_df, batch_id, f"{state_dir}/lsh", out_dir)
-    id_field = batch_df.schema["doc_id"]
+    id_type = batch_df.schema["doc_id"].dataType
     # this batch's verified pairs — the partition _lsh_index_batch just
     # wrote (replay overwrites it, so the read always sees exactly this
     # batch's recomputed pairs)
     pair_schema = StructType(
         [
-            StructField("doc_a", id_field.dataType),
-            StructField("doc_b", id_field.dataType),
+            StructField("doc_a", id_type),
+            StructField("doc_b", id_type),
             StructField("jaccard", DoubleType()),
         ]
     )
-    label_schema = _cc_label_schema(id_field)
-    prev_manifest = _cc_read_manifest(spark, state_dir, before=batch_id)
-    prev = (
-        _cc_assembled_labels(spark, state_dir, prev_manifest, label_schema)
-        if prev_manifest is not None
-        else None
+    label_schema = StructType(
+        [StructField("doc_id", id_type), StructField("label", id_type)]
     )
+    prev = _prev_version(spark, state_dir, "labels", batch_id, label_schema)
     fresh = batch_df.select("doc_id").distinct().select(
         "doc_id", F.col("doc_id").alias("label")
     )
@@ -2053,9 +1950,9 @@ def _cc_labels_batch(
     # are disjoint by construction — plain union, no key-merge shuffle.
     # Both multi-consumer relations persist for the batch (the
     # index-batch bodies' sig/chunks/fr/ex discipline — r13 review):
-    # base feeds the two endpoint-label joins, the relabel join, and
-    # the changed-shard write; ledges feeds the small-graph collect or
-    # the distributed fixpoint.
+    # base feeds the two endpoint-label joins and the relabel write;
+    # ledges feeds the edge count and the small-graph collect or the
+    # distributed fixpoint.
     base = (fresh if prev is None else prev.unionByName(fresh)).persist()
     try:
         pairs_now = _read_batches(
@@ -2072,34 +1969,13 @@ def _cc_labels_batch(
             .persist()
         )
         try:
-            # ONE probe job computes everything the protocol needs to
-            # know before acting: the distinct fresh-label shards AND
-            # the ledge count (fused — separate count / collect_set
-            # jobs each cost ~0.3 s of scheduler latency per
-            # micro-batch, measured r14)
-            probe = (
-                fresh.select(
-                    _shard_expr("label", shard_span).alias("v")
-                )
-                .distinct()
-                .withColumn("k", F.lit("shard"))
-                .unionByName(
-                    ledges.agg(
-                        F.count(F.lit(1)).cast("bigint").alias("v")
-                    ).withColumn("k", F.lit("n"))
-                )
-                .collect()
-            )
-            n_ledges = next(r["v"] for r in probe if r["k"] == "n")
-            fresh_shards = {r["v"] for r in probe if r["k"] == "shard"}
             # the label graph resolves driver-side below the cap (the
             # r14 fast path — ONE bounded collect replaces the
-            # distributed loop's per-round tiny-job cadence; an empty
-            # edge set is free); components_unionfind_small returns
-            # None past the cap and the generic fixpoint takes over.
-            small = components_unionfind_small(ledges, n_edges=n_ledges)
+            # distributed loop's per-round tiny-job cadence);
+            # components_unionfind_small returns None past the cap and
+            # the generic fixpoint takes over.
+            small = components_unionfind_small(ledges)
             remap_df = None
-            remap_shards: set[int] = set()
             if small is not None:
                 remap_rows = [(n, c) for n, c in small if n != c]
                 if remap_rows:
@@ -2115,14 +1991,11 @@ def _cc_labels_batch(
                         spark.sparkContext.parallelize(remap_rows, 1),
                         StructType(
                             [
-                                StructField("label", id_field.dataType),
-                                StructField("_new", id_field.dataType),
+                                StructField("label", id_type),
+                                StructField("_new", id_type),
                             ]
                         ),
                     )
-                    remap_shards = {
-                        x // shard_span for r in remap_rows for x in r
-                    }
             else:
                 lverts = (
                     ledges.select(F.col("src").alias("id"))
@@ -2137,40 +2010,12 @@ def _cc_labels_batch(
                 remap_df = m.filter(F.col("component") != F.col("id")).select(
                     F.col("id").alias("label"), F.col("component").alias("_new")
                 )
-                remap_shards = {
-                    r["s"]
-                    for r in remap_df.select(
-                        F.explode(
-                            F.array(
-                                _shard_expr("label", shard_span),
-                                _shard_expr("_new", shard_span),
-                            )
-                        ).alias("s")
-                    )
-                    .distinct()
-                    .collect()
-                }
-            # affected shards = the probe's fresh-label shards plus
-            # every shard the remap names on either side (a relabel
-            # moves a row from its old label's shard to its new
-            # label's shard — both named, so the changed set is closed)
-            affected = sorted(fresh_shards | remap_shards)
-            changed = base.filter(
-                _shard_expr("label", shard_span).isin(affected)
-            )
+            labels = base
             if remap_df is not None:
-                changed = changed.join(
-                    F.broadcast(remap_df), "label", "left"
-                ).select("doc_id", F.coalesce("_new", "label").alias("label"))
-            (
-                changed.withColumn("_shard", _shard_expr("label", shard_span))
-                .write.mode("overwrite")
-                .partitionBy("_shard")
-                .parquet(f"{state_dir}/labels_v{batch_id}")
-            )
-            new_manifest = dict(prev_manifest or {})
-            new_manifest.update({s: batch_id for s in affected})
-            _cc_write_manifest(spark, state_dir, batch_id, new_manifest)
+                labels = base.join(F.broadcast(remap_df), "label", "left").select(
+                    "doc_id", F.coalesce("_new", "label").alias("label")
+                )
+            _merge_version(spark, state_dir, "labels", batch_id, labels)
         finally:
             ledges.unpersist()
     finally:
@@ -2180,63 +2025,11 @@ def _cc_labels_batch(
 
 
 def cc_labels_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The latest published component-label table (doc_id, label),
-    assembled across the shard manifest's versions with shard-pruned
-    reads, or None before the first batch commits (also None when the
-    corpus drained so far is empty — the manifest exists but names no
-    shard, so there is no parquet to type a frame from; callers
-    already treat None as 'no labels')."""
-    manifest = _cc_read_manifest(spark, state_dir)
-    if not manifest:
-        return None
-    # schema comes from the data itself here (a manifest-referenced
-    # version always holds >= 1 shard's rows); the sink side passes
-    # the explicit schema because ITS reads can race an empty corpus
-    return _cc_assembled_labels(spark, state_dir, manifest)
-
-
-def prune_cc_label_state(
-    spark: SparkSession, state_dir: str, keep_last: int = 2
-) -> list[str]:
-    """Offline pruning for the SHARDED label state: the generic
-    prune_state_versions(prefix="labels") rule — delete all but the
-    newest versions — is WRONG here, because an old ``labels_v{v}``
-    stays live for as long as any manifest shard still points at it
-    (unaffected shards are never rewritten). Keep = every version
-    referenced by the newest ``keep_last`` published manifests, plus
-    those manifests themselves, plus the newest ``keep_last`` version
-    dirs (the replay-prev floor prune_state_versions also honors);
-    delete the rest. Returns the deleted paths. Run OFFLINE or
-    between micro-batches, like every pruner. The nested
-    ``{state_dir}/lsh`` sub-state still prunes separately (see the
-    cc_labels_sink docstring)."""
-    keep_last = max(2, keep_last)
-    latest = _read_latest_pointer(spark, state_dir)
-    manifests = _cc_manifest_versions(spark, state_dir)
-    labels = [v for v, ok in _state_versions(spark, state_dir, "labels").items() if ok]
-    # never touch an in-flight publication above the pointer
-    if latest is not None:
-        manifests = [v for v in manifests if v <= latest]
-        labels = [v for v in labels if v <= latest]
-    keep_manifests = set(sorted(manifests)[-keep_last:])
-    referenced: set[int] = set()
-    for mv in keep_manifests:
-        mf = _cc_read_manifest(spark, state_dir, before=mv + 1)
-        referenced |= set((mf or {}).values())
-    keep_labels = referenced | set(sorted(labels)[-keep_last:])
-    deleted: list[str] = []
-    for prefix, versions, keep in (
-        ("lmanifest", manifests, keep_manifests),
-        ("labels", labels, keep_labels),
-    ):
-        for v in versions:
-            if v in keep:
-                continue
-            path = f"{state_dir}/{prefix}_v{v}"
-            jp, pfs = _hadoop_fs(spark, path)
-            if pfs.delete(jp, True):
-                deleted.append(path)
-    return deleted
+    """The latest published component-label table (doc_id, label), or
+    None before the first batch commits. A drain of an empty corpus
+    publishes an empty table, typed by its part file."""
+    _refuse_label_manifest(spark, state_dir)
+    return _current(spark, state_dir, "labels")
 
 
 # ---------------------------------------------------------------------------
@@ -2757,12 +2550,13 @@ def dedup_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Face mechanics: each micro-batch's update rows land through
     _write_batch_partition (the effectively-once publication the
-    metered sink uses), and the final ledger row per
-    key is the one from its LAST touching batch (max_by batch id —
-    first_doc_id only ever decreases and n_suppressed only grows, so
-    the latest revision is the total). State scales as one ledger row
-    per distinct hash, shuffled by hash exactly like the batch
-    groupBy."""
+    metered sink uses), and the final ledger row per key is the one
+    from its LAST touching batch: a key is revised only in a batch
+    that brings it rows, so first_doc_id only ever decreases and
+    n_suppressed strictly grows, and the last revision is the min
+    first_doc_id and the max n_suppressed over the key's rows. State
+    scales as one ledger row per distinct hash, shuffled by hash
+    exactly like the batch groupBy."""
     from flink_kafka_filter_transform_spark.functions.hashing import portable_hash64
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
     from flink_kafka_filter_transform_spark.streaming import state as state_mod
@@ -2803,14 +2597,12 @@ def dedup_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         _drain_through_sink(docs, scratch, sink)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    led = spark.read.parquet(ledger)
-    final = led.groupBy("content_hash").agg(
-        F.max_by(F.struct("first_doc_id", "n_suppressed"), "_batch_id").alias("s")
+    led = _read_batches(
+        spark, ledger, StructType.fromDDL(state_mod.FIRSTSEEN_OUTPUT_SCHEMA)
     )
-    return final.select(
-        "content_hash",
-        F.col("s.first_doc_id").alias("first_doc_id"),
-        F.col("s.n_suppressed").alias("n_suppressed"),
+    return led.groupBy("content_hash").agg(
+        F.min("first_doc_id").alias("first_doc_id"),
+        F.max("n_suppressed").alias("n_suppressed"),
     )
 
 

@@ -2003,6 +2003,28 @@ def test_index_sinks_refuse_legacy_state_layout(
         batch_fn(rows, 1, str(state), out)
 
 
+def test_cc_labels_refuse_sharded_state_root(spark, sf_dir, tmp_path):
+    """A state root left by the retired label-range sharded protocol
+    (an lmanifest_v file next to partial labels_v shard versions that
+    carry _SUCCESS) must fail both the batch, before its first durable
+    write, and the reader, not be read as a whole label table that
+    silently lost its unrewritten shards."""
+    from flink_kafka_filter_transform_spark.sources.parquet import load_table
+
+    state, out = tmp_path / "state", tmp_path / "out"
+    (state / "labels_v0" / "_shard=0").mkdir(parents=True)
+    (state / "labels_v0" / "_SUCCESS").write_text("")
+    (state / "lmanifest_v0").write_text("0 0\n")
+    (state / "_LATEST").write_text("0")
+    before = sorted(p.relative_to(tmp_path) for p in tmp_path.rglob("*"))
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+    with pytest.raises(RuntimeError, match=re.escape(f"{state}/lmanifest_v0")):
+        sp._cc_labels_batch(docs, 1, str(state), str(out))
+    assert sorted(p.relative_to(tmp_path) for p in tmp_path.rglob("*")) == before
+    with pytest.raises(RuntimeError, match=re.escape(f"{state}/lmanifest_v0")):
+        sp.cc_labels_current(spark, str(state))
+
+
 def test_cc_labels_sink_matches_batch_clusters(spark, sf_dir, tmp_path_factory):
     """Draining documents through the incremental CC label sink must
     converge to exactly the batch operator's cluster table — every
@@ -2176,9 +2198,8 @@ def test_cc_labels_batch_split_invariant(spark, sf_dir, tmp_path_factory):
     final label table equals one-shot batch CC. Three different split
     shapes (hash thirds, skewed 90/10, id-range halves) over the
     sf documents corpus, each drained through _cc_labels_batch
-    sequentially; afterwards the labels-aware pruner
-    (prune_cc_label_state — r14, the generic labels-prefix rule is
-    wrong under sharding) must keep the published head readable."""
+    sequentially; afterwards the generic version pruner must keep the
+    published head readable."""
     from flink_kafka_filter_transform_spark.operators.graph import neardup_clusters
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
@@ -2208,165 +2229,12 @@ def test_cc_labels_batch_split_invariant(spark, sf_dir, tmp_path_factory):
         states[label] = state
     # prune the 3-version state down to the keep_last=2 floor: v0 goes,
     # the published head stays readable
-    # at the default span this corpus is single-shard, so only the
-    # newest manifest's referenced version (v2) plus the keep_last
-    # floor survive: labels_v0 and the v0 manifest go
-    deleted = sp.prune_cc_label_state(spark, states["thirds"], keep_last=2)
-    assert sorted(p.rsplit("/", 1)[1] for p in deleted) == [
-        "labels_v0", "lmanifest_v0"
-    ]
+    assert sp.prune_state_versions(spark, states["thirds"], "labels", keep_last=2) == [0]
     got = {
         (r.doc_id, r.label)
         for r in sp.cc_labels_current(spark, states["thirds"]).collect()
     }
     assert got == want
-
-
-def _cc_shard_dirs(state, version):
-    import os
-
-    return sorted(
-        d for d in os.listdir(f"{state}/labels_v{version}")
-        if d.startswith("_shard=")
-    )
-
-
-def test_cc_labels_sharded_publication_rewrites_only_affected(
-    spark, tmp_path_factory
-):
-    """The r14 sharded labels_v protocol: each batch writes ONLY the
-    shards it affected (fresh-label shards + every shard the remap
-    names on either side), the manifest routes readers to each
-    shard's current version, and the assembled table stays equal to
-    the batch operator. Fixture: exact-duplicate texts (identical
-    minhash -> certain pair), shard_span=10 so doc decades are
-    shards."""
-    from flink_kafka_filter_transform_spark.operators.graph import neardup_clusters
-
-    w = lambda tag: " ".join(f"{tag}{i:02d}" for i in range(45))
-    X, Y, Z = w("xx"), w("yy"), w("zz")
-    all_rows = [(3, X), (5, X), (17, Y), (19, Y), (25, Z), (35, X)]
-    docs = spark.createDataFrame(all_rows, "doc_id BIGINT, text STRING")
-    state = str(tmp_path_factory.mktemp("cc_shard_state"))
-    out = str(tmp_path_factory.mktemp("cc_shard_out"))
-    b = lambda *ids: docs.filter(SF.col("doc_id").isin(*ids))
-
-    # batch 0: two 2-doc components in shards 0 and 1
-    sp._cc_labels_batch(b(3, 5, 17, 19), 0, state, out, shard_span=10)
-    assert _cc_shard_dirs(state, 0) == ["_shard=0", "_shard=1"]
-    # batch 1: one singleton in shard 2 — shards 0/1 NOT rewritten
-    sp._cc_labels_batch(b(25), 1, state, out, shard_span=10)
-    assert _cc_shard_dirs(state, 1) == ["_shard=2"]
-    # batch 2: doc 35 (shard 3) joins the X component (label 3, shard
-    # 0): affected = {0 (remap target + members), 3 (fresh)} — shard
-    # 3 ends EMPTY (35's row moves to shard 0), shards 1/2 untouched
-    sp._cc_labels_batch(b(35), 2, state, out, shard_span=10)
-    assert _cc_shard_dirs(state, 2) == ["_shard=0"]
-    got = {
-        (r.doc_id, r.label)
-        for r in sp.cc_labels_current(spark, state).collect()
-    }
-    want = {
-        (r.doc_id, r.cluster_id) for r in neardup_clusters(docs).collect()
-    }
-    assert got == want == {
-        (3, 3), (5, 3), (35, 3), (17, 17), (19, 17), (25, 25)
-    }
-    # manifest routes each shard at its latest-writing batch
-    assert sp._cc_read_manifest(spark, state, before=3) == {
-        0: 2, 1: 0, 2: 1, 3: 2
-    }
-
-    # replay batch 2: same labels, same manifest (strictly-pre-batch
-    # prev + whole-version overwrite => idempotent under sharding too)
-    sp._cc_labels_batch(b(35), 2, state, out, shard_span=10)
-    after = {
-        (r.doc_id, r.label)
-        for r in sp.cc_labels_current(spark, state).collect()
-    }
-    assert after == want
-    assert sp._cc_read_manifest(spark, state, before=3) == {
-        0: 2, 1: 0, 2: 1, 3: 2
-    }
-
-
-def test_prune_cc_label_state_keeps_referenced_versions(
-    spark, tmp_path_factory
-):
-    """The labels-aware pruner: an old labels_v stays live while ANY
-    shard of the kept manifests references it; versions (and
-    manifests) older than that are deleted, and the assembled table
-    is unchanged after pruning."""
-    from flink_kafka_filter_transform_spark.operators.graph import neardup_clusters
-
-    w = lambda tag: " ".join(f"{tag}{i:02d}" for i in range(45))
-    X, Y, Z = w("xx"), w("yy"), w("zz")
-    all_rows = [
-        (3, X), (5, X), (17, Y), (19, Y), (25, Z), (35, X), (15, Y), (13, Y)
-    ]
-    docs = spark.createDataFrame(all_rows, "doc_id BIGINT, text STRING")
-    state = str(tmp_path_factory.mktemp("cc_prune_state"))
-    out = str(tmp_path_factory.mktemp("cc_prune_out"))
-    b = lambda *ids: docs.filter(SF.col("doc_id").isin(*ids))
-    sp._cc_labels_batch(b(3, 5, 17, 19), 0, state, out, shard_span=10)
-    sp._cc_labels_batch(b(25), 1, state, out, shard_span=10)
-    sp._cc_labels_batch(b(35), 2, state, out, shard_span=10)
-    # two more batches rewriting shard 1 age batch 0's version out of
-    # every kept manifest (17/19's Y-component relabels to 15 then 13)
-    sp._cc_labels_batch(b(15), 3, state, out, shard_span=10)
-    sp._cc_labels_batch(b(13), 4, state, out, shard_span=10)
-    deleted = sp.prune_cc_label_state(spark, state, keep_last=2)
-    # manifests v3/v4 reference versions {1, 2, 3, 4} — labels_v0 and
-    # manifests v0-v2 are the prunable residue
-    assert sorted(p.rsplit("/", 1)[1] for p in deleted) == [
-        "labels_v0", "lmanifest_v0", "lmanifest_v1", "lmanifest_v2"
-    ]
-    got = {
-        (r.doc_id, r.label)
-        for r in sp.cc_labels_current(spark, state).collect()
-    }
-    want = {
-        (r.doc_id, r.cluster_id) for r in neardup_clusters(docs).collect()
-    }
-    assert got == want and len(want) == 8
-
-
-def test_cc_labels_sink_sharded_drain_matches_batch(
-    spark, sf_dir, tmp_path_factory
-):
-    """The REAL sink path with a small shard_span (multi-shard at
-    driver scale) must still converge to the batch operator —
-    sharding changes the write layout, never the values."""
-    from flink_kafka_filter_transform_spark.operators.graph import neardup_clusters
-    from flink_kafka_filter_transform_spark.sources.parquet import load_table
-
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    src_dir = str(tmp_path_factory.mktemp("ccs_src"))
-    docs.repartition(3).write.mode("overwrite").parquet(src_dir)
-    state = str(tmp_path_factory.mktemp("ccs_state"))
-    out = str(tmp_path_factory.mktemp("ccs_out"))
-    ckpt = str(tmp_path_factory.mktemp("ccs_ckpt"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        sp.cc_labels_sink(stream, state, out, ckpt, shard_span=50)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("sharded cc drain did not finish within 180s")
-    got = {
-        (r.doc_id, r.label)
-        for r in sp.cc_labels_current(spark, state).collect()
-    }
-    want = {
-        (r.doc_id, r.cluster_id) for r in neardup_clusters(docs).collect()
-    }
-    assert got == want and len(want) > 0
 
 
 class _InjectedCrash(Exception):
@@ -2477,8 +2345,8 @@ def test_batch_survives_crash_before_any_durable_write(
 ):
     """Structured Streaming's recovery contract (replayable source +
     idempotent sink) at every crash point: batch 1 is killed before its
-    k-th durable write — a parquet write, the _LATEST publish or the
-    label-manifest publish — for every k, then re-driven under the same
+    k-th durable write — a parquet write or the _LATEST publish — for
+    every k, then re-driven under the same
     batch id. Published state, pair log and index must equal a run that
     never crashed. The scd2 changelog is append-only and deduped on
     read by (key, msg_id), so it is compared as a row set."""
@@ -2507,14 +2375,13 @@ def test_batch_survives_crash_before_any_durable_write(
             return orig_parquet(writer, *a, **kw)
 
         m.setattr(DataFrameWriter, "parquet", parquet)
-        for name in ("_write_latest_pointer", "_cc_write_manifest"):
-            orig = getattr(sp, name)
+        orig_publish = sp._write_latest_pointer
 
-            def publish(*a, _orig=orig, **kw):
-                hit()
-                return _orig(*a, **kw)
+        def publish(*a, **kw):
+            hit()
+            return orig_publish(*a, **kw)
 
-            m.setattr(sp, name, publish)
+        m.setattr(sp, "_write_latest_pointer", publish)
         return seen
 
     ref = str(tmp_path / "ref")
