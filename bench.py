@@ -38,11 +38,6 @@ mixed (the r2->r3 "17% faster" conflated the two; VERDICT r3).
   (py GC + clearCache + unpersist + face scratch) runs between every
   rep so localCheckpoint residue from iterative trainers can't make
   warm read slower than cold in the shared JVM (VERDICT r5 item 2).
-
-"cdc_route_join_distinct" is a bench-only forced run of the
-_route_distinct_keys_join fallback (normally dispatch picks the
-compiled when-chain for config-sized tables) so the big-rule-table
-path keeps a timing trend line.
 """
 
 from __future__ import annotations
@@ -60,14 +55,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # Headline set: the reference's full data path + the heavy extension and
-# relational operators. Names must exist in __spark_entry__.queries()
-# or in SPECIAL below.
+# relational operators. Names must exist in __spark_entry__.queries().
 HEADLINE = [
     "cdc_parse",
     "cdc_counts_inbound",
     "cdc_counts_outbound",
     "cdc_route_join",
-    "cdc_route_join_distinct",
     "cdc_outgoing",
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -247,23 +240,6 @@ HEADLINE = [
 ]
 
 
-def _route_distinct_keys_query(spark, sf_dir):
-    """Force the big-rule-table routing fallback (bench-only; the
-    adaptive dispatch would pick the compiled when-chain here)."""
-    from flink_kafka_filter_transform_spark.operators import cdc
-    from flink_kafka_filter_transform_spark.sources.cdc_fixture import (
-        cdc_events_df,
-        rules_df,
-    )
-
-    parsed = cdc.filter_deletes(cdc.parse_envelope(cdc_events_df(spark, sf_dir)))
-    return cdc._route_distinct_keys_join(parsed, rules_df(spark)).select(
-        "msg_id", "topic", "db", "table_name", "op", "target_topic"
-    )
-
-
-SPECIAL = {"cdc_route_join_distinct": _route_distinct_keys_query}
-
 REPS = 2  # frozen r4 methodology; see module docstring
 
 # Emitted-JSON schema/methodology version (r8 ADVICE item 3): v1
@@ -271,8 +247,10 @@ REPS = 2  # frozen r4 methodology; see module docstring
 # v2 (BENCH_r08+) excludes them into "faces"/"faces_sec", so a
 # cross-version total comparison must use "total_with_faces_sec" (also
 # emitted from v2 on) against the old "value". Bump on any change that
-# alters what the headline number measures.
-METHODOLOGY = 2
+# alters what the headline number measures. v3 drops the bench-only
+# forced run of the big-rule-table routing join from the headline (that
+# join is gone; routing has one plan, timed as cdc_route_join).
+METHODOLOGY = 3
 
 # r8 variance guard (VERDICT r7 item 2): the driver-side iterative
 # trainers (localCheckpoint loops) are allocation-sensitive in the
@@ -362,20 +340,15 @@ def session(app_name: str = "bench", cpus: int = CPUS):
     return spark
 
 
-def queries() -> dict:
-    """The registry plus the bench-only SPECIAL queries."""
-    import __spark_entry__ as entrymod
-
-    return {**entrymod.queries(), **SPECIAL}
-
-
 def run(spark, query, sf_dir: str = SF_DIR) -> float:
     """Wall seconds of one run of ``query`` (a registered name, or a
     ``(spark, sf_dir) -> DataFrame`` callable) into the noop sink: the
     full pipeline executes, nothing is collected to the driver and no
     disk write is measured. Building the DataFrame is timed too (the
     eager trainers do their driver-paced work there)."""
-    build = queries()[query] if isinstance(query, str) else query
+    import __spark_entry__
+
+    build = __spark_entry__.queries()[query] if isinstance(query, str) else query
     t0 = time.time()
     build(spark, sf_dir).write.mode("overwrite").format("noop").save()
     return time.time() - t0
@@ -588,10 +561,12 @@ def summarize(timings: dict, cold: dict, warm: dict, sf) -> tuple[dict, str]:
 
 
 def main() -> None:
+    import __spark_entry__
+
     spark = session()
     # a renamed/removed query must not kill the whole bench run — skip
     # it loudly (stderr) and keep the series going
-    missing = [n for n in HEADLINE if n not in queries()]
+    missing = [n for n in HEADLINE if n not in __spark_entry__.queries()]
     for n in missing:
         print(f"bench: skipping unknown query {n!r}", file=sys.stderr)
     warm_up(spark)

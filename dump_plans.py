@@ -15,6 +15,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import __spark_entry__  # noqa: E402
 import bench  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -22,7 +23,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # (query, why this plan matters at scale)
 SHOWCASE = [
     ("cdc_outgoing", "the reference's full O2-O7 path: ZERO exchanges, one codegen span"),
-    ("cdc_route_join", "dynamic-rule routing, adaptive: config-sized tables compile to the zero-shuffle when-chain (shown); huge tables take the gated distinct-keys join"),
+    ("cdc_route_join", "dynamic-rule routing: the rules DataFrame is collected once (memoized probe) and compiled into the zero-shuffle when-chain; a table over ROUTE_COMPILE_MAX_RULES rows is rejected"),
     ("cdc_materialize", "changelog compaction: one shuffle, map-side partial max_by"),
     ("q5_local_supplier_volume", "all dimensions broadcast; the fact table shuffles only for aggregation"),
     ("q1_pricing_summary", "pruned scan (7 columns), pushed filter, two-phase aggregate"),
@@ -145,7 +146,7 @@ def main() -> None:
     from flink_kafka_filter_transform_spark.plans import explain as px
 
     spark = bench.session("dump_plans", cpus=4)
-    qs = bench.queries()
+    qs = __spark_entry__.queries()
 
     out = [
         "# PLANS — headline physical plans\n",

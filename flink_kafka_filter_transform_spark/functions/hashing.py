@@ -46,11 +46,6 @@ def portable_hash64_sql(expr: str) -> str:
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
-def portable_hash64_spark_sql(expr: str) -> str:
-    """Spark SQL text form (for spark.sql-composed queries)."""
-    return f"CAST(conv(substr(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
-
-
 def portable_hash64_second(col: Column | str) -> Column:
     """Second independent 60-bit hash from the SAME md5 digest (hex
     chars 16-30). One md5 invocation yields (h1, h2) for double

@@ -12,12 +12,11 @@ no UDFs, no RDDs; the whole batch pipeline compiles to a single
 WholeStageCodegen over the scan.
 
 Scale notes (100 TB):
-- The rule table is O(10..10k) rows: first-match routing folds it into
-  an ordered ``when`` chain (constant-folded literals, zero shuffle,
-  zero join) — preferred for config-sized rule sets. The broadcast-join
-  variant exists for very large rule tables and encodes priority via
-  ``min(priority)`` per message, still shuffle-free on the stream side
-  (broadcast hash join + partial aggregation).
+- The rule table is config-sized (the reference's YAML list,
+  config.yaml:7-11): every rule table, static or given as a DataFrame,
+  folds into ONE ordered ``when`` chain (constant-folded literals, zero
+  shuffle, zero join). A table over ``params.ROUTE_COMPILE_MAX_RULES``
+  rows is rejected, not routed some other way.
 - Counters are streaming groupBy counts: map-side partial aggregation
   means the shuffle carries only (group, partial_count) rows, bounded
   by group cardinality (topics x dbs x tables x 4 ops), not data size.
@@ -91,11 +90,9 @@ def _rule_cond(rule: dict, topic: str, db: str, table: str) -> Column:
 def _route_expr(rules: list[dict], topic_col: str, db_col: str, table_col: str) -> Column:
     """The first-match target topic of ``rules`` as one ordered CASE."""
     expr: Column = F.lit(None).cast("string")
-    # NULL priority sorts as int-max ("lowest precedence"), matching the
-    # join path's min_by coalesce and DuckDB's ASC NULLS LAST.
-    # target_topic is the deterministic tie-break for EQUAL priorities —
-    # the same tuple the join path orders min_by on, so crossing
-    # ROUTE_COMPILE_MAX_RULES can never change a routing winner.
+    # NULL priority sorts as int-max ("lowest precedence"), matching
+    # DuckDB's ASC NULLS LAST. target_topic is the deterministic
+    # tie-break for EQUAL priorities.
     def _pri(r: dict) -> tuple[int, str]:
         p = r["priority"] if r["priority"] is not None else 2_147_483_647
         return (p, r["target_topic"])
@@ -112,7 +109,7 @@ def route_when_chain(
     db_col: str = "db",
     table_col: str = "table_name",
 ) -> DataFrame:
-    """Routing as one ordered CASE expression — the scale-preferred path.
+    """Routing as one ordered CASE expression.
 
     Rule order is semantic (``.find()`` over the config Vec,
     transform.rs:57-64); a ``when`` chain preserves it exactly. Regex
@@ -145,14 +142,13 @@ def forwarded(df: DataFrame, rules: list[dict]) -> DataFrame:
 
 # Rules-probe memo: logical-plan fingerprint (semanticHash — Spark's
 # own canonical plan-equality hash, the mechanism behind sameSemantics)
-# -> collected rule rows, or None for "exceeds ROUTE_COMPILE_MAX_RULES,
-# take the big-table path". The probe is an eager ~0.3-0.9 s Spark job;
+# -> collected rule rows. The probe is an eager ~0.3-0.9 s Spark job;
 # a rule table is typically routed against once per micro-batch or
 # query, so paying it once per TABLE instead of once per CALL matters.
 # Bounded LRU; keyed on the PLAN, so callers that mutate data behind an
 # identical plan (overwrite the same parquet path) must rebuild the
 # DataFrame or call clear_route_rules_cache().
-_RULES_PROBE_CACHE: "OrderedDict[int, list[dict] | None]" = None  # type: ignore[assignment]
+_RULES_PROBE_CACHE: "OrderedDict[int, list[dict]]" = None  # type: ignore[assignment]
 _RULES_PROBE_CACHE_MAX = 32
 
 
@@ -163,8 +159,9 @@ def clear_route_rules_cache() -> None:
         _RULES_PROBE_CACHE.clear()
 
 
-def _probe_rules(rules_df: DataFrame) -> "list[dict] | None":
-    """Collected rule rows for compile-sized tables, else None."""
+def _probe_rules(rules_df: DataFrame) -> list[dict]:
+    """The collected rule rows; raises ValueError for a table over
+    ``params.ROUTE_COMPILE_MAX_RULES`` rows."""
     global _RULES_PROBE_CACHE
     if _RULES_PROBE_CACHE is None:
         from collections import OrderedDict
@@ -178,14 +175,18 @@ def _probe_rules(rules_df: DataFrame) -> "list[dict] | None":
     # table. toArrow (not take/collect-with-limit) — CollectLimitExec's
     # incremental job scheduling costs ~1-2s per call even on a 7-row
     # local relation; the Arrow path is a single ~0.3s fetch.
+    bound = params.ROUTE_COMPILE_MAX_RULES
     head = (
         rules_df.select("priority", "source_topic", "db", "table_pattern", "target_topic")
-        .limit(params.ROUTE_COMPILE_MAX_RULES + 1)
+        .limit(bound + 1)
         .toArrow()
     )
-    result = (
-        head.to_pylist() if head.num_rows <= params.ROUTE_COMPILE_MAX_RULES else None
-    )
+    if head.num_rows > bound:
+        raise ValueError(
+            f"route_broadcast_join: the rule table has {rules_df.count()} rows, "
+            f"over the ROUTE_COMPILE_MAX_RULES bound of {bound}"
+        )
+    result = head.to_pylist()
     _RULES_PROBE_CACHE[fp] = result
     if len(_RULES_PROBE_CACHE) > _RULES_PROBE_CACHE_MAX:
         _RULES_PROBE_CACHE.popitem(last=False)
@@ -200,26 +201,17 @@ def route_broadcast_join(
     table_col: str = "table_name",
 ) -> DataFrame:
     """Dynamic-rule routing (rules only known at runtime, as a
-    DataFrame) — ADAPTIVE between two strategies by rule-table size:
+    DataFrame), dropping unrouted messages.
 
-    - Config-sized rule tables (<= ``params.ROUTE_COMPILE_MAX_RULES``):
-      collect the rules to the driver — the rule table is
-      broadcast-sized BY DEFINITION, and collecting it at plan time is
-      exactly what Spark's own broadcast join does — and compile the
-      same ordered ``when`` chain as ``route_when_chain``. One scan,
-      ZERO shuffles, regexes become codegen literals. This is the right
-      plan for every realistic deployment of the reference (its config
-      is a YAML file, config.yaml:7-11). The probe is memoized on the
-      rules plan's semanticHash (``_probe_rules``), so repeated routing
-      against the same rule table pays the collection job once.
-    - Larger rule tables (a when-chain with thousands of branches blows
-      past codegen limits and falls back to interpreted CASE): the
-      distinct-keys join below — see ``_route_distinct_keys_join``.
-
-    Both paths share first-match semantics (min priority, NULL
-    priority = lowest precedence); ``tests/test_plans.py`` gates each
-    path's plan shape and ``tests/test_oracle_parity.py`` +
-    the path-equivalence test pin the semantics.
+    The rules are collected to the driver — the rule table is
+    broadcast-sized BY DEFINITION, and collecting it at plan time is
+    exactly what Spark's own broadcast join does — and compiled into
+    the same ordered ``when`` chain as ``route_when_chain``: one scan,
+    ZERO shuffles, regexes become codegen literals. The probe is
+    memoized on the rules plan's semanticHash (``_probe_rules``), so
+    repeated routing against the same rule table pays the collection
+    job once. A table over ``params.ROUTE_COMPILE_MAX_RULES`` rows
+    raises ValueError: its CASE chain would outgrow codegen.
     """
     if rules_df.isStreaming:
         raise ValueError(
@@ -229,76 +221,7 @@ def route_broadcast_join(
             "a stream of rule updates through foreachBatch and rebuild."
         )
     rules = _probe_rules(rules_df)
-    if rules is not None:
-        routed = route_when_chain(df, rules, topic_col, db_col, table_col)
-        return routed.filter(F.col("target_topic").isNotNull())
-    return _route_distinct_keys_join(df, rules_df, topic_col, db_col, table_col)
-
-
-def _route_distinct_keys_join(
-    df: DataFrame,
-    rules_df: DataFrame,
-    topic_col: str = "topic",
-    db_col: str = "db",
-    table_col: str = "table_name",
-) -> DataFrame:
-    """Routing as an explicit broadcast join — the huge-rule-table path.
-
-    The routing decision is a pure function of the key triple
-    (topic, db, table_name), whose cardinality is SCHEMA-bounded
-    (topics x databases x tables — the same boundedness the rule-table
-    assumption already makes), not data-bounded. So instead of joining
-    every message against the rules and aggregating first-match per
-    msg_id (a stream-sized SortAggregate over struct buffers — the
-    round-1 shape, whose shuffle carried every matched message's full
-    payload):
-
-    1. distinct key triples — map-side partial distinct, so the only
-       shuffle in the whole plan carries UNIQUE keys, not messages;
-    2. join the distinct keys against the broadcast rule table and keep
-       the min-priority match per key (min_by on a relation of distinct
-       keys — tiny, SortAggregate there is irrelevant). The regex runs
-       once per (key, rule), not once per message, so the column-valued
-       ``regexp_like(col, col)`` (recompiled per evaluation) is cheap
-       here and keeps the rule table fully dynamic;
-    3. broadcast the resolved (key -> target_topic) map back onto the
-       stream: a map-only broadcast hash join — the stream itself is
-       NEVER shuffled.
-
-    Cost model: one extra scan+parse of the source (the keys branch) in
-    exchange for eliminating the payload shuffle entirely — measured at
-    sf0.1: ~5.3s cold / ~2.5s warm vs the compiled when-chain's ~2.1s /
-    ~1.2s, which is why config-sized tables take the compiled path. At
-    100 TB a pruned columnar re-scan is linear and embarrassingly
-    parallel while a matched-payload shuffle+sort is the bottleneck —
-    for rule tables too big to compile, this is the plan you'd want on
-    1000 executors.
-    """
-    r = F.broadcast(rules_df.withColumnRenamed("db", "rule_db"))
-    match = F.regexp_like(F.col(table_col), r["table_pattern"])
-    keys = df.select(topic_col, db_col, table_col).dropDuplicates()
-    matched = keys.join(
-        r,
-        (F.col(topic_col) == r["source_topic"]) & (F.col(db_col) == r["rule_db"]) & match,
-        "inner",
-    )
-    # First-match-wins per key via min_by. NULL-priority rules: min_by
-    # IGNORES rows whose ordering value is NULL (a key matching only
-    # NULL-priority rules would vanish). Coalesce to int-max so NULL
-    # priority means "lowest precedence" — the same place DuckDB's
-    # default NULLS LAST puts it in the oracle's row_number ordering.
-    # target_topic in the ordering struct breaks EQUAL-priority ties the
-    # same way the when-chain sort does (struct ordering is field-wise).
-    pri = F.struct(
-        F.coalesce(F.col("priority"), F.lit(2_147_483_647)).alias("p"),
-        F.col("target_topic").alias("t"),
-    )
-    routed_keys = matched.groupBy(topic_col, db_col, table_col).agg(
-        F.min_by("target_topic", pri).alias("target_topic")
-    )
-    # Inner join == drop messages whose key matched no rule (same rows
-    # the old per-message inner join dropped, O6 semantics preserved).
-    return df.join(F.broadcast(routed_keys), [topic_col, db_col, table_col], "inner")
+    return drop_unrouted(route_when_chain(df, rules, topic_col, db_col, table_col))
 
 
 def drop_unrouted(df: DataFrame) -> DataFrame:

@@ -190,6 +190,9 @@ def _cents_sorted(cents: DataFrame) -> DataFrame:
     )
 
 
+_EMPTY_CODEBOOK = "_with_best_cell: empty codebook (no centroids to assign to)"
+
+
 def _with_best_cell(
     rows: DataFrame,
     cents: DataFrame,
@@ -235,7 +238,7 @@ def _with_best_cell(
         # 0-row output the pre-r14 crossJoin produced. Unreachable from
         # current callers (empty cents implies empty vecs) — fail loud
         # rather than emit NULL assignments from a latent new caller.
-        raise ValueError("_with_best_cell: empty codebook (no centroids to assign to)")
+        raise ValueError(_EMPTY_CODEBOOK)
     if cb is not None:
         # literal-codebook fast path: ``_cents`` is a plan CONSTANT
         # (lloyd froze the codebook under CODEBOOK_LITERAL_CAP), so the
@@ -244,7 +247,15 @@ def _with_best_cell(
         # doubles, same tie-break as the broadcast path below.
         out = rows.withColumn("_cents", _cb_array_col(cb)).withColumn("_best", best)
     else:
-        out = rows.crossJoin(F.broadcast(_cents_sorted(cents))).withColumn("_best", best)
+        # The same empty-codebook guard, inside the plan: the fold of a
+        # 0-row codebook is one empty-array row, so a row assigned
+        # against it fails instead of taking a NULL cid. No extra job.
+        out = rows.crossJoin(F.broadcast(_cents_sorted(cents))).withColumn(
+            "_best",
+            F.when(F.size("_cents") > 0, best).otherwise(
+                F.raise_error(F.lit(_EMPTY_CODEBOOK))
+            ),
+        )
     cols = [F.col(c) for c in rows.columns] + [F.col("_best.cid").alias("cid")]
     if d2 is not None:
         cols.append(F.col("_best.d").alias(d2))

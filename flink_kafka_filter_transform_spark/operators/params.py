@@ -109,9 +109,9 @@ BLOOM_REG_BITS = 62
 BLOOM_K = 2
 
 # --- CDC routing -----------------------------------------------------------
-# Rule tables at or below this size are collected at plan time and
-# compiled into the ordered when-chain (one scan, zero shuffles);
-# larger tables take the distinct-keys broadcast-join path. Sized well
+# Largest rule table cdc.route_broadcast_join accepts: every table is
+# collected at plan time and compiled into the ordered when-chain (one
+# scan, zero shuffles); a larger one raises ValueError. Sized well
 # under Catalyst codegen limits for a 3-predicate CASE branch per rule.
 ROUTE_COMPILE_MAX_RULES = 1000
 

@@ -69,11 +69,7 @@ def get_session(
         # reduction that cuts probe-side shuffle bytes at 100 TB. Off by
         # default in Spark; size thresholds (creation <=10MB, probe scan
         # >=10GB) keep it from firing where it can't pay off.
-        # SPARK_GRAFT_BLOOM=0/1 overrides for A/B benchmarking.
-        .config(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "false" if os.environ.get("SPARK_GRAFT_BLOOM", "1") == "0" else "true",
-        )
+        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # --- scan discipline: parquet splits sized for executor memory ---
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")

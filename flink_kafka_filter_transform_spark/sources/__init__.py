@@ -1,3 +1,3 @@
-from flink_kafka_filter_transform_spark.sources.parquet import TABLES, load_table, load_tables
+from flink_kafka_filter_transform_spark.sources.parquet import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

@@ -86,11 +86,6 @@ def cdc_sql(dialect: str) -> str:
     return _CDC_VALUE_TEMPLATE.format(base=base)
 
 
-def cdc_cte(dialect: str) -> str:
-    """``WITH cdc AS (...)`` prefix for composing oracle queries."""
-    return f"WITH cdc AS ({cdc_sql(dialect)})"
-
-
 def synthesized_cdc_events_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC fixture computed inline (events view auto-registered,
     with ts normalized to TIMESTAMP whatever the parquet encoding)."""
@@ -166,8 +161,9 @@ _RULES_DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, DataFrame]" = None  # 
 
 
 def rules_df(spark: SparkSession) -> DataFrame:
-    """Rule table as a tiny DataFrame (broadcast side of the routing
-    join). Memoized per SparkSession: createDataFrame embeds the rows
+    """Rule table as a tiny DataFrame, the input of
+    ``cdc.route_broadcast_join`` (collected and compiled into the
+    when-chain). Memoized per SparkSession: createDataFrame embeds the rows
     in a fresh LocalRelation whose semanticHash is NOT stable across
     calls, so returning the same object is what lets downstream
     plan-fingerprint caches (cdc._probe_rules) hit — the same behavior

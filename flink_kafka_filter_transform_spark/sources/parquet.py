@@ -175,14 +175,3 @@ def respread_if_underpartitioned(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load every testdata table keyed by name."""
-    return {name: load_table(spark, name, sf_dir) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register all tables as temp views for spark.sql() use."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

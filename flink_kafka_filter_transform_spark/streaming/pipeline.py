@@ -84,11 +84,6 @@ def transformed_stream(stream: DataFrame, rules: list[dict]) -> DataFrame:
     return cdc.project_outgoing(cdc.forwarded(stream, rules))
 
 
-def outbound_counter_stream(stream: DataFrame, rules: list[dict]) -> DataFrame:
-    """O10: flink_kafka_filter_transform_count family (mq/mod.rs:35-39)."""
-    return cdc.outbound_counts(cdc.forwarded(stream, rules))
-
-
 def windowed_counts(
     stream: DataFrame,
     window_duration: str = "1 hour",
@@ -186,18 +181,6 @@ def metered_cdc_sink(
     return _sink(labelled, feed, checkpoint_dir)
 
 
-def observed(stream: DataFrame, name: str = "cdc_in") -> DataFrame:
-    """Attach streaming metrics via DataFrame.observe — the lightweight
-    analog of the Prometheus counters: per-micro-batch row counts and
-    delete counts, published to StreamingQueryListener without an extra
-    aggregation subtree."""
-    return stream.observe(
-        name,
-        F.count(F.lit(1)).alias("n_messages"),
-        F.sum(F.when(F.col("op") == "d", 1).otherwise(0)).alias("n_deletes"),
-    )
-
-
 def session_windowed_counts(
     stream: DataFrame,
     gap: str = "30 minutes",
@@ -224,6 +207,32 @@ def session_windowed_counts(
     )
 
 
+def _interval_join(stream: DataFrame, window: str, watermark_delay: str, how: str) -> DataFrame:
+    """Creates ('c') joined to updates ('u') on key within ``window``
+    after the create, both sides watermarked: the one build behind the
+    inner and the LEFT OUTER interval join."""
+    parsed = cdc.parse_envelope(stream)
+
+    def side(op: str) -> DataFrame:
+        return (
+            parsed.filter(F.col("op") == op)
+            .select(
+                F.col("key").alias(f"{op}_key"),
+                F.col("ts").alias(f"{op}_ts"),
+                F.col("msg_id").alias(f"{op}_msg_id"),
+            )
+            .withWatermark(f"{op}_ts", watermark_delay)
+        )
+
+    return side("c").join(
+        side("u"),
+        F.expr(
+            f"c_key = u_key AND u_ts >= c_ts AND u_ts <= c_ts + INTERVAL {window}"
+        ),
+        how,
+    ).select("c_key", "c_msg_id", "u_msg_id", "c_ts", "u_ts")
+
+
 def stream_stream_interval_join(
     stream: DataFrame,
     window: str = "1 hour",
@@ -238,31 +247,7 @@ def stream_stream_interval_join(
     than watermark + interval are evicted, so state is O(window), not
     O(stream). Inner join + append mode — each match emits exactly
     once."""
-    parsed = cdc.parse_envelope(stream)
-    creates = (
-        parsed.filter(F.col("op") == "c")
-        .select(
-            F.col("key").alias("c_key"),
-            F.col("ts").alias("c_ts"),
-            F.col("msg_id").alias("c_msg_id"),
-        )
-        .withWatermark("c_ts", watermark_delay)
-    )
-    updates = (
-        parsed.filter(F.col("op") == "u")
-        .select(
-            F.col("key").alias("u_key"),
-            F.col("ts").alias("u_ts"),
-            F.col("msg_id").alias("u_msg_id"),
-        )
-        .withWatermark("u_ts", watermark_delay)
-    )
-    return creates.join(
-        updates,
-        F.expr(
-            f"c_key = u_key AND u_ts >= c_ts AND u_ts <= c_ts + INTERVAL {window}"
-        ),
-    ).select("c_key", "c_msg_id", "u_msg_id", "c_ts", "u_ts")
+    return _interval_join(stream, window, watermark_delay, "inner")
 
 
 def stream_stream_interval_join_outer(
@@ -284,32 +269,7 @@ def stream_stream_interval_join_outer(
     their watermark, and the join condition time-bounds the
     state-eviction horizon.
     """
-    parsed = cdc.parse_envelope(stream)
-    creates = (
-        parsed.filter(F.col("op") == "c")
-        .select(
-            F.col("key").alias("c_key"),
-            F.col("ts").alias("c_ts"),
-            F.col("msg_id").alias("c_msg_id"),
-        )
-        .withWatermark("c_ts", watermark_delay)
-    )
-    updates = (
-        parsed.filter(F.col("op") == "u")
-        .select(
-            F.col("key").alias("u_key"),
-            F.col("ts").alias("u_ts"),
-            F.col("msg_id").alias("u_msg_id"),
-        )
-        .withWatermark("u_ts", watermark_delay)
-    )
-    return creates.join(
-        updates,
-        F.expr(
-            f"c_key = u_key AND u_ts >= c_ts AND u_ts <= c_ts + INTERVAL {window}"
-        ),
-        "leftOuter",
-    ).select("c_key", "c_msg_id", "u_msg_id", "c_ts", "u_ts")
+    return _interval_join(stream, window, watermark_delay, "leftOuter")
 
 
 def deduped_stream(

@@ -1,11 +1,10 @@
-"""Custom stateful streaming: process-lifetime monotone counters.
+"""Custom stateful streaming: the first-seen dedup ledger.
 
-The reference's Prometheus counters (src/mq/mod.rs:35-59) are
-unkeyed-by-time monotone state. Spark's built-in streaming groupBy
-covers the semantics (streaming/pipeline.py); this module shows the
-*custom-operator* escape hatch — ``applyInPandasWithState`` — for
-stateful logic the built-ins can't express (per-key state machines,
-custom eviction, session carryover).
+Spark's built-in streaming operators cover windowed counts, dedup and
+joins (streaming/pipeline.py); this module is the *custom-operator*
+escape hatch — ``applyInPandasWithState`` — for stateful logic the
+built-ins can't express (per-key state machines, custom eviction,
+session carryover).
 
 State is partitioned by group key, so the operator scales exactly like
 a streaming aggregation: state rows live in the state store shuffled
@@ -20,43 +19,6 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-COUNTER_OUTPUT_SCHEMA = "target_topic STRING, op STRING, total BIGINT"
-COUNTER_STATE_SCHEMA = "total BIGINT"
-
-
-def _update_counter(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Accumulate a monotone per-(target_topic, op) count across
-    micro-batches — the flink_kafka_filter_transform_count analog that
-    survives as managed, checkpointed state (stronger than the
-    reference's process-lifetime counters, SURVEY §7 risk register)."""
-    (total,) = state.get if state.exists else (0,)
-    for pdf in pdfs:
-        total += len(pdf)
-    state.update((total,))
-    yield pd.DataFrame({"target_topic": [key[0]], "op": [key[1]], "total": [total]})
-
-
-def running_counters(routed: DataFrame) -> DataFrame:
-    """Streaming running counters over the routed stream.
-
-    Input: the post-route stream with (target_topic, op) columns."""
-    return routed.groupBy("target_topic", "op").applyInPandasWithState(
-        _update_counter,
-        outputStructType=COUNTER_OUTPUT_SCHEMA,
-        stateStructType=COUNTER_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 # ---------------------------------------------------------------------------
 # Streaming first-seen dedup: per content hash, keep (first_doc_id,
@@ -110,49 +72,4 @@ def streaming_first_seen(hashed: DataFrame) -> DataFrame:
         stateStructType=FIRSTSEEN_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class _FirstSeenProcessor(StatefulProcessor):
-    """The same ledger on Spark 4's transformWithStateInPandas (typed
-    ValueState, the successor API). ENVIRONMENT GATE: the TWS state
-    protocol needs google.protobuf, which this container lacks — the
-    test auto-skips when the import is missing (same pattern as the
-    Kafka broker test); semantics are pinned by the
-    applyInPandasWithState twin above either way."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("firstseen", FIRSTSEEN_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
-        first_doc, n = (
-            tuple(self._state.get()) if self._state.exists() else (None, 0)
-        )
-        for pdf in rows:
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n += 1
-                if first_doc is None or d < first_doc:
-                    first_doc = d
-        self._state.update((first_doc, n))
-        yield pd.DataFrame(
-            {
-                "content_hash": [int(key[0])],
-                "first_doc_id": [first_doc],
-                "n_suppressed": [n - 1],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_first_seen_tws(hashed: DataFrame) -> DataFrame:
-    """transformWithStateInPandas variant of streaming_first_seen —
-    see _FirstSeenProcessor for the environment gate."""
-    return hashed.groupBy("content_hash").transformWithStateInPandas(
-        _FirstSeenProcessor(),
-        outputStructType=FIRSTSEEN_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
     )

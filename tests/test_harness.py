@@ -51,7 +51,7 @@ def test_final_line_keeps_the_slowest_queries_under_the_tail_budget():
         "total_with_faces_sec", "methodology", "cold_sec", "warm_sec",
         "sf", "reps", "detail", "queries_omitted",
     }
-    assert payload["methodology"] == 2
+    assert payload["methodology"] == 3
     assert set(payload["faces"]) == set(bench.FACE_QUERIES)
     kept = payload["queries"]
     dropped = set(timings) - set(bench.FACE_QUERIES) - set(kept)

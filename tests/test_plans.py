@@ -42,17 +42,6 @@ def test_route_broadcast_join_compiles_small_tables(spark, sf_dir):
     assert px.sortmerge_join_count(df) == 0
 
 
-def test_route_paths_equivalent(spark, sf_dir):
-    """The compiled path and the distinct-keys join path must route
-    identically (same first-match winners, same dropped messages)."""
-    parsed = cdc.filter_deletes(cdc.parse_envelope(cdc_events_df(spark, sf_dir)))
-    cols = ["msg_id", "topic", "db", "table_name", "op", "target_topic"]
-    compiled = cdc.route_broadcast_join(parsed, rules_df(spark)).select(cols)
-    joined = cdc._route_distinct_keys_join(parsed, rules_df(spark)).select(cols)
-    assert compiled.exceptAll(joined).count() == 0
-    assert joined.exceptAll(compiled).count() == 0
-
-
 def test_route_rules_probe_is_memoized(spark):
     """Two DataFrames with the SAME logical rules plan share one probe
     (the eager collection job is paid per rule TABLE, not per call);
@@ -73,10 +62,9 @@ def test_route_rules_probe_is_memoized(spark):
 
 
 def test_route_equal_priority_tiebreak_matches_across_paths(spark):
-    """Equal-priority rules must pick the SAME winner on both adaptive
-    paths: the when-chain's sort and the join path's min_by both order
-    by (priority, target_topic), so crossing ROUTE_COMPILE_MAX_RULES
-    can never flip a routing decision (r3 ADVICE)."""
+    """Equal-priority rules pick a deterministic winner: the when-chain
+    orders rules by (priority, target_topic), NULL priority last
+    (r3 ADVICE)."""
     msgs = spark.createDataFrame(
         [(1, "t", "d", "tbl_1", "c"), (2, "t", "d", "tbl_2", "c")],
         "msg_id INT, topic STRING, db STRING, table_name STRING, op STRING",
@@ -89,15 +77,24 @@ def test_route_equal_priority_tiebreak_matches_across_paths(spark):
         {"priority": None, "source_topic": "t", "db": "d",
          "table_pattern": "tbl_.*", "target_topic": "fallback"},
     ]
-    rdf = spark.createDataFrame(
-        [(r["priority"], r["source_topic"], r["db"], r["table_pattern"], r["target_topic"])
-         for r in rules],
-        "priority INT, source_topic STRING, db STRING, table_pattern STRING, target_topic STRING",
-    )
     chain = cdc.route_when_chain(msgs, rules)
-    joined = cdc._route_distinct_keys_join(msgs, rdf)
     assert {r["target_topic"] for r in chain.collect()} == {"alpha"}
-    assert {r["target_topic"] for r in joined.collect()} == {"alpha"}
+
+
+def test_route_broadcast_join_rejects_tables_over_the_bound(spark, sf_dir, monkeypatch):
+    """A rule table over ROUTE_COMPILE_MAX_RULES rows is an input error
+    naming its size and the bound, not a switch to another routing
+    plan."""
+    import pytest
+
+    from flink_kafka_filter_transform_spark.operators import params
+
+    cdc.clear_route_rules_cache()
+    monkeypatch.setattr(params, "ROUTE_COMPILE_MAX_RULES", 3)
+    parsed = cdc.filter_deletes(cdc.parse_envelope(cdc_events_df(spark, sf_dir)))
+    with pytest.raises(ValueError, match=f"has {len(RULES)} rows, over the ROUTE_COMPILE_MAX_RULES bound of 3"):
+        cdc.route_broadcast_join(parsed, rules_df(spark))
+    assert len(cdc._RULES_PROBE_CACHE) == 0
 
 
 def test_route_broadcast_join_rejects_streaming_rules(spark, sf_dir, tmp_path):
@@ -190,23 +187,6 @@ def test_filter_pushdown_reaches_scan(spark, sf_dir):
     )
     assert any("event_type" in f for f in px.pushed_filters(df))
     assert px.scan_reads_only(df, {"event_id", "value", "event_type"})
-
-
-def test_route_join_never_shuffles_stream(spark, sf_dir):
-    """Distinct-key routing (the huge-rule-table path): the ONLY
-    shuffle carries unique (topic, db, table) triples — the message
-    stream itself reaches the sink through a map-only broadcast hash
-    join. min_by must still partial-aggregate (first-match per key
-    combines map-side), and no Window may appear (a window would
-    shuffle every matched row)."""
-    df = cdc._route_distinct_keys_join(
-        cdc.filter_deletes(cdc.parse_envelope(cdc_events_df(spark, sf_dir))), rules_df(spark)
-    )
-    plan = px.explain_str(df, "simple")
-    assert "partial_min_by" in plan
-    assert "Window" not in plan
-    assert px.count_shuffles(df) == 1  # the distinct-keys exchange only
-    assert px.has_broadcast_join(df)
 
 
 def test_tfidf_never_pins_vocabulary_broadcast(spark, sf_dir):

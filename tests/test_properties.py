@@ -1098,6 +1098,26 @@ def test_fps_driver_seeds_equal_distributed_walk(spark, monkeypatch):
     assert [vid for _, vid, _ in fast_nulls] == [vid for _, vid, _ in driver]
 
 
+def test_with_best_cell_empty_codebook_fails_on_both_paths(spark):
+    """An empty codebook is an error on both assignment paths: the
+    literal list raises while the plan is built, and the broadcast
+    DataFrame fails inside the plan instead of giving every row a NULL
+    cid. An empty corpus against it still yields no rows."""
+    import pytest
+
+    from flink_kafka_filter_transform_spark.operators import kmeans
+
+    vecs = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [1.0, 0.0])], "vec_id BIGINT, v ARRAY<DOUBLE>"
+    )
+    empty = spark.createDataFrame([], "cid BIGINT, centroid ARRAY<DOUBLE>")
+    with pytest.raises(ValueError, match="empty codebook"):
+        kmeans._with_best_cell(vecs, [])
+    with pytest.raises(Exception, match="empty codebook"):
+        kmeans._with_best_cell(vecs, empty).collect()
+    assert kmeans._with_best_cell(vecs.filter(F.col("vec_id") < 0), empty).collect() == []
+
+
 def test_kcore_peels_chains_keeps_cliques(spark):
     """The semantic distinction the operator exists for: a triangle
     (clique) survives 2-core peeling wholesale; a chain hanging off

@@ -15,7 +15,6 @@ from pyspark.sql import types as ST
 from flink_kafka_filter_transform_spark.operators import cdc
 from flink_kafka_filter_transform_spark.sources.cdc_fixture import RULES, cdc_events_df
 from flink_kafka_filter_transform_spark.streaming import pipeline as sp
-from flink_kafka_filter_transform_spark.streaming.state import running_counters
 
 
 def _jobs_per_batch(spark, q) -> float:
@@ -146,19 +145,6 @@ def test_transformed_stream_matches_batch(spark, sf_dir, cdc_dir, cdc_schema):
         )
     )
     want = {(r["topic"], r["key"], r["value"]) for r in batch.collect()}
-    assert got == want and len(got) > 0
-
-
-def test_outbound_counter_stream_matches_batch(spark, sf_dir, cdc_dir, cdc_schema):
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    _run_to_memory(sp.outbound_counter_stream(stream, RULES), "t_counts", "complete")
-    got = {
-        (r["target_topic"], r["op"]): r["cnt"] for r in spark.table("t_counts").collect()
-    }
-    want = {
-        (r["target_topic"], r["op"]): r["cnt"]
-        for r in cdc.cdc_pipeline(cdc_events_df(spark, sf_dir), RULES).collect()
-    }
     assert got == want and len(got) > 0
 
 
@@ -411,81 +397,6 @@ def test_streaming_first_seen_matches_batch_dedup(spark, sf_dir, tmp_path_factor
         .collect()
     }
     assert got == want and len(want) > 0
-
-
-def test_streaming_first_seen_tws_variant(spark, sf_dir, tmp_path_factory):
-    """transformWithStateInPandas twin of the first-seen ledger —
-    auto-skips where the TWS state protocol's google.protobuf
-    dependency is absent (this container), same gating pattern as the
-    Kafka broker test."""
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    from flink_kafka_filter_transform_spark.functions.hashing import portable_hash64
-    from flink_kafka_filter_transform_spark.sources.parquet import load_table
-    from flink_kafka_filter_transform_spark.streaming.state import (
-        streaming_first_seen_tws,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    hashed = docs.select(portable_hash64(F.col("text")).alias("content_hash"), "doc_id")
-    src_dir = str(tmp_path_factory.mktemp("firstseen_tws_src"))
-    hashed.repartition(3).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema("content_hash BIGINT, doc_id BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    _run_to_memory(streaming_first_seen_tws(stream), "t_firstseen_tws", "update")
-    sink = spark.table("t_firstseen_tws")
-    got = {
-        (r["content_hash"], r["first_doc_id"], r["n_suppressed"])
-        for r in sink.groupBy("content_hash")
-        .agg(
-            F.min("first_doc_id").alias("first_doc_id"),
-            F.max("n_suppressed").alias("n_suppressed"),
-        )
-        .collect()
-    }
-    want = {
-        (r["content_hash"], r["first_doc_id"], r["n_suppressed"])
-        for r in hashed.groupBy("content_hash")
-        .agg(
-            F.min("doc_id").alias("first_doc_id"),
-            (F.count(F.lit(1)) - 1).alias("n_suppressed"),
-        )
-        .collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_running_counters_stateful(spark, sf_dir, cdc_dir, cdc_schema):
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    routed = cdc.drop_unrouted(
-        cdc.route_when_chain(cdc.filter_deletes(cdc.parse_envelope(stream)), RULES)
-    )
-    _run_to_memory(running_counters(routed), "t_state", "update")
-    got = {
-        (r["target_topic"], r["op"]): r["total"] for r in spark.table("t_state").collect()
-    }
-    want = {
-        (r["target_topic"], r["op"]): r["cnt"]
-        for r in cdc.cdc_pipeline(cdc_events_df(spark, sf_dir), RULES).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_observed_metrics(spark, sf_dir, cdc_dir, cdc_schema):
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    parsed = cdc.parse_envelope(stream)
-    q = _run_to_memory(sp.observed(parsed).select("msg_id"), "t_obs", "append")
-    progress = q.recentProgress
-    totals = sum(
-        p["observedMetrics"]["cdc_in"]["n_messages"]
-        for p in progress
-        if "cdc_in" in p.get("observedMetrics", {})
-    )
-    assert totals == cdc.parse_envelope(cdc_events_df(spark, sf_dir)).count()
 
 
 def test_session_windowed_counts(spark, sf_dir, cdc_dir, cdc_schema):

@@ -6,9 +6,9 @@ tool makes doc rot a CI failure instead of a judgment-day surprise:
 1. every registered query name (``__spark_entry__.queries()``) must be
    mentioned in SURVEY.md or README.md — an operator that ships
    without documentation fails here;
-2. every ``module.function`` reference in SURVEY.md that names an
-   operator/streaming module must resolve to a real attribute — a
-   doc row pointing at a renamed or deleted function fails here.
+2. every ``module.function`` reference in SURVEY.md or README.md that
+   names an operator/streaming module must resolve to a real attribute
+   — a doc line pointing at a renamed or deleted function fails here.
 
 tests/test_contract.py runs both checks in CI.
 """
@@ -46,9 +46,13 @@ _DOTTED_RE = re.compile(
 )
 
 
-def _read(name: str) -> str:
-    with open(os.path.join(_REPO, name)) as f:
-        return f.read()
+def _docs() -> str:
+    """SURVEY.md and README.md, the two documents both checks read."""
+    text = ""
+    for name in ("SURVEY.md", "README.md"):
+        with open(os.path.join(_REPO, name)) as f:
+            text += f.read()
+    return text
 
 
 def undocumented_queries() -> list[str]:
@@ -56,15 +60,16 @@ def undocumented_queries() -> list[str]:
     sys.path.insert(0, _REPO)
     import __spark_entry__ as entry
 
-    docs = _read("SURVEY.md") + _read("README.md")
+    docs = _docs()
     return [name for name in entry.queries() if name not in docs]
 
 
 def dangling_doc_refs() -> list[str]:
-    """`module.function` references in SURVEY.md that don't resolve."""
+    """`module.function` references in SURVEY.md or README.md that
+    don't resolve."""
     pkg = "flink_kafka_filter_transform_spark"
     dangling = []
-    for ref in sorted(set(_DOTTED_RE.findall(_read("SURVEY.md")))):
+    for ref in sorted(set(_DOTTED_RE.findall(_docs()))):
         parts = ref.split(".")
         if parts[0] == "streaming":
             mod_name, attr = f"{pkg}.streaming.{parts[1]}", parts[2]
@@ -89,7 +94,7 @@ def main() -> int:
     for name in missing:
         print(f"UNDOCUMENTED query (not in SURVEY.md/README.md): {name}")
     for ref in dangling:
-        print(f"DANGLING doc reference (SURVEY.md): {ref}")
+        print(f"DANGLING doc reference (SURVEY.md/README.md): {ref}")
     return 1
 
 

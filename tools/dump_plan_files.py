@@ -17,6 +17,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+import __spark_entry__  # noqa: E402
 import bench  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -28,7 +29,7 @@ def main() -> None:
     outdir = os.path.join(ROOT, "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
-        df = bench.queries()[name](spark, SF_DIR)
+        df = __spark_entry__.queries()[name](spark, SF_DIR)
         text = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

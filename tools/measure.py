@@ -23,6 +23,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__  # noqa: E402
 import bench  # noqa: E402
 
 
@@ -31,7 +32,7 @@ def main() -> None:
     ap.add_argument("names", nargs="+", metavar="NAME")
     ap.add_argument("--reps", type=int, default=bench.REPS)
     args = ap.parse_args()
-    unknown = [n for n in args.names if n not in bench.queries()]
+    unknown = [n for n in args.names if n not in __spark_entry__.queries()]
     if unknown:
         ap.error(f"unknown queries: {unknown}")
     spark = bench.session("measure")
