@@ -335,6 +335,23 @@ def hamming_chunk_pairs(
     signatures, one bucket shuffle, no sort, no self-join, identical
     rows (the cap filter ``size <= cap`` is exactly the old per-bucket
     count window's predicate, oracle unchanged)."""
+    chunks = chunk_exploded(sig, sig_col, n_chunks=n_chunks, chunk_bits=chunk_bits)
+    cand = chunk_bucket_pairs(chunks, sig_col, bucket_cap).distinct()
+    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    return cand.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
+    )
+
+
+def chunk_exploded(
+    sig: DataFrame, sig_col: str, *, n_chunks: int, chunk_bits: int
+) -> DataFrame:
+    """(doc_id, <sig_col>, ci, ck): one row per exact ``chunk_bits``-wide
+    chunk ``ci`` of each signature, ``ck`` its value — the blocking
+    rows of hamming_chunk_pairs and of the streaming fingerprint index
+    (streaming.pipeline._fingerprint_index_batch), which must derive
+    chunks identically for the drained pair log to equal the batch
+    operator."""
     mask = (1 << chunk_bits) - 1
     chunk_structs = [
         F.struct(
@@ -345,26 +362,29 @@ def hamming_chunk_pairs(
         )
         for c in range(n_chunks)
     ]
-    buckets = (
-        sig.select(
-            "doc_id",
-            F.col(sig_col).alias("sig"),
-            F.explode(F.array(*chunk_structs)).alias("c"),
-        )
-        .select("doc_id", "sig", "c.ci", "c.ck")
-        .groupBy("ci", "ck")
+    return sig.select(
+        "doc_id", sig_col, F.explode(F.array(*chunk_structs)).alias("c")
+    ).select("doc_id", sig_col, "c.ci", "c.ck")
+
+
+def chunk_bucket_pairs(chunks: DataFrame, sig_col: str, bucket_cap: int) -> DataFrame:
+    """(doc_a, sh_a, doc_b, sh_b) for every pair of docs sharing a
+    (ci, ck) bucket of a chunk_exploded relation, both signatures kept
+    for the verify step. ONE groupBy collects each bucket as a sorted
+    array, buckets above ``bucket_cap`` drop whole, and pairs expand
+    map-side: element i pairs with every later element of the
+    doc_id-sorted array (structs sort by their first field), so
+    doc_a < doc_b by construction. Not distinct: two docs sharing
+    several chunks pair once per shared chunk."""
+    return (
+        chunks.groupBy("ci", "ck")
         .agg(
             F.array_sort(
-                F.collect_list(F.struct("doc_id", "sig"))
+                F.collect_list(F.struct("doc_id", F.col(sig_col).alias("sig")))
             ).alias("ds")
         )
         .filter((F.size("ds") >= 2) & (F.size("ds") <= bucket_cap))
-    )
-    # in-bucket pair expansion: element i pairs with every later
-    # element of the doc_id-sorted array (structs sort by first field),
-    # so doc_a < doc_b by construction; arrays are <= bucket_cap long
-    cand = (
-        buckets.select(
+        .select(
             F.explode(
                 F.expr(
                     "flatten(transform(ds, (a, i) -> "
@@ -375,11 +395,6 @@ def hamming_chunk_pairs(
             ).alias("p")
         )
         .select("p.doc_a", "p.sh_a", "p.doc_b", "p.sh_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
     )
 
 

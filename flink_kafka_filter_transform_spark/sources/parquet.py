@@ -159,6 +159,18 @@ def load_table(
     return df
 
 
+def _input_bytes(df: DataFrame) -> int:
+    """Total size of the files ``df`` scans (file metadata only, no
+    job; 0 for a relation that scans no file)."""
+    spark = df.sparkSession
+    conf = spark._jsc.hadoopConfiguration()
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    return sum(
+        path(f).getFileSystem(conf).getFileStatus(path(f)).getLen()
+        for f in df.inputFiles()
+    )
+
+
 def respread_if_underpartitioned(df: DataFrame) -> DataFrame:
     """Scale-adaptive pre-shuffle re-spread for operators whose MAP
     phase is heavy relative to its input (a count-distinct Expand, a
@@ -167,11 +179,15 @@ def respread_if_underpartitioned(df: DataFrame) -> DataFrame:
     toy-scale file is ONE partition — repartition it so the heavy map
     doesn't run on a handful of cores (r15, guide §2; measured: the
     orders profile ran 2.65 s of its 3.9 s wall in one task, the
-    customer variant explode 4.7 s in three). A real-scale table has
-    more scan partitions than cores and is never touched, so this can
-    never inject a full-data shuffle at 100 TB. The partition probe is
-    metadata only (no job)."""
+    customer variant explode 4.7 s in three). Like load_table's
+    rebalance, it only fires on inputs within _REBALANCE_MAX_BYTES, so
+    a large table read as few big partitions is never shuffled whole
+    either. The partition and size probes are metadata only (no
+    job)."""
     sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
+    if (
+        df.rdd.getNumPartitions() < sc.defaultParallelism
+        and _input_bytes(df) <= _REBALANCE_MAX_BYTES
+    ):
         return df.repartition(sc.defaultParallelism)
     return df

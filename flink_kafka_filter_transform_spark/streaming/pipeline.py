@@ -24,7 +24,11 @@ and returned unstarted; tests drive the file-stream twin.
 
 from __future__ import annotations
 
+import operator
 import re
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -460,9 +464,13 @@ def _read_batches(
     review). ``_batch_id`` is LongType because foreachBatch ids are
     64-bit and the value is parsed from the partition directory name
     against the declared type, whatever width F.lit() gave the
-    writer."""
+    writer. Before any batch wrote the path the relation is empty at
+    plan time, so a body runs one code path from its first batch on."""
     if not _hadoop_path_exists(spark, path):
-        return spark.createDataFrame([], schema)
+        # limit(0) makes the relation empty at plan time (an empty
+        # LocalRelation), so Catalyst prunes every join and union it
+        # feeds instead of planning them over an empty RDD
+        return spark.createDataFrame([], schema).limit(0)
     df = spark.read.schema(
         StructType(list(schema.fields) + [StructField("_batch_id", LongType())])
     ).parquet(path)
@@ -732,6 +740,90 @@ def _refuse_legacy_index(
             f"sink reads {state_dir}/{current}. Replay the stream into a "
             "fresh state dir and checkpoint to rebuild it."
         )
+
+
+@dataclass(frozen=True)
+class _PairIndex:
+    """One capped blocking index, declared once per pair-index face.
+
+    The stored base relation lives under ``{state_dir}/{base}`` as
+    ``_batch_id`` partitions, one row per entity. Its blocking rows are
+    DERIVED on read by ``project`` (band_relation over sigs, the chunk
+    explode over hashes, variant_exploded over names, identity over
+    frames), never stored. ``keys`` are the blocking keys, ``cap`` the
+    lifetime per-key cap counted in ``{counts}_v{batch_id}``, ``id``
+    the entity column the cross join guards on, and ``legacy`` a
+    retired base dir that must not be read as an empty index."""
+
+    base: str
+    project: Callable[[DataFrame], DataFrame]
+    keys: tuple[str, ...]
+    cap: int
+    counts: str
+    id: str = "doc_id"
+    legacy: str | None = None
+
+
+def _pair_index_batch(
+    base_rows: DataFrame,
+    batch_id: int,
+    state_dir: str,
+    out_dir: str,
+    index: _PairIndex,
+    pairs: Callable[[DataFrame, DataFrame, DataFrame, DataFrame], DataFrame],
+) -> None:
+    """One micro-batch of a capped pair index: the protocol the lsh,
+    phash/afp, vfp and edit faces share, written once.
+
+    1. ``base_rows`` (this batch's base rows) persist for the batch and
+       are released before it returns, also on a failed write: every
+       consumer below reads them, and unpersisted each would re-run the
+       face's decode or hash stage; a leaked block taxes every later
+       query in a shared JVM.
+    2. The blocking rows' per-key counts sum-merge into the lifetime
+       counts (_accumulated_over_cap); keys over ``cap`` drop from BOTH
+       sides before any pairing, so the cap binds on the accumulated
+       bucket (index + batch).
+    3. The stored base relation is read strictly before the batch
+       (_read_batches: a replay's own partial write is excluded, and
+       before the first batch the relation is empty at plan time) and
+       projected to its blocking rows.
+    4. Index (alias ``a``) equi-joins batch (alias ``b``) on the keys
+       with ``a.{id} != b.{id}``. Index and batch entities are disjoint
+       under the checkpoint's replay contract (a doc arrives in one
+       batch, a failed batch replays with the same id and input), so
+       each cross-batch pair is found exactly once, in the batch its
+       LATER member arrives in. The guard only stops a doc redelivered
+       under a NEW batch id from pairing with itself; such redelivery
+       is outside the delivery contract (it would also re-emit the
+       doc's old pairs, which no per-batch guard can repair).
+    5. ``pairs(base, new, cross, stored)`` builds the verified pair log
+       from the persisted base rows, the batch's capped blocking rows,
+       that cross join and the pre-batch base relation; it lands as
+       the batch's pair-log partition, the base rows append to the
+       index, and _LATEST publishes last."""
+    spark = _batch_aqe(base_rows.sparkSession)
+    if index.legacy is not None:
+        _refuse_legacy_index(spark, state_dir, index.legacy, index.base)
+    path, keys = f"{state_dir}/{index.base}", list(index.keys)
+    base = base_rows.persist()
+    try:
+        rows = index.project(base)
+        bn = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+        over_cap = _accumulated_over_cap(
+            spark, state_dir, index.counts, bn, batch_id, index.cap, keys
+        )
+        stored = _read_batches(spark, path, base.schema, F.col("_batch_id") < batch_id)
+        old = index.project(stored).join(over_cap, keys, "left_anti")
+        new = rows.join(over_cap, keys, "left_anti")
+        on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        on.append(F.col(f"a.{index.id}") != F.col(f"b.{index.id}"))
+        cross = old.alias("a").join(new.alias("b"), reduce(operator.and_, on))
+        _write_batch_partition(pairs(base, new, cross, stored), out_dir, batch_id)
+        _write_batch_partition(base, path, batch_id)
+    finally:
+        base.unpersist()
+    _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def scd2_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -1019,7 +1111,11 @@ def lsh_index_sink(
     exactly one batch, the one its LATER member arrives in, so no
     cross-batch dedup state is needed); (3) exact-Jaccard verification
     against the stored shingle sets; (4) verified pairs append to the
-    pair log, the batch's signatures+bands append to the index.
+    pair log, the batch's signatures to the index (its band rows are
+    derived from the stored signatures on read, never written).
+    Steps (2)-(4) around this face's own signature stage, within-batch
+    self-join and Jaccard verify are the _pair_index_batch protocol the
+    capped pair-index faces share.
 
     After the stream drains, the pair log equals the batch operator's
     output — tests/test_streaming.py proves it — PROVIDED no band
@@ -1056,7 +1152,8 @@ def lsh_index_sink(
 def _lsh_index_batch(
     batch_df: DataFrame, batch_id: int, state_dir: str, out_dir: str
 ) -> None:
-    """One lsh_index_sink micro-batch (module-level for replay tests)."""
+    """One lsh_index_sink micro-batch (module-level for replay tests):
+    the _pair_index_batch protocol over the signature index."""
     from flink_kafka_filter_transform_spark.operators import params
     from flink_kafka_filter_transform_spark.operators.dedup import (
         band_relation,
@@ -1064,103 +1161,38 @@ def _lsh_index_batch(
         minhash_signatures,
     )
 
-    spark = _batch_aqe(batch_df.sparkSession)
-    # The batch's signature relation feeds FIVE consumers (bucket
-    # counts, probe side, within-batch self-join, verification sigs,
-    # the sig state write); unpersisted, each consumer would re-run
-    # the shingling+minhash lineage over the batch. Materialize it
-    # once per batch — batch-sized, released before the batch returns.
-    sig = minhash_signatures(batch_df).persist()
-    try:
-        bands = band_relation(sig)
-        within = lsh_candidates(sig)
-        # Accumulated bucket sizes are MAINTAINED as sum-merged versioned
-        # state (bcounts_v{batch_id}), not recomputed: the r6
-        # implementation re-windowed the ENTIRE accumulated index every
-        # batch — a shuffle+sort of all index rows whose cost grows with
-        # the stream, O(index) per batch where the merge is O(distinct
-        # band keys) with map-side combine and no sort. Cap decisions are
-        # identical: n_total(key) = sum of every prior batch's
-        # contributions + this batch's, exactly what the window counted.
-        bn = bands.groupBy("band_idx", "band_key").agg(F.count(F.lit(1)).alias("_n"))
-        over_cap = _accumulated_over_cap(
-            spark, state_dir, "bcounts", bn, batch_id,
-            params.LSH_BUCKET_CAP, ["band_idx", "band_key"],
-        )
-        # no bare except: before the first published batch the state dirs
-        # simply don't exist (an actual read failure should surface, not
-        # silently reset the index to empty — r5 ADVICE). The existence
-        # probe goes through the Hadoop FileSystem API, not os.path — the
-        # state dir is any Hadoop-compatible URI at scale (S3/HDFS), where
-        # a driver-local isdir would be False forever and silently disable
-        # the cross-batch index.
-        if _hadoop_path_exists(spark, f"{state_dir}/sigs"):
-            idx_sigs = _read_batches(
-                spark, f"{state_dir}/sigs", sig.schema, F.col("_batch_id") < batch_id
-            )
-            # r15 (guide §6/§2 — VERDICT r14 item 5): the accumulated
-            # band index is a DETERMINISTIC PROJECTION of the signature
-            # index (band_relation is a pure map over the mh columns),
-            # so maintaining it as separate state bought nothing and
-            # cost one 4-rows-per-doc parquet write + one partition
-            # listing EVERY micro-batch. Derive it from the sig index
-            # instead — parquet column pruning reads doc_id + the mh
-            # columns only (the heavy shingle arrays stay unread), and
-            # the derived rows are bit-identical to what the dropped
-            # state dir contained.
-            idx_bands = band_relation(idx_sigs)
-        else:
-            idx_bands, idx_sigs = None, None
-        if idx_bands is not None:
-            # cap on the ACCUMULATED bucket (index + batch contributions):
-            # drop rows in over-cap buckets on BOTH sides before probing.
-            # Index docs and batch docs are disjoint sets (a doc arrives in
-            # exactly one batch; a replay's own partial write is excluded
-            # by the _batch_id < batch_id filter), so side provenance is
-            # the relation itself — no doc-id semi-joins needed.
-            old = idx_bands.join(over_cap, ["band_idx", "band_key"], "left_anti")
-            new = bands.join(over_cap, ["band_idx", "band_key"], "left_anti")
-            cross = (
-                old.alias("a")
-                .join(
-                    new.alias("b"),
-                    (F.col("a.band_idx") == F.col("b.band_idx"))
-                    & (F.col("a.band_key") == F.col("b.band_key"))
-                    & (F.col("a.doc_id") != F.col("b.doc_id")),
-                )
-                .select(
-                    F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-                    F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-                )
-                .distinct()
-            )
-            cand = within.unionByName(cross).distinct()
-            all_sigs = idx_sigs.unionByName(sig)
-        else:
-            cand = within
-            all_sigs = sig
+    def pairs(sig, new, cross, idx_sigs):
+        # within-batch pairs come from the batch operator's own
+        # self-join (its per-batch window cap included)
+        cand = lsh_candidates(sig).unionByName(
+            cross.select(
+                F.least("a.doc_id", "b.doc_id").alias("doc_a"),
+                F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
+            ).distinct()
+        ).distinct()
+        all_sigs = idx_sigs.unionByName(sig)
         s1 = all_sigs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
         s2 = all_sigs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
         jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
             F.array_union("sh_a", "sh_b")
         )
-        verified = (
+        return (
             cand.join(s1, "doc_a")
             .join(s2, "doc_b")
             .select("doc_a", "doc_b", jac.alias("jaccard"))
             .filter(F.col("jaccard") >= params.JACCARD_THRESHOLD)
         )
-        _write_batch_partition(verified, out_dir, batch_id)
-        # ONE state write: the band index is derived from sigs on read
-        # (see above, r15) — its per-batch write is gone
-        _write_batch_partition(sig, f"{state_dir}/sigs", batch_id)
-    finally:
-        # Everything downstream of sig has been written to parquet; the
-        # block-manager copy must not outlive the batch (bench r5 lesson:
-        # leaked blocks tax every later query in a shared JVM).
-        sig.unpersist()
-    _write_latest_pointer(spark, state_dir, batch_id)
 
+    # the stored relation is the signatures (the verify step reads
+    # their shingles); the band rows are a pure map over the mh columns,
+    # derived on read with parquet reading only doc_id + mh*
+    index = _PairIndex(
+        "sigs", band_relation, ("band_idx", "band_key"),
+        params.LSH_BUCKET_CAP, "bcounts",
+    )
+    _pair_index_batch(
+        minhash_signatures(batch_df), batch_id, state_dir, out_dir, index, pairs
+    )
 
 
 def phash_index_sink(
@@ -1182,7 +1214,7 @@ def phash_index_sink(
     bit_count(xor) <= PHASH_MAX_HAMMING on the hashes already in hand
     — unlike the LSH face there is NO separate verification state to
     maintain; (5) verified pairs append to the pair log, the batch's
-    chunk rows append to the index.
+    (doc_id, hash) rows to the index (chunk rows are derived on read).
 
     After the stream drains, the pair log equals image_phash_pairs —
     the CI parity test proves it against the SAME DuckDB oracle —
@@ -1242,119 +1274,50 @@ def _fingerprint_index_batch(
 ) -> None:
     """One micro-batch of the GENERIC Hamming-fingerprint index sink —
     the shared engine behind phash_index_sink (images) and
-    afp_index_sink (audio). Both batch operators already share
-    dedup.hamming_chunk_pairs for their blocking; this is the same
-    factoring on the streaming side (r10): ``hash_stage`` is the
-    map-only Arrow decode+hash stage, ``hash_col`` its output column,
-    and the chunk/cap/probe/verify/publish protocol is identical."""
-    spark = _batch_aqe(batch_df.sparkSession)
-    _refuse_legacy_index(spark, state_dir, "chunks", "hashes")
-    mask = (1 << chunk_bits) - 1
-    chunk_structs = [
-        F.struct(
-            F.lit(c).alias("ci"),
-            F.shiftright(F.col(hash_col), chunk_bits * c)
-            .bitwiseAND(F.lit(mask))
-            .alias("ck"),
-        )
-        for c in range(n_chunks)
-    ]
-    # The chunk relation feeds four consumers (bucket counts, the
-    # within-batch buckets, the index probe, the state append);
-    # unpersisted, each would re-run the DECODE stage over the batch —
-    # the exact re-evaluation the batch operator's r9 rework removed.
-    chunks = (
-        hash_stage(batch_df)
-        .select("doc_id", hash_col, F.explode(F.array(*chunk_structs)).alias("c"))
-        .select("doc_id", hash_col, "c.ci", "c.ck")
-        .persist()
+    afp_index_sink (audio): ``hash_stage`` is the map-only Arrow
+    decode+hash stage and ``hash_col`` its output column. The index
+    stores ONE (doc_id, hash) row per doc, the decode result worth
+    keeping; its ``n_chunks`` chunk rows are derived on read by
+    dedup.chunk_exploded, and the within-batch buckets expand through
+    dedup.chunk_bucket_pairs, the same two helpers behind the batch
+    operators' dedup.hamming_chunk_pairs. The cap/probe/publish
+    protocol is _pair_index_batch."""
+    from flink_kafka_filter_transform_spark.operators.dedup import (
+        chunk_bucket_pairs,
+        chunk_exploded,
     )
-    try:
-        bn = chunks.groupBy("ci", "ck").agg(F.count(F.lit(1)).alias("_n"))
-        over_cap = _accumulated_over_cap(
-            spark, state_dir, "ccounts", bn, batch_id, bucket_cap, ["ci", "ck"]
-        )
-        # cap on the ACCUMULATED bucket (index + this batch): both sides
-        # drop over-cap keys before any pairing, like the LSH face.
-        new = chunks.join(over_cap, ["ci", "ck"], "left_anti")
-        within_buckets = (
-            new.groupBy("ci", "ck")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("doc_id", F.col(hash_col).alias("sig")))
-                ).alias("ds")
+
+    def pairs(hashes, new, cross, stored):
+        # the a side is always the indexed doc, so (sh_a, sh_b) is
+        # deterministic per pair and the distinct() below is exact;
+        # bit_count(xor) is symmetric, so no orientation beyond the ids.
+        # The bucket cap never binds within the batch: ``new`` already
+        # lost every key whose lifetime count exceeds it.
+        cand = chunk_bucket_pairs(new, hash_col, bucket_cap).unionByName(
+            cross.select(
+                F.least("a.doc_id", "b.doc_id").alias("doc_a"),
+                F.col(f"a.{hash_col}").alias("sh_a"),
+                F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
+                F.col(f"b.{hash_col}").alias("sh_b"),
             )
-            .filter(F.size("ds") >= 2)
-        )
-        within = within_buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (a, i) -> "
-                    "transform(slice(ds, i + 2, size(ds) - i - 1), b -> "
-                    "struct(a.doc_id AS doc_a, a.sig AS sh_a, "
-                    "b.doc_id AS doc_b, b.sig AS sh_b))))"
-                )
-            ).alias("p")
-        ).select("p.doc_a", "p.sh_a", "p.doc_b", "p.sh_b")
-        if _hadoop_path_exists(spark, f"{state_dir}/hashes"):
-            # r15 (the bands-state rule, guide §6/§2): the chunk rows
-            # are a DETERMINISTIC EXPLOSION of the (doc_id, hash)
-            # fingerprints, so the state stores ONE row per doc — the
-            # expensive DECODE result, which is the thing worth keeping
-            # — and the n_chunks bucket rows are re-derived on read
-            # instead of written every micro-batch.
-            idx_hashes = _read_batches(
-                spark,
-                f"{state_dir}/hashes",
-                chunks.select("doc_id", hash_col).schema,
-                F.col("_batch_id") < batch_id,
-            )
-            idx = idx_hashes.select(
-                "doc_id", hash_col, F.explode(F.array(*chunk_structs)).alias("c")
-            ).select("doc_id", hash_col, "c.ci", "c.ck")
-            old = idx.join(over_cap, ["ci", "ck"], "left_anti")
-            # index docs and batch docs are disjoint (a doc arrives in one
-            # batch; a replay's own partial write is excluded by the
-            # _batch_id < batch_id filter) — the a side is always the
-            # indexed doc, so (sh_a, sh_b) assignment is deterministic and
-            # the pair distinct() below is exact.
-            cross = (
-                old.alias("a")
-                .join(
-                    new.alias("b"),
-                    (F.col("a.ci") == F.col("b.ci"))
-                    & (F.col("a.ck") == F.col("b.ck"))
-                    & (F.col("a.doc_id") != F.col("b.doc_id")),
-                )
-                .select(
-                    F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-                    F.col(f"a.{hash_col}").alias("sh_a"),
-                    F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-                    F.col(f"b.{hash_col}").alias("sh_b"),
-                )
-            )
-            cand = within.unionByName(cross).distinct()
-        else:
-            cand = within.distinct()
+        ).distinct()
         hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        verified = cand.select(
-            "doc_a", "doc_b", hamming.alias("hamming")
-        ).filter(F.col("hamming") <= max_hamming)
-        _write_batch_partition(verified, out_dir, batch_id)
-        # one (doc_id, hash) row per input row: the ci==0 slice of the
-        # PERSISTED chunk relation (exactly one chunk row per
-        # fingerprint, no shuffle, no decode re-run)
-        _write_batch_partition(
-            chunks.filter(F.col("ci") == 0).select("doc_id", hash_col),
-            f"{state_dir}/hashes",
-            batch_id,
+        return cand.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
+            F.col("hamming") <= max_hamming
         )
-    finally:
-        # released even on a failed write: a leaked block taxes
-        # every later query in a shared JVM (bench r5 lesson /
-        # r12 ADVICE)
-        chunks.unpersist()
-    _write_latest_pointer(spark, state_dir, batch_id)
+
+    index = _PairIndex(
+        "hashes",
+        lambda df: chunk_exploded(df, hash_col, n_chunks=n_chunks, chunk_bits=chunk_bits),
+        ("ci", "ck"),
+        bucket_cap,
+        "ccounts",
+        legacy="chunks",
+    )
+    _pair_index_batch(
+        hash_stage(batch_df).select("doc_id", hash_col),
+        batch_id, state_dir, out_dir, index, pairs,
+    )
 
 
 def afp_index_sink(
@@ -1409,8 +1372,9 @@ def vfp_index_sink(
     The video op differs from the Hamming pair: a doc carries MANY
     frame fingerprints, matching is EXACT fh equality (no hamming
     verify), and the pair survives at >= VID_MIN_MATCH shared frames
-    — so the shared engine's distinct()-then-verify shape doesn't
-    apply and this sink keeps the COUNT path instead:
+    — so the fingerprint engine's distinct()-then-verify shape doesn't
+    apply and this sink keeps the COUNT path instead, on the same
+    _pair_index_batch cap/probe/publish protocol:
 
     per batch: (1) real demux + per-frame dHash for arriving videos
     (the IDENTICAL video_frame_hashes Arrow stage), DISTINCT (doc,
@@ -1445,25 +1409,16 @@ def vfp_index_sink(
 def _vfp_index_batch(
     batch_df: DataFrame, batch_id: int, state_dir: str, out_dir: str
 ) -> None:
-    """One vfp_index_sink micro-batch (module-level for replay
-    tests)."""
+    """One vfp_index_sink micro-batch (module-level for replay tests):
+    the _pair_index_batch protocol over the frame index, which stores
+    its blocking rows as they are (identity projection)."""
     from flink_kafka_filter_transform_spark.operators import params
     from flink_kafka_filter_transform_spark.operators.multimodal import (
         SORTED_PAIR_EXPANSION,
         video_frame_hashes,
     )
 
-    spark = _batch_aqe(batch_df.sparkSession)
-    # The frame relation feeds three consumers (bucket counts, the
-    # within-batch buckets, the index probe, the state append);
-    # unpersisted, each would re-run the demux+decode Arrow stage.
-    fr = video_frame_hashes(batch_df).select("doc_id", "fh").distinct().persist()
-    try:
-        bn = fr.groupBy("fh").agg(F.count(F.lit(1)).alias("_n"))
-        over_cap = _accumulated_over_cap(
-            spark, state_dir, "fcounts", bn, batch_id, params.VID_FRAME_CAP, ["fh"]
-        )
-        new = fr.join(over_cap, ["fh"], "left_anti")
+    def pairs(fr, new, cross, stored):
         within = (
             new.groupBy("fh")
             .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
@@ -1471,60 +1426,26 @@ def _vfp_index_batch(
             .select(F.explode(F.expr(SORTED_PAIR_EXPANSION)).alias("p"))
             .select("p.doc_a", "p.doc_b")
         )
-        if _hadoop_path_exists(spark, f"{state_dir}/frames"):
-            idx = _read_batches(
-                spark, f"{state_dir}/frames", fr.schema, F.col("_batch_id") < batch_id
-            )
-            old = idx.join(over_cap, ["fh"], "left_anti")
-            # index docs and batch docs are disjoint under exactly-once
-            # delivery, so least/greatest orients each cross pair
-            # deterministically and one row per shared fh survives —
-            # exactly the count contribution the batch operator's bucket
-            # expansion produces. The explicit != guard (the sibling
-            # faces' rule, r11 review) covers at-least-once REDELIVERY of
-            # a whole doc in a later batch: without it the doc would
-            # cross-join its own indexed frames into a self-pair whose
-            # n_matched is its full frame count — a pair the batch
-            # operator can never emit. The guard stops at SELF-pairs by
-            # design: cross-batch whole-doc redelivery is OUTSIDE the
-            # delivery contract here, exactly as for the sibling faces —
-            # the checkpoint replays a failed batch with the SAME batch_id
-            # and input, which the strictly-pre-batch index read plus
-            # the partition overwrite make fully idempotent; a doc re-arriving
-            # under a NEW batch_id would double-count shared-frame rows
-            # for pairs with genuinely-new docs and re-emit its old pairs
-            # under the new partition, and no per-batch guard can repair
-            # that without a doc-id dedup ledger upstream (r11 ADVICE —
-            # documented, not defended, because the mode is unreachable
-            # under the checkpoint contract).
-            cross = (
-                old.alias("a")
-                .join(
-                    new.alias("b"),
-                    (F.col("a.fh") == F.col("b.fh"))
-                    & (F.col("a.doc_id") != F.col("b.doc_id")),
-                )
-                .select(
-                    F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-                    F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-                )
-            )
-            match_rows = within.unionByName(cross)
-        else:
-            match_rows = within
-        pairs = (
-            match_rows.groupBy("doc_a", "doc_b")
+        # one match row per shared under-cap fh, exactly the count
+        # contribution the batch operator's bucket expansion produces;
+        # the protocol's a.doc_id != b.doc_id guard keeps a redelivered
+        # doc from matching its own indexed frames (a self-pair whose
+        # n_matched is its full frame count, which the batch operator
+        # can never emit)
+        cross = cross.select(
+            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
+            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
+        )
+        return (
+            within.unionByName(cross)
+            .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("n_matched"))
             .filter(F.col("n_matched") >= params.VID_MIN_MATCH)
         )
-        _write_batch_partition(pairs, out_dir, batch_id)
-        _write_batch_partition(fr, f"{state_dir}/frames", batch_id)
-    finally:
-        # released even on a failed write: a leaked block taxes
-        # every later query in a shared JVM (bench r5 lesson /
-        # r12 ADVICE)
-        fr.unpersist()
-    _write_latest_pointer(spark, state_dir, batch_id)
+
+    index = _PairIndex("frames", lambda df: df, ("fh",), params.VID_FRAME_CAP, "fcounts")
+    fr = video_frame_hashes(batch_df).select("doc_id", "fh").distinct()
+    _pair_index_batch(fr, batch_id, state_dir, out_dir, index, pairs)
 
 
 def ivo_overlap_sink(
@@ -1596,31 +1517,27 @@ def _ivo_overlap_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> No
             .filter((F.col("a_iid") < F.col("b_iid")) & overlap_pred())
             .select("suppkey", overlap_days().alias("overlap_days"))
         )
-        if _hadoop_path_exists(spark, f"{state_dir}/iv"):
-            # the index stores ex's own column names, so the probe side is
-            # the SAME overlap_side projection the batch operator uses —
-            # no hand-rolled copy to drift (r11 review)
-            idx = overlap_side(
-                _read_batches(
-                    spark, f"{state_dir}/iv", iv.schema, F.col("_batch_id") < batch_id
-                ),
-                "a",
-            )
-            # a_iid != b_iid mirrors the batch op's strict a_iid < b_iid:
-            # iids are NOT unique in the fixture (duplicate (orderkey,
-            # linenumber) rows), and same-iid pairs are excluded from the
-            # pair space on both engines — without this, two same-iid rows
-            # landing in different batches would emit a self-pair the
-            # batch operator never counts.
-            cross = (
-                idx.join(right.hint("shuffle_hash"), ["suppkey", "_bucket"])
-                .filter((F.col("a_iid") != F.col("b_iid")) & overlap_pred())
-                .select("suppkey", overlap_days().alias("overlap_days"))
-            )
-            match_rows = within.unionByName(cross)
-        else:
-            match_rows = within
-        delta = match_rows.groupBy("suppkey").agg(
+        # the index stores ex's own column names, so the probe side is
+        # the SAME overlap_side projection the batch operator uses — no
+        # hand-rolled copy to drift
+        idx = overlap_side(
+            _read_batches(
+                spark, f"{state_dir}/iv", iv.schema, F.col("_batch_id") < batch_id
+            ),
+            "a",
+        )
+        # a_iid != b_iid mirrors the batch op's strict a_iid < b_iid:
+        # iids are NOT unique in the fixture (duplicate (orderkey,
+        # linenumber) rows), and same-iid pairs are excluded from the
+        # pair space on both engines — without this, two same-iid rows
+        # landing in different batches would emit a self-pair the batch
+        # operator never counts.
+        cross = (
+            idx.join(right.hint("shuffle_hash"), ["suppkey", "_bucket"])
+            .filter((F.col("a_iid") != F.col("b_iid")) & overlap_pred())
+            .select("suppkey", overlap_days().alias("overlap_days"))
+        )
+        delta = within.unionByName(cross).groupBy("suppkey").agg(
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum("overlap_days").alias("sum_overlap_days"),
             F.max("overlap_days").alias("max_overlap_days"),
@@ -1652,7 +1569,7 @@ def edit_index_sink(
     """Incremental edit-distance record linkage — the streaming face
     of operators.linkage.edit_distance_pairs (r12, VERDICT r11
     item 6), closing the linkage family's streaming story with the
-    _fingerprint_index_batch protocol over VARIANT keys:
+    _pair_index_batch protocol over VARIANT keys:
 
     per batch: (1) arriving entities explode into their symmetric-
     delete variant rows (the SHARED linkage.variant_exploded — recall
@@ -1669,14 +1586,14 @@ def edit_index_sink(
     member arrives in; (4) verification is the built-in levenshtein
     on the names already in hand — no separate verify state;
     (5) verified pairs land in the pair log, the batch's (key, name)
-    rows in the name index.
+    rows in the name index, whose variant rows are derived on read.
 
     Cross-probe pairs orient by least/greatest over (k, nm) structs —
     the SAME lexicographic ordering array_sort gives the within-batch
     blocks — and the explicit a.k != b.k guard is the sibling faces'
     redelivery rule (same-batch-id replay is fully idempotent;
     cross-batch whole-doc redelivery is outside the delivery
-    contract, as documented at the vfp probe).
+    contract, as _pair_index_batch documents).
 
     After the drain the pair log equals the one-shot batch operator,
     and the SAME naive quadratic DuckDB oracle gates the blocking,
@@ -1706,26 +1623,15 @@ def _edit_index_batch(
     state_dir: str,
     out_dir: str,
 ) -> None:
-    """One edit_index_sink micro-batch (module-level for replay
-    tests)."""
+    """One edit_index_sink micro-batch (module-level for replay tests):
+    the _pair_index_batch protocol over the name index."""
     from flink_kafka_filter_transform_spark.operators.linkage import (
         EDIT_BLOCK_CAP,
         VARIANT_PAIR_EXPANSION,
         variant_exploded,
     )
 
-    spark = _batch_aqe(batch_df.sparkSession)
-    _refuse_legacy_index(spark, state_dir, "variants", "names")
-    # the variant relation feeds three consumers (block counts, the
-    # within-batch blocks, the index probe) plus the state append;
-    # persisted so the explode runs once per batch
-    ex = variant_exploded(batch_df, key_col, name_col).persist()
-    try:
-        bn = ex.groupBy("variant").agg(F.count(F.lit(1)).alias("_n"))
-        over_cap = _accumulated_over_cap(
-            spark, state_dir, "vcounts", bn, batch_id, EDIT_BLOCK_CAP, ["variant"]
-        )
-        new = ex.join(over_cap, ["variant"], "left_anti")
+    def pairs(names, new, cross, stored):
         within = (
             new.groupBy("variant")
             .agg(F.array_sort(F.collect_set(F.struct("k", "nm"))).alias("ds"))
@@ -1733,43 +1639,21 @@ def _edit_index_batch(
             .select(F.explode(F.expr(VARIANT_PAIR_EXPANSION)).alias("p"))
             .select("p.ak", "p.anm", "p.bk", "p.bnm")
         )
-        if _hadoop_path_exists(spark, f"{state_dir}/names"):
-            # r15 (the bands-state rule, guide §6/§2): the variant index
-            # is a DETERMINISTIC EXPLOSION of the (k, nm) name rows
-            # (variant_exploded is a pure map), so the state stores ONE
-            # narrow row per entity and the ~L+1 variant rows — each
-            # carrying the name AND a variant string — are re-derived on
-            # read instead of written every micro-batch.
-            idx_names = _read_batches(
-                spark,
-                f"{state_dir}/names",
-                ex.select("k", "nm").schema,
-                F.col("_batch_id") < batch_id,
-            )
-            idx = variant_exploded(idx_names, "k", "nm")
-            old = idx.join(over_cap, ["variant"], "left_anti")
-            sa = F.struct(F.col("a.k").alias("k"), F.col("a.nm").alias("nm"))
-            sb = F.struct(F.col("b.k").alias("k"), F.col("b.nm").alias("nm"))
-            lo, hi = F.least(sa, sb), F.greatest(sa, sb)
-            cross = (
-                old.alias("a")
-                .join(
-                    new.alias("b"),
-                    (F.col("a.variant") == F.col("b.variant"))
-                    & (F.col("a.k") != F.col("b.k")),
-                )
-                .select(
-                    lo["k"].alias("ak"),
-                    lo["nm"].alias("anm"),
-                    hi["k"].alias("bk"),
-                    hi["nm"].alias("bnm"),
-                )
-            )
-            cand = within.unionByName(cross).distinct()
-        else:
-            cand = within.distinct()
-        verified = (
-            cand.withColumn("distance", F.levenshtein("anm", "bnm"))
+        # least/greatest over (k, nm) structs: the lexicographic order
+        # array_sort gives the within-batch blocks
+        sa = F.struct(F.col("a.k").alias("k"), F.col("a.nm").alias("nm"))
+        sb = F.struct(F.col("b.k").alias("k"), F.col("b.nm").alias("nm"))
+        lo, hi = F.least(sa, sb), F.greatest(sa, sb)
+        cross = cross.select(
+            lo["k"].alias("ak"),
+            lo["nm"].alias("anm"),
+            hi["k"].alias("bk"),
+            hi["nm"].alias("bnm"),
+        )
+        return (
+            within.unionByName(cross)
+            .distinct()
+            .withColumn("distance", F.levenshtein("anm", "bnm"))
             .filter(F.col("distance") <= 1)
             .select(
                 F.col("ak").alias(f"a_{key_col}"),
@@ -1777,21 +1661,23 @@ def _edit_index_batch(
                 F.col("distance").cast("int").alias("distance"),
             )
         )
-        _write_batch_partition(verified, out_dir, batch_id)
-        # the name state is one (k, nm) row per entity — batch_df
-        # projected directly (NOT distinct over ex: the explode never
-        # drops or adds entities, and nm-null rows are filtered exactly
-        # as variant_exploded filters them)
-        names = batch_df.select(F.col(key_col).alias("k"), F.col(name_col).alias("nm"))
-        _write_batch_partition(
-            names.filter(F.col("nm").isNotNull()), f"{state_dir}/names", batch_id
-        )
-    finally:
-        # released even on a failed write: a leaked block taxes
-        # every later query in a shared JVM (bench r5 lesson /
-        # r12 ADVICE)
-        ex.unpersist()
-    _write_latest_pointer(spark, state_dir, batch_id)
+
+    # the index stores one narrow (k, nm) row per entity; its ~L+1
+    # variant rows are derived on read (variant_exploded is a pure map,
+    # and it drops nm-null rows exactly as the filter below does)
+    index = _PairIndex(
+        "names",
+        lambda df: variant_exploded(df, "k", "nm"),
+        ("variant",),
+        EDIT_BLOCK_CAP,
+        "vcounts",
+        id="k",
+        legacy="variants",
+    )
+    names = batch_df.select(F.col(key_col).alias("k"), F.col(name_col).alias("nm"))
+    _pair_index_batch(
+        names.filter(F.col("nm").isNotNull()), batch_id, state_dir, out_dir, index, pairs
+    )
 
 
 def cc_labels_sink(

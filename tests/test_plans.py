@@ -1608,6 +1608,20 @@ def test_name_edit_neighbors_plan(spark, sf_dir):
     assert "levenshtein" in plan
 
 
+def test_respread_keeps_inputs_over_the_size_bound(spark, sf_dir, monkeypatch):
+    """respread_if_underpartitioned re-spreads an under-partitioned
+    frame only when the files it scans fit under _REBALANCE_MAX_BYTES,
+    the guard load_table applies: with the bound at 0 bytes a
+    file-backed frame comes back unchanged."""
+    from flink_kafka_filter_transform_spark.sources import parquet
+
+    orders = load_table(spark, "orders", sf_dir)
+    assert orders.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    assert parquet.respread_if_underpartitioned(orders) is not orders
+    monkeypatch.setattr(parquet, "_REBALANCE_MAX_BYTES", 0)
+    assert parquet.respread_if_underpartitioned(orders) is orders
+
+
 def test_supplier_customer_linkage_plan(spark, sf_dir):
     """Two-relation linkage is index-and-probe: the supplier side
     aggregates into capped variant blocks (ONE shuffle), the customer

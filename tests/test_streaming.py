@@ -1839,45 +1839,83 @@ def test_edit_index_sink_three_way_uneven_split_equals_batch(
     }
     assert face == batch and len(batch) > 0
 
-def test_index_sinks_survive_empty_first_batch(spark, sf_dir, tmp_path_factory):
+@pytest.mark.parametrize("face", ["lsh", "phash", "afp", "vfp", "edit", "ivo"])
+def test_index_sinks_survive_empty_first_batch(spark, sf_dir, tmp_path, face):
     """An empty first micro-batch writes only _SUCCESS under each
     _batch_id-partitioned index dir (no partitions in the data), so
     the next batch's index read MUST use an explicit schema or the
     stream bricks on schema inference (r12 review — the vfp pair-log
-    rule applied to every index read via _read_index_before). Proven
-    on the edit-linkage face and the LSH face; the fingerprint faces
-    share the same helper."""
-    from flink_kafka_filter_transform_spark.operators import dedup, linkage
-    from flink_kafka_filter_transform_spark.sources.parquet import load_table
+    rule applied to every index read via _read_batches). Every index
+    body is driven: after an empty batch 0 and the whole input as
+    batch 1, its output equals the one-shot batch operator."""
+    from flink_kafka_filter_transform_spark.operators import (
+        dedup,
+        linkage,
+        multimodal,
+        rangejoin,
+    )
 
-    cust = load_table(spark, "customer", sf_dir).select("c_custkey", "c_name")
-    state = str(tmp_path_factory.mktemp("edit_empty_state"))
-    out = str(tmp_path_factory.mktemp("edit_empty_out"))
-    sp._edit_index_batch(cust.filter(SF.lit(False)), 0, "c_custkey", "c_name", state, out)
-    sp._edit_index_batch(cust, 1, "c_custkey", "c_name", state, out)  # bricked pre-fix
-    face = {
-        (r.a_c_custkey, r.b_c_custkey, r.distance)
-        for r in spark.read.parquet(out).collect()
-    }
-    batch = {
-        (r.a_c_custkey, r.b_c_custkey, r.distance)
-        for r in linkage.name_edit_neighbors(cust).collect()
-    }
-    assert face == batch and len(batch) > 0
+    oracle, cols = {
+        "lsh": (dedup.minhash_lsh_pairs, ["doc_a", "doc_b"]),
+        "phash": (multimodal.image_phash_pairs, ["doc_a", "doc_b", "hamming"]),
+        "afp": (multimodal.audio_fingerprint_pairs, ["doc_a", "doc_b", "hamming"]),
+        "vfp": (multimodal.video_frame_match_pairs, ["doc_a", "doc_b", "n_matched"]),
+        "edit": (linkage.name_edit_neighbors, ["a_c_custkey", "b_c_custkey", "distance"]),
+        "ivo": (
+            rangejoin.interval_overlap_pairs,
+            ["l_suppkey", "n_pairs", "sum_overlap_days", "max_overlap_days"],
+        ),
+    }[face]
+    run, b0, b1 = _crash_face(spark, sf_dir, face)
+    rows = b0.unionByName(b1)
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    run(rows.filter(SF.lit(False)), 0, state, out)
+    run(rows, 1, state, out)  # bricked before the declared-schema read
+    if face == "ivo":
+        got = sp._current(spark, state, "osum").withColumnRenamed("suppkey", "l_suppkey")
+    else:
+        got = spark.read.parquet(out)
+    face_rows = {tuple(r) for r in got.select(cols).collect()}
+    batch_rows = {tuple(r) for r in oracle(rows).select(cols).collect()}
+    assert face_rows == batch_rows and len(batch_rows) > 0
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    state2 = str(tmp_path_factory.mktemp("lsh_empty_state"))
-    out2 = str(tmp_path_factory.mktemp("lsh_empty_out"))
-    sp._lsh_index_batch(docs.filter(SF.lit(False)), 0, state2, out2)
-    sp._lsh_index_batch(docs, 1, state2, out2)  # bricked pre-fix
-    face2 = {
-        (r.doc_a, r.doc_b) for r in spark.read.parquet(out2).collect()
-    }
-    batch2 = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.minhash_lsh_pairs(docs).select("doc_a", "doc_b").collect()
-    }
-    assert face2 == batch2 and len(batch2) > 0
+
+def _jobs_in_group(spark, group, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted in its own job group (the
+    way _jobs_per_batch counts a streaming query's)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "face, jobs",
+    [("lsh", (11, 15)), ("phash", (8, 10)), ("vfp", (9, 11)), ("edit", (8, 10)), ("ivo", (7, 12))],
+)
+def test_index_bodies_plan_fixed_jobs_per_batch(spark, sf_dir, tmp_path, face, jobs):
+    """Spark jobs of one index body on batch 0 (no index yet) and on
+    batch 1 (probing batch 0's index), over _crash_face's halves. Each
+    body runs one code path: before the first write _read_batches
+    returns a relation that is empty at plan time, so Catalyst prunes
+    the cross probe, its anti-join and the union, and batch 0 plans no
+    more jobs than a body with a separate no-index branch. An empty
+    read Catalyst cannot prune (an empty RDD) costs the LSH body 16
+    jobs on batch 0 instead of 11."""
+    run, b0, b1 = _crash_face(spark, sf_dir, face)
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    got = tuple(
+        _jobs_in_group(
+            spark,
+            f"{face}-batch-{i}-{tmp_path.name}",
+            lambda b=b, i=i: run(b, i, state, out),
+        )
+        for i, b in enumerate((b0, b1))
+    )
+    assert got == jobs
 
 
 @pytest.mark.parametrize(
