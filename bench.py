@@ -312,6 +312,36 @@ FACE_QUERIES = {
 TAIL_BUDGET = 1900
 
 
+def driver_memory_mb(host_bytes: int) -> int:
+    """The measurement JVM's heap in MiB for a host whose process may
+    use ``host_bytes``: the 24g chosen for the 32-core r4/r5 runs, capped at
+    half the host, and never below spark-submit's 1g default. On a
+    smaller host a growing heap then fails inside the JVM with an
+    OutOfMemoryError instead of taking more than the host has and
+    getting the process (or a neighbour) killed."""
+    return max(1024, min(24 * 1024, host_bytes // 2 >> 20))
+
+
+def host_memory_bytes() -> int:
+    """Physical memory, lowered to the process's cgroup memory limit
+    when one is set (cgroup v2 ``memory.max``, v1
+    ``memory.limit_in_bytes``; "max" and the v1 no-limit sentinel are
+    larger than any host and so never bind)."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    return total
+
+
 def session(app_name: str = "bench", cpus: int = CPUS):
     """The measurement session: local[cpus], 2*cpus shuffle partitions.
 
@@ -326,9 +356,10 @@ def session(app_name: str = "bench", cpus: int = CPUS):
     driver JVM; the spark-submit default of 1g for 32 cores was at the
     GC edge (the r4 run's GCLocker warnings) and tipped into
     notEnoughMemoryToBuildAndBroadcastTable when the r5 queries
-    landed, so the heap is sized once here for every study."""
+    landed, so the heap is sized once here for every study, from the
+    host (driver_memory_mb)."""
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
-        "--driver-memory 24g "
+        f"--driver-memory {driver_memory_mb(host_memory_bytes())}m "
         "--conf spark.driver.extraJavaOptions=-Xlog:disable pyspark-shell"
     )
     from flink_kafka_filter_transform_spark import get_session
@@ -408,7 +439,8 @@ def close(spark) -> None:
     """End of a measurement session: reclaim (face scratch of a run
     that was never reclaimed, e.g. a plan dump's face drains), drop the
     session-lived layout twins (bucketed/partitioned external tables;
-    deliberately NOT face scratch — see _layout_scratch), then stop."""
+    deliberately NOT face scratch — see relational._LAYOUT_SCRATCH),
+    then stop."""
     from flink_kafka_filter_transform_spark.operators.relational import (
         cleanup_layout_scratch,
     )

@@ -1457,56 +1457,28 @@ BUCKETED_N = 8  # bucket count for the orders/lineitem twins
 
 
 # (table_name, scratch_dir) pairs for every layout twin this process
-# materialized — the twins' OWN cleanup registry, separate from the
-# face-scratch one (see _layout_scratch's docstring for why), drained
-# by cleanup_layout_scratch at harness END-of-run.
+# materialized — the twins' OWN cleanup registry, deliberately separate
+# from the face-scratch one although both resolve their dirs through
+# streaming.pipeline._scratch_dir. Face scratch is per-run and reclaimed
+# as soon as the returned state is consumed (bench does so after every
+# query), while the layout twins are memoized in the session catalog and
+# must outlive every later query in the session: registering them for
+# face cleanup deletes the table files out from under the catalog
+# (FAILED_READ_FILE on the next read, found by the r9 bench run).
+# Harnesses drain this registry once at end-of-run through
+# cleanup_layout_scratch (bench.close, the sf1/sf3 tools), so repeated
+# sessions don't accumulate orphaned parquet.
 _LAYOUT_SCRATCH: list[tuple[str, str]] = []
-
-
-def _layout_scratch(spark, prefix: str) -> str:
-    """Scratch root for ONE session-lived layout twin table (bucketed /
-    partitioned external). Same cluster-addressability rule as
-    streaming.pipeline._face_scratch, but deliberately NOT recorded in
-    its cleanup registry: face scratch is per-run and reclaimed as
-    soon as the returned state is consumed (bench does so after every
-    query), while the layout twins are memoized in the session catalog
-    and must outlive every later query in the session — registering
-    them for face cleanup deletes the table files out from under the
-    catalog (FAILED_READ_FILE on the next read, found by the r9 bench
-    run). Twins register in _LAYOUT_SCRATCH instead; harnesses call
-    cleanup_layout_scratch once at end-of-run (bench.py, the sf1/sf3
-    tools), so repeated sessions don't accumulate orphaned parquet."""
-    import tempfile
-
-    from flink_kafka_filter_transform_spark.streaming.pipeline import (
-        FACE_SCRATCH_ROOT_CONF,
-        _hadoop_fs,
-    )
-
-    root = spark.conf.get(FACE_SCRATCH_ROOT_CONF, None)
-    if root:
-        import uuid
-
-        scratch = f"{root.rstrip('/')}/{prefix}{uuid.uuid4().hex}"
-        jpath, fs = _hadoop_fs(spark, scratch)
-        fs.mkdirs(jpath)
-        return scratch
-    if not spark.sparkContext.master.startswith("local"):
-        raise RuntimeError(
-            "layout twins stage bucketed/partitioned tables under a "
-            f"scratch dir; on a non-local master set {FACE_SCRATCH_ROOT_CONF} "
-            "to a cluster-addressable URI"
-        )
-    return tempfile.mkdtemp(prefix=prefix)
 
 
 def cleanup_layout_scratch(spark) -> list[str]:
     """Drop every layout-twin table this process created and delete its
-    scratch dir. END-of-run only (the twins are session-memoized): a
-    mid-run call just means the next layout query pays one extra
-    rematerialization (the _twin_ready self-heal), never a wrong
-    result. Returns the deleted dirs."""
-    import shutil
+    scratch dir through the Hadoop FileSystem API (so a configured
+    HDFS/S3A scratch root is reclaimed too). END-of-run only (the twins
+    are session-memoized): a mid-run call just means the next layout
+    query pays one extra rematerialization (the _twin_ready self-heal),
+    never a wrong result. Returns the deleted dirs."""
+    from flink_kafka_filter_transform_spark.streaming.pipeline import _delete_path
 
     deleted: list[str] = []
     while _LAYOUT_SCRATCH:
@@ -1515,7 +1487,7 @@ def cleanup_layout_scratch(spark) -> list[str]:
             spark.sql(f"DROP TABLE IF EXISTS {table}")
         except Exception:
             pass
-        shutil.rmtree(d.replace("file:", ""), ignore_errors=True)
+        _delete_path(spark, d)
         deleted.append(d)
     return deleted
 
@@ -1525,9 +1497,11 @@ def _ensure_layout_table(spark, table: str, prefix: str, write_fn) -> None:
     only this table if stale (a partial external deletion must not
     force the healthy sibling through a second full bucketed write),
     and register (table, dir) for end-of-run cleanup."""
+    from flink_kafka_filter_transform_spark.streaming.pipeline import _scratch_dir
+
     if _twin_ready(spark, table):
         return
-    scratch = _layout_scratch(spark, prefix)
+    scratch = _scratch_dir(spark, prefix)
     write_fn(f"{scratch}/{table}")
     _LAYOUT_SCRATCH.append((table, scratch))
 

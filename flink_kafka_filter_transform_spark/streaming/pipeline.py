@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     LongType,
     StructField,
@@ -165,7 +164,6 @@ def metered_cdc_sink(
     labelled = cdc.route_forwarded(cdc.parse_envelope(raw_stream), rules)
 
     def feed(batch_df: DataFrame, batch_id: int) -> None:
-        _batch_aqe(batch_df.sparkSession)
         lbl = lambda v: "" if v is None else str(v)  # noqa: E731
         outbound: dict[tuple[str, str], int] = {}
         for r in cdc.label_counts(batch_df).collect():
@@ -332,7 +330,8 @@ def scd2_incremental_sink(
 def _batch_aqe(spark: SparkSession) -> SparkSession:
     """Re-enable ADAPTIVE execution for the batch queries a
     foreachBatch body runs, and return the session (r14, guide §2.2/
-    §3.1).
+    §3.1). _sink calls it once per micro-batch before the body, so no
+    body sets it itself.
 
     Structured Streaming clones the session at ``start()`` and
     ``ResolveWriteToStream`` force-disables ``spark.sql.adaptive.
@@ -380,7 +379,7 @@ def _scd2_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> Non
     plans as a job of its own, 5 jobs per batch instead of 4.
     """
     changes_dir = f"{state_dir}/changes"
-    spark = _batch_aqe(batch_df.sparkSession)
+    spark = batch_df.sparkSession
     batch = batch_df.filter(F.col("op").isNotNull()).select(*SCD2_CHANGE_COLS)
     batch.write.mode("append").parquet(changes_dir)
     key = ["db", "table_name", "key"]
@@ -424,10 +423,18 @@ def _scd2_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> Non
 def _sink(stream: DataFrame, body, checkpoint_dir: str, *args) -> DataStreamWriter:
     """The stream's writer running ``body(batch_df, batch_id, *args)``
     once per micro-batch, checkpointed in ``checkpoint_dir`` — the
-    checkpoint replays a failed batch with the same id and input."""
-    return stream.writeStream.foreachBatch(
-        lambda batch_df, batch_id: body(batch_df, batch_id, *args)
-    ).option("checkpointLocation", checkpoint_dir)
+    checkpoint replays a failed batch with the same id and input. The
+    one place a body gets its batch session: AQE is re-enabled
+    (_batch_aqe) on ``batch_df.sparkSession`` before every call, so
+    bodies, and the bodies they nest, just use that session."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        _batch_aqe(batch_df.sparkSession)
+        body(batch_df, batch_id, *args)
+
+    return stream.writeStream.foreachBatch(run).option(
+        "checkpointLocation", checkpoint_dir
+    )
 
 
 def _write_batch_partition(
@@ -552,6 +559,13 @@ def _hadoop_fs(spark: SparkSession, path: str):
 def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
     jpath, fs = _hadoop_fs(spark, path)
     return bool(fs.exists(jpath))
+
+
+def _delete_path(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path`` on any storage _hadoop_fs reaches (a
+    missing path is a no-op)."""
+    jpath, fs = _hadoop_fs(spark, path)
+    fs.delete(jpath, True)
 
 
 def _state_versions(
@@ -802,7 +816,7 @@ def _pair_index_batch(
        that cross join and the pre-batch base relation; it lands as
        the batch's pair-log partition, the base rows append to the
        index, and _LATEST publishes last."""
-    spark = _batch_aqe(base_rows.sparkSession)
+    spark = base_rows.sparkSession
     if index.legacy is not None:
         _refuse_legacy_index(spark, state_dir, index.legacy, index.base)
     path, keys = f"{state_dir}/{index.base}", list(index.keys)
@@ -840,11 +854,7 @@ def foreach_batch_parquet_sink(
     Here each batch lands through _write_batch_partition, giving
     effectively-once output on top of at-least-once delivery."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _batch_aqe(batch_df.sparkSession)
-        _write_batch_partition(batch_df, out_dir, batch_id)
-
-    return _sink(df, write_batch, checkpoint_dir)
+    return _sink(df, lambda b, i: _write_batch_partition(b, out_dir, i), checkpoint_dir)
 
 
 def contamination_guard_sink(
@@ -876,7 +886,6 @@ def contamination_guard_sink(
     from flink_kafka_filter_transform_spark.operators.text import token_ngrams, tokens
 
     def guard(batch_df: DataFrame, batch_id: int) -> None:
-        _batch_aqe(batch_df.sparkSession)
         grams = batch_df.select(
             "doc_id", token_ngrams(tokens(), n).alias("grams")
         ).filter(F.size("grams") > 0)
@@ -929,7 +938,7 @@ def _hll_merge_batch(
     """One hll_merge_sink micro-batch (module-level for replay tests)."""
     from flink_kafka_filter_transform_spark.operators.sketch import hll_registers
 
-    spark = _batch_aqe(batch_df.sparkSession)
+    spark = batch_df.sparkSession
     regs = hll_registers(batch_df, key, [group])
     _merge_version(
         spark, state_dir, "regs", batch_id, regs, _fold([group, "_idx"], _r=F.max)
@@ -974,7 +983,7 @@ def _cms_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None
     """One cms_merge_sink micro-batch (module-level for replay tests)."""
     from flink_kafka_filter_transform_spark.operators.sketch import cms_grid
 
-    spark = _batch_aqe(batch_df.sparkSession)
+    spark = batch_df.sparkSession
     grid = cms_grid(batch_df)
     _merge_version(
         spark, state_dir, "grid", batch_id, grid, _fold(["row", "bucket"], cell=F.sum)
@@ -1022,7 +1031,7 @@ def _bloom_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> No
     )
     from flink_kafka_filter_transform_spark.operators.sketch import bloom_build
 
-    spark = _batch_aqe(batch_df.sparkSession)
+    spark = batch_df.sparkSession
     keys = batch_df.select(
         portable_hash64("text").alias("_h1"),
         portable_hash64_second("text").alias("_h2"),
@@ -1082,7 +1091,7 @@ def _ivf_assign_batch(
     the cell counters sum-merge into ``cells_v{batch_id}``."""
     from flink_kafka_filter_transform_spark.operators.kmeans import _assign
 
-    spark = _batch_aqe(batch_df.sparkSession)
+    spark = batch_df.sparkSession
     a = _assign(batch_df.select("vec_id", F.col("embedding").alias("v")), centroids)
     _write_batch_partition(batch_df.join(a, "vec_id"), out_dir, batch_id, "cid")
     counts = a.groupBy("cid").agg(F.count(F.lit(1)).alias("n_vectors"))
@@ -1502,7 +1511,7 @@ def _ivo_overlap_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> No
         overlap_side,
     )
 
-    spark = _batch_aqe(batch_df.sparkSession)
+    spark = batch_df.sparkSession
     # the shared rangejoin helpers guarantee bucket assignment, side
     # projections, ownership, and overlap arithmetic stay BYTE-
     # IDENTICAL with the batch operator (r11 review — exactly-once
@@ -1770,7 +1779,7 @@ def _cc_labels_batch(
         connected_components,
     )
 
-    spark = _batch_aqe(batch_df.sparkSession)
+    spark = batch_df.sparkSession
     _refuse_label_manifest(spark, state_dir)
     _lsh_index_batch(batch_df, batch_id, f"{state_dir}/lsh", out_dir)
     id_type = batch_df.schema["doc_id"].dataType
@@ -1884,33 +1893,41 @@ def cc_labels_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
 #
 # The merge sinks above are pytest-proven equivalent to their batch
 # operators, but equivalence tests live outside the driver's DuckDB
-# gate. These query-shaped faces close that gap: each stages the
-# sf-dir table as a real file stream, drains it through the ACTUAL
-# sink (availableNow + maxFilesPerTrigger=1, so the state is built
-# across several genuine micro-batch merges, not one), then returns
-# the final published state as a DataFrame. Because every maintained
-# state is a commutative monoid fold (register max / counter sum)
-# over disjoint row partitions, the drained state is micro-batch-split
-# INVARIANT — equal to the one-shot batch sketch — which is exactly
-# what a plain DuckDB oracle over the same table computes. Scratch
-# placement goes through _face_scratch (cluster-addressability guard);
-# dirs are not cleaned eagerly — the returned DataFrame lazily reads
-# the published state parquet — but cleanup_face_scratch lets a
-# harness reclaim them once the state has been consumed.
+# gate. These query-shaped faces close that gap. Each one projects its
+# sf-dir table and hands it to _drain_face, the one runner: it stages
+# the table as a real file stream under a fresh face scratch dir and
+# drains it through the ACTUAL sink (availableNow +
+# maxFilesPerTrigger=1, so the state is built across several genuine
+# micro-batch merges, not one), i.e. the replayable source half of
+# Structured Streaming's recovery model, written once. The face then
+# reads the final published state as a DataFrame. Because every
+# maintained state is a commutative monoid fold (register max /
+# counter sum) over disjoint row partitions, the drained state is
+# micro-batch-split INVARIANT — equal to the one-shot batch sketch —
+# which is exactly what a plain DuckDB oracle over the same table
+# computes. Scratch placement goes through _face_scratch
+# (cluster-addressability guard); dirs are not cleaned eagerly — the
+# returned DataFrame lazily reads the published state parquet — but
+# cleanup_face_scratch lets a harness reclaim them once the state has
+# been consumed.
 
 FACE_SCRATCH_ROOT_CONF = "spark.flinkKafkaFilterTransformSpark.faceScratchRoot"
 _FACE_SCRATCH_DIRS: list[str] = []
 
 
-def _face_scratch(spark: SparkSession, prefix: str) -> str:
-    """Scratch root for one sink-face run (source files, checkpoint,
-    state). On local[*] masters this is a driver-local mkdtemp — the
-    executors share the driver's filesystem, so the path is
-    addressable by every task. On a REAL cluster a driver-local temp
-    dir is NOT addressable from executors (the same rule _hadoop_fs
-    enforces for the sinks' own state), so the face refuses to guess
-    and requires FACE_SCRATCH_ROOT_CONF to name a cluster-addressable
-    URI (HDFS/S3A/...). Dirs are recorded for cleanup_face_scratch."""
+def _scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh ``{prefix}…`` scratch dir that every task can address:
+    the one resolver behind the sink faces' per-run scratch
+    (_face_scratch) and the session-lived layout twins
+    (operators.relational._ensure_layout_table), which keep separate
+    cleanup registries. With FACE_SCRATCH_ROOT_CONF set the dir is
+    created under that root through the Hadoop FileSystem API. On
+    local[*] masters it is otherwise a driver-local mkdtemp — the
+    executors share the driver's filesystem. On a REAL cluster a
+    driver-local temp dir is NOT addressable from executors (the same
+    rule _hadoop_fs enforces for the sinks' own state), so the
+    resolver refuses to guess and requires FACE_SCRATCH_ROOT_CONF to
+    name a cluster-addressable URI (HDFS/S3A/...)."""
     import tempfile
     import uuid
 
@@ -1919,15 +1936,21 @@ def _face_scratch(spark: SparkSession, prefix: str) -> str:
         scratch = f"{root.rstrip('/')}/{prefix}{uuid.uuid4().hex}"
         jpath, fs = _hadoop_fs(spark, scratch)
         fs.mkdirs(jpath)
-    else:
-        if not spark.sparkContext.master.startswith("local"):
-            raise RuntimeError(
-                "streaming sink faces stage their source/checkpoint/state "
-                "under a scratch dir; on a non-local master set "
-                f"{FACE_SCRATCH_ROOT_CONF} to a cluster-addressable URI "
-                "(driver-local temp dirs are invisible to executors)"
-            )
-        scratch = tempfile.mkdtemp(prefix=prefix)
+        return scratch
+    if not spark.sparkContext.master.startswith("local"):
+        raise RuntimeError(
+            f"{prefix}* scratch dirs (streaming face source/checkpoint/state, "
+            "layout-twin tables) must be cluster-addressable; on a non-local "
+            f"master set {FACE_SCRATCH_ROOT_CONF} to a cluster-addressable URI "
+            "(driver-local temp dirs are invisible to executors)"
+        )
+    return tempfile.mkdtemp(prefix=prefix)
+
+
+def _face_scratch(spark: SparkSession, prefix: str) -> str:
+    """Scratch root for one sink-face run (source files, checkpoint,
+    state): a _scratch_dir recorded for cleanup_face_scratch."""
+    scratch = _scratch_dir(spark, prefix)
     _FACE_SCRATCH_DIRS.append(scratch)
     return scratch
 
@@ -1940,27 +1963,35 @@ def cleanup_face_scratch(spark: SparkSession) -> list[str]:
     deleted: list[str] = []
     while _FACE_SCRATCH_DIRS:
         scratch = _FACE_SCRATCH_DIRS.pop()
-        jpath, fs = _hadoop_fs(spark, scratch)
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
+        _delete_path(spark, scratch)
         deleted.append(scratch)
     return deleted
 
 
-def _drain_through_sink(df: DataFrame, scratch: str, sink_fn) -> None:
-    """Stage ``df`` as a 4-file parquet stream and drain it through
-    ``sink_fn(stream, checkpoint_dir)`` with an availableNow trigger."""
-    src = f"{scratch}/src"
+def _drain_face(
+    df: DataFrame, name: str, sink_fn, out: str = "pairs"
+) -> tuple[str, str]:
+    """Drain ``df`` through one sink face and return its
+    ``(state_dir, out_dir)``: ``{scratch}/state`` and ``{scratch}/{out}``
+    under a fresh ``sgraft_{name}_stream_`` face scratch dir. ``df`` is
+    staged as a 4-file parquet stream under ``src`` (an empty frame
+    still writes one schema-bearing part file, so even an empty table
+    commits batch 0) and drained through ``sink_fn(stream, state_dir,
+    out_dir, checkpoint_dir)`` with an availableNow trigger, one file
+    per micro-batch, within 600 s."""
+    spark = df.sparkSession
+    scratch = _face_scratch(spark, f"sgraft_{name}_stream_")
+    src, state, out_dir = f"{scratch}/src", f"{scratch}/state", f"{scratch}/{out}"
     df.repartition(4).write.mode("overwrite").parquet(src)
     stream = (
-        df.sparkSession.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    q = sink_fn(stream, f"{scratch}/ckpt").trigger(availableNow=True).start()
+    ckpt = f"{scratch}/ckpt"
+    q = sink_fn(stream, state, out_dir, ckpt).trigger(availableNow=True).start()
     if not q.awaitTermination(600):
         q.stop()
         raise TimeoutError("streaming sink did not drain within 600s")
+    return state, out_dir
 
 
 def hll_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1972,12 +2003,10 @@ def hll_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
     events = load_table(spark, "events", sf_dir).select("event_type", "user_id")
-    scratch = _face_scratch(spark, "sgraft_hll_stream_")
-    state = f"{scratch}/state"
-    _drain_through_sink(
+    state, _ = _drain_face(
         events,
-        scratch,
-        lambda stream, ckpt: hll_merge_sink(
+        "hll",
+        lambda stream, state, out, ckpt: hll_merge_sink(
             stream, "user_id", "event_type", state, ckpt
         ),
     )
@@ -1992,12 +2021,8 @@ def cms_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    scratch = _face_scratch(spark, "sgraft_cms_stream_")
-    state = f"{scratch}/state"
-    _drain_through_sink(
-        docs,
-        scratch,
-        lambda stream, ckpt: cms_merge_sink(stream, state, ckpt),
+    state, _ = _drain_face(
+        docs, "cms", lambda stream, state, out, ckpt: cms_merge_sink(stream, state, ckpt)
     )
     return cms_current(spark, state)
 
@@ -2013,12 +2038,10 @@ def bloom_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    scratch = _face_scratch(spark, "sgraft_bloom_stream_")
-    state = f"{scratch}/state"
-    _drain_through_sink(
+    state, _ = _drain_face(
         docs,
-        scratch,
-        lambda stream, ckpt: bloom_merge_sink(stream, state, ckpt),
+        "bloom",
+        lambda stream, state, out, ckpt: bloom_merge_sink(stream, state, ckpt),
     )
     return bloom_current(spark, state)
 
@@ -2108,13 +2131,11 @@ def ivf_stream_cell_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     cents = _cached_kmeans_codebook(spark, sf_dir)
-    scratch = _face_scratch(spark, "sgraft_ivf_stream_")
-    state = f"{scratch}/state"
-    out = f"{scratch}/postings"
-    _drain_through_sink(
+    state, _ = _drain_face(
         emb,
-        scratch,
-        lambda stream, ckpt: ivf_assign_sink(stream, cents, out, state, ckpt),
+        "ivf",
+        lambda stream, state, out, ckpt: ivf_assign_sink(stream, cents, out, state, ckpt),
+        out="postings",
     )
     return ivf_cell_counts(spark, state)
 
@@ -2136,12 +2157,10 @@ def scd2_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed = cdc_ops.parse_envelope(cdc_events_df(spark, sf_dir)).select(
         *SCD2_CHANGE_COLS
     )
-    scratch = _face_scratch(spark, "sgraft_scd2_stream_")
-    state = f"{scratch}/state"
-    _drain_through_sink(
+    state, _ = _drain_face(
         parsed,
-        scratch,
-        lambda stream, ckpt: scd2_incremental_sink(stream, state, ckpt),
+        "scd2",
+        lambda stream, state, out, ckpt: scd2_incremental_sink(stream, state, ckpt),
     )
     return scd2_current(spark, state)
 
@@ -2164,13 +2183,7 @@ def lsh_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    scratch = _face_scratch(spark, "sgraft_lsh_stream_")
-    state, out = f"{scratch}/state", f"{scratch}/pairs"
-    _drain_through_sink(
-        docs,
-        scratch,
-        lambda stream, ckpt: lsh_index_sink(stream, state, out, ckpt),
-    )
+    _, out = _drain_face(docs, "lsh", lsh_index_sink)
     return _read_batches(
         spark, out, StructType.fromDDL("doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE")
     )
@@ -2191,13 +2204,7 @@ def phash_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id")
-    scratch = _face_scratch(spark, "sgraft_phash_stream_")
-    state, out = f"{scratch}/state", f"{scratch}/pairs"
-    _drain_through_sink(
-        docs,
-        scratch,
-        lambda stream, ckpt: phash_index_sink(stream, state, out, ckpt),
-    )
+    _, out = _drain_face(docs, "phash", phash_index_sink)
     return _read_batches(
         spark, out, StructType.fromDDL("doc_a BIGINT, doc_b BIGINT, hamming INT")
     )
@@ -2218,13 +2225,7 @@ def afp_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id")
-    scratch = _face_scratch(spark, "sgraft_afp_stream_")
-    state, out = f"{scratch}/state", f"{scratch}/pairs"
-    _drain_through_sink(
-        docs,
-        scratch,
-        lambda stream, ckpt: afp_index_sink(stream, state, out, ckpt),
-    )
+    _, out = _drain_face(docs, "afp", afp_index_sink)
     return _read_batches(
         spark, out, StructType.fromDDL("doc_a BIGINT, doc_b BIGINT, hamming INT")
     )
@@ -2246,13 +2247,7 @@ def vfp_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id")
-    scratch = _face_scratch(spark, "sgraft_vfp_stream_")
-    state, out = f"{scratch}/state", f"{scratch}/pairs"
-    _drain_through_sink(
-        docs,
-        scratch,
-        lambda stream, ckpt: vfp_index_sink(stream, state, out, ckpt),
-    )
+    _, out = _drain_face(docs, "vfp", vfp_index_sink)
     return _read_batches(
         spark, out, StructType.fromDDL("doc_a BIGINT, doc_b BIGINT, n_matched BIGINT")
     )
@@ -2275,12 +2270,8 @@ def ivo_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_linenumber", "l_suppkey", "l_shipdate"
     )
-    scratch = _face_scratch(spark, "sgraft_ivo_stream_")
-    state = f"{scratch}/state"
-    _drain_through_sink(
-        li,
-        scratch,
-        lambda stream, ckpt: ivo_overlap_sink(stream, state, ckpt),
+    state, _ = _drain_face(
+        li, "ivo", lambda stream, state, out, ckpt: ivo_overlap_sink(stream, state, ckpt)
     )
     return _current(spark, state, "osum").select(
         F.col("suppkey").alias("l_suppkey"),
@@ -2307,12 +2298,10 @@ def edit_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
     cust = load_table(spark, "customer", sf_dir).select("c_custkey", "c_name")
-    scratch = _face_scratch(spark, "sgraft_edit_stream_")
-    state, out = f"{scratch}/state", f"{scratch}/pairs"
-    _drain_through_sink(
+    _, out = _drain_face(
         cust,
-        scratch,
-        lambda stream, ckpt: edit_index_sink(
+        "edit",
+        lambda stream, state, out, ckpt: edit_index_sink(
             stream, "c_custkey", "c_name", state, out, ckpt
         ),
     )
@@ -2343,30 +2332,8 @@ def cc_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    scratch = _face_scratch(spark, "sgraft_cc_stream_")
-    state, out = f"{scratch}/state", f"{scratch}/pairs"
-    _drain_through_sink(
-        docs,
-        scratch,
-        lambda stream, ckpt: cc_labels_sink(stream, state, out, ckpt),
-    )
+    state, _ = _drain_face(docs, "cc", cc_labels_sink)
     labels = cc_labels_current(spark, state)
-    if labels is None:
-        # r13 ADVICE: cc_labels_current is None before any batch
-        # commits — an empty documents table must yield an empty
-        # cluster table, not an AttributeError on the None
-        id_type = docs.schema["doc_id"].dataType
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("doc_id", id_type),
-                    StructField("cluster_id", id_type),
-                    StructField("cluster_size", LongType()),
-                    StructField("is_kept", BooleanType()),
-                ]
-            ),
-        )
     sized = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return labels.join(sized, "label").select(
         "doc_id",
@@ -2410,21 +2377,17 @@ def dedup_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).select(
         portable_hash64(F.col("text")).alias("content_hash"), "doc_id"
     )
-    scratch = _face_scratch(spark, "sgraft_firstseen_stream_")
-    ledger = f"{scratch}/ledger"
 
-    def sink(stream: DataFrame, ckpt: str) -> DataStreamWriter:
-        def write_batch(bdf: DataFrame, batch_id: int) -> None:
-            # the stateful operator's output arrives in state-store
-            # partitioning (one near-empty slice per state partition);
-            # REBALANCE + AQE sizes the ledger partition's files by
-            # BYTES at any scale instead of writing one tiny file per
-            # state partition per batch (guide §6 small-files rule)
-            _batch_aqe(bdf.sparkSession)
-            _write_batch_partition(bdf.hint("rebalance"), ledger, batch_id)
-
+    def sink(stream, state, ledger, ckpt) -> DataStreamWriter:
+        # the stateful operator's output arrives in state-store
+        # partitioning (one near-empty slice per state partition);
+        # REBALANCE + AQE sizes the ledger partition's files by BYTES at
+        # any scale instead of writing one tiny file per state partition
+        # per batch (guide §6 small-files rule)
         return _sink(
-            state_mod.streaming_first_seen(stream), write_batch, ckpt
+            state_mod.streaming_first_seen(stream),
+            lambda bdf, i: _write_batch_partition(bdf.hint("rebalance"), ledger, i),
+            ckpt,
         ).outputMode("update")
 
     # SCOPE (r14 ADVICE, documented here at the one site that mutates
@@ -2440,7 +2403,7 @@ def dedup_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(_DEDUP_STATE_PARTITIONS))
     try:
-        _drain_through_sink(docs, scratch, sink)
+        _, ledger = _drain_face(docs, "firstseen", sink, out="ledger")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     led = _read_batches(
@@ -2494,6 +2457,5 @@ def prune_state_versions(
     residue = [v for v, ok in versions.items() if not ok and v <= latest]
     doomed = sorted(residue + published[:-keep_last])
     for v in doomed:
-        vpath, fs = _hadoop_fs(spark, f"{state_dir}/{prefix}_v{v}")
-        fs.delete(vpath, True)
+        _delete_path(spark, f"{state_dir}/{prefix}_v{v}")
     return doomed

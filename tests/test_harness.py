@@ -35,6 +35,16 @@ def test_census_repeats_exactly(spark, sf_dir, name):
     assert first["shuffle_write_bytes"] > 0
 
 
+def test_driver_memory_is_half_the_host_capped_at_24g():
+    gib = 1 << 30
+    assert bench.driver_memory_mb(16 * gib) == 8 * 1024
+    assert bench.driver_memory_mb(48 * gib) == 24 * 1024
+    assert bench.driver_memory_mb(512 * gib) == 24 * 1024
+    assert bench.driver_memory_mb(gib) == 1024  # spark-submit's default floor
+    host = bench.host_memory_bytes()
+    assert 0 < host and bench.driver_memory_mb(host) <= max(1024, (host >> 20) // 2)
+
+
 def test_final_line_keeps_the_slowest_queries_under_the_tail_budget():
     rng = random.Random(7)
     names = list(__spark_entry__.queries())

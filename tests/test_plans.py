@@ -443,6 +443,36 @@ def test_layout_twins_survive_face_cleanup_and_self_heal(spark, sf_dir):
     assert relational.bucketed_join_revenue(spark, sf_dir).count() == 5
 
 
+def test_cleanup_layout_scratch_drops_twin_under_configured_root(spark, tmp_path):
+    """A layout twin materialized under a configured scratch root (a
+    URI, as a cluster deployment sets it) is reclaimed by
+    cleanup_layout_scratch: its table is dropped and its dir deleted
+    through the Hadoop FileSystem API."""
+    from flink_kafka_filter_transform_spark.streaming import pipeline as sp
+
+    root = f"file://{tmp_path}/layout_root"
+    table = "sgraft_test_layout_twin"
+
+    def write(path: str) -> None:
+        spark.range(3).write.option("path", path).mode("overwrite").format(
+            "parquet"
+        ).saveAsTable(table)
+
+    spark.conf.set(sp.FACE_SCRATCH_ROOT_CONF, root)
+    try:
+        relational._ensure_layout_table(spark, table, "sgraft_test_layout_", write)
+    finally:
+        spark.conf.unset(sp.FACE_SCRATCH_ROOT_CONF)
+    (scratch,) = [d for t, d in relational._LAYOUT_SCRATCH if t == table]
+    local = scratch[len("file://") :]
+    assert scratch.startswith(root) and os.path.isdir(local)
+    assert spark.table(table).count() == 3
+    assert scratch in relational.cleanup_layout_scratch(spark)
+    assert not spark.catalog.tableExists(table)
+    assert not os.path.exists(local)
+    assert relational._LAYOUT_SCRATCH == []
+
+
 def test_partitioned_scan_prunes_to_one_day(spark, sf_dir):
     """The day predicate must resolve at PLANNING time against the
     partition directories: the scan carries a day PartitionFilter and

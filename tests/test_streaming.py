@@ -2046,26 +2046,39 @@ def test_cc_labels_batch_merges_two_existing_components(spark, tmp_path_factory)
     assert after1 == want
 
 
-def test_cc_stream_state_empty_documents_table(spark, sf_dir, tmp_path_factory):
-    """An empty documents table must yield an EMPTY cluster table with
-    the face's output schema, whether the drain commits zero batches
-    (cc_labels_current None — the r13 ADVICE crash path) or commits
-    empty label versions."""
+@pytest.mark.parametrize(
+    "face, table, cols",
+    [
+        ("cc", "documents", ["doc_id", "cluster_id", "cluster_size", "is_kept"]),
+        ("hll", "events", ["event_type", "_idx", "_r"]),
+        ("lsh", "documents", ["doc_a", "doc_b", "jaccard"]),
+        (
+            "ivo",
+            "lineitem",
+            ["l_suppkey", "n_pairs", "sum_overlap_days", "max_overlap_days"],
+        ),
+        ("dedup", "documents", ["content_hash", "first_doc_id", "n_suppressed"]),
+    ],
+    ids=["cc", "hll", "lsh", "ivo", "dedup"],
+)
+def test_face_empty_input_returns_empty_relation(
+    spark, sf_dir, tmp_path, face, table, cols
+):
+    """An empty input table must yield an EMPTY relation with the
+    face's output columns, for every kind of face state: a version
+    read (cc labels, hll registers, ivo rollup), a pair log (lsh) and
+    the update-mode ledger (dedup). The face runner stages even an
+    empty table as a schema-bearing part file, so the drain commits
+    batch 0 and each face reads published state; the cc face has no
+    separate branch for a drain that commits nothing."""
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
-    schema = load_table(spark, "documents", sf_dir).schema
-    empty_sf = str(tmp_path_factory.mktemp("cc_empty_sf"))
-    spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-        f"{empty_sf}/documents.parquet"
-    )
-    got = sp.cc_stream_state(spark, empty_sf)
+    schema = load_table(spark, table, sf_dir).schema
+    empty_sf = str(tmp_path)
+    spark.createDataFrame([], schema).write.parquet(f"{empty_sf}/{table}.parquet")
+    got = getattr(sp, f"{face}_stream_state")(spark, empty_sf)
+    assert got.columns == cols
     assert got.count() == 0
-    assert [f.name for f in got.schema.fields] == [
-        "doc_id",
-        "cluster_id",
-        "cluster_size",
-        "is_kept",
-    ]
 
 
 def test_lsh_stream_state_without_any_pair(spark, tmp_path):

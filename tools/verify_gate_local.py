@@ -1,4 +1,11 @@
-import sys; sys.path.insert(0, "/root/repo")
+"""Driver-gate simulation: a vanilla SparkSession (no engine configs),
+the ``__spark_entry__`` contract and each query compared with its DuckDB
+oracle at sf0.01. Prints one MATCH / MISMATCH / ERROR / rows-only line
+per query and exits non-zero when any query is BAD.
+
+Usage: python tools/verify_gate_local.py [NAME...]
+"""
+import os, sys; sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb, math, pandas as pd, sys, time
 from pyspark.sql import SparkSession
 spark = SparkSession.builder.master("local[4]").appName("driver-sim").getOrCreate()
@@ -38,3 +45,4 @@ for name, fn in qs.items():
     if not ok: bad += 1
     print(name, len(rs), "vs", len(rd), "MATCH" if ok else "MISMATCH", f"{time.time()-t0:.1f}s", flush=True)
 print("BAD:", bad, flush=True)
+sys.exit(1 if bad else 0)
