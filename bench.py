@@ -14,11 +14,11 @@ giant line lost its cold section to the tail capture — see VERDICT r4.
 BENCH_full.json also carries, per query under "census", the Spark work
 of its last rep (jobs, completed/skipped stages, tasks, task ms,
 shuffle bytes, spill), read from the status store outside the timed
-region.
+region, and the fingerprint of the plan it ran.
 
 This module is also the one measurement harness the studies in tools/
 import: session(), warm_up(), run(), reclaim(), job_mark()/census(),
-measure() and close().
+plan_text()/plan_fingerprint(), measure() and close().
 
 Each query executes end-to-end into a noop sink (full pipeline runs,
 nothing collected to the driver, no disk write measured). A warmup
@@ -43,6 +43,7 @@ mixed (the r2->r3 "17% faster" conflated the two; VERDICT r3).
 from __future__ import annotations
 
 import gc
+import hashlib
 import json
 import os
 import re
@@ -371,18 +372,20 @@ def session(app_name: str = "bench", cpus: int = CPUS):
     return spark
 
 
-def run(spark, query, sf_dir: str = SF_DIR) -> float:
+def run(spark, query, sf_dir: str = SF_DIR):
     """Wall seconds of one run of ``query`` (a registered name, or a
-    ``(spark, sf_dir) -> DataFrame`` callable) into the noop sink: the
-    full pipeline executes, nothing is collected to the driver and no
-    disk write is measured. Building the DataFrame is timed too (the
-    eager trainers do their driver-paced work there)."""
+    ``(spark, sf_dir) -> DataFrame`` callable) into the noop sink, and
+    the DataFrame it ran: the full pipeline executes, nothing is
+    collected to the driver and no disk write is measured. Building
+    the DataFrame is timed too (the eager trainers do their
+    driver-paced work there)."""
     import __spark_entry__
 
     build = __spark_entry__.queries()[query] if isinstance(query, str) else query
     t0 = time.time()
-    build(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    return time.time() - t0
+    df = build(spark, sf_dir)
+    df.write.mode("overwrite").format("noop").save()
+    return time.time() - t0, df
 
 
 def warm_up(spark, sf_dir: str = SF_DIR) -> None:
@@ -437,7 +440,7 @@ def reclaim(spark) -> None:
 
 def close(spark) -> None:
     """End of a measurement session: reclaim (face scratch of a run
-    that was never reclaimed, e.g. a plan dump's face drains), drop the
+    that was never reclaimed, e.g. an ``--explain`` face drain), drop the
     session-lived layout twins (bucketed/partitioned external tables;
     deliberately NOT face scratch — see relational._LAYOUT_SCRATCH),
     then stop."""
@@ -517,17 +520,51 @@ def census(spark, mark: int) -> dict[str, int]:
     return out
 
 
+# What a plan printout carries that is not plan shape: expression ids,
+# exchange/subquery ids, the session-wide counter suffix of lambda
+# variable names (x_17), and the directories of file locations (face
+# and layout scratch dirs are fresh per run, fixture caches are keyed
+# by a source hash). A location keeps its leaf name, minus any hex key.
+_PLAN_NOISE = (
+    (re.compile(r",? ?\[(?:plan_id=|id=#)\d+\]"), ""),
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1#"),
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"file:[^\s,\]]*/"), "file:"),
+    (re.compile(r"(file:[^\s,\]]*?)_?[0-9a-f]{8,}\b"), r"\1"),
+)
+
+
+def plan_text(df) -> str:
+    """``df``'s simple-mode explain with _PLAN_NOISE stripped: equal for
+    equal plans across sessions and scratch dirs."""
+    from flink_kafka_filter_transform_spark.plans.explain import explain_str
+
+    text = explain_str(df, "simple")
+    for pattern, repl in _PLAN_NOISE:
+        text = pattern.sub(repl, text)
+    return text
+
+
+def plan_fingerprint(df) -> str:
+    """sha1 of plan_text(df): the plan-shape field of the census."""
+    return hashlib.sha1(plan_text(df).encode()).hexdigest()
+
+
 def measure(spark, query, reps: int, sf_dir: str = SF_DIR):
     """``reps`` timed runs of ``query`` (as for run()), each followed by
     reclaim(): the walls (s, rounded to ms) and the census of the last
-    run."""
+    run, with its DataFrame's plan_fingerprint under "plan" (taken
+    after the census read, outside the timed region)."""
     walls = []
     for _ in range(reps - 1):
-        walls.append(round(run(spark, query, sf_dir), 3))
+        walls.append(round(run(spark, query, sf_dir)[0], 3))
         reclaim(spark)
     mark = job_mark(spark)
-    walls.append(round(run(spark, query, sf_dir), 3))
+    wall, df = run(spark, query, sf_dir)
+    walls.append(round(wall, 3))
     stats = census(spark, mark)
+    stats["plan"] = plan_fingerprint(df)
+    del df  # reclaim's gc.collect must find the frame dead
     reclaim(spark)
     return walls, stats
 

@@ -1,10 +1,12 @@
 """The bench.py measurement harness: reclaim leaves nothing behind,
-the stage census repeats exactly, and the final stdout line keeps the
-driver contract under the tail budget."""
+the stage census and plan fingerprint repeat exactly, the committed
+CENSUS.json ledger covers the headline, and the final stdout line keeps
+the driver contract under the tail budget."""
 
 import json
 import os
 import random
+import re
 
 import pytest
 
@@ -27,12 +29,34 @@ def test_reclaim_removes_face_scratch_and_persisted_blocks(spark, sf_dir):
     "name", ["q1_pricing_summary", "cdc_materialize", "hll_stream_state"]
 )
 def test_census_repeats_exactly(spark, sf_dir, name):
-    keys = ("jobs", "stages", "skipped_stages", "tasks", "shuffle_write_bytes")
+    keys = ("jobs", "stages", "skipped_stages", "tasks", "shuffle_write_bytes", "plan")
     first, second = (bench.measure(spark, name, 1, sf_dir)[1] for _ in range(2))
     assert {k: first[k] for k in keys} == {k: second[k] for k in keys}
     # a census that reads zero would repeat trivially
     assert first["jobs"] > 0 and first["tasks"] > 0
     assert first["shuffle_write_bytes"] > 0
+
+
+def test_plan_fingerprint_strips_ids_and_sees_a_shuffle(spark, sf_dir):
+    build = __spark_entry__.queries()["q1_pricing_summary"]
+    q1 = build(spark, sf_dir)
+    # a second build has fresh expression ids, the same plan
+    assert bench.plan_fingerprint(q1) == bench.plan_fingerprint(build(spark, sf_dir))
+    assert "#" in bench.plan_text(q1) and not re.search(r"#\d", bench.plan_text(q1))
+    assert bench.plan_fingerprint(q1) != bench.plan_fingerprint(q1.repartition(3))
+
+
+def test_census_ledger_covers_the_headline():
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "CENSUS.json")) as f:
+        ledger = json.load(f)
+    assert os.path.basename(ledger["sf_dir"]) == "sf0.01" and ledger["cpus"] == 4
+    assert sorted(ledger["queries"]) == sorted(bench.HEADLINE)
+    for fields in ledger["queries"].values():
+        assert set(fields) == {"jobs", "stages", "plan"}
+        assert fields["jobs"] > 0 and len(fields["plan"]) == 40
+    for name, fields in ledger["variance"].items():
+        assert name in ledger["queries"] and set(fields) <= {"jobs", "stages", "plan"}
 
 
 def test_driver_memory_is_half_the_host_capped_at_24g():

@@ -53,7 +53,7 @@ def main() -> None:
         series: dict[str, list[float]] = {key: [] for key in PLANS}
         for rep in range(REPS + 1):  # rep 0 warms both plans (codegen)
             for key, skew_safe in PLANS.items():
-                wall = bench.run(spark, plan(skew_safe), d)
+                wall, _ = bench.run(spark, plan(skew_safe), d)
                 bench.reclaim(spark)
                 if rep:
                     series[key].append(round(wall, 3))
