@@ -26,6 +26,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
@@ -148,25 +149,19 @@ def forwarded(df: DataFrame, rules: list[dict]) -> DataFrame:
 # Bounded LRU; keyed on the PLAN, so callers that mutate data behind an
 # identical plan (overwrite the same parquet path) must rebuild the
 # DataFrame or call clear_route_rules_cache().
-_RULES_PROBE_CACHE: "OrderedDict[int, list[dict]]" = None  # type: ignore[assignment]
+_RULES_PROBE_CACHE: OrderedDict[int, list[dict]] = OrderedDict()
 _RULES_PROBE_CACHE_MAX = 32
 
 
 def clear_route_rules_cache() -> None:
     """Drop all memoized rule-table probes (e.g. after rewriting the
     storage behind a rules DataFrame without changing its plan)."""
-    if _RULES_PROBE_CACHE is not None:
-        _RULES_PROBE_CACHE.clear()
+    _RULES_PROBE_CACHE.clear()
 
 
 def _probe_rules(rules_df: DataFrame) -> list[dict]:
     """The collected rule rows; raises ValueError for a table over
     ``params.ROUTE_COMPILE_MAX_RULES`` rows."""
-    global _RULES_PROBE_CACHE
-    if _RULES_PROBE_CACHE is None:
-        from collections import OrderedDict
-
-        _RULES_PROBE_CACHE = OrderedDict()
     fp = rules_df.semanticHash()
     if fp in _RULES_PROBE_CACHE:
         _RULES_PROBE_CACHE.move_to_end(fp)

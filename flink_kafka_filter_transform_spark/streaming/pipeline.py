@@ -24,12 +24,16 @@ and returned unstarted; tests drive the file-stream twin.
 
 from __future__ import annotations
 
+import inspect
 import operator
 import re
+import tempfile
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
-from functools import reduce
+from functools import reduce, wraps
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
@@ -291,42 +295,6 @@ def deduped_stream(
     )
 
 
-SCD2_CHANGE_COLS = ("db", "table_name", "key", "op", "ts", "msg_id")
-
-
-def scd2_incremental_sink(
-    parsed_stream: DataFrame, state_dir: str, checkpoint_dir: str
-) -> DataStreamWriter:
-    """Incremental SCD2 maintenance via foreachBatch merge — the
-    streaming twin of ``cdc.scd2_history``.
-
-    History construction is ordered per entity key, so the retained
-    state must be the raw CHANGELOG, not the current table: a late
-    change has to SPLICE into an existing validity interval (split it
-    and shift valid_to), and deletes — which emit no interval — still
-    close one. Per micro-batch:
-
-    1. append the batch's parsed changes to the changelog store;
-    2. recompute SCD2 for ONLY the entity keys present in the batch
-       (broadcast semi-join of the batch's keys against the changelog);
-    3. carry every untouched key's intervals over unchanged (broadcast
-       anti-join) and publish the union as a new table version.
-
-    Cost per batch: the semi-join scans ALL of ``changes/`` and the
-    version write rewrites EVERY row of the table, so both grow with
-    the changelog and the table; only the shuffle and the sort are
-    proportional to the affected keys' history (_scd2_merge_batch
-    gives the job plan). Changes are deduped on (key, msg_id) before
-    the recompute, so at-least-once redelivery (a retried batch
-    re-appends) cannot corrupt history — the same idempotence a
-    Delta/Iceberg MERGE target provides; versioned parquet dirs
-    (``_merge_version``) stand in for that table format here, and
-    readers always see a complete published version
-    (``scd2_current``), never a half-written one.
-    """
-    return _sink(parsed_stream, _scd2_merge_batch, checkpoint_dir, state_dir)
-
-
 def _batch_aqe(spark: SparkSession) -> SparkSession:
     """Re-enable ADAPTIVE execution for the batch queries a
     foreachBatch body runs, and return the session (r14, guide §2.2/
@@ -355,55 +323,6 @@ def _batch_aqe(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def _scd2_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
-    """One scd2_incremental_sink micro-batch, module-level so replay
-    tests can re-drive a batch id directly. A replay re-appends its
-    changes, which collapse on the (key, msg_id) dedup, so
-    _merge_version recomputes scd2_v{batch_id} to identical content.
-
-    The plan is 4 Spark jobs: the changelog append, one broadcast of
-    the batch's keys, one shuffle and the version write.
-    - Both reads declare their schemas (the change columns; the
-      history's output), so neither runs a schema-inference job.
-    - The broadcast keeps the batch's duplicate keys: semi- and
-      anti-join results do not depend on them, and AQE reuses the one
-      broadcast for both joins instead of shuffling to dedup it first.
-      The price: the broadcast grows with the batch's rows, not its
-      distinct keys, so a large batch (an uncapped availableNow
-      backlog, or many updates to few keys) collects and broadcasts
-      every row's key.
-    - The (key, msg_id) dedup runs after an explicit hash repartition
-      on the entity key, the same partitioning scd2_history's window
-      needs, so dedup and window share one shuffle.
-    The batch is deliberately not persisted: under AQE its cached read
-    plans as a job of its own, 5 jobs per batch instead of 4.
-    """
-    changes_dir = f"{state_dir}/changes"
-    spark = batch_df.sparkSession
-    batch = batch_df.filter(F.col("op").isNotNull()).select(*SCD2_CHANGE_COLS)
-    batch.write.mode("append").parquet(changes_dir)
-    key = ["db", "table_name", "key"]
-    affected = F.broadcast(batch.select(*key))
-    changes = (
-        spark.read.schema(batch.schema)
-        .parquet(changes_dir)
-        .join(affected, key, "left_semi")
-        .repartition(*key)
-        .dropDuplicates([*key, "msg_id"])
-    )
-    recomputed = cdc.scd2_history(changes)
-    _merge_version(
-        spark,
-        state_dir,
-        "scd2",
-        batch_id,
-        recomputed,
-        lambda prev, delta: prev.join(affected, key, "left_anti").unionByName(delta),
-        recomputed.schema,
-    )
-    _write_latest_pointer(spark, state_dir, batch_id)
-
-
 # ---------------------------------------------------------------------------
 # The versioned-state protocol every foreachBatch sink shares
 # ---------------------------------------------------------------------------
@@ -413,11 +332,58 @@ def _scd2_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> Non
 # helpers below are that discipline, written once: a body reads prev
 # state strictly before its batch (_prev_version) and overwrites
 # {prefix}_v{batch_id} (_merge_version), writes _batch_id partitions
-# under dynamic overwrite (_write_batch_partition), reads them back
-# with explicit schemas (_read_batches) and publishes _LATEST last
-# (_write_latest_pointer).
-# Readers resolve a version through _current. All bookkeeping goes
-# through the Hadoop FileSystem API (_hadoop_fs).
+# under dynamic overwrite (_write_batch_partition) and reads them back
+# with explicit schemas (_read_batches).
+# Every stateful body is wrapped in _state_body, which owns the state
+# root: before the body it checks the root's _FORMAT stamp
+# (STATE_FORMAT, published on a fresh root), after it publishes _LATEST
+# (_write_latest_pointer). A root with another stamp, or with content
+# and no stamp, is refused: there is no migration, so replay the stream
+# into a fresh state dir and checkpoint. Readers (_current) and the
+# pruner (prune_state_versions) check the stamp and never write it.
+# All bookkeeping goes through the Hadoop FileSystem API (_hadoop_fs).
+
+# The layout version of every state root, stamped in its _FORMAT file.
+STATE_FORMAT = 1
+
+
+def _state_body(body):
+    """``body`` (a stateful batch body taking the batch DataFrame first
+    and ``batch_id`` and ``state_dir`` parameters) under the state-root
+    protocol: the root's stamp is checked, or published on a fresh
+    root, before the body runs, and _LATEST publishes after it returns,
+    so a reader never resolves a partial batch. The signature is
+    unchanged: replay tests drive the wrapped body directly."""
+    sig = inspect.signature(body)
+
+    @wraps(body)
+    def run(*args, **kwargs):
+        bound = sig.bind(*args, **kwargs).arguments
+        spark, batch_id, state_dir = args[0].sparkSession, bound["batch_id"], bound["state_dir"]
+        if not _stamped(spark, state_dir):
+            _publish_file(spark, state_dir, "_FORMAT", batch_id, str(STATE_FORMAT))
+        body(*args, **kwargs)
+        _write_latest_pointer(spark, state_dir, batch_id)
+
+    return run
+
+
+def _stamped(spark: SparkSession, state_dir: str) -> bool:
+    """True when ``{state_dir}/_FORMAT`` holds STATE_FORMAT, False on a
+    fresh root: absent, or holding only hidden ``.``-prefixed temp
+    files (a crash inside the stamp's own publish). Any other root
+    raises, listing its entries by full path."""
+    if _read_text(spark, f"{state_dir}/_FORMAT").strip() == str(STATE_FORMAT):
+        return True
+    root, fs = _hadoop_fs(spark, state_dir)
+    names = sorted(s.getPath().getName() for s in fs.listStatus(root)) if fs.exists(root) else []
+    if all(n.startswith(".") for n in names):
+        return False
+    raise RuntimeError(
+        f"{state_dir} is not a format-{STATE_FORMAT} state root; it holds "
+        + ", ".join(f"{state_dir}/{n}" for n in names)
+        + ". Replay into a fresh state dir and checkpoint."
+    )
 
 
 def _sink(stream: DataFrame, body, checkpoint_dir: str, *args) -> DataStreamWriter:
@@ -618,19 +584,26 @@ def _publish_file(
 
 
 def _read_text(spark: SparkSession, path: str) -> str:
+    """The text of the file at ``path``, or "" when it is unreadable.
+    The catch is narrow (not bare): a published file can be absent or
+    vanish mid-read (the delete→rename publish window), and one
+    corrupted out of band trips the checksummed local FS on read; the
+    _LATEST and _FORMAT readers resolve all of them without a crash."""
     jpath, fs = _hadoop_fs(spark, path)
-    stream = fs.open(jpath)
     try:
-        return bytes(stream.readAllBytes()).decode("utf-8")
-    finally:
-        stream.close()
+        stream = fs.open(jpath)
+        try:
+            return bytes(stream.readAllBytes()).decode("utf-8")
+        finally:
+            stream.close()
+    except Py4JJavaError:
+        return ""
 
 
 def _write_latest_pointer(spark: SparkSession, state_dir: str, batch_id: int) -> None:
     """Publish the reader-facing _LATEST pointer (the bare batch id)
-    through _publish_file. Every sink body calls it last, after all of
-    the batch's state is written, so a reader never resolves a partial
-    batch."""
+    through _publish_file; _state_body calls it after every stateful
+    body returns."""
     _publish_file(spark, state_dir, "_LATEST", batch_id, str(batch_id))
 
 
@@ -643,27 +616,17 @@ def _read_latest_pointer(
 
     Tolerant of an unreadable pointer: if the file is absent (the
     delete→rename publish window, or simply pre-first-publication) or
-    its content is not a bare integer (legacy truncate-in-place
-    publishes could expose a partial file), the reader falls back to
-    the newest PUBLISHED ``{prefix}_v*`` version when ``prefix`` is
-    given — the same resolution the sinks use — else None. No
-    exception ever escapes to a reader because of publish timing."""
-    from py4j.protocol import Py4JJavaError
-
-    # narrow catch (not bare): the pointer can be absent or vanish
-    # mid-read (the delete→rename publish window), and a pointer
-    # corrupted out-of-band trips the checksummed local FS on read —
-    # all of them the "unreadable pointer" case the fallback below
-    # resolves from the version listing instead of crashing a reader.
-    try:
-        text = _read_text(spark, f"{state_dir}/_LATEST").strip()
-    except Py4JJavaError:
-        text = ""
+    its content is not a bare integer (corrupted out of band), the
+    reader falls back to the newest PUBLISHED ``{prefix}_v*`` version
+    when ``prefix`` is given — the same resolution the sinks use —
+    else None. No exception ever escapes to a reader because of
+    publish timing; a root in another format raises (_stamped), so
+    _current and prune_state_versions never read one."""
+    _stamped(spark, state_dir)
+    text = _read_text(spark, f"{state_dir}/_LATEST").strip()
     if text.isdigit():
         return int(text)
-    if prefix is not None:
-        return _latest_state_version(spark, state_dir, prefix)
-    return None
+    return None if prefix is None else _latest_state_version(spark, state_dir, prefix)
 
 
 def _latest_state_version(
@@ -736,26 +699,6 @@ def _accumulated_over_cap(
     )
 
 
-def _refuse_legacy_index(
-    spark: SparkSession, state_dir: str, legacy: str, current: str
-) -> None:
-    """Fail loudly on a state root whose index still lives under the
-    pre-rename ``legacy`` directory. The sink reads only ``current``;
-    without this check it would start from an empty index and never
-    propose cross-batch pairs against the stored entities, while the
-    sum-merged bucket counts still count them. There is no migration:
-    rebuild the state by replaying the stream into a fresh state dir
-    and checkpoint."""
-    if _hadoop_path_exists(
-        spark, f"{state_dir}/{legacy}"
-    ) and not _hadoop_path_exists(spark, f"{state_dir}/{current}"):
-        raise RuntimeError(
-            f"{state_dir}/{legacy} holds an index in a retired layout; this "
-            f"sink reads {state_dir}/{current}. Replay the stream into a "
-            "fresh state dir and checkpoint to rebuild it."
-        )
-
-
 @dataclass(frozen=True)
 class _PairIndex:
     """One capped blocking index, declared once per pair-index face.
@@ -765,9 +708,8 @@ class _PairIndex:
     DERIVED on read by ``project`` (band_relation over sigs, the chunk
     explode over hashes, variant_exploded over names, identity over
     frames), never stored. ``keys`` are the blocking keys, ``cap`` the
-    lifetime per-key cap counted in ``{counts}_v{batch_id}``, ``id``
-    the entity column the cross join guards on, and ``legacy`` a
-    retired base dir that must not be read as an empty index."""
+    lifetime per-key cap counted in ``{counts}_v{batch_id}`` and ``id``
+    the entity column the cross join guards on."""
 
     base: str
     project: Callable[[DataFrame], DataFrame]
@@ -775,9 +717,9 @@ class _PairIndex:
     cap: int
     counts: str
     id: str = "doc_id"
-    legacy: str | None = None
 
 
+@_state_body
 def _pair_index_batch(
     base_rows: DataFrame,
     batch_id: int,
@@ -814,11 +756,9 @@ def _pair_index_batch(
     5. ``pairs(base, new, cross, stored)`` builds the verified pair log
        from the persisted base rows, the batch's capped blocking rows,
        that cross join and the pre-batch base relation; it lands as
-       the batch's pair-log partition, the base rows append to the
-       index, and _LATEST publishes last."""
+       the batch's pair-log partition and the base rows append to the
+       index (_state_body publishes _LATEST after)."""
     spark = base_rows.sparkSession
-    if index.legacy is not None:
-        _refuse_legacy_index(spark, state_dir, index.legacy, index.base)
     path, keys = f"{state_dir}/{index.base}", list(index.keys)
     base = base_rows.persist()
     try:
@@ -837,7 +777,91 @@ def _pair_index_batch(
         _write_batch_partition(base, path, batch_id)
     finally:
         base.unpersist()
-    _write_latest_pointer(spark, state_dir, batch_id)
+
+
+SCD2_CHANGE_COLS = ("db", "table_name", "key", "op", "ts", "msg_id")
+
+
+def scd2_incremental_sink(
+    parsed_stream: DataFrame, state_dir: str, checkpoint_dir: str
+) -> DataStreamWriter:
+    """Incremental SCD2 maintenance via foreachBatch merge — the
+    streaming twin of ``cdc.scd2_history``.
+
+    History construction is ordered per entity key, so the retained
+    state must be the raw CHANGELOG, not the current table: a late
+    change has to SPLICE into an existing validity interval (split it
+    and shift valid_to), and deletes — which emit no interval — still
+    close one. Per micro-batch:
+
+    1. append the batch's parsed changes to the changelog store;
+    2. recompute SCD2 for ONLY the entity keys present in the batch
+       (broadcast semi-join of the batch's keys against the changelog);
+    3. carry every untouched key's intervals over unchanged (broadcast
+       anti-join) and publish the union as a new table version.
+
+    Cost per batch: the semi-join scans ALL of ``changes/`` and the
+    version write rewrites EVERY row of the table, so both grow with
+    the changelog and the table; only the shuffle and the sort are
+    proportional to the affected keys' history (_scd2_merge_batch
+    gives the job plan). Changes are deduped on (key, msg_id) before
+    the recompute, so at-least-once redelivery (a retried batch
+    re-appends) cannot corrupt history — the same idempotence a
+    Delta/Iceberg MERGE target provides; versioned parquet dirs
+    (``_merge_version``) stand in for that table format here, and
+    readers always see a complete published version
+    (``scd2_current``), never a half-written one.
+    """
+    return _sink(parsed_stream, _scd2_merge_batch, checkpoint_dir, state_dir)
+
+
+@_state_body
+def _scd2_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
+    """One scd2_incremental_sink micro-batch, module-level so replay
+    tests can re-drive a batch id directly. A replay re-appends its
+    changes, which collapse on the (key, msg_id) dedup, so
+    _merge_version recomputes scd2_v{batch_id} to identical content.
+
+    The plan is 4 Spark jobs: the changelog append, one broadcast of
+    the batch's keys, one shuffle and the version write.
+    - Both reads declare their schemas (the change columns; the
+      history's output), so neither runs a schema-inference job.
+    - The broadcast keeps the batch's duplicate keys: semi- and
+      anti-join results do not depend on them, and AQE reuses the one
+      broadcast for both joins instead of shuffling to dedup it first.
+      The price: the broadcast grows with the batch's rows, not its
+      distinct keys, so a large batch (an uncapped availableNow
+      backlog, or many updates to few keys) collects and broadcasts
+      every row's key.
+    - The (key, msg_id) dedup runs after an explicit hash repartition
+      on the entity key, the same partitioning scd2_history's window
+      needs, so dedup and window share one shuffle.
+    The batch is deliberately not persisted: under AQE its cached read
+    plans as a job of its own, 5 jobs per batch instead of 4.
+    """
+    changes_dir = f"{state_dir}/changes"
+    spark = batch_df.sparkSession
+    batch = batch_df.filter(F.col("op").isNotNull()).select(*SCD2_CHANGE_COLS)
+    batch.write.mode("append").parquet(changes_dir)
+    key = ["db", "table_name", "key"]
+    affected = F.broadcast(batch.select(*key))
+    changes = (
+        spark.read.schema(batch.schema)
+        .parquet(changes_dir)
+        .join(affected, key, "left_semi")
+        .repartition(*key)
+        .dropDuplicates([*key, "msg_id"])
+    )
+    recomputed = cdc.scd2_history(changes)
+    _merge_version(
+        spark,
+        state_dir,
+        "scd2",
+        batch_id,
+        recomputed,
+        lambda prev, delta: prev.join(affected, key, "left_anti").unionByName(delta),
+        recomputed.schema,
+    )
 
 
 def scd2_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -932,6 +956,7 @@ def hll_merge_sink(
     return _sink(stream, _hll_merge_batch, checkpoint_dir, key, group, state_dir)
 
 
+@_state_body
 def _hll_merge_batch(
     batch_df: DataFrame, batch_id: int, key: str, group: str, state_dir: str
 ) -> None:
@@ -943,7 +968,6 @@ def _hll_merge_batch(
     _merge_version(
         spark, state_dir, "regs", batch_id, regs, _fold([group, "_idx"], _r=F.max)
     )
-    _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def hll_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -979,6 +1003,7 @@ def cms_merge_sink(
     return _sink(stream_docs, _cms_merge_batch, checkpoint_dir, state_dir)
 
 
+@_state_body
 def _cms_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
     """One cms_merge_sink micro-batch (module-level for replay tests)."""
     from flink_kafka_filter_transform_spark.operators.sketch import cms_grid
@@ -988,7 +1013,6 @@ def _cms_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None
     _merge_version(
         spark, state_dir, "grid", batch_id, grid, _fold(["row", "bucket"], cell=F.sum)
     )
-    _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def cms_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -1022,6 +1046,7 @@ def bloom_merge_sink(
     return _sink(stream_docs, _bloom_merge_batch, checkpoint_dir, state_dir)
 
 
+@_state_body
 def _bloom_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
     """One bloom_merge_sink micro-batch (module-level for replay
     tests)."""
@@ -1040,7 +1065,6 @@ def _bloom_merge_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> No
     _merge_version(
         spark, state_dir, "bloom", batch_id, regs, _fold(["reg"], bits=F.bit_or)
     )
-    _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def bloom_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -1079,6 +1103,7 @@ def ivf_assign_sink(
     )
 
 
+@_state_body
 def _ivf_assign_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -1098,7 +1123,6 @@ def _ivf_assign_batch(
     _merge_version(
         spark, state_dir, "cells", batch_id, counts, _fold(["cid"], n_vectors=F.sum)
     )
-    _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def ivf_cell_counts(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -1321,7 +1345,6 @@ def _fingerprint_index_batch(
         ("ci", "ck"),
         bucket_cap,
         "ccounts",
-        legacy="chunks",
     )
     _pair_index_batch(
         hash_stage(batch_df).select("doc_id", hash_col),
@@ -1500,6 +1523,7 @@ def ivo_overlap_sink(
     return _sink(stream_lineitem, _ivo_overlap_batch, checkpoint_dir, state_dir)
 
 
+@_state_body
 def _ivo_overlap_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> None:
     """One ivo_overlap_sink micro-batch (module-level for replay
     tests)."""
@@ -1564,7 +1588,6 @@ def _ivo_overlap_batch(batch_df: DataFrame, batch_id: int, state_dir: str) -> No
         # every later query in a shared JVM (bench r5 lesson /
         # r12 ADVICE)
         ex.unpersist()
-    _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def edit_index_sink(
@@ -1681,7 +1704,6 @@ def _edit_index_batch(
         EDIT_BLOCK_CAP,
         "vcounts",
         id="k",
-        legacy="variants",
     )
     names = batch_df.select(F.col(key_col).alias("k"), F.col(name_col).alias("nm"))
     _pair_index_batch(
@@ -1752,23 +1774,7 @@ def cc_labels_sink(
     return _sink(stream_docs, _cc_labels_batch, checkpoint_dir, state_dir, out_dir)
 
 
-def _refuse_label_manifest(spark: SparkSession, state_dir: str) -> None:
-    """Fail loudly on a state root written by the retired label-range
-    sharded protocol: ``lmanifest_v*`` files mapping shards to the
-    ``labels_v*`` versions that each hold only the shards their batch
-    rewrote. Read as whole tables, those versions would silently drop
-    every shard the newest one did not rewrite. There is no migration:
-    rebuild the state by replaying the stream into a fresh state dir
-    and checkpoint."""
-    manifests = _state_versions(spark, state_dir, "lmanifest")
-    if manifests:
-        raise RuntimeError(
-            f"{state_dir}/lmanifest_v{max(manifests)} belongs to the retired "
-            "sharded label layout, which this sink cannot read. Replay the "
-            "stream into a fresh state dir and checkpoint to rebuild it."
-        )
-
-
+@_state_body
 def _cc_labels_batch(
     batch_df: DataFrame, batch_id: int, state_dir: str, out_dir: str
 ) -> None:
@@ -1780,7 +1786,6 @@ def _cc_labels_batch(
     )
 
     spark = batch_df.sparkSession
-    _refuse_label_manifest(spark, state_dir)
     _lsh_index_batch(batch_df, batch_id, f"{state_dir}/lsh", out_dir)
     id_type = batch_df.schema["doc_id"].dataType
     # this batch's verified pairs — the partition _lsh_index_batch just
@@ -1876,14 +1881,12 @@ def _cc_labels_batch(
     finally:
         # released even on a failed write (the r12 ADVICE rule)
         base.unpersist()
-    _write_latest_pointer(spark, state_dir, batch_id)
 
 
 def cc_labels_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """The latest published component-label table (doc_id, label), or
     None before the first batch commits. A drain of an empty corpus
     publishes an empty table, typed by its part file."""
-    _refuse_label_manifest(spark, state_dir)
     return _current(spark, state_dir, "labels")
 
 
@@ -1915,36 +1918,42 @@ FACE_SCRATCH_ROOT_CONF = "spark.flinkKafkaFilterTransformSpark.faceScratchRoot"
 _FACE_SCRATCH_DIRS: list[str] = []
 
 
-def _scratch_dir(spark: SparkSession, prefix: str) -> str:
-    """A fresh ``{prefix}…`` scratch dir that every task can address:
-    the one resolver behind the sink faces' per-run scratch
-    (_face_scratch) and the session-lived layout twins
-    (operators.relational._ensure_layout_table), which keep separate
-    cleanup registries. With FACE_SCRATCH_ROOT_CONF set the dir is
-    created under that root through the Hadoop FileSystem API. On
-    local[*] masters it is otherwise a driver-local mkdtemp — the
-    executors share the driver's filesystem. On a REAL cluster a
-    driver-local temp dir is NOT addressable from executors (the same
-    rule _hadoop_fs enforces for the sinks' own state), so the
-    resolver refuses to guess and requires FACE_SCRATCH_ROOT_CONF to
-    name a cluster-addressable URI (HDFS/S3A/...)."""
-    import tempfile
-    import uuid
-
+def _scratch_root(spark: SparkSession) -> str | None:
+    """The root of every scratch path the tasks must address, or None
+    for the driver's temp dir: the one resolver behind _scratch_dir
+    (face and layout-twin scratch) and the kmeans codebook cache
+    (_cached_kmeans_codebook). With FACE_SCRATCH_ROOT_CONF set it is
+    that root, reached through the Hadoop FileSystem API. On local[*]
+    masters it is otherwise None — the executors share the driver's
+    filesystem. On a REAL cluster a driver-local temp dir is NOT
+    addressable from executors (the same rule _hadoop_fs enforces for
+    the sinks' own state), so the resolver refuses to guess and
+    requires FACE_SCRATCH_ROOT_CONF to name a cluster-addressable URI
+    (HDFS/S3A/...)."""
     root = spark.conf.get(FACE_SCRATCH_ROOT_CONF, None)
     if root:
-        scratch = f"{root.rstrip('/')}/{prefix}{uuid.uuid4().hex}"
-        jpath, fs = _hadoop_fs(spark, scratch)
-        fs.mkdirs(jpath)
-        return scratch
+        return root.rstrip("/")
     if not spark.sparkContext.master.startswith("local"):
         raise RuntimeError(
-            f"{prefix}* scratch dirs (streaming face source/checkpoint/state, "
-            "layout-twin tables) must be cluster-addressable; on a non-local "
-            f"master set {FACE_SCRATCH_ROOT_CONF} to a cluster-addressable URI "
-            "(driver-local temp dirs are invisible to executors)"
+            f"on a non-local master set {FACE_SCRATCH_ROOT_CONF} to a cluster-addressable "
+            "URI: scratch dirs in the driver's temp dir are invisible to executors"
         )
-    return tempfile.mkdtemp(prefix=prefix)
+    return None
+
+
+def _scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh ``{prefix}…`` dir under _scratch_root (a driver-local
+    mkdtemp without one): the one resolver behind the sink faces'
+    per-run scratch (_face_scratch) and the session-lived layout twins
+    (operators.relational._ensure_layout_table), which keep separate
+    cleanup registries."""
+    root = _scratch_root(spark)
+    if root is None:
+        return tempfile.mkdtemp(prefix=prefix)
+    scratch = f"{root}/{prefix}{uuid.uuid4().hex}"
+    jpath, fs = _hadoop_fs(spark, scratch)
+    fs.mkdirs(jpath)
+    return scratch
 
 
 def _face_scratch(spark: SparkSession, prefix: str) -> str:
@@ -2064,13 +2073,11 @@ def _cached_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions.hashing) PLUS a fingerprint of the embeddings parquet
     files themselves (name+size+mtime per file) — so an in-place
     dataset regeneration or a helper-module edit invalidates the
-    machine-wide cache instead of silently serving stale centroids."""
+    machine-wide cache instead of silently serving stale centroids.
+    The cache lives under _scratch_root, so every task can address it."""
     import glob as _glob
     import hashlib
-    import inspect
     import os
-    import shutil
-    import tempfile
 
     from flink_kafka_filter_transform_spark.functions import hashing as _hashing_mod
     from flink_kafka_filter_transform_spark.operators import kmeans as kmeans_ops
@@ -2099,18 +2106,22 @@ def _cached_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).encode()
         ).hexdigest()[:10],
     )
-    cache = os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache", key)
-    if not os.path.isdir(cache):
+    cache_dir = f"{_scratch_root(spark) or tempfile.gettempdir()}/spark_graft_codebook_cache"
+    cache = f"{cache_dir}/{key}"
+    if not _hadoop_path_exists(spark, cache):
         emb = load_table(spark, "embeddings", sf_dir).select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
         _, cents = kmeans_ops.kmeans_fit(emb)
-        tmp = f"{cache}.tmp-{os.getpid()}"
+        # hidden from parquet reads: a concurrent writer that publishes
+        # between the probe and the rename makes the rename move this
+        # copy INTO the cache dir, where the read below skips it
+        tmp = f"{cache_dir}/.{key}.tmp-{uuid.uuid4().hex}"
         cents.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, cache)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race; cache exists
+        jtmp, fs = _hadoop_fs(spark, tmp)
+        jcache = spark._jvm.org.apache.hadoop.fs.Path(cache)
+        if fs.exists(jcache) or not fs.rename(jtmp, jcache):
+            _delete_path(spark, tmp)  # lost the race; the cache exists
     return spark.read.parquet(cache)
 
 

@@ -1230,11 +1230,13 @@ def test_latest_pointer_publish_is_tearing_free_and_reader_tolerant(
     assert sp._read_latest_pointer(spark, state) == 1
 
 
-def test_cached_kmeans_codebook_matches_inline_fit(spark, sf_dir):
+def test_cached_kmeans_codebook_matches_inline_fit(spark, sf_dir, tmp_path_factory):
     """_cached_kmeans_codebook is pure memoization: its parquet-cached
     codebook must be bit-identical to an inline kmeans_fit over the
     same embeddings (VERDICT r6 item 5), on both the cold (writing)
-    and warm (reading) path."""
+    and warm (reading) path — under the driver's temp dir and, with
+    FACE_SCRATCH_ROOT_CONF set, under the configured root, where the
+    cache must land (the root every task can address)."""
     from flink_kafka_filter_transform_spark.operators.kmeans import kmeans_fit
     from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
@@ -1249,6 +1251,20 @@ def test_cached_kmeans_codebook_matches_inline_fit(spark, sf_dir):
             for r in sp._cached_kmeans_codebook(spark, sf_dir).collect()
         }
         assert got == expected and len(got) > 0
+
+    root = str(tmp_path_factory.mktemp("codebook_root"))
+    spark.conf.set(sp.FACE_SCRATCH_ROOT_CONF, root)
+    try:
+        for _ in range(2):  # cold under the root, then warm
+            cached = sp._cached_kmeans_codebook(spark, sf_dir)
+            files = cached.inputFiles()
+            assert files and all(f"{root}/spark_graft_codebook_cache/" in f for f in files)
+            got = {(r.cid, tuple(r.centroid)) for r in cached.collect()}
+            assert got == expected
+    finally:
+        spark.conf.unset(sp.FACE_SCRATCH_ROOT_CONF)
+    # one published cache entry, no temp copy left beside it
+    assert len(os.listdir(f"{root}/spark_graft_codebook_cache")) == 1
 
 
 def test_face_scratch_configured_root_and_cleanup(spark, tmp_path_factory):
@@ -2364,3 +2380,61 @@ def test_batch_survives_crash_before_any_durable_write(
                 run(b1, 1, f"{root}/state", f"{root}/out")
         run(b1, 1, f"{root}/state", f"{root}/out")  # replay
         assert _durable_snapshot(root, as_set) == want, f"crash before write {k}"
+
+
+_STATE_READERS = {
+    "scd2": sp.scd2_current,
+    "hll": sp.hll_current,
+    "cms": sp.cms_current,
+    "bloom": sp.bloom_current,
+    "ivf": sp.ivf_cell_counts,
+    "ivo": lambda spark, state: sp._current(spark, state, "osum"),
+    "cc": sp.cc_labels_current,
+}
+
+
+@pytest.mark.parametrize(
+    "face",
+    ["scd2", "hll", "cms", "bloom", "ivf", "lsh", "phash", "afp", "vfp", "ivo", "edit", "cc"],
+)
+def test_state_root_refuses_other_format(spark, sf_dir, tmp_path, face):
+    """A state root stamped with another STATE_FORMAT fails the next
+    batch before it writes anything, and fails the face's reader:
+    there is no migration, and state in an unknown layout must never be
+    read as an empty or a partial one."""
+    run, b0, b1 = _crash_face(spark, sf_dir, face)
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    run(b0, 0, state, out)
+    with open(f"{state}/_FORMAT", "w") as f:
+        f.write(str(sp.STATE_FORMAT + 1))
+    before = _durable_snapshot(str(tmp_path))
+    with pytest.raises(RuntimeError, match=re.escape(f"{state}/_FORMAT")):
+        run(b1, 1, state, out)
+    assert _durable_snapshot(str(tmp_path)) == before
+    if face in _STATE_READERS:
+        with pytest.raises(RuntimeError, match=re.escape(f"{state}/_FORMAT")):
+            _STATE_READERS[face](spark, state)
+
+
+def test_state_root_refuses_unstamped_versions(spark, sf_dir, tmp_path):
+    """A root without a stamp that already holds a version — as a root
+    written before the stamp existed does — is refused, not adopted."""
+    run, b0, _ = _crash_face(spark, sf_dir, "cms")
+    state = tmp_path / "state"
+    (state / "grid_v0").mkdir(parents=True)
+    with pytest.raises(RuntimeError, match=re.escape(f"{state}/grid_v0")):
+        run(b0, 1, str(state), str(tmp_path / "out"))
+    assert os.listdir(state) == ["grid_v0"]
+
+
+def test_state_root_stamps_over_stamp_temp_file(spark, sf_dir, tmp_path):
+    """A root holding only the temp file of a stamp publish that crashed
+    before its rename is fresh: the batch runs and stamps the root."""
+    run, b0, _ = _crash_face(spark, sf_dir, "cms")
+    state = tmp_path / "state"
+    state.mkdir()
+    (state / "._FORMAT.tmp.0").write_text(str(sp.STATE_FORMAT))
+    run(b0, 0, str(state), str(tmp_path / "out"))
+    assert (state / "_FORMAT").read_text() == str(sp.STATE_FORMAT)
+    assert sp._read_latest_pointer(spark, str(state)) == 0
+    assert sp.cms_current(spark, str(state)).count() > 0

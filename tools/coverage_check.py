@@ -7,8 +7,9 @@ tool makes doc rot a CI failure instead of a judgment-day surprise:
    mentioned in SURVEY.md or README.md — an operator that ships
    without documentation fails here;
 2. every ``module.function`` reference in SURVEY.md or README.md that
-   names an operator/streaming module must resolve to a real attribute
-   — a doc line pointing at a renamed or deleted function fails here.
+   names an operator, streaming, sources, sinks, plans or functions
+   module must resolve to a real module or attribute — a doc line
+   pointing at a renamed or deleted function fails here.
 
 tests/test_contract.py runs both checks in CI.
 """
@@ -42,7 +43,8 @@ _OPERATOR_MODULES = (
 _DOTTED_RE = re.compile(
     r"`((?:streaming\.(?:pipeline|state|metrics)|"
     + "|".join(_OPERATOR_MODULES)
-    + r")\.[A-Za-z_][A-Za-z_0-9]*)`"
+    + r")\.[A-Za-z_][A-Za-z_0-9]*"
+    + r"|(?:sources|sinks|plans|functions)(?:\.[A-Za-z_][A-Za-z_0-9]*)+)`"
 )
 
 
@@ -70,19 +72,30 @@ def dangling_doc_refs() -> list[str]:
     pkg = "flink_kafka_filter_transform_spark"
     dangling = []
     for ref in sorted(set(_DOTTED_RE.findall(_docs()))):
-        parts = ref.split(".")
-        if parts[0] == "streaming":
-            mod_name, attr = f"{pkg}.streaming.{parts[1]}", parts[2]
+        if ref.split(".")[0] in _OPERATOR_MODULES:
+            ref_path = f"{pkg}.operators.{ref}"
         else:
-            mod_name, attr = f"{pkg}.operators.{parts[0]}", parts[1]
-        try:
-            mod = importlib.import_module(mod_name)
-        except ImportError:
-            dangling.append(ref)
-            continue
-        if not hasattr(mod, attr):
+            ref_path = f"{pkg}.{ref}"
+        if not _resolves(ref_path):
             dangling.append(ref)
     return dangling
+
+
+def _resolves(dotted: str) -> bool:
+    """True when ``dotted`` names a module, or an attribute chain under
+    the longest importable module prefix of it."""
+    parts = dotted.split(".")
+    for cut in range(len(parts), 0, -1):
+        try:
+            obj = importlib.import_module(".".join(parts[:cut]))
+        except ImportError:
+            continue
+        for attr in parts[cut:]:
+            if not hasattr(obj, attr):
+                return False
+            obj = getattr(obj, attr)
+        return True
+    return False
 
 
 def main() -> int:
