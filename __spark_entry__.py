@@ -37,7 +37,7 @@ from flink_kafka_filter_transform_spark.operators import (
     vectorprep,
     web,
 )
-from flink_kafka_filter_transform_spark.sources.cdc_fixture import RULES, cdc_events_df, rules_df
+from flink_kafka_filter_transform_spark.sources.cdc_fixture import RULES, cdc_events_df
 from flink_kafka_filter_transform_spark.sources.parquet import load_table
 from flink_kafka_filter_transform_spark.streaming import pipeline as streaming_pipeline
 
@@ -67,13 +67,6 @@ def q_cdc_filter_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdc_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = cdc.route_when_chain(cdc.filter_deletes(cdc.parse_envelope(_cdc(spark, sf_dir))), RULES)
     return cdc.drop_unrouted(df).select("msg_id", "topic", "db", "table_name", "op", "target_topic")
-
-
-def q_cdc_route_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = cdc.route_broadcast_join(
-        cdc.filter_deletes(cdc.parse_envelope(_cdc(spark, sf_dir))), rules_df(spark)
-    )
-    return df.select("msg_id", "topic", "db", "table_name", "op", "target_topic")
 
 
 def q_cdc_counts_inbound(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,9 +134,6 @@ def queries() -> dict[str, QueryFn]:
         "revenue_cube": lambda s, d: relational.revenue_cube(load_table(s, "lineitem", d)),
         "revenue_grouping_sets": lambda s, d: relational.revenue_grouping_sets(
             load_table(s, "lineitem", d)
-        ),
-        "array_function_showcase": lambda s, d: relational.array_function_showcase(
-            _docs(s, d)
         ),
         "lang_id": lambda s, d: text.lang_id(_docs(s, d)),
         "token_counts": lambda s, d: text.token_counts(_docs(s, d)),
@@ -308,7 +298,6 @@ def queries() -> dict[str, QueryFn]:
             load_table(s, "lineitem", d)
         ),
         "knn_brute": lambda s, d: similarity.knn_brute(_emb(s, d)),
-        "knn_lsh": lambda s, d: similarity.knn_lsh(_emb(s, d)),
         "simhash_pairs": lambda s, d: dedup.simhash_pairs(_docs(s, d)),
         # mh0-blocked via _mh/_hash_pairs, not lsh_candidates
         "ngram_jaccard_pairs": lambda s, d: dedup.ngram_jaccard_pairs(_docs(s, d)),
@@ -316,7 +305,6 @@ def queries() -> dict[str, QueryFn]:
         # kept only as the measured comparator for the _refined variant
         "embedding_neardup": lambda s, d: dedup.embedding_neardup(_emb(s, d)),
         "knn_ivf": lambda s, d: similarity.knn_ivf(_emb(s, d)),
-        "knn_lsh_recall": lambda s, d: similarity.knn_lsh_recall(_emb(s, d)),
         "knn_ivf_recall": lambda s, d: similarity.knn_ivf_recall(_emb(s, d)),
         "knn_ivf_probe_sweep": lambda s, d: similarity.knn_ivf_probe_sweep(_emb(s, d)),
         "q7_volume_shipping": lambda s, d: relational.q7_volume_shipping(
@@ -391,7 +379,6 @@ def queries() -> dict[str, QueryFn]:
         "q22_idle_rich_customers": lambda s, d: relational.q22_idle_rich_customers(
             load_table(s, "customer", d), load_table(s, "orders", d)
         ),
-        "cdc_route_join": q_cdc_route_join,
         "media_decode": lambda s, d: multimodal.media_decode(_docs(s, d)),
         "cdc_parse": q_cdc_parse,
         "cdc_filter_deletes": q_cdc_filter_deletes,
@@ -474,9 +461,6 @@ def queries() -> dict[str, QueryFn]:
         "purchases_with_recent_clicks": lambda s, d: rangejoin.purchases_with_recent_clicks(
             load_table(s, "events", d)
         ),
-        "scalar_function_showcase": lambda s, d: relational.scalar_function_showcase(
-            load_table(s, "orders", d)
-        ),
         # --- extensibility, multimodal plumbing ---
         "weighted_avg_by_type": lambda s, d: extensibility.weighted_avg_by_type(
             load_table(s, "events", d)
@@ -514,9 +498,6 @@ def queries() -> dict[str, QueryFn]:
             load_table(s, "events", d)
         ),
         "order_priority_stats": lambda s, d: relational.order_priority_stats(
-            load_table(s, "orders", d)
-        ),
-        "window_function_showcase": lambda s, d: relational.window_function_showcase(
             load_table(s, "orders", d)
         ),
         "q4_order_priority_semi": lambda s, d: relational.q4_order_priority_semi(
@@ -815,7 +796,6 @@ def oracle_sql() -> dict[str, str]:
         "cdc_parse": oracles.cdc_parse_oracle(),
         "cdc_filter_deletes": oracles.cdc_filter_deletes_oracle(),
         "cdc_route": oracles.cdc_route_oracle(),
-        "cdc_route_join": oracles.cdc_route_join_oracle(),
         "cdc_counts_inbound": oracles.cdc_counts_inbound_oracle(),
         "cdc_counts_outbound": oracles.cdc_counts_outbound_oracle(),
         "cdc_outgoing": oracles.cdc_outgoing_oracle(),
@@ -839,9 +819,7 @@ def oracle_sql() -> dict[str, str]:
         "simhash_pairs": oracles.simhash_pairs_oracle(),
         "embedding_neardup": oracles.embedding_neardup_oracle(),
         "knn_brute": oracles.knn_brute_oracle(),
-        "knn_lsh": oracles.knn_lsh_oracle(),
         "knn_ivf": oracles.knn_ivf_oracle(),
-        "knn_lsh_recall": oracles.knn_lsh_recall_oracle(),
         "kmeans_clusters": oracles.kmeans_clusters_oracle(),
         "kmeans_cluster_sizes": oracles.kmeans_cluster_sizes_oracle(),
         "knn_ivf_kmeans": oracles.knn_ivf_kmeans_oracle(),
@@ -865,13 +843,11 @@ def oracle_sql() -> dict[str, str]:
         "ngram_jaccard_pairs": oracles.ngram_jaccard_pairs_oracle(),
         "neardup_clusters": oracles.neardup_clusters_oracle(),
         "dedup_survivors": oracles.dedup_survivors_oracle(),
-        "array_function_showcase": oracles.array_function_showcase_oracle(),
         "weighted_avg_by_type": oracles.weighted_avg_by_type_oracle(),
         "sentence_split_rows": oracles.sentence_split_rows_oracle(),
         "frame_sample": oracles.frame_sample_oracle(),
         "events_sessionized": oracles.events_sessionized_oracle(),
         "events_sessionized_native": oracles.events_sessionized_native_oracle(),
-        "window_function_showcase": oracles.window_function_showcase_oracle(),
         "events_daily_gapfilled": oracles.events_daily_gapfilled_oracle(),
         "events_pivot": oracles.events_pivot_oracle(),
         "events_unpivot": oracles.events_unpivot_oracle(),
@@ -887,7 +863,6 @@ def oracle_sql() -> dict[str, str]:
         "salted_event_counts": oracles.salted_event_counts_oracle(),
         "event_value_percentiles": oracles.event_value_percentiles_oracle(),
         "q14_promo_revenue": oracles.q14_promo_revenue_oracle(),
-        "scalar_function_showcase": oracles.scalar_function_showcase_oracle(),
         "revenue_grouping_sets": oracles.revenue_grouping_sets_oracle(),
         "hll_distinct_users": oracles.hll_distinct_users_oracle(),
         "hll_distinct_orders": oracles.hll_distinct_orders_oracle(),

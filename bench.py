@@ -27,7 +27,7 @@ query first absorbs JVM/session startup.
 METHODOLOGY (frozen in r4 — do not change mid-series again):
 - REPS = 2, pinned. Each query runs twice back-to-back.
 - "cold"  = the first run (includes plan/codegen latency and any
-  per-table one-time costs like the routing rule probe),
+  per-table one-time costs),
 - "warm"  = min of the remaining runs (JMH-style steady state — what
   predicts cluster throughput, where fixed costs amortize to nothing),
 - "queries" + the headline total stay min-of-REPS for series
@@ -61,7 +61,6 @@ HEADLINE = [
     "cdc_parse",
     "cdc_counts_inbound",
     "cdc_counts_outbound",
-    "cdc_route_join",
     "cdc_outgoing",
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -75,7 +74,6 @@ HEADLINE = [
     # the comparator for embedding_neardup_refined, which carries the
     # headline trend line instead.
     "knn_brute",
-    "knn_lsh",
     "knn_ivf",
     "text_stats",
     "doc_fingerprint",
@@ -87,7 +85,6 @@ HEADLINE = [
     "events_sessionized",
     "hll_distinct_orders",
     "q14_promo_revenue",
-    "scalar_function_showcase",
     # round 2 additions
     "cdc_materialize",
     "repetition_ratios",
@@ -250,8 +247,11 @@ REPS = 2  # frozen r4 methodology; see module docstring
 # emitted from v2 on) against the old "value". Bump on any change that
 # alters what the headline number measures. v3 drops the bench-only
 # forced run of the big-rule-table routing join from the headline (that
-# join is gone; routing has one plan, timed as cdc_route_join).
-METHODOLOGY = 3
+# join is gone; routing has one plan). v4 drops three headline queries
+# with their operators: the rules-DataFrame routing query (the router
+# takes its rules only as a compiled list, timed as cdc_route and
+# cdc_outgoing), the sign-LSH knn and the scalar-function showcase.
+METHODOLOGY = 4
 
 # r8 variance guard (VERDICT r7 item 2): the driver-side iterative
 # trainers (localCheckpoint loops) are allocation-sensitive in the
@@ -390,12 +390,8 @@ def run(spark, query, sf_dir: str = SF_DIR):
 
 def warm_up(spark, sf_dir: str = SF_DIR) -> None:
     """Absorb session-level one-time costs before any timed run: JVM,
-    codegen, the parquet footer cache and the CDC fixture build; then
-    the Arrow collect path (route_broadcast_join's rule-table probe is
-    the only collecting query; its first-use init is a session cost,
-    not a per-query cost)."""
+    codegen, the parquet footer cache and the CDC fixture build."""
     run(spark, "cdc_counts_outbound", sf_dir)
-    spark.range(1).limit(1).toArrow()
 
 
 def reclaim(spark) -> None:

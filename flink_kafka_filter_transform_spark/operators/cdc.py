@@ -13,10 +13,10 @@ WholeStageCodegen over the scan.
 
 Scale notes (100 TB):
 - The rule table is config-sized (the reference's YAML list,
-  config.yaml:7-11): every rule table, static or given as a DataFrame,
-  folds into ONE ordered ``when`` chain (constant-folded literals, zero
-  shuffle, zero join). A table over ``params.ROUTE_COMPILE_MAX_RULES``
-  rows is rejected, not routed some other way.
+  config.yaml:7-11), compiled once per query: every rule list folds
+  into ONE ordered ``when`` chain (constant-folded literals, zero
+  shuffle, zero join). A list over ``params.ROUTE_COMPILE_MAX_RULES``
+  rules is rejected, not routed some other way.
 - Counters are streaming groupBy counts: map-side partial aggregation
   means the shuffle carries only (group, partial_count) rows, bounded
   by group cardinality (topics x dbs x tables x 4 ops), not data size.
@@ -26,7 +26,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
@@ -89,7 +88,14 @@ def _rule_cond(rule: dict, topic: str, db: str, table: str) -> Column:
 
 
 def _route_expr(rules: list[dict], topic_col: str, db_col: str, table_col: str) -> Column:
-    """The first-match target topic of ``rules`` as one ordered CASE."""
+    """The first-match target topic of ``rules`` as one ordered CASE;
+    raises ValueError for a list over ``params.ROUTE_COMPILE_MAX_RULES``
+    rules. Every routing entry point compiles through here."""
+    bound = params.ROUTE_COMPILE_MAX_RULES
+    if len(rules) > bound:
+        raise ValueError(
+            f"{len(rules)} routing rules, over the ROUTE_COMPILE_MAX_RULES bound of {bound}"
+        )
     expr: Column = F.lit(None).cast("string")
     # NULL priority sorts as int-max ("lowest precedence"), matching
     # DuckDB's ASC NULLS LAST. target_topic is the deterministic
@@ -139,84 +145,6 @@ def forwarded(df: DataFrame, rules: list[dict]) -> DataFrame:
     deletes, route, drop unrouted — the forwarded messages with their
     ``target_topic``."""
     return drop_unrouted(route_forwarded(parse_envelope(df), rules))
-
-
-# Rules-probe memo: logical-plan fingerprint (semanticHash — Spark's
-# own canonical plan-equality hash, the mechanism behind sameSemantics)
-# -> collected rule rows. The probe is an eager ~0.3-0.9 s Spark job;
-# a rule table is typically routed against once per micro-batch or
-# query, so paying it once per TABLE instead of once per CALL matters.
-# Bounded LRU; keyed on the PLAN, so callers that mutate data behind an
-# identical plan (overwrite the same parquet path) must rebuild the
-# DataFrame or call clear_route_rules_cache().
-_RULES_PROBE_CACHE: OrderedDict[int, list[dict]] = OrderedDict()
-_RULES_PROBE_CACHE_MAX = 32
-
-
-def clear_route_rules_cache() -> None:
-    """Drop all memoized rule-table probes (e.g. after rewriting the
-    storage behind a rules DataFrame without changing its plan)."""
-    _RULES_PROBE_CACHE.clear()
-
-
-def _probe_rules(rules_df: DataFrame) -> list[dict]:
-    """The collected rule rows; raises ValueError for a table over
-    ``params.ROUTE_COMPILE_MAX_RULES`` rows."""
-    fp = rules_df.semanticHash()
-    if fp in _RULES_PROBE_CACHE:
-        _RULES_PROBE_CACHE.move_to_end(fp)
-        return _RULES_PROBE_CACHE[fp]
-    # Bounded probe: reads at most MAX+1 rule rows, never the full
-    # table. toArrow (not take/collect-with-limit) — CollectLimitExec's
-    # incremental job scheduling costs ~1-2s per call even on a 7-row
-    # local relation; the Arrow path is a single ~0.3s fetch.
-    bound = params.ROUTE_COMPILE_MAX_RULES
-    head = (
-        rules_df.select("priority", "source_topic", "db", "table_pattern", "target_topic")
-        .limit(bound + 1)
-        .toArrow()
-    )
-    if head.num_rows > bound:
-        raise ValueError(
-            f"route_broadcast_join: the rule table has {rules_df.count()} rows, "
-            f"over the ROUTE_COMPILE_MAX_RULES bound of {bound}"
-        )
-    result = head.to_pylist()
-    _RULES_PROBE_CACHE[fp] = result
-    if len(_RULES_PROBE_CACHE) > _RULES_PROBE_CACHE_MAX:
-        _RULES_PROBE_CACHE.popitem(last=False)
-    return result
-
-
-def route_broadcast_join(
-    df: DataFrame,
-    rules_df: DataFrame,
-    topic_col: str = "topic",
-    db_col: str = "db",
-    table_col: str = "table_name",
-) -> DataFrame:
-    """Dynamic-rule routing (rules only known at runtime, as a
-    DataFrame), dropping unrouted messages.
-
-    The rules are collected to the driver — the rule table is
-    broadcast-sized BY DEFINITION, and collecting it at plan time is
-    exactly what Spark's own broadcast join does — and compiled into
-    the same ordered ``when`` chain as ``route_when_chain``: one scan,
-    ZERO shuffles, regexes become codegen literals. The probe is
-    memoized on the rules plan's semanticHash (``_probe_rules``), so
-    repeated routing against the same rule table pays the collection
-    job once. A table over ``params.ROUTE_COMPILE_MAX_RULES`` rows
-    raises ValueError: its CASE chain would outgrow codegen.
-    """
-    if rules_df.isStreaming:
-        raise ValueError(
-            "route_broadcast_join requires a BATCH rules DataFrame: the rule "
-            "table is probed eagerly at plan-build time (the broadcast-sized "
-            "assumption), which is undefined for a streaming relation. Route "
-            "a stream of rule updates through foreachBatch and rebuild."
-        )
-    rules = _probe_rules(rules_df)
-    return drop_unrouted(route_when_chain(df, rules, topic_col, db_col, table_col))
 
 
 def drop_unrouted(df: DataFrame) -> DataFrame:

@@ -81,7 +81,6 @@ EMB_NEARDUP_THRESHOLD = 0.30
 EMB_CELL_TARGET_ROWS = 256
 KNN_NUM_QUERIES = 5  # vec_id < 5 are the query set
 KNN_K = 10
-LSH_NUM_PLANES = 4  # hyperplanes = embeddings vec_id < 4
 LSH_TOPK = 5
 
 # --- SemDeDup ---------------------------------------------------------------
@@ -109,10 +108,11 @@ BLOOM_REG_BITS = 62
 BLOOM_K = 2
 
 # --- CDC routing -----------------------------------------------------------
-# Largest rule table cdc.route_broadcast_join accepts: every table is
-# collected at plan time and compiled into the ordered when-chain (one
-# scan, zero shuffles); a larger one raises ValueError. Sized well
-# under Catalyst codegen limits for a 3-predicate CASE branch per rule.
+# Largest rule list the router compiles: cdc._route_expr, which every
+# routing entry point goes through, turns the list into one ordered
+# when-chain (one scan, zero shuffles) when the query is built, and
+# raises ValueError for a longer list. Sized well under Catalyst codegen
+# limits for a 3-predicate CASE branch per rule.
 ROUTE_COMPILE_MAX_RULES = 1000
 
 # --- multimodal ------------------------------------------------------------

@@ -572,42 +572,6 @@ def revenue_grouping_sets(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def scalar_function_showcase(orders: DataFrame) -> DataFrame:
-    """Scalar-function breadth in one oracle-checked projection: date
-    parts and day arithmetic, string slicing/casing/concat, math
-    (abs/sqrt/floor/ceil/sign, all IEEE-or-integer deterministic),
-    conditional (greatest/least/coalesce/nullif/CASE). Map-only plan —
-    stays entirely inside one WholeStageCodegen span."""
-    price = F.col("o_totalprice")
-    return orders.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("order_year"),
-        F.month("o_orderdate").alias("order_month"),
-        F.dayofmonth("o_orderdate").alias("order_day"),
-        F.datediff(F.lit("1999-01-01").cast("timestamp"), F.col("o_orderdate")).alias(
-            "days_to_1999"
-        ),
-        F.upper(F.substring("o_orderpriority", 3, 100)).alias("priority_word"),
-        F.length("o_orderpriority").cast("int").alias("priority_len"),
-        F.concat_ws(":", "o_orderpriority", F.col("o_custkey").cast("string")).alias(
-            "prio_cust"
-        ),
-        F.abs(price - F.lit(100000.0)).alias("abs_from_100k"),
-        F.sqrt(price).alias("sqrt_price"),
-        F.floor(price).cast("bigint").alias("floor_price"),
-        F.ceil(price).cast("bigint").alias("ceil_price"),
-        F.signum(price - F.lit(100000.0)).alias("price_sign"),
-        F.greatest(price, F.lit(50000.0)).alias("floored_price"),
-        F.least(F.col("o_custkey") % 100, F.lit(50)).cast("bigint").alias("capped_mod"),
-        F.coalesce(F.nullif(F.col("o_orderpriority"), F.lit("3-MEDIUM")), F.lit("(med)")).alias(
-            "prio_or_med"
-        ),
-        F.when(price > 200000, "high").when(price > 100000, "mid").otherwise("low").alias(
-            "price_band"
-        ),
-    )
-
-
 def events_props_map_explode(events: DataFrame) -> DataFrame:
     """Map-type surface: parse the props JSON into MAP<STRING,STRING>,
     explode to (key, value) pairs, aggregate per key. Generators
@@ -620,33 +584,6 @@ def events_props_map_explode(events: DataFrame) -> DataFrame:
         F.min("prop_val").alias("min_val"),
         F.max("prop_val").alias("max_val"),
     )
-
-
-def window_function_showcase(orders: DataFrame) -> DataFrame:
-    """Analytic-window breadth over one deterministic ordering:
-    ranking (row_number/rank/dense_rank/ntile), offsets (lag/lead),
-    frame endpoints (first/last value), and distribution
-    (percent_rank/cume_dist — count ratios, so exact doubles). The
-    single window spec means one shuffle + one sort serves all nine
-    functions."""
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return orders.select(
-        "o_orderkey",
-        "o_orderpriority",
-        "o_totalprice",
-        F.row_number().over(w).alias("rn"),
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.lag("o_orderkey", 1).over(w).alias("prev_key"),
-        F.lead("o_orderkey", 1).over(w).alias("next_key"),
-        F.first("o_orderkey").over(wf).alias("top_key"),
-        F.percent_rank().over(w).alias("pct_rank"),
-        F.cume_dist().over(w).alias("cume"),
-    ).filter(F.col("rn") <= 50)
 
 
 def events_daily_gapfilled(events: DataFrame) -> DataFrame:
@@ -711,36 +648,6 @@ def events_unpivot(events: DataFrame) -> DataFrame:
         )
         .withColumn("event_type", F.expr("substring(event_type, 3)"))
         .filter(F.col("n_events") > 0)
-    )
-
-
-def array_function_showcase(docs: DataFrame) -> DataFrame:
-    """Array-function breadth over the token arrays: sort, dedupe,
-    slice, set ops against a constant, existence predicates, and a
-    fold — all Catalyst higher-order functions, one map-only plan."""
-    from flink_kafka_filter_transform_spark.operators.text import tokens
-
-    # NOT F.expr("regexp_extract_all(text, '[^\\s]+')"): Spark SQL
-    # string literals eat the backslash ('\s' -> 's'), silently turning
-    # the pattern into [^s]+ — use the Column-API helper instead.
-    toks = tokens()
-    stop = F.array(F.lit("the"), F.lit("and"), F.lit("of"))
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        # Driver contract: no array/map/struct output columns (the
-        # harness canonicalizer cannot hash list cells) — join to a
-        # string; tokens are [^\s]+ so a space separator is unambiguous.
-        F.array_join(F.slice(F.array_sort(F.array_distinct(toks)), 1, 5), " ").alias(
-            "first5_sorted"
-        ),
-        F.size(F.array_intersect(toks, stop)).alias("n_stopword_kinds"),
-        F.size(F.array_except(F.array_distinct(toks), stop)).alias("n_content_kinds"),
-        F.array_contains(toks, "the").alias("has_the"),
-        F.exists(toks, lambda t: F.length(t) > 10).alias("has_long_token"),
-        F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-        .cast("bigint")
-        .alias("total_chars"),
     )
 
 

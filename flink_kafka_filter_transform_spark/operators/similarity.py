@@ -4,22 +4,20 @@
                    (small) query set is broadcast against the corpus,
                    so the corpus is scanned once with no shuffle except
                    the final per-query top-k.
-- ``knn_lsh``    : random-hyperplane (sign-LSH) bucketed top-k — the
-                   scale path. Vectors hash to a bucket by the sign
-                   pattern of dot products against NUM_PLANES fixed
-                   hyperplanes; a query only scans its own bucket
-                   (~corpus/2^planes of the data).
+- ``knn_ivf``    : centroid-cell (IVF) top-k — the scale path. Each
+                   query ranks a small codebook and scans only its
+                   ``nprobe`` nearest cells (~corpus/cells * nprobe of
+                   the data).
 
-Hyperplanes are taken deterministically from the corpus itself
-(vec_id < LSH_NUM_PLANES) — embeddings are zero-centered so corpus
-vectors work as random hyperplanes, and determinism keeps the whole
-operator oracle-checkable (no RNG).
+Every approximate variant is deterministic (no RNG), so the oracle
+checks the approximate result exactly; its ``*_recall`` twin against
+``knn_brute`` is the accuracy metric.
 
 All vector math is Catalyst higher-order functions (functions.vectors)
 — JVM-side, no UDF. At 100 TB the brute path becomes a
 broadcast-queries × corpus map + per-query top-k (Spark's
-TakeOrderedAndProject); the LSH path turns it into a bucket-equi-join,
-shuffling each corpus vector once into its bucket.
+TakeOrderedAndProject); the IVF path broadcasts the codebook and the
+query set and reads the corpus once.
 """
 
 from __future__ import annotations
@@ -28,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from flink_kafka_filter_transform_spark.functions.vectors import cosine_similarity, dot
+from flink_kafka_filter_transform_spark.functions.vectors import cosine_similarity
 from flink_kafka_filter_transform_spark.operators import params
 
 
@@ -55,44 +53,6 @@ def knn_brute(emb: DataFrame, k: int = params.KNN_K) -> DataFrame:
     q = _queries(emb)
     scored = (
         emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", cosine_similarity("embedding", "q_vec").alias("cos_sim"))
-    )
-    return _topk(scored, k)
-
-
-def bucketize(emb: DataFrame) -> DataFrame:
-    """Assign each vector its sign-LSH bucket id.
-
-    bucket = sum over planes p of (dot(v, plane_p) > 0) << p, computed
-    as one broadcast join against the plane set plus one aggregation —
-    both map-side cheap."""
-    planes = emb.filter(F.col("vec_id") < params.LSH_NUM_PLANES).select(
-        F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec")
-    )
-    joined = emb.crossJoin(F.broadcast(planes)).select(
-        "vec_id",
-        F.when(dot("embedding", "pvec") > 0, F.expr("CAST(power(2, pid) AS BIGINT)"))
-        .otherwise(F.lit(0).cast("bigint"))
-        .alias("bit"),
-    )
-    return joined.groupBy("vec_id").agg(F.sum("bit").alias("bucket"))
-
-
-def knn_lsh(emb: DataFrame, k: int = params.LSH_TOPK) -> DataFrame:
-    """Approximate top-k: each query only scans its own LSH bucket.
-
-    Deterministic, so the oracle checks exactness of the approximate
-    result (same bucketing, same ranking); recall vs knn_brute is the
-    accuracy metric a user would monitor."""
-    buckets = bucketize(emb)
-    corpus = emb.join(buckets, "vec_id")
-    q = _queries(emb).join(
-        buckets.withColumnRenamed("vec_id", "q_id").withColumnRenamed("bucket", "q_bucket"),
-        "q_id",
-    )
-    scored = (
-        corpus.join(F.broadcast(q), F.col("bucket") == F.col("q_bucket"))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", cosine_similarity("embedding", "q_vec").alias("cos_sim"))
     )
@@ -173,10 +133,6 @@ def _recall_vs_brute(approx: DataFrame, emb: DataFrame, k: int) -> DataFrame:
     )
 
 
-def knn_lsh_recall(emb: DataFrame, k: int = params.LSH_TOPK) -> DataFrame:
-    return _recall_vs_brute(knn_lsh(emb, k=k), emb, k)
-
-
 def knn_ivf_recall(emb: DataFrame, k: int = params.LSH_TOPK) -> DataFrame:
     return _recall_vs_brute(knn_ivf(emb, k=k), emb, k)
 
@@ -185,8 +141,7 @@ def knn_jl(emb: DataFrame, k: int = params.LSH_TOPK) -> DataFrame:
     """Approximate top-k in the 16-dim JL-PROJECTED space: every cosine
     costs 1/4 of the 64-dim one and the projected corpus is 4x smaller
     to broadcast/cache — the dimension-reduction leg of the
-    accuracy/speed tradeoff next to knn_lsh (bucketing) and knn_ivf
-    (cell probing). Deterministic projection (vectorprep.jl_project),
+    accuracy/speed tradeoff next to knn_ivf (cell probing). Deterministic projection (vectorprep.jl_project),
     so the oracle checks the approximate result exactly; accuracy is
     monitored by knn_jl_recall.
 

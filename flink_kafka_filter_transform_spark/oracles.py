@@ -15,9 +15,9 @@ from flink_kafka_filter_transform_spark.functions.hashing import (
     portable_hash64_second_sql,
     portable_hash64_sql,
 )
-from flink_kafka_filter_transform_spark.functions.vectors import cosine_sql, dot_sql
+from flink_kafka_filter_transform_spark.functions.vectors import cosine_sql
 from flink_kafka_filter_transform_spark.operators import params
-from flink_kafka_filter_transform_spark.sources.cdc_fixture import RULES, cdc_sql, rules_cte_sql
+from flink_kafka_filter_transform_spark.sources.cdc_fixture import RULES, cdc_sql
 
 # ---------------------------------------------------------------------------
 # CDC parity oracles
@@ -75,24 +75,6 @@ SELECT msg_id, topic, db, table_name, op, target_topic FROM (
   SELECT *, {route_case_sql()} AS target_topic
   FROM parsed WHERE op IS NOT NULL AND op <> 'd'
 ) routed WHERE target_topic IS NOT NULL
-"""
-    )
-
-
-def cdc_route_join_oracle() -> str:
-    """Join-based routing twin: min-priority match per message."""
-    return _with_cdc(
-        f"""
-SELECT msg_id, topic, db, table_name, op, target_topic FROM (
-  SELECT p.msg_id, p.topic, p.db, p.table_name, p.op, r.target_topic,
-         row_number() OVER (
-           PARTITION BY p.msg_id ORDER BY r.priority NULLS LAST, r.target_topic
-         ) AS rn
-  FROM (SELECT * FROM parsed WHERE op IS NOT NULL AND op <> 'd') p
-  JOIN ({rules_cte_sql()}) r
-    ON p.topic = r.source_topic AND p.db = r.db
-   AND regexp_matches(p.table_name, r.table_pattern)
-) m WHERE rn = 1
 """
     )
 
@@ -1108,36 +1090,6 @@ SELECT q_id, vec_id, rank, cos_sim FROM (
 """
 
 
-def knn_lsh_oracle() -> str:
-    dotp = dot_sql("e.embedding", "p.pvec")
-    cos = cosine_sql("e.embedding", "q.q_vec")
-    return f"""
-WITH planes AS (SELECT vec_id AS pid, embedding AS pvec FROM embeddings WHERE vec_id < {params.LSH_NUM_PLANES}),
-buckets AS (
-  SELECT e.vec_id,
-    sum(CASE WHEN {dotp} > 0 THEN CAST(power(2, p.pid) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS bucket
-  FROM embeddings e CROSS JOIN planes p
-  GROUP BY e.vec_id
-),
-q AS (
-  SELECT e.vec_id AS q_id, e.embedding AS q_vec, b.bucket AS q_bucket
-  FROM embeddings e JOIN buckets b ON e.vec_id = b.vec_id
-  WHERE e.vec_id < {params.KNN_NUM_QUERIES}
-),
-scored AS (
-  SELECT q.q_id, e.vec_id, {cos} AS cos_sim
-  FROM embeddings e
-  JOIN buckets b ON e.vec_id = b.vec_id
-  JOIN q ON b.bucket = q.q_bucket
-  WHERE e.vec_id <> q.q_id
-)
-SELECT q_id, vec_id, rank, cos_sim FROM (
-  SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id ASC) AS INTEGER) AS rank
-  FROM scored
-) r WHERE rank <= {params.LSH_TOPK}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Multimodal oracle (operators.multimodal — byte-level feature twin)
 # ---------------------------------------------------------------------------
@@ -1951,32 +1903,6 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus))
 """
 
 
-def scalar_function_showcase_oracle() -> str:
-    return """
-SELECT
-  o_orderkey,
-  CAST(year(o_orderdate) AS INT) AS order_year,
-  CAST(month(o_orderdate) AS INT) AS order_month,
-  CAST(day(o_orderdate) AS INT) AS order_day,
-  CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '1999-01-01') AS INT) AS days_to_1999,
-  upper(substr(o_orderpriority, 3, 100)) AS priority_word,
-  CAST(length(o_orderpriority) AS INT) AS priority_len,
-  o_orderpriority || ':' || CAST(o_custkey AS VARCHAR) AS prio_cust,
-  abs(o_totalprice - 100000.0) AS abs_from_100k,
-  sqrt(o_totalprice) AS sqrt_price,
-  CAST(floor(o_totalprice) AS BIGINT) AS floor_price,
-  CAST(ceil(o_totalprice) AS BIGINT) AS ceil_price,
-  CAST(CASE WHEN o_totalprice - 100000.0 > 0 THEN 1.0
-       WHEN o_totalprice - 100000.0 < 0 THEN -1.0 ELSE 0.0 END AS DOUBLE) AS price_sign,
-  greatest(o_totalprice, 50000.0) AS floored_price,
-  CAST(least(o_custkey % 100, 50) AS BIGINT) AS capped_mod,
-  coalesce(nullif(o_orderpriority, '3-MEDIUM'), '(med)') AS prio_or_med,
-  CASE WHEN o_totalprice > 200000 THEN 'high'
-       WHEN o_totalprice > 100000 THEN 'mid' ELSE 'low' END AS price_band
-FROM orders
-"""
-
-
 def events_props_map_explode_oracle() -> str:
     """json_keys + lateral unnest is DuckDB's map-explode analog; values
     extracted as strings to mirror MAP<STRING,STRING>."""
@@ -2010,10 +1936,6 @@ SELECT qs.q_id,
   CAST(coalesce(hits.n, 0) AS DOUBLE) / CAST({float(k)} AS DOUBLE) AS recall_at_k
 FROM qs LEFT JOIN hits ON qs.q_id = hits.q_id
 """
-
-
-def knn_lsh_recall_oracle(k: int = params.LSH_TOPK) -> str:
-    return _recall_oracle(knn_lsh_oracle(), k)
 
 
 def knn_ivf_recall_oracle(k: int = params.LSH_TOPK) -> str:
@@ -2160,25 +2082,6 @@ SELECT doc_id,
   unnest(sents) AS sentence,
   CAST(length(unnest(sents)) AS INT) AS n_chars
 FROM s
-"""
-
-
-def window_function_showcase_oracle() -> str:
-    return """
-SELECT * FROM (
-  SELECT o_orderkey, o_orderpriority, o_totalprice,
-    CAST(row_number() OVER w AS INT) AS rn,
-    CAST(rank() OVER w AS INT) AS rnk,
-    CAST(dense_rank() OVER w AS INT) AS drnk,
-    CAST(ntile(4) OVER w AS INT) AS quartile,
-    lag(o_orderkey, 1) OVER w AS prev_key,
-    lead(o_orderkey, 1) OVER w AS next_key,
-    first_value(o_orderkey) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS top_key,
-    percent_rank() OVER w AS pct_rank,
-    cume_dist() OVER w AS cume
-  FROM orders
-  WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey ASC)
-) t WHERE rn <= 50
 """
 
 
@@ -2522,21 +2425,6 @@ comp AS (SELECT doc, min(root) AS cluster_id FROM r GROUP BY doc)
 SELECT d.doc_id, d.lang, d.source, d.n_chars
 FROM documents d JOIN comp ON d.doc_id = comp.doc
 WHERE comp.doc = comp.cluster_id
-"""
-
-
-def array_function_showcase_oracle() -> str:
-    return r"""
-WITH t AS (SELECT doc_id, regexp_extract_all(text, '[^\s]+') AS toks FROM documents)
-SELECT doc_id,
-  CAST(len(toks) AS INT) AS n_tokens,
-  array_to_string(list_sort(list_distinct(toks))[1:5], ' ') AS first5_sorted,
-  CAST(len(list_intersect(toks, ['the','and','of'])) AS INT) AS n_stopword_kinds,
-  CAST(len(list_filter(list_distinct(toks), x -> NOT list_contains(['the','and','of'], x))) AS INT) AS n_content_kinds,
-  list_contains(toks, 'the') AS has_the,
-  len(list_filter(toks, x -> length(x) > 10)) > 0 AS has_long_token,
-  CAST(list_reduce(list_prepend(0, list_transform(toks, x -> length(x))), (a, b) -> a + b) AS BIGINT) AS total_chars
-FROM t
 """
 
 

@@ -25,12 +25,13 @@ Derivation (pure functions of event_id/user_id/event_type/props):
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from flink_kafka_filter_transform_spark.sources.parquet import data_cache_key
 
 # One source of truth for the derivation; {json_get} is the only
 # dialect-specific token (Spark: get_json_object, DuckDB:
@@ -101,28 +102,22 @@ def synthesized_cdc_events_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cdc_events_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC fixture as a Spark DataFrame, materialized once per
-    (sf_dir, template version) to a parquet cache and scanned from
-    there.
+    (events files, template version) to a parquet cache and scanned
+    from there.
 
     The inline synthesis is a wide expression tree that Catalyst
     re-evaluates inside every from_json-derived filter, so it doubles
     the cost of each CDC query — and it models the input WORSE than a
     scan does: real messages arrive as stored bytes, not as expressions
-    fused into the reader's plan. Cache key includes the template hash,
-    so editing the derivation invalidates; the rename is atomic, so a
-    lost concurrent race just reuses the winner's directory."""
-    # key covers the FULL directory path, not just its leaf: two sf
-    # dirs named alike (e.g. /a/sf0.01 vs /b/sf0.01) must not share a
-    # cache entry. The version tag invalidates caches whose LAYOUT
-    # (not content) predates a change — v3: caches are now written
-    # pre-repartitioned so every downstream CDC scan parallelizes
-    # (single-file caches capped the whole CDC path at one core).
-    key = "{}_{}".format(
-        os.path.basename(os.path.normpath(sf_dir)),
-        hashlib.md5(
-            ("v3\x00" + os.path.abspath(sf_dir) + "\x00" + cdc_sql("spark")).encode()
-        ).hexdigest()[:10],
-    )
+    fused into the reader's plan. The cache key (``data_cache_key``)
+    covers the events files and the template, so rewriting either
+    invalidates; the rename is atomic, so a lost concurrent race just
+    reuses the winner's directory."""
+    # The version tag invalidates caches whose LAYOUT (not content)
+    # predates a change — v3: caches are written pre-repartitioned so
+    # every downstream CDC scan parallelizes (single-file caches capped
+    # the whole CDC path at one core).
+    key = data_cache_key(sf_dir, "events", "v3", cdc_sql("spark"))
     cache = os.path.join(tempfile.gettempdir(), "spark_graft_cdc_cache", key)
     if not os.path.isdir(cache):
         tmp = f"{cache}.tmp-{os.getpid()}"
@@ -155,44 +150,3 @@ RULES: list[dict] = [
     {"priority": 6, "source_topic": "flink-1", "db": "db_3", "table_pattern": "^table_[0-9]+$", "target_topic": "table-topic"},
     {"priority": 7, "source_topic": "flink-2", "db": "db_3", "table_pattern": "audit.*", "target_topic": "audit-topic"},
 ]
-
-
-_RULES_DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, DataFrame]" = None  # type: ignore[assignment]
-
-
-def rules_df(spark: SparkSession) -> DataFrame:
-    """Rule table as a tiny DataFrame, the input of
-    ``cdc.route_broadcast_join`` (collected and compiled into the
-    when-chain). Memoized per SparkSession: createDataFrame embeds the rows
-    in a fresh LocalRelation whose semanticHash is NOT stable across
-    calls, so returning the same object is what lets downstream
-    plan-fingerprint caches (cdc._probe_rules) hit — the same behavior
-    a real deployment gets by building its rules DataFrame once. File-
-    backed rule tables don't need this (scan plans canonicalize by
-    path)."""
-    global _RULES_DF_CACHE
-    if _RULES_DF_CACHE is None:
-        import weakref
-
-        _RULES_DF_CACHE = weakref.WeakKeyDictionary()
-    df = _RULES_DF_CACHE.get(spark)
-    if df is None:
-        df = spark.createDataFrame(
-            [(r["priority"], r["source_topic"], r["db"], r["table_pattern"], r["target_topic"]) for r in RULES],
-            "priority INT, source_topic STRING, db STRING, table_pattern STRING, target_topic STRING",
-        )
-        _RULES_DF_CACHE[spark] = df
-    return df
-
-
-def rules_cte_sql() -> str:
-    """Rule table as a VALUES CTE body (valid in DuckDB and Spark SQL)."""
-    rows = ",\n    ".join(
-        f"({r['priority']}, '{r['source_topic']}', '{r['db']}', '{r['table_pattern']}', '{r['target_topic']}')"
-        for r in RULES
-    )
-    return (
-        "SELECT * FROM (VALUES\n    "
-        + rows
-        + "\n) AS rules(priority, source_topic, db, table_pattern, target_topic)"
-    )

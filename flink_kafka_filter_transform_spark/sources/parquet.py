@@ -8,6 +8,8 @@ in ``.explain`` are the first thing to check (see plans.explain).
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -107,6 +109,22 @@ def _single_file_meta(path: str) -> tuple[int, int] | None:
         return md.num_row_groups, md.num_rows
     except Exception:
         return None
+
+
+def data_cache_key(sf_dir: str, table: str, *salts: str) -> str:
+    """Leaf name ``{sf}_{10 hex}`` of a cache derived from ``table``
+    under ``sf_dir``. The hash covers the sf dir's full path (two dirs
+    named alike must not share an entry), every data file's name, size
+    and mtime (an in-place rewrite of the table invalidates) and
+    ``salts`` (the derivation's version or source, so editing it
+    invalidates too)."""
+    path = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
+    parts = [os.path.abspath(sf_dir)]
+    for p in sorted(glob.glob(path) + glob.glob(os.path.join(path, "*"))):
+        st = os.stat(p)
+        parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
+    digest = hashlib.md5("\x00".join(parts + list(salts)).encode()).hexdigest()[:10]
+    return f"{os.path.basename(os.path.normpath(sf_dir))}_{digest}"
 
 
 def load_table(

@@ -2068,43 +2068,23 @@ def _cached_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     Production streams freeze their quantizer offline — this cache is
     the harness's stand-in for that frozen-codebook store.
 
-    Cache key (r7 ADVICE): hashes the kmeans module source PLUS its
-    kmeans-affecting transitive deps (operators.params,
-    functions.hashing) PLUS a fingerprint of the embeddings parquet
-    files themselves (name+size+mtime per file) — so an in-place
-    dataset regeneration or a helper-module edit invalidates the
-    machine-wide cache instead of silently serving stale centroids.
+    Cache key (r7 ADVICE, ``sources.parquet.data_cache_key``): the
+    embeddings parquet files themselves (name+size+mtime per file) PLUS
+    the kmeans module source and its kmeans-affecting transitive deps
+    (operators.params, functions.hashing) — so an in-place dataset
+    regeneration or a helper-module edit invalidates the machine-wide
+    cache instead of silently serving stale centroids.
     The cache lives under _scratch_root, so every task can address it."""
-    import glob as _glob
-    import hashlib
-    import os
-
     from flink_kafka_filter_transform_spark.functions import hashing as _hashing_mod
     from flink_kafka_filter_transform_spark.operators import kmeans as kmeans_ops
     from flink_kafka_filter_transform_spark.operators import params as _params_mod
-    from flink_kafka_filter_transform_spark.sources.parquet import load_table
+    from flink_kafka_filter_transform_spark.sources.parquet import data_cache_key, load_table
 
-    emb_path = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    data_parts = []
-    for p in sorted(_glob.glob(emb_path) + _glob.glob(os.path.join(emb_path, "*"))):
-        st = os.stat(p)
-        data_parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
-    key = "{}_{}".format(
-        os.path.basename(os.path.normpath(sf_dir)),
-        hashlib.md5(
-            (
-                "v2\x00"
-                + os.path.abspath(sf_dir)
-                + "\x00"
-                + "\x00".join(data_parts)
-                + "\x00"
-                + inspect.getsource(kmeans_ops)
-                + "\x00"
-                + inspect.getsource(_params_mod)
-                + "\x00"
-                + inspect.getsource(_hashing_mod)
-            ).encode()
-        ).hexdigest()[:10],
+    key = data_cache_key(
+        sf_dir,
+        "embeddings",
+        "v2",
+        *(inspect.getsource(m) for m in (kmeans_ops, _params_mod, _hashing_mod)),
     )
     cache_dir = f"{_scratch_root(spark) or tempfile.gettempdir()}/spark_graft_codebook_cache"
     cache = f"{cache_dir}/{key}"

@@ -59,6 +59,25 @@ def test_census_ledger_covers_the_headline():
         assert name in ledger["queries"] and set(fields) <= {"jobs", "stages", "plan"}
 
 
+def test_full_headline_write_replaces_the_ledger_named_write_merges():
+    from tools.measure import updated_ledger
+
+    fields = {"jobs": 1, "stages": 1, "plan": "0" * 40}
+    ledger = {
+        "sf_dir": "sf0.01", "cpus": 4,
+        "queries": {"kept": fields, "retired": fields},
+        "variance": {"kept": {"jobs": "why"}, "retired": {"plan": "why"}},
+    }
+    fresh = {"kept": {**fields, "jobs": 2}, "new": fields}
+    full = updated_ledger(ledger, fresh, full=True)
+    assert full["queries"] == fresh and full["variance"] == {"kept": {"jobs": "why"}}
+    assert (full["sf_dir"], full["cpus"]) == ("sf0.01", 4)
+    named = updated_ledger(ledger, {"new": fields}, full=False)
+    assert set(named["queries"]) == {"kept", "retired", "new"}
+    assert named["variance"] == ledger["variance"]
+    assert set(ledger["queries"]) == {"kept", "retired"}  # input left as it was
+
+
 def test_driver_memory_is_half_the_host_capped_at_24g():
     gib = 1 << 30
     assert bench.driver_memory_mb(16 * gib) == 8 * 1024
@@ -72,7 +91,7 @@ def test_driver_memory_is_half_the_host_capped_at_24g():
 def test_final_line_keeps_the_slowest_queries_under_the_tail_budget():
     rng = random.Random(7)
     names = list(__spark_entry__.queries())
-    assert len(names) == 206 and set(bench.FACE_QUERIES) <= set(names)
+    assert len(names) == 200 and set(bench.FACE_QUERIES) <= set(names)
     timings = {n: round(rng.uniform(0.05, 30.0), 3) for n in names}
     cold = {n: round(t * 1.5, 3) for n, t in timings.items()}
     warm = dict(timings)
@@ -85,7 +104,7 @@ def test_final_line_keeps_the_slowest_queries_under_the_tail_budget():
         "total_with_faces_sec", "methodology", "cold_sec", "warm_sec",
         "sf", "reps", "detail", "queries_omitted",
     }
-    assert payload["methodology"] == 3
+    assert payload["methodology"] == 4
     assert set(payload["faces"]) == set(bench.FACE_QUERIES)
     kept = payload["queries"]
     dropped = set(timings) - set(bench.FACE_QUERIES) - set(kept)

@@ -7,11 +7,12 @@ when results stay correct."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_kafka_filter_transform_spark.operators import cdc, relational, similarity
 from flink_kafka_filter_transform_spark.plans import explain as px
-from flink_kafka_filter_transform_spark.sources.cdc_fixture import RULES, cdc_events_df, rules_df
+from flink_kafka_filter_transform_spark.sources.cdc_fixture import RULES, cdc_events_df
 from flink_kafka_filter_transform_spark.sources.parquet import load_table
 
 
@@ -28,37 +29,6 @@ def test_route_when_chain_is_shuffle_free(spark, sf_dir):
     )
     assert px.count_shuffles(df) == 0
     assert px.codegen_stage_count(df) >= 1
-
-
-def test_route_broadcast_join_compiles_small_tables(spark, sf_dir):
-    """Adaptive dynamic routing: a config-sized rules DataFrame is
-    collected and compiled into the when-chain — one scan, ZERO
-    shuffles, no join operator at all."""
-    df = cdc.route_broadcast_join(
-        cdc.filter_deletes(cdc.parse_envelope(cdc_events_df(spark, sf_dir))), rules_df(spark)
-    )
-    assert px.count_shuffles(df) == 0
-    assert not px.has_broadcast_join(df)
-    assert px.sortmerge_join_count(df) == 0
-
-
-def test_route_rules_probe_is_memoized(spark):
-    """Two DataFrames with the SAME logical rules plan share one probe
-    (the eager collection job is paid per rule TABLE, not per call);
-    a different rule table gets its own entry; clear empties it."""
-    cdc.clear_route_rules_cache()
-    r1 = cdc._probe_rules(rules_df(spark))
-    r2 = cdc._probe_rules(rules_df(spark))
-    assert r1 is r2  # cache identity, not just equality
-    assert len(cdc._RULES_PROBE_CACHE) == 1
-    other = spark.createDataFrame(
-        [(1, "t", "d", "x", "y")],
-        "priority INT, source_topic STRING, db STRING, table_pattern STRING, target_topic STRING",
-    )
-    assert cdc._probe_rules(other) is not r1
-    assert len(cdc._RULES_PROBE_CACHE) == 2
-    cdc.clear_route_rules_cache()
-    assert len(cdc._RULES_PROBE_CACHE) == 0
 
 
 def test_route_equal_priority_tiebreak_matches_across_paths(spark):
@@ -81,33 +51,38 @@ def test_route_equal_priority_tiebreak_matches_across_paths(spark):
     assert {r["target_topic"] for r in chain.collect()} == {"alpha"}
 
 
-def test_route_broadcast_join_rejects_tables_over_the_bound(spark, sf_dir, monkeypatch):
-    """A rule table over ROUTE_COMPILE_MAX_RULES rows is an input error
-    naming its size and the bound, not a switch to another routing
-    plan."""
-    import pytest
-
+@pytest.mark.parametrize("route", ["route_when_chain", "metered_cdc_sink"])
+def test_route_rejects_rule_lists_over_the_bound(spark, tmp_path, monkeypatch, route):
+    """A rule list over ROUTE_COMPILE_MAX_RULES is an input error naming
+    its length and the bound, raised while the query is built: no Spark
+    job and no streaming query starts, on the batch path and on the
+    service loop alike."""
+    import bench
     from flink_kafka_filter_transform_spark.operators import params
+    from flink_kafka_filter_transform_spark.streaming import metrics
+    from flink_kafka_filter_transform_spark.streaming import pipeline as sp
 
-    cdc.clear_route_rules_cache()
     monkeypatch.setattr(params, "ROUTE_COMPILE_MAX_RULES", 3)
-    parsed = cdc.filter_deletes(cdc.parse_envelope(cdc_events_df(spark, sf_dir)))
-    with pytest.raises(ValueError, match=f"has {len(RULES)} rows, over the ROUTE_COMPILE_MAX_RULES bound of 3"):
-        cdc.route_broadcast_join(parsed, rules_df(spark))
-    assert len(cdc._RULES_PROBE_CACHE) == 0
-
-
-def test_route_broadcast_join_rejects_streaming_rules(spark, sf_dir, tmp_path):
-    """The rules probe is an eager batch job; a streaming rules_df must
-    be rejected explicitly, not fail opaquely inside toArrow (r3 ADVICE)."""
-    import pytest
-
-    rdf = rules_df(spark)
-    rdf.write.mode("overwrite").parquet(str(tmp_path / "rules"))
-    streaming_rules = spark.readStream.schema(rdf.schema).parquet(str(tmp_path / "rules"))
-    parsed = cdc.filter_deletes(cdc.parse_envelope(cdc_events_df(spark, sf_dir)))
-    with pytest.raises(ValueError, match="BATCH rules"):
-        cdc.route_broadcast_join(parsed, streaming_rules)
+    schema = "msg_id BIGINT, topic STRING, key STRING, value STRING"
+    (tmp_path / "in").mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    build = {
+        "route_when_chain": lambda: cdc.route_when_chain(
+            cdc.parse_envelope(spark.createDataFrame([], schema)), RULES[:4]
+        ),
+        "metered_cdc_sink": lambda: sp.metered_cdc_sink(
+            spark.readStream.schema(schema).parquet(str(tmp_path / "in")),
+            RULES[:4],
+            metrics.CounterRegistry(),
+            str(tmp_path / "out"),
+            ckpt,
+        ),
+    }[route]
+    mark = bench.job_mark(spark)
+    with pytest.raises(ValueError, match="4 routing rules, over the ROUTE_COMPILE_MAX_RULES bound of 3"):
+        build()
+    assert bench.job_mark(spark) == mark and not spark.streams.active
+    assert not os.path.exists(ckpt)
 
 
 def test_q1_scan_prunes_and_pushes(spark, sf_dir):
@@ -558,13 +533,6 @@ def test_simhash_pairs_no_join_no_cartesian(spark, sf_dir):
     assert "collect_list" in plan
 
 
-def test_array_showcase_is_single_codegen_map(spark, sf_dir):
-    df = relational.array_function_showcase(load_table(spark, "documents", sf_dir))
-    assert px.count_shuffles(df) == 0
-    assert px.codegen_stage_count(df) >= 1
-
-
-
 def test_q15_max_is_broadcast_not_window(spark, sf_dir):
     """Q15's scalar-subquery max must be a 1-row broadcast joined back
     onto the supplier-revenue view — NOT a window max over the view
@@ -1006,8 +974,7 @@ def test_no_unreduced_big_table_broadcast_hints(spark, sf_dir):
                          "daily_", "revenue_", "cdc_"))
         or n in {
             "salted_event_counts", "value_outliers_by_type",
-            "top_customers_per_segment", "window_function_showcase",
-            "scalar_function_showcase", "order_priority_stats",
+            "top_customers_per_segment", "order_priority_stats",
             "weighted_avg_by_type", "purchases_with_recent_clicks",
             "user_value_moving_avg", "event_path_report", "orders_top10",
             "event_value_percentiles",

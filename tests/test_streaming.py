@@ -511,31 +511,6 @@ def test_metrics_endpoint(spark, sf_dir, cdc_dir, cdc_schema):
         server.shutdown()
 
 
-def test_route_broadcast_join_streams_via_compiled_path(
-    spark, sf_dir, cdc_dir, cdc_schema
-):
-    """The adaptive dynamic-routing API must work on a STREAMING
-    input: the rule-table probe runs on the (batch) rules DataFrame at
-    plan time and the config-sized table compiles to the stateless
-    when-chain — no stateful operator, so the stream runs in plain
-    append mode. Results must equal the batch path."""
-    from flink_kafka_filter_transform_spark.sources.cdc_fixture import rules_df
-
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    routed = cdc.route_broadcast_join(
-        cdc.filter_deletes(cdc.parse_envelope(stream)), rules_df(spark)
-    ).select("msg_id", "target_topic")
-    assert routed.isStreaming
-    _run_to_memory(routed, "t_route_dyn", "append")
-    got = {(r["msg_id"], r["target_topic"]) for r in spark.table("t_route_dyn").collect()}
-    batch = cdc.route_broadcast_join(
-        cdc.filter_deletes(cdc.parse_envelope(cdc_events_df(spark, sf_dir))),
-        rules_df(spark),
-    )
-    want = {(r["msg_id"], r["target_topic"]) for r in batch.collect()}
-    assert got == want and len(got) > 0
-
-
 def test_stream_stream_outer_join_emits_null_matches(
     spark, sf_dir, cdc_dir, cdc_schema
 ):
@@ -1265,6 +1240,32 @@ def test_cached_kmeans_codebook_matches_inline_fit(spark, sf_dir, tmp_path_facto
         spark.conf.unset(sp.FACE_SCRATCH_ROOT_CONF)
     # one published cache entry, no temp copy left beside it
     assert len(os.listdir(f"{root}/spark_graft_codebook_cache")) == 1
+
+
+def test_cdc_fixture_follows_an_in_place_rewrite_of_events(spark, sf_dir, tmp_path):
+    """cdc_events_df's cache key covers the events files' name, size and
+    mtime (the key _cached_kmeans_codebook uses), so an events.parquet
+    rewritten in place is read again, not served from the old cache."""
+    import glob
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    sf = tmp_path / "sf_rewrite"
+    sf.mkdir()
+    events = sf / "events.parquet"
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), events)
+    try:
+        full = pq.read_table(events)
+        assert cdc_events_df(spark, str(sf)).count() == full.num_rows
+        half = full.slice(0, full.num_rows // 2)
+        pq.write_table(half, events)
+        assert cdc_events_df(spark, str(sf)).count() == half.num_rows > 0
+    finally:
+        cache = os.path.join(tempfile.gettempdir(), "spark_graft_cdc_cache", "sf_rewrite_*")
+        for leaf in glob.glob(cache):
+            shutil.rmtree(leaf, ignore_errors=True)
 
 
 def test_face_scratch_configured_root_and_cleanup(spark, tmp_path_factory):

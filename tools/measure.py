@@ -11,8 +11,9 @@ spill, plan fingerprint). Prints one JSON line per query:
 
 ``--write CENSUS.json`` also writes the run into the ledger: sf_dir,
 cpus and, per query, the fields that repeat exactly across fresh
-sessions (LEDGER_FIELDS); entries of queries not run, and the
-ledger's "variance" map, are kept. ``--against CENSUS.json`` instead
+sessions (LEDGER_FIELDS). With no NAME the run is the whole headline
+and becomes the ledger's query set; with NAMEs it merges into it.
+"variance" entries are kept while their query is in the ledger. ``--against CENSUS.json`` instead
 prints only the queries whose ledger fields differ (query, field,
 ledger value, fresh value) and exits 1 on any difference. Both exit 1
 before running anything when the ledger's sf_dir/cpus are not this
@@ -46,6 +47,15 @@ import bench  # noqa: E402
 # Shuffle bytes, tasks, skipped stages and task ms are left out: they
 # drift between runs of one session (CHANGES.md, census FOUND lines).
 LEDGER_FIELDS = ("jobs", "stages", "plan")
+
+
+def updated_ledger(ledger: dict, fresh: dict, full: bool) -> dict:
+    """``ledger`` after a ``--write`` of ``fresh`` (query -> fields): a
+    full-headline run replaces the query set, a named run merges into
+    it; variance entries of queries no longer in the ledger go."""
+    queries = dict(fresh) if full else {**ledger["queries"], **fresh}
+    variance = {n: why for n, why in ledger.get("variance", {}).items() if n in queries}
+    return {**ledger, "queries": queries, "variance": variance}
 
 
 def main() -> None:
@@ -87,8 +97,8 @@ def main() -> None:
                               "reps": walls, "census": stats}), flush=True)
     bench.close(spark)
     if args.write:
+        ledger = updated_ledger(ledger, fresh, full=not args.names)
         ledger.update(sf_dir=bench.SF_DIR, cpus=bench.CPUS)
-        ledger["queries"].update(fresh)
         with open(args.write, "w") as f:
             json.dump(ledger, f, indent=1, sort_keys=True)
             f.write("\n")
