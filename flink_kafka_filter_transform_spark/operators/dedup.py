@@ -71,7 +71,6 @@ def exact_dedup(docs: DataFrame, key_col: str = "text") -> DataFrame:
 # the point is catching REFORMATTED copies — case, punctuation,
 # wrapping — not paraphrase (that is the near-dup family's job).
 _NORM_PUNCT_SPARK = r"\p{Punct}"
-_NORM_PUNCT_DUCK = "[[:punct:]]"
 
 
 def normalized_text(col: Column) -> Column:
@@ -957,21 +956,12 @@ def contamination_check(docs: DataFrame, n: int = 3, eval_mod: int = 50) -> Data
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    train = grams.filter(F.col("doc_id") % eval_mod != 0)
-    return contamination_profile(train, eval_grams)
-
-
-def contamination_profile(grams: DataFrame, eval_hashes: DataFrame) -> DataFrame:
-    """The probe stage of decontamination, factored out so the
-    STREAMING guard (streaming.pipeline.contamination_guard_sink) runs
-    the identical logic per micro-batch: given (doc_id, grams) rows and
-    a precomputed (gh, hit) eval-hash relation, emit per-doc
-    (n_grams, n_contaminated, contamination_ratio). Eval hashes
-    broadcast; one doc-keyed shuffle."""
-    train = grams.select("doc_id", F.explode("grams").alias("g")).select(
-        "doc_id", portable_hash64("g").alias("gh")
+    train = (
+        grams.filter(F.col("doc_id") % eval_mod != 0)
+        .select("doc_id", F.explode("grams").alias("g"))
+        .select("doc_id", portable_hash64("g").alias("gh"))
     )
-    probed = train.join(F.broadcast(eval_hashes), "gh", "left")
+    probed = train.join(F.broadcast(eval_grams), "gh", "left")
     agg = probed.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_contaminated"),
@@ -1227,7 +1217,7 @@ def minhash_band_sweep(
     precision falls — this query quantifies that trade on real data.
 
     Scale: ground truth is all-pairs (O(N^2)) BY DESIGN — a tuning
-    harness runs on a deterministic sample (sampling.hash_sample
+    harness runs on a deterministic sample (sampling.stratified_sample
     composes upstream), never the full corpus; the LSH candidate
     sides themselves stay banded/bucket-capped exactly as production
     runs them. Each config is one extra pass over the signature

@@ -739,7 +739,7 @@ def pq_train_report(
     scans codes with per-subspace lookup tables instead of full
     vectors. Training cost here is m x iters corpus passes; a
     production run trains on a deterministic content-hash SAMPLE
-    (sampling.hash_sample composes) and then ENCODES the full corpus
+    (sampling.stratified_sample composes) and then ENCODES the full corpus
     in one map-only pass against the broadcast codebooks — training
     size and corpus size are decoupled.
 

@@ -17,9 +17,11 @@ Two decode tiers:
   synthesizes real PPM/WAV blobs from a closed-form byte formula, and
   the DuckDB oracle recomputes the decoded statistics from that formula
   — a wrong header offset or endianness flips the gate red.
-- Compressed formats (JPEG/FLAC/H.264) need codec libs this container
-  lacks; ``decode_image_compressed`` stays a declared stub rather than
-  a fake.
+- Compressed images decode for real on the stdlib and numpy alone:
+  ``decode_png``, baseline grayscale ``decode_jpeg`` and 4:2:0
+  ``decode_jpeg_color``. Anything outside that scope (progressive,
+  restarts, FLAC/H.264) raises NotImplementedError rather than
+  fabricate output.
 """
 
 from __future__ import annotations
@@ -32,7 +34,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from flink_kafka_filter_transform_spark.operators import params
 
@@ -287,21 +288,6 @@ def encode_png(pixels: np.ndarray) -> bytes:
         + chunk(b"IDAT", zlib.compress(bytes(raw)))
         + chunk(b"IEND", b"")
     )
-
-
-def decode_image_compressed(content: bytes):
-    """Compressed image decode: PNG is handled for real by
-    ``decode_png`` (stdlib zlib + numpy unfilter) and baseline
-    grayscale JPEG by ``decode_jpeg`` (marker walk, canonical Huffman,
-    dequantize, IDCT — stdlib+numpy, r5). JPEG features outside that
-    scope (color/subsampled, progressive, restarts) still raise
-    NotImplementedError — fabricating DCT output would hide the gap."""
-    if content[:8] == PNG_SIG:
-        return decode_png(content)
-    if content[:2] == b"\xff\xd8":
-        w, h, img = decode_jpeg(content)
-        return w, h, 1, img.reshape(h, w, 1)
-    raise NotImplementedError("unknown compressed image container")
 
 
 def _featurize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -632,7 +618,7 @@ def media_resize(docs: DataFrame) -> DataFrame:
 # decode (generic DHT), dequantize, zigzag, float IDCT — plus the
 # minimal deterministic encoder the fixture needs. Grayscale baseline
 # (SOF0, one component, no subsampling, no restarts); anything else
-# still raises NotImplementedError via decode_image_compressed.
+# raises NotImplementedError.
 # ---------------------------------------------------------------------------
 
 _ZIGZAG = [

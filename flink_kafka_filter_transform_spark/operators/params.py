@@ -218,9 +218,9 @@ VID_SALT_UNIQ = 1_000_003  # seed offset for video-unique frames; group
 VID_FRAME_CAP = 100  # a frame hash in >cap videos is an intro card /
 #   black frame — boilerplate whose match is evidence of nothing
 #   (LSH_BUCKET_CAP's candidate-generation rule, oracle-mirrored)
-VID_MIN_MATCH = 5  # group-mates share >= VID_NFRAMES - 2*VID_UNIQUE
-#   positions = 6 frames; threshold 5 keeps one frame of slack
-VID_UNIQUE = 2  # frames each video replaces with video-unique content
+VID_MIN_MATCH = 5  # group-mates share >= VID_NFRAMES - 2*2 positions
+#   (each video replaces 2 frames with video-unique content) = 6
+#   frames; threshold 5 keeps one frame of slack
 # Frame raster closed form: md5-derived rows — the repo's portable
 # cross-engine primitive. The phash/afp quadratic family is too
 # structured here (frames of the SAME group collided in dHash space:

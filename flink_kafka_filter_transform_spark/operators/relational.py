@@ -673,8 +673,7 @@ def events_sessionized_native(events: DataFrame) -> DataFrame:
     """Gap-based sessionization via Spark's NATIVE session_window —
     the same semantics as events_sessionized's lag + cumulative-sum
     formulation, expressed through the built-in operator (which also
-    runs incrementally under streaming, see
-    streaming.session_windowed_counts). The DuckDB oracle keeps the
+    runs incrementally under streaming). The DuckDB oracle keeps the
     MANUAL formulation, so the hash match validates Spark's native
     session merging against an independent algorithm.
 

@@ -7,8 +7,8 @@ experiment reruns unreproducible and is impossible to oracle-check.
 Every operator here instead derives membership from the portable
 content hash of a KEY column — a pure function of the data:
 
-- ``hash_sample``      : keep rows whose hash bucket < rate*1000.
-- ``stratified_sample``: per-stratum rates (balance a skewed corpus).
+- ``stratified_sample``: per-stratum rates (balance a skewed corpus):
+                         keep rows whose hash bucket < rate*1000.
 - ``train_val_test``   : disjoint 80/10/10 split labels from hash
                          ranges — membership never changes when the
                          corpus is re-partitioned, appended to, or
@@ -32,11 +32,6 @@ BUCKETS = 1000
 
 def _bucket(key: str) -> Column:
     return portable_hash64(F.col(key).cast("string")) % BUCKETS
-
-
-def hash_sample(df: DataFrame, key: str, rate: float) -> DataFrame:
-    """Keep ~rate of rows, membership a pure function of ``key``."""
-    return df.filter(_bucket(key) < int(rate * BUCKETS))
 
 
 def stratified_sample(

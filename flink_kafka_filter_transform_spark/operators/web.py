@@ -226,21 +226,17 @@ def host_profile(docs: DataFrame) -> DataFrame:
 
 # First-match-wins URL blocklist (the C4 pipeline's URL-filter pass;
 # the crawl-side sibling of the CDC regex router's ordered-rule
-# semantics). Rules are a module literal mirrored verbatim in the
-# oracle — rule 1 drops a known mirror host, rule 2 a spam path
-# family, rule 3 a blocked query param; first match wins, so the
-# per-rule counts are a PARTITION of the corpus (all = blocked
-# rows + allowed), which is what makes the report auditable.
+# semantics). The rules are url_blocklist_report's CASE chain,
+# mirrored verbatim in the oracle — rule 1 drops a known mirror host,
+# rule 2 a spam path family, rule 3 a blocked query param; first
+# match wins, so the per-rule counts are a PARTITION of the corpus
+# (all = blocked rows + allowed), which is what makes the report
+# auditable.
 # Rules are residue-PATTERN based (not single-key equality) so each
 # rule's hit count scales WITH the corpus-cardinality URL space —
 # mirror-farm hosts are every host id ending in 3 (~10% of hosts),
 # the spam path family every page id ending in 7 (~10% of groups),
 # the blocked param the ref=4 classes.
-BLOCKLIST = [
-    ("blocked_mirror_host", "host ~ ^h[0-9]*3[.]example[.]com$"),
-    ("blocked_spam_path", "canonical path ~ /page[0-9]*7$"),
-    ("blocked_param", "query has ref=4"),
-]
 
 
 def url_blocklist_report(docs: DataFrame) -> DataFrame:

@@ -1,43 +1,20 @@
-"""Batch sinks: partitioned parquet lake writes.
+"""Batch sinks: clustered parquet lake writes.
 
 The reference's only sink is Kafka (streaming/pipeline.kafka_sink
 mirrors it). An analytics engine also needs the lake-write side, and
 at 100 TB the write layout IS the performance contract for every
-downstream reader:
-
-- ``partitionBy`` low-cardinality columns readers filter on (day,
-  event_type) → partition pruning turns full scans into directory
-  lookups;
-- ``maxRecordsPerFile`` bounds file size so a single skewed partition
-  ("yesterday") doesn't produce one 5 TB file that defeats split
-  parallelism;
-- repartition by the partition columns BEFORE the write so each task
-  writes few files (without it, every one of 10k tasks opens a file
-  per live partition → millions of small files, the classic lake
-  failure mode).
+downstream reader: parquet footers carry per-row-group min/max
+statistics, so a file layout clustered on the filter columns lets
+readers skip whole row groups. ``write_zordered_parquet`` clusters on
+two columns at once; ``write_clustered_parquet`` is its single-column
+comparator. The partitioned and bucketed layouts are written by the
+registered queries that read them (``relational.partitioned_daily_revenue``,
+``relational.bucketed_join_revenue``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as a partitioned parquet dataset with bounded file
-    sizes and one-writer-per-partition task layout."""
-    (
-        df.repartition(*partition_cols)
-        .write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
 
 
 def write_clustered_parquet(
@@ -155,25 +132,4 @@ def write_zordered_parquet(
         .write.mode("overwrite")
         .option("maxRecordsPerFile", max_records_per_file)
         .parquet(path)
-    )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    bucket_cols: list[str],
-    n_buckets: int = 8,
-) -> None:
-    """Persist as a bucketed (hash-clustered, per-bucket sorted) catalog
-    table. Two tables bucketed the same way join with ZERO shuffle —
-    the 100 TB answer for a fact-fact join both sides too big to
-    broadcast: pay the partitioning once at write time, reuse it on
-    every subsequent join/aggregation on the bucket key."""
-    (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table_name)
     )

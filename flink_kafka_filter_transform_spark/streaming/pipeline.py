@@ -91,24 +91,6 @@ def transformed_stream(stream: DataFrame, rules: list[dict]) -> DataFrame:
     return cdc.project_outgoing(cdc.forwarded(stream, rules))
 
 
-def windowed_counts(
-    stream: DataFrame,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Event-time tumbling-window counts with late-data handling —
-    ABSENT in the reference (it ignores event time entirely, SURVEY
-    §2.2); required for any real rollup at scale. Watermarking bounds
-    state: windows older than the watermark are finalized and evicted."""
-    return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("w"), F.col("op"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "op", "cnt")
-    )
-
-
 def kafka_sink(
     df: DataFrame,
     bootstrap_servers: str,
@@ -185,114 +167,6 @@ def metered_cdc_sink(
         )
 
     return _sink(labelled, feed, checkpoint_dir)
-
-
-def session_windowed_counts(
-    stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark_delay: str = "10 minutes",
-    ts_col: str = "ts",
-    key_col: str = "key",
-) -> DataFrame:
-    """Native event-time session windows (F.session_window): dynamic
-    gap-closed windows per key, state evicted once the watermark passes
-    a session's close. The streaming twin of the batch
-    relational.events_sessionized (lag + cumulative-sum) — same
-    semantics, but windows merge incrementally across micro-batches
-    instead of requiring the full history in one sort."""
-    return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col(key_col),
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def _interval_join(stream: DataFrame, window: str, watermark_delay: str, how: str) -> DataFrame:
-    """Creates ('c') joined to updates ('u') on key within ``window``
-    after the create, both sides watermarked: the one build behind the
-    inner and the LEFT OUTER interval join."""
-    parsed = cdc.parse_envelope(stream)
-
-    def side(op: str) -> DataFrame:
-        return (
-            parsed.filter(F.col("op") == op)
-            .select(
-                F.col("key").alias(f"{op}_key"),
-                F.col("ts").alias(f"{op}_ts"),
-                F.col("msg_id").alias(f"{op}_msg_id"),
-            )
-            .withWatermark(f"{op}_ts", watermark_delay)
-        )
-
-    return side("c").join(
-        side("u"),
-        F.expr(
-            f"c_key = u_key AND u_ts >= c_ts AND u_ts <= c_ts + INTERVAL {window}"
-        ),
-        how,
-    ).select("c_key", "c_msg_id", "u_msg_id", "c_ts", "u_ts")
-
-
-def stream_stream_interval_join(
-    stream: DataFrame,
-    window: str = "1 hour",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Stream-stream event-time interval join — a whole category the
-    reference lacks (SURVEY §2.2: no joins between data streams).
-
-    Creates ('c') and updates ('u') from the parsed CDC stream join on
-    key, with the update required to land within ``window`` after the
-    create. Watermarks on BOTH sides bound the join state: rows older
-    than watermark + interval are evicted, so state is O(window), not
-    O(stream). Inner join + append mode — each match emits exactly
-    once."""
-    return _interval_join(stream, window, watermark_delay, "inner")
-
-
-def stream_stream_interval_join_outer(
-    stream: DataFrame,
-    window: str = "1 hour",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: every create emits,
-    updates attached when one lands inside the window — the
-    "which creates never got an update?" question an inner join cannot
-    answer on a stream.
-
-    Outer semantics need the watermark to PROVE absence: a create row
-    is held in state until the watermark passes the end of its join
-    interval, then emits with NULL update columns if nothing matched.
-    Null-side results therefore arrive delayed by watermark+window —
-    the unavoidable price of a correct negative on out-of-order data.
-    Same O(window) state bound as the inner join; both sides keep
-    their watermark, and the join condition time-bounds the
-    state-eviction horizon.
-    """
-    return _interval_join(stream, window, watermark_delay, "leftOuter")
-
-
-def deduped_stream(
-    stream: DataFrame,
-    keys: list[str] | None = None,
-    watermark_delay: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming exact dedup with bounded state:
-    dropDuplicatesWithinWatermark keeps a key only until the watermark
-    passes it, so state is O(keys-per-delay-window) instead of O(all
-    keys ever) — the streaming face of the batch exact_dedup operator,
-    e.g. for at-least-once sources that can re-deliver (our Kafka sink
-    semantics, SURVEY §3.4)."""
-    return stream.withWatermark(ts_col, watermark_delay).dropDuplicatesWithinWatermark(
-        keys or ["msg_id"]
-    )
 
 
 def _batch_aqe(spark: SparkSession) -> SparkSession:
@@ -868,68 +742,6 @@ def scd2_current(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """The latest published SCD2 table version, or None before the
     first batch commits."""
     return _current(spark, state_dir, "scd2")
-
-
-def foreach_batch_parquet_sink(
-    df: DataFrame, out_dir: str, checkpoint_dir: str
-) -> DataStreamWriter:
-    """foreachBatch escape hatch: sinks Spark lacks natively get the
-    micro-batch as a plain DataFrame plus a batch id for idempotence.
-    Here each batch lands through _write_batch_partition, giving
-    effectively-once output on top of at-least-once delivery."""
-
-    return _sink(df, lambda b, i: _write_batch_partition(b, out_dir, i), checkpoint_dir)
-
-
-def contamination_guard_sink(
-    stream_docs: DataFrame,
-    eval_hashes: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    n: int = 3,
-    max_ratio: float = 0.5,
-) -> DataStreamWriter:
-    """Incremental decontamination: every arriving document is probed
-    against the STATIC eval-set n-gram hashes (benchmarks are tiny and
-    fixed for the life of a crawl-ingest stream — the natural broadcast
-    side); docs at or under ``max_ratio`` contamination pass through to
-    the clean parquet corpus, the rest are quarantined in place (kept
-    rows carry the ratio so the cut is auditable).
-
-    Runs the IDENTICAL probe as the batch operator — both call
-    operators.dedup.contamination_profile — so streaming ingest and a
-    batch backfill produce the same clean corpus
-    (tests/test_streaming.py proves the equivalence across
-    micro-batches). Per-batch work is a broadcast probe + one doc-keyed
-    aggregate; no cross-batch state is needed because a document never
-    straddles micro-batches. Output lands through
-    _write_batch_partition (effectively-once)."""
-    from flink_kafka_filter_transform_spark.operators.dedup import (
-        contamination_profile,
-    )
-    from flink_kafka_filter_transform_spark.operators.text import token_ngrams, tokens
-
-    def guard(batch_df: DataFrame, batch_id: int) -> None:
-        grams = batch_df.select(
-            "doc_id", token_ngrams(tokens(), n).alias("grams")
-        ).filter(F.size("grams") > 0)
-        prof = contamination_profile(grams, eval_hashes)
-        clean = (
-            batch_df.join(prof, "doc_id", "left")
-            .filter(
-                F.col("contamination_ratio").isNull()
-                | (F.col("contamination_ratio") <= F.lit(max_ratio))
-            )
-            .select(
-                batch_df["*"],
-                F.coalesce("contamination_ratio", F.lit(0.0)).alias(
-                    "contamination_ratio"
-                ),
-            )
-        )
-        _write_batch_partition(clean, out_dir, batch_id)
-
-    return _sink(stream_docs, guard, checkpoint_dir)
 
 
 def hll_merge_sink(

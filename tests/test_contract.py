@@ -55,8 +55,15 @@ def test_no_orphan_oracles():
 
 def test_docs_cover_every_query_and_refs_resolve():
     """SURVEY/README <-> code consistency: every registered query is
-    documented; every module.function doc reference resolves."""
-    from tools.coverage_check import dangling_doc_refs, undocumented_queries
+    documented; every module.function doc reference resolves; every
+    package definition is reached from what runs, or kept with a
+    reason."""
+    from tools.coverage_check import (
+        dangling_doc_refs,
+        undocumented_queries,
+        unreached_definitions,
+    )
 
     assert undocumented_queries() == []
     assert dangling_doc_refs() == []
+    assert unreached_definitions() == []

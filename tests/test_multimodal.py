@@ -167,14 +167,6 @@ def test_png_corrupt_fails_loudly():
         mm.decode_png(bad)
 
 
-def test_decode_image_compressed_dispatches_png():
-    w, h, c, px = mm.decode_image_compressed(mm._synth_png(4))
-    assert (w, h, c) == (5 + 4 % 4, 4 + 4 % 3, 3)
-    # JPEG now decodes for real (r5); unknown containers still refuse
-    with pytest.raises(NotImplementedError, match="unknown"):
-        mm.decode_image_compressed(b"\x00\x11garbage")
-
-
 def test_resize_nearest_known_mapping():
     """Pin the nearest-neighbor convention directly: out (i, j) samples
     in ((i*h)//out_h, (j*w)//out_w) — top-left pick, no interpolation."""
@@ -256,15 +248,6 @@ def test_jpeg_scope_gates_raise():
     color[ncomp_at] = 3
     with pytest.raises(NotImplementedError):
         mm.decode_jpeg(bytes(color))
-
-
-def test_decode_image_compressed_routes_jpeg():
-    from flink_kafka_filter_transform_spark.operators import multimodal as mm
-
-    blob = mm._synth_jpeg(42)
-    w, h, c, px = mm.decode_image_compressed(blob)
-    assert (w, h, c) == (mm.JPEG_W, mm.JPEG_H, 1)
-    assert px.shape == (h, w, 1)
 
 
 def test_jpeg_color_roundtrip_closed_form():

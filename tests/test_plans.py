@@ -282,7 +282,6 @@ def test_sampling_is_shuffle_free(spark, sf_dir):
     from flink_kafka_filter_transform_spark.operators import sampling
 
     docs = load_table(spark, "documents", sf_dir)
-    assert px.count_shuffles(sampling.hash_sample(docs, "doc_id", 0.1)) == 0
     assert px.count_shuffles(sampling.train_val_test(docs, "doc_id")) == 0
 
 

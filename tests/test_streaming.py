@@ -148,71 +148,6 @@ def test_transformed_stream_matches_batch(spark, sf_dir, cdc_dir, cdc_schema):
     assert got == want and len(got) > 0
 
 
-def test_windowed_counts_with_watermark(spark, sf_dir, cdc_dir, cdc_schema):
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    parsed = cdc.parse_envelope(stream)
-    _run_to_memory(sp.windowed_counts(parsed, "1 hour", "10 minutes"), "t_windows", "complete")
-    rows = spark.table("t_windows").collect()
-    assert len(rows) > 0
-    # total across windows == total parsed rows (no late drops: one batch)
-    batch_total = cdc.parse_envelope(cdc_events_df(spark, sf_dir)).count()
-    assert sum(r["cnt"] for r in rows) == batch_total
-
-
-def test_windowed_counts_matches_batch_exactly(spark, sf_dir, cdc_dir, cdc_schema):
-    """Differential check, not just mass conservation: the SAME
-    windowed_counts lineage run incrementally (file stream, complete
-    mode) and as one batch query must produce identical result SETS —
-    the one-lineage-two-modes claim made executable."""
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    parsed = cdc.parse_envelope(stream)
-    _run_to_memory(sp.windowed_counts(parsed, "1 hour", "10 minutes"), "t_weq", "complete")
-    got = {
-        (r["window_start"], r["op"], r["cnt"]) for r in spark.table("t_weq").collect()
-    }
-    batch = sp.windowed_counts(
-        cdc.parse_envelope(cdc_events_df(spark, sf_dir)), "1 hour", "10 minutes"
-    )
-    want = {(r["window_start"], r["op"], r["cnt"]) for r in batch.collect()}
-    assert got == want and len(want) > 0
-
-
-def test_session_windowed_counts_matches_batch_exactly(spark, sf_dir, cdc_dir, cdc_schema):
-    """Session windows, same differential check. Append mode only emits
-    sessions the final watermark closed, so equality is asserted on the
-    batch result RESTRICTED to closed sessions (closure cutoff =
-    max_ts - delay - gap); the streaming side must emit exactly that
-    set — nothing extra, nothing early."""
-    import datetime
-
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    _run_to_memory(
-        sp.session_windowed_counts(stream, gap="30 minutes"), "t_seq", "append"
-    )
-    got = {
-        (r["key"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.table("t_seq").collect()
-    }
-    batch_src = cdc_events_df(spark, sf_dir)
-    batch = sp.session_windowed_counts(batch_src, gap="30 minutes")
-    from pyspark.sql import functions as F
-
-    max_ts = batch_src.agg(F.max("ts")).collect()[0][0]
-    cutoff = max_ts - datetime.timedelta(minutes=10)  # watermark delay
-    all_rows = [
-        (r["key"], r["session_start"], r["session_end"], r["n_events"])
-        for r in batch.collect()
-    ]
-    # Sandwich rather than exact-match at the closure boundary: whether
-    # Spark finalizes a session ending EXACTLY at the final watermark
-    # is an inclusivity detail we don't pin — the streaming result must
-    # contain every strictly-closed session and nothing beyond the
-    # batch result.
-    want_strict = {r for r in all_rows if r[2] < cutoff}
-    want_all = set(all_rows)
-    assert want_strict <= got <= want_all and len(want_strict) > 0
-
-
 def test_materialize_latest_matches_batch(spark, sf_dir, cdc_dir, cdc_schema):
     """Changelog compaction as a streaming aggregation (complete mode):
     the latest-state view computed incrementally must equal the batch
@@ -399,91 +334,6 @@ def test_streaming_first_seen_matches_batch_dedup(spark, sf_dir, tmp_path_factor
     assert got == want and len(want) > 0
 
 
-def test_session_windowed_counts(spark, sf_dir, cdc_dir, cdc_schema):
-    """Native session windows close after the gap; total event mass is
-    preserved across sessions (completeness check vs the raw stream)."""
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    _run_to_memory(
-        sp.session_windowed_counts(stream, gap="30 minutes"), "t_sess", "append"
-    )
-    got = spark.sql(
-        "SELECT CAST(sum(n_events) AS BIGINT) s, count(*) n FROM t_sess"
-    ).collect()[0]
-    total = cdc_events_df(spark, sf_dir).count()
-    # append mode only emits sessions CLOSED by the final watermark:
-    # sessions still open at end-of-stream (ts > max_ts - delay - gap)
-    # are correctly withheld, so emitted mass is slightly below total.
-    assert total * 0.95 <= got.s <= total
-    assert 0 < got.n <= total
-    # every session is internally consistent
-    bad = spark.sql(
-        "SELECT count(*) c FROM t_sess WHERE session_end < session_start OR n_events <= 0"
-    ).collect()[0].c
-    assert bad == 0
-
-
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir, cdc_dir, cdc_schema):
-    """The streaming interval join must emit exactly the batch join's
-    result set once the stream is drained (inner join completeness)."""
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    _run_to_memory(sp.stream_stream_interval_join(stream), "t_ssj", "append")
-    got = {
-        tuple(r) for r in spark.sql(
-            "SELECT c_msg_id, u_msg_id FROM t_ssj"
-        ).collect()
-    }
-    batch = cdc.parse_envelope(spark.read.parquet(cdc_dir))
-    from pyspark.sql import functions as F
-    c = batch.filter(F.col("op") == "c").select(
-        F.col("key").alias("c_key"), F.col("ts").alias("c_ts"), F.col("msg_id").alias("c_msg_id"))
-    u = batch.filter(F.col("op") == "u").select(
-        F.col("key").alias("u_key"), F.col("ts").alias("u_ts"), F.col("msg_id").alias("u_msg_id"))
-    want = {
-        tuple(r)
-        for r in c.join(
-            u,
-            F.expr("c_key = u_key AND u_ts >= c_ts AND u_ts <= c_ts + INTERVAL 1 hour"),
-        ).select("c_msg_id", "u_msg_id").collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_deduped_stream(spark, sf_dir, cdc_dir, cdc_schema, tmp_path):
-    """A doubled input stream dedups back to exactly the distinct set."""
-    doubled_dir = str(tmp_path / "doubled")
-    base = spark.read.parquet(cdc_dir)
-    base.unionAll(base).repartition(4).write.mode("overwrite").parquet(doubled_dir)
-    stream = sp.file_stream_source(spark, doubled_dir, cdc_schema)
-    _run_to_memory(sp.deduped_stream(stream), "t_dedup", "append")
-    assert spark.table("t_dedup").count() == base.count()
-    assert spark.sql("SELECT max(c) m FROM (SELECT count(*) c FROM t_dedup GROUP BY msg_id)").collect()[0].m == 1
-
-
-def test_foreach_batch_parquet_sink(spark, sf_dir, cdc_dir, cdc_schema, tmp_path):
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    out = str(tmp_path / "fb_out")
-    q = (
-        sp.foreach_batch_parquet_sink(
-            sp.transformed_stream(stream, RULES), out, str(tmp_path / "fb_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    back = spark.read.parquet(out)
-    batch = cdc.project_outgoing(
-        cdc.drop_unrouted(
-            cdc.route_when_chain(
-                cdc.filter_deletes(cdc.parse_envelope(cdc_events_df(spark, sf_dir))), RULES
-            )
-        )
-    )
-    assert back.count() == batch.count()
-    assert {r.topic for r in back.select("topic").distinct().collect()} == {
-        r.topic for r in batch.select("topic").distinct().collect()
-    }
-
-
 def test_metrics_endpoint(spark, sf_dir, cdc_dir, cdc_schema):
     """O12 parity: /version and /metrics serve OpenMetrics text fed by
     the streaming counters."""
@@ -495,11 +345,12 @@ def test_metrics_endpoint(spark, sf_dir, cdc_dir, cdc_schema):
     counts = cdc.cdc_pipeline(cdc_events_df(spark, sf_dir), RULES).collect()
     for r in counts:
         reg.inc_transform(r["target_topic"], r["op"], r["cnt"])
-    server = mx.serve(reg, port=19266)
+    server = mx.serve(reg, port=0, host="127.0.0.1")
+    base = f"http://127.0.0.1:{server.server_address[1]}"
     try:
-        ver = urllib.request.urlopen("http://127.0.0.1:19266/version").read().decode()
+        ver = urllib.request.urlopen(f"{base}/version").read().decode()
         assert ver == mx.VERSION
-        body = urllib.request.urlopen("http://127.0.0.1:19266/metrics").read().decode()
+        body = urllib.request.urlopen(f"{base}/metrics").read().decode()
         assert "# TYPE flink_kafka_filter_transform_count counter" in body
         total_served = sum(
             int(line.rsplit(" ", 1)[1])
@@ -509,125 +360,6 @@ def test_metrics_endpoint(spark, sf_dir, cdc_dir, cdc_schema):
         assert total_served == sum(r["cnt"] for r in counts)
     finally:
         server.shutdown()
-
-
-def test_stream_stream_outer_join_emits_null_matches(
-    spark, sf_dir, cdc_dir, cdc_schema
-):
-    """LEFT OUTER stream-stream interval join: inner matches emit
-    immediately; null-side rows emit once the watermark proves no
-    update can still arrive in the window. At stream end Spark drops
-    state it could not yet finalize, so the streaming result is
-    sandwiched: every match + every PROVABLY-closed unmatched create
-    must be present; nothing outside the batch left join may appear."""
-    from pyspark.sql import functions as F
-
-    stream = sp.file_stream_source(spark, cdc_dir, cdc_schema)
-    _run_to_memory(
-        sp.stream_stream_interval_join_outer(stream), "t_ssj_outer", "append"
-    )
-    got = {
-        (r["c_key"], r["c_msg_id"], r["u_msg_id"])
-        for r in spark.table("t_ssj_outer").collect()
-    }
-
-    batch_parsed = cdc.parse_envelope(cdc_events_df(spark, sf_dir))
-    creates = batch_parsed.filter(F.col("op") == "c").select(
-        F.col("key").alias("c_key"), F.col("ts").alias("c_ts"), F.col("msg_id").alias("c_msg_id")
-    )
-    updates = batch_parsed.filter(F.col("op") == "u").select(
-        F.col("key").alias("u_key"), F.col("ts").alias("u_ts"), F.col("msg_id").alias("u_msg_id")
-    )
-    joined = creates.join(
-        updates,
-        F.expr("c_key = u_key AND u_ts >= c_ts AND u_ts <= c_ts + INTERVAL 1 hour"),
-        "leftOuter",
-    ).select("c_key", "c_msg_id", "u_msg_id", "c_ts")
-    rows = joined.collect()
-    want_all = {(r["c_key"], r["c_msg_id"], r["u_msg_id"]) for r in rows}
-
-    import datetime
-
-    max_c = creates.agg(F.max("c_ts")).collect()[0][0]
-    max_u = updates.agg(F.max("u_ts")).collect()[0][0]
-    wm = min(max_c, max_u) - datetime.timedelta(minutes=10)
-    # provably closed: the join interval ended strictly before the
-    # final watermark, so the null row MUST have been emitted
-    closed_nulls = {
-        (r["c_key"], r["c_msg_id"], None)
-        for r in rows
-        if r["u_msg_id"] is None
-        and r["c_ts"] + datetime.timedelta(hours=1) < wm
-    }
-    matches = {t for t in want_all if t[2] is not None}
-    assert matches <= got, "inner matches must all emit"
-    assert closed_nulls <= got, "closed unmatched creates must emit null rows"
-    assert got <= want_all, "nothing beyond the batch left join"
-    assert len(matches) > 0 and len(closed_nulls) > 0
-
-
-def test_contamination_guard_stream_matches_batch(spark, sf_dir, tmp_path_factory):
-    """The incremental decontamination guard, fed the training docs in
-    multiple micro-batches against static eval hashes, must keep
-    EXACTLY the docs the batch operator keeps (same profile code runs
-    both paths), with matching per-doc ratios."""
-    from pyspark.sql import functions as F
-
-    from flink_kafka_filter_transform_spark.functions.hashing import portable_hash64
-    from flink_kafka_filter_transform_spark.operators.dedup import contamination_check
-    from flink_kafka_filter_transform_spark.operators.text import token_ngrams, tokens
-    from flink_kafka_filter_transform_spark.sources.parquet import load_table
-    from flink_kafka_filter_transform_spark.streaming.pipeline import (
-        contamination_guard_sink,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    eval_hashes = (
-        docs.filter(F.col("doc_id") % 50 == 0)
-        .select(F.explode(token_ngrams(tokens(), 3)).alias("g"))
-        .select(portable_hash64("g").alias("gh"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    train = docs.filter(F.col("doc_id") % 50 != 0)
-    src_dir = str(tmp_path_factory.mktemp("guard_src"))
-    train.repartition(3).write.mode("overwrite").parquet(src_dir)
-
-    out_dir = str(tmp_path_factory.mktemp("guard_out"))
-    ckpt = str(tmp_path_factory.mktemp("guard_ckpt"))
-    stream = (
-        spark.readStream.schema(train.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        contamination_guard_sink(
-            stream, eval_hashes, out_dir, ckpt, max_ratio=0.5
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r.doc_id, f"{r.contamination_ratio:.9g}")
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    prof = contamination_check(docs)
-    want_kept = train.join(prof, "doc_id", "left").filter(
-        F.col("contamination_ratio").isNull()
-        | (F.col("contamination_ratio") <= 0.5)
-    )
-    want = {
-        (r.doc_id, f"{r.contamination_ratio:.9g}")
-        for r in want_kept.select(
-            "doc_id", F.coalesce("contamination_ratio", F.lit(0.0)).alias("contamination_ratio")
-        ).collect()
-    }
-    assert got == want
-    assert len(got) > 0
-    # the guard must actually cut something at this threshold
-    assert len(got) < train.count()
 
 
 def test_hll_merge_sink_matches_batch_and_is_replay_idempotent(

@@ -9,19 +9,43 @@ tool makes doc rot a CI failure instead of a judgment-day surprise:
 2. every ``module.function`` reference in SURVEY.md or README.md that
    names an operator, streaming, sources, sinks, plans or functions
    module must resolve to a real module or attribute — a doc line
-   pointing at a renamed or deleted function fails here.
+   pointing at a renamed or deleted function fails here;
+3. every top-level definition in the package must be reached from
+   what runs (``__spark_entry__.py``, ``bench.py``, ``tools/*.py``,
+   ``perfbench/*.py``) or sit in ``_KEEP`` with its reason — package
+   code that only tests call fails here.
 
-tests/test_contract.py runs both checks in CI.
+tests/test_contract.py runs all three checks in CI.
 """
 
 from __future__ import annotations
 
+import ast
+import glob
 import importlib
 import os
 import re
 import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG = "flink_kafka_filter_transform_spark"
+
+# Package code that nothing in the roots runs but that stays, keyed by
+# dotted path under the package (a module path keeps the whole module).
+_KEEP = {
+    "streaming.pipeline.kafka_stream_source": "the reference's consumer; test_kafka_integration",
+    "streaming.pipeline.kafka_sink": "the reference's producer; test_kafka_integration",
+    "streaming.pipeline.transformed_stream": "the reference's per-message path on a stream",
+    "streaming.pipeline.PRODUCER_BATCH_SIZE": "the reference's producer tuning, read by kafka_sink",
+    "streaming.pipeline.PRODUCER_MESSAGE_TIMEOUT_MS": "the reference's producer tuning",
+    "streaming.pipeline.CONSUMER_SESSION_TIMEOUT_MS": "the reference's consumer tuning",
+    "sources.config": "the reference's config.yaml loader and rule validation",
+    "streaming.pipeline.file_stream_source": "the file twin tests drive in the broker's place",
+    "streaming.pipeline.prune_state_versions": "the state protocol's offline prune",
+    "plans.explain": "the plan helpers tests/test_plans.py asserts through",
+    "operators.kmeans._update": "the naive Lloyd step test_properties pins the fused one against",
+    "sinks.write_clustered_parquet": "the single-column comparator of the z-order write test",
+}
 
 _OPERATOR_MODULES = (
     "asof",
@@ -98,16 +122,104 @@ def _resolves(dotted: str) -> bool:
     return False
 
 
+def _package_definitions() -> tuple[dict[str, ast.AST], list[ast.AST]]:
+    """Every top-level def, class and assigned name of the package
+    (dunders aside: the interpreter reads those), keyed by dotted path
+    under the package, plus the top-level statements that run on import
+    and define nothing (they are roots)."""
+    defs, on_import = {}, []
+    pkg_dir = os.path.join(_REPO, _PKG)
+    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)):
+        module = os.path.relpath(path, pkg_dir)[: -len(".py")].replace(os.sep, ".")
+        module = module.removesuffix("__init__").rstrip(".")
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            elif isinstance(node, (ast.Import, ast.ImportFrom)) or (
+                isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)
+            ):
+                continue
+            else:
+                on_import.append(node)
+                continue
+            for name in names:
+                if not (name.startswith("__") and name.endswith("__")):
+                    defs[f"{module}.{name}".lstrip(".")] = node
+    return defs, on_import
+
+
+def _names(node: ast.AST) -> set[str]:
+    """The names a body can reach: every Name, every Attribute's
+    attribute and every string constant taken whole (code that patches
+    or looks up a definition by its name as a string)."""
+    found = set()
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Name):
+            found.add(sub.id)
+        elif isinstance(sub, ast.Attribute):
+            found.add(sub.attr)
+        elif isinstance(sub, ast.Constant) and isinstance(sub.value, str):
+            found.add(sub.value)
+    return found
+
+
+def unreached_definitions() -> list[str]:
+    """Package top-level definitions that nothing running reaches.
+
+    Roots are ``__spark_entry__.py``, ``bench.py``, ``tools/*.py`` and
+    ``perfbench/*.py`` (this file aside: its keep-list would reach
+    itself) and the package's own import-time statements. A definition
+    is reached when its bare name occurs in a reached body; its body is
+    then reached in turn, until nothing new is. Matching is by name
+    only, so a name shared across modules keeps all its owners (dead
+    code can slip through); code found only through a computed name
+    needs a ``_KEEP`` entry. Entries of ``_KEEP`` are reached by fiat;
+    one that names no definition is returned too, so the keep-list
+    cannot go stale."""
+    defs, on_import = _package_definitions()
+    roots = [os.path.join(_REPO, "__spark_entry__.py"), os.path.join(_REPO, "bench.py")]
+    for pattern in ("tools/*.py", "perfbench/*.py"):
+        roots += sorted(glob.glob(os.path.join(_REPO, pattern)))
+    names = set()
+    for path in roots:
+        if os.path.abspath(path) != os.path.abspath(__file__):
+            with open(path) as f:
+                names |= _names(ast.parse(f.read()))
+    for node in on_import:
+        names |= _names(node)
+    kept = {d: k for d in defs for k in _KEEP if d == k or d.startswith(k + ".")}
+    stale = [f"{k} (keep entry names no definition)" for k in _KEEP if k not in kept.values()]
+    reached = set()
+    while new := {
+        d for d in defs if d not in reached and (d in kept or d.rsplit(".", 1)[-1] in names)
+    }:
+        reached |= new
+        for d in new:
+            names |= _names(defs[d])
+    return sorted(set(defs) - reached) + stale
+
+
 def main() -> int:
     missing = undocumented_queries()
     dangling = dangling_doc_refs()
-    if not missing and not dangling:
-        print("coverage ok: every query documented, every doc ref resolves")
+    unreached = unreached_definitions()
+    if not missing and not dangling and not unreached:
+        print(
+            "coverage ok: every query documented, every doc ref resolves, "
+            "every package definition reached"
+        )
         return 0
     for name in missing:
         print(f"UNDOCUMENTED query (not in SURVEY.md/README.md): {name}")
     for ref in dangling:
         print(f"DANGLING doc reference (SURVEY.md/README.md): {ref}")
+    for name in unreached:
+        print(f"UNREACHED package definition (only tests reach it): {name}")
     return 1
 
 
